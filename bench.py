@@ -16,6 +16,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -322,8 +323,11 @@ def main() -> None:
     if errors:
         out["errors"] = errors
         full["errors"] = errors
-    sidecar = os.environ.get(
-        "SPARK_GRAFT_BENCH_SIDECAR", "/tmp/spark_graft_bench_sidecar.json"
+    # per-run default path: concurrent runs must not overwrite each
+    # other's evidence
+    sidecar = os.environ.get("SPARK_GRAFT_BENCH_SIDECAR") or os.path.join(
+        tempfile.gettempdir(),
+        f"spark_graft_bench_sidecar_{os.getpid()}_{time.strftime('%Y%m%d_%H%M%S')}.json",
     )
     try:
         with open(sidecar, "w") as f:

@@ -12,8 +12,12 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 
 
-def test_bench_emits_one_json_line():
+def test_bench_emits_one_json_line(tmp_path):
+    # an explicit sidecar path: a concurrent bench run cannot overwrite the
+    # file this test reads back
+    sidecar_path = tmp_path / "sidecar.json"
     env = dict(os.environ, SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001")
+    env["SPARK_GRAFT_BENCH_SIDECAR"] = str(sidecar_path)
     proc = subprocess.run(
         [sys.executable, str(REPO / "bench.py")],
         capture_output=True,
@@ -45,7 +49,7 @@ def test_bench_emits_one_json_line():
         assert set(steal) == {"median", "max"}
         assert 0 <= steal["median"] <= steal["max"] <= 100
     sidecar = payload.get("samples_sidecar")
-    assert sidecar and os.path.exists(sidecar)
+    assert sidecar == str(sidecar_path) and sidecar_path.exists()
     full = json.loads(Path(sidecar).read_text())
     assert set(full["samples"]) == set(payload["queries"])
     assert full["queries"] == payload["queries"]

@@ -632,67 +632,3 @@ def test_sql_fragment_hash_identity(spark):
     # complex dtypes must fall back to the Column-built path, not raise
     arr = df.withColumn("a", F.array("id"))
     assert arr.select(H.row_hash(arr)).collect()
-
-
-def test_drift_probe_heavy_skips_digest_pass_same_diff(spark):
-    """The count-only drift pre-probe (round 13): when more than half the
-    buckets differ in per-bucket row count, _bad_bucket_state records
-    "skip restriction" WITHOUT running the full digest pass — and the
-    drill-down output is identical to the probe-off plan of record."""
-    left = spark.range(0, 4000).selectExpr("id AS pk", "id * 3 AS v")
-    right = left.filter("pk % 3 != 0")  # deletes in every bucket
-    opts_on = CompareOptions(n_buckets=32, drift_probe=True)
-    opts_off = CompareOptions(n_buckets=32, drift_probe=False)
-
-    on = TableCompare(spark, left, right, ["pk"], opts_on)
-    assert on._count_drift_is_heavy()
-    n, ids, frame = on._bad_bucket_state()
-    assert ids is None and frame is None  # restriction skipped via probe
-
-    d_on = {(r.pk, r.diff_type) for r in on.diff_rows().collect()}
-    off = TableCompare(spark, left, right, ["pk"], opts_off)
-    d_off = {(r.pk, r.diff_type) for r in off.diff_rows().collect()}
-    assert d_on == d_off and d_on
-
-
-def test_drift_probe_balanced_drift_falls_through(spark):
-    """Count-balanced drift (update-only feed) is invisible to the count
-    probe — it must return False and the full digest pass must remain the
-    decision of record (restriction engages; diff identical)."""
-    left = spark.range(0, 4000).selectExpr("id AS pk", "id * 3 AS v")
-    right = left.selectExpr(
-        "pk", "CASE WHEN pk % 500 = 0 THEN v + 1 ELSE v END AS v"
-    )
-    on = TableCompare(
-        spark, left, right, ["pk"], CompareOptions(n_buckets=32, drift_probe=True)
-    )
-    assert not on._count_drift_is_heavy()
-    n, ids, frame = on._bad_bucket_state()
-    assert ids, "full digest pass must still find the drifted buckets"
-    off = TableCompare(
-        spark, left, right, ["pk"], CompareOptions(n_buckets=32, drift_probe=False)
-    )
-    assert {tuple(r) for r in on.diff_rows().collect()} == {
-        tuple(r) for r in off.diff_rows().collect()
-    }
-
-
-def test_drift_probe_default_off_explicit_on(spark):
-    """The probe is strictly opt-in (measured a net loss as an auto
-    default -- the pk-scan decode is ~0.63x the digest pass it might save
-    on narrow fixtures, and saturated-core overlap is additive; see
-    OPTIMIZATION_r13.md): default and False keep the plain digest pass,
-    explicit True enables it."""
-    small = spark.range(0, 100).selectExpr("id AS pk", "id AS v")
-    default = TableCompare(spark, small, small, ["pk"], CompareOptions(n_buckets=8))
-    assert not default._probe_enabled()
-    off = TableCompare(
-        spark, small, small, ["pk"],
-        CompareOptions(n_buckets=8, drift_probe=False),
-    )
-    assert not off._probe_enabled()
-    forced = TableCompare(
-        spark, small, small, ["pk"],
-        CompareOptions(n_buckets=8, drift_probe=True),
-    )
-    assert forced._probe_enabled()

@@ -679,6 +679,77 @@ def test_cli_column_drift_prints_histogram(spark, tmp_path, capsys):
     assert int(count) == 150
 
 
+def test_cli_drilldowns_reuse_the_summary_compare(
+    spark, tmp_path, capsys, monkeypatch
+):
+    """--column-drift, --fix-sql-out and --reconcile-out consume the
+    TableCompare run_jobs built for the summary: the digest pass runs once
+    per keyed table (keyless tables take the multiset path, which has
+    none), and the drill-down outputs are unchanged."""
+    from tidb_large_table_compare_spark.cli import main
+    from tidb_large_table_compare_spark.operators.compare import TableCompare
+
+    slave_dir = tmp_path / "slave"
+    slave_dir.mkdir()
+    orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
+    key = F.col("o_orderkey")
+    drifted = orders.filter(key % 50 != 2).withColumn(
+        "o_totalprice",
+        F.when(key % 10 == 1, F.col("o_totalprice") + 1.0).otherwise(
+            F.col("o_totalprice")
+        ),
+    )
+    inserted = orders.limit(5).withColumn("o_orderkey", key + 10_000_000)
+    drifted.unionByName(inserted).write.parquet(str(slave_dir / "orders.parquet"))
+    for t in ("nation", "region"):
+        spark.read.parquet(f"{SF_SMALL}/{t}.parquet").write.parquet(
+            str(slave_dir / f"{t}.parquet")
+        )
+    n_modified = orders.filter(key % 10 == 1).count()
+    n_deleted = orders.filter(key % 50 == 2).count()
+
+    digest_passes: list[str] = []
+    mismatched_buckets = TableCompare.mismatched_buckets
+
+    def counting(self):
+        digest_passes.append(self.table_name)
+        return mismatched_buckets(self)
+
+    monkeypatch.setattr(TableCompare, "mismatched_buckets", counting)
+    code = main(
+        [
+            "--left-dir", SF_SMALL,
+            "--right-dir", str(slave_dir),
+            "--tables", "orders,nation,region",
+            "--pk", "orders=o_orderkey",
+            "--pk", "nation=n_nationkey",
+            "--column-drift",
+            "--fix-sql-out", str(tmp_path / "fix"),
+            "--reconcile-out", str(tmp_path / "repaired"),
+        ]
+    )
+    assert code == 0
+    assert sorted(digest_passes) == ["main.nation", "main.orders"]
+
+    out = capsys.readouterr().out
+    assert [l for l in out.splitlines() if l.startswith("drift ")] == [
+        f"drift main.orders o_totalprice {n_modified}"
+    ]
+
+    def fix_lines(table: str) -> int:
+        return sum(
+            1
+            for f in (tmp_path / "fix" / f"main_{table}_fix").glob("part-*")
+            for line in f.read_text().splitlines()
+            if line.strip()
+        )
+
+    assert fix_lines("orders") == n_modified + n_deleted + 5
+    assert fix_lines("nation") == 0
+    repaired = spark.read.parquet(str(tmp_path / "repaired" / "main_orders_repaired"))
+    assert repaired.count() == orders.count()
+
+
 def test_cli_fk_audit_reports_slave_orphans(spark, tmp_path, capsys):
     """--fk: deleting parent orders on the slave orphans their lineitems —
     the cross-table damage the per-table diff can't see."""

@@ -222,6 +222,30 @@ def test_load_table_leaves_session_conf_unchanged(spark):
     assert snapshot() == before
 
 
+def test_unfingerprintable_paths_do_not_share_a_cached_schema(
+    spark, tmp_path, monkeypatch
+):
+    """A path _path_key cannot fingerprint (key None) bypasses the schema
+    cache: a schema cached under None would be served to the next such
+    path, and the by-name read would return that table's columns as
+    NULL."""
+    from tidb_large_table_compare_spark.sources import tables
+
+    monkeypatch.setattr(tables, "_path_key", lambda path: None)
+    monkeypatch.setattr(tables, "_SCHEMA_CACHE", {})
+    spark.createDataFrame([(1, "a")], "x long, y string").write.parquet(
+        str(tmp_path / "a" / "t.parquet")
+    )
+    spark.createDataFrame([(2, 3.5)], "p long, q double").write.parquet(
+        str(tmp_path / "b" / "t.parquet")
+    )
+    first = load_table(spark, str(tmp_path / "a"), "t")
+    second = load_table(spark, str(tmp_path / "b"), "t")
+    assert [tuple(r) for r in first.collect()] == [(1, "a")]
+    assert second.columns == ["p", "q"]
+    assert [tuple(r) for r in second.collect()] == [(2, 3.5)]
+
+
 def test_orc_compare_end_to_end(spark, tmp_path):
     """The compare engine is source-agnostic: two ORC-backed tables produce
     the identical digest summary the parquet layout produces."""

@@ -110,6 +110,7 @@ def test_run_jobs_failure_isolated(spark):
     run = run_jobs(spark, [bad, good], parallelism=1)
     assert run.ok_count == 1 and run.fail_count == 1
     assert run.failed_tables == ["main.bad"] and run.exit_code == 1
+    assert run.failures["main.bad"].startswith("AnalysisException: ")
 
 
 # ---- report aggregation (A16-A25) --------------------------------------------

@@ -31,10 +31,7 @@ import tempfile
 import time
 from pathlib import Path
 
-from tidb_large_table_compare_spark.operators.compare import (
-    CompareOptions,
-    compare_tables,
-)
+from tidb_large_table_compare_spark.operators.compare import CompareOptions
 from tidb_large_table_compare_spark.operators.fixsql import fix_sql
 from tidb_large_table_compare_spark.plans.discover import discover
 from tidb_large_table_compare_spark.plans.pipeline import CompareJob, run_jobs
@@ -319,6 +316,8 @@ def _run(args) -> int:
         parallelism=args.parallelism,
         progress=lambda line: print(line, file=sys.stderr),
     )
+    for name, cause in sorted(run.failures.items()):
+        print(f"compare failed for {name}: {cause}", file=sys.stderr)
 
     # report (A16-A25): the reference's complete final-report block
     # (step3_run_syncdiff.sh:175-244), then a machine-readable line.
@@ -367,39 +366,22 @@ def _run(args) -> int:
                             f"min={r.min_value} max={r.max_value}"
                         )
 
-    # Tables whose compare already failed in run_jobs must not re-enter
-    # the drill-down loops: _drill_cmp would re-run the same compare and
-    # re-raise the exception run_jobs isolated, crashing the CLI past the
-    # report it just printed.
-    failed = set(run.failed_tables)
-
-    # One TableCompare per keyed table, shared by every drill-down flag
-    # below — its caches (_bad_state, _diff_rows) amortize the digest pass
-    # across --column-drift / --fix-sql-out / --reconcile-out instead of
-    # re-running two full scans per flag per table.
-    drill_cmps: dict[str, object] = {}
-
-    def _drill_cmp(job):
-        if job.table not in drill_cmps:
-            drill_cmps[job.table] = compare_tables(
-                spark, job.left, job.right, job.pk, job.options, job.table
-            )
-        return drill_cmps[job.table]
+    # The drill-down flags below reuse run_jobs' TableCompare per keyed
+    # table: its digest pass and persisted diff already ran for the summary,
+    # so --column-drift / --fix-sql-out / --reconcile-out add no second
+    # compare. A table without one failed in run_jobs and is skipped.
+    drill = [
+        (job, run.compares[job.table])
+        for job in jobs
+        if job.pk and job.table in run.compares
+    ]
 
     # per-column drift histogram (B8 refinement): which columns drive the
     # drift, per keyed table — the diagnosis step between "rows differ" and
     # "export fix SQL". Skipped under --multiset: duplicated PKs cannot
     # pair rows (column_drift would refuse).
     if args.column_drift and not args.multiset:
-        for job in jobs:
-            if not job.pk or job.table in failed:
-                continue
-            cmp = _drill_cmp(job)
-            if args.fix_sql_out or args.reconcile_out:
-                # later flags consume the row diff anyway; computing it
-                # first lets column_drift share the persisted frame via
-                # the pk-IN retrieval instead of a second bucket join
-                cmp.diff_rows()
+        for job, cmp in drill:
             for r in cmp.column_drift().collect():
                 if r.mismatch_rows:
                     print(f"drift {job.table} {r.column_name} {r.mismatch_rows}")
@@ -453,11 +435,9 @@ def _run(args) -> int:
 
     # fix-SQL export (B10) for tables with diffs and a PK
     if args.fix_sql_out:
-        for job in jobs:
-            if not job.pk or job.table in failed:
-                continue
+        for job, cmp in drill:
             out = f"{args.fix_sql_out}/{job.table.replace('.', '_')}_fix"
-            fix_sql(_drill_cmp(job)).coalesce(1).write.mode("overwrite").text(out)
+            fix_sql(cmp).coalesce(1).write.mode("overwrite").text(out)
 
     # native repair application (closing the fix-SQL loop): write the right
     # side patched to match the left, per keyed table with diffs
@@ -468,20 +448,14 @@ def _run(args) -> int:
             verify_repair,
         )
 
-        for job in jobs:
-            if not job.pk or job.table in failed:
-                continue
-            repaired = apply_fixes(
-                job.left, job.right, job.pk, _drill_cmp(job).diff_rows()
-            )
+        for job, cmp in drill:
+            repaired = apply_fixes(job.left, job.right, job.pk, cmp.diff_rows())
             out = f"{args.reconcile_out}/{job.table.replace('.', '_')}_repaired"
             repaired.write.mode("overwrite").parquet(out)
             if args.verify_repaired:
                 # verify the WRITTEN bytes, not the in-memory frame: read
                 # back and re-check against the master at drift-sized cost
-                verdict = verify_repair(
-                    _drill_cmp(job), spark.read.parquet(out)
-                ).collect()[0]
+                verdict = verify_repair(cmp, spark.read.parquet(out)).collect()[0]
                 print(
                     f"repair-verify {job.table}: equivalent="
                     f"{verdict.equivalent} upcount={verdict.upcount} "
@@ -490,7 +464,7 @@ def _run(args) -> int:
                 if not verdict.equivalent:
                     unrepaired.append(job.table)
 
-    all_failed = sorted(failed | set(read_failures))
+    all_failed = sorted({*run.failures, *read_failures})
     if all_failed:
         print(f"FAILED tables: {', '.join(all_failed)}", file=sys.stderr)
     if unrepaired:

@@ -13,6 +13,10 @@ thousands of scan tasks, the guard never fires, and no redistribution of
 a large input is ever introduced. This is deliberately an operator-level
 knob, not a session default: only stages whose per-row cost dwarfs one
 small shuffle (sketching, GEMM argmax) opt in.
+
+The module is also the one seam for plan-statistics probes:
+``optimized_plan_size_bytes`` and ``estimate_rows`` are what every
+size-gated or row-count-sized decision in the engine reads.
 """
 
 from __future__ import annotations
@@ -26,9 +30,9 @@ def optimized_plan_size_bytes(df: DataFrame) -> int | None:
 
     The probe reads py4j internals (``_jdf.queryExecution()``), which do
     not exist under Spark Connect and are not a stable API — the same
-    exposure ``operators/compare.py::_estimate_rows`` guards. Every size-
-    gated decision in the engine routes through here so an internals
-    change degrades to each caller's conservative default (full spread /
+    exposure :func:`estimate_rows` guards. Every size-gated decision in
+    the engine routes through one of the two, so an internals change
+    degrades to each caller's conservative default (full spread /
     no static broadcast / pushdown off) instead of raising.
     """
     try:
@@ -37,34 +41,27 @@ def optimized_plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
-def ensure_min_partitions_post_shuffle(
-    derived: DataFrame,
-    input_scan: DataFrame,
-    min_partitions: int | None = None,
-) -> DataFrame:
-    """:func:`ensure_min_partitions` for a POST-SHUFFLE frame (groupBy/join
-    output), deciding from its INPUT's statically-known scan layout.
-
-    Probing ``derived.rdd.getNumPartitions()`` directly is fine on a scan
-    but toxic above a shuffle under AQE: materializing the RDD **executes
-    the plan's query stages** as throwaway jobs whose only yield is a
-    partition count — at 100 TB that is a full extra pass over the data
-    (measured: the curation pipeline's spread probe re-ran the exact-dedup
-    aggregation per invocation, round 13). The input scan's partition count
-    costs nothing to read: when the input already splits into
-    ``min_partitions``+ scan tasks the corpus is big and AQE's own
-    coalescing governs the shuffle output; only a small input (the
-    single-row-group shape) gets the explicit spread of the derived frame.
+def estimate_rows(
+    df: DataFrame, bytes_per_row: int, hint: int | None = None
+) -> int:
+    """Row-count estimate for sizing decisions, cheapest source first:
+    the caller's ``hint`` (catalog stats), Catalyst's plan ``rowCount``,
+    the plan size ÷ ``bytes_per_row`` (footer-derived for file scans — no
+    job), and one narrow ``count()`` job as the last resort (Spark Connect,
+    where the py4j probe is absent, or sources with unknown size).
     """
-    try:
-        default_par = derived.sparkSession.sparkContext.defaultParallelism
-        current = input_scan.rdd.getNumPartitions()
+    if hint is not None:
+        return max(1, hint)
+    try:  # plan statistics via py4j internals — absent under Spark Connect
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        if stats.rowCount().isDefined():
+            return int(str(stats.rowCount().get()))
+        size = int(str(stats.sizeInBytes()))
+        if 0 < size < (1 << 50):  # unknown sources report Long.Max-ish sizes
+            return max(1, size // bytes_per_row)
     except Exception:
-        return derived  # Spark Connect: same degrade as ensure_min_partitions
-    target = min_partitions or default_par
-    if current < target:
-        return derived.repartition(target)
-    return derived
+        pass
+    return df.count()
 
 
 def ensure_min_partitions(

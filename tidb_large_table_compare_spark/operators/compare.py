@@ -42,6 +42,7 @@ from tidb_large_table_compare_spark.functions.hashing import (
     in_list,
     row_hash,
 )
+from tidb_large_table_compare_spark.functions.partitioning import estimate_rows
 from tidb_large_table_compare_spark.operators.schema_diff import schema_diff
 
 __all__ = ["CompareOptions", "TableCompare", "compare_tables"]
@@ -67,18 +68,6 @@ class CompareOptions:
     # probe and the count() fallback, so Connect-style sessions (where the
     # py4j stats probe throws) run zero sizing jobs when stats are known.
     row_count_hint: int | None = None
-    # Count-only drift pre-probe (see TableCompare._count_drift_is_heavy):
-    # OFF unless explicitly enabled. Measured round 13 (sf0.1 + sf10 A/Bs
-    # in OPTIMIZATION_r13.md): on this 6-column fixture the probe's
-    # pk-only scan costs ~0.63× the digest pass it might save (scan/decode
-    # dominates, not hashing), which makes it a net loss both when cores
-    # are saturated (the overlap is additive) and when drift is count-
-    # balanced (the probe learns nothing). Enable it (True) for WIDE
-    # tables where row_hash over many columns dwarfs a pk-only scan AND
-    # count-visible drift (inserts/deletes) is the expected failure mode —
-    # there a heavy verdict cancels the digest pass early and saves most
-    # of a full-width canonicalize+hash of both sides.
-    drift_probe: bool | None = None
 
 
 def _narrow(df: DataFrame, pk: list[str], compare_cols: list[str], n_buckets: int,
@@ -130,7 +119,6 @@ class TableCompare:
         # instance
         self._narrows: dict[str, DataFrame] = {}
         self._n_buckets_memo: int | None = None
-        self._est_rows_memo: int | None = None
         # (n_buckets, in-list ids | None, persisted bad-bucket frame | None)
         self._bad_state: tuple[int, list | None, DataFrame | None] | None = None
 
@@ -156,58 +144,26 @@ class TableCompare:
         if opt.n_buckets is not None:
             return opt.n_buckets
         if self._n_buckets_memo is None:
-            # the plan-stats probe triggers a Catalyst optimize of the left
-            # plan (~85 ms driver time, round-12 micro-profile) — cache the
-            # result; inputs are fixed per instance
-            self._n_buckets_memo = self._n_buckets_uncached()
+            # Size from catalog stats (row_count_hint — the reference reads
+            # TABLE_ROWS, step1_query_tables.sh:115-117) or optimizer plan
+            # statistics (file sizes for parquet scans) — zero Spark jobs.
+            # The probe costs a Catalyst optimize of the left plan (~85 ms
+            # driver time, round-12 micro-profile), so the result is cached;
+            # inputs are fixed per instance. Bucket count only tunes
+            # drill-down granularity; results are invariant to it
+            # (test_bucket_count_invariance), so a coarse estimate is fine.
+            rows = estimate_rows(
+                self.left, bytes_per_row=64, hint=opt.row_count_hint
+            )
+            n = max(opt.min_buckets, rows // max(opt.chunk_size, 1) + 1)
+            self._n_buckets_memo = min(n, opt.max_buckets)
         return self._n_buckets_memo
 
-    def _n_buckets_uncached(self) -> int:
-        opt = self.options
-        # Size the bucket count from optimizer plan statistics (file sizes for
-        # parquet scans) — zero Spark jobs. On a real deployment this comes
-        # from catalog statistics (the reference reads TABLE_ROWS from
-        # information_schema, step1_query_tables.sh:115-117). Bucket count
-        # only tunes drill-down granularity; results are invariant to it
-        # (test_bucket_count_invariance), so a coarse estimate is fine.
-        rows = self._estimate_rows()
-        n = max(opt.min_buckets, rows // max(opt.chunk_size, 1) + 1)
-        return min(n, opt.max_buckets)
-
-    _BYTES_PER_ROW_GUESS = 64
     _MAX_INLIST = 50_000  # bad-bucket count above which we broadcast instead
     # bad-bucket FRACTION above which restriction is skipped outright —
     # the filter would discard under half the rows while every downstream
     # job re-pays the big-IN/semi-join plan cost (see _bad_bucket_state)
     _RESTRICT_SKIP_FRACTION = 0.5
-    # estimated-row floor for the count-only drift pre-probe: below it the
-    # full digest pass costs less than the probe's own fixed job overhead
-    # (one scheduling round trip + a pk-columns scan), so probing cannot
-    # pay; above it the avoidable work — a full-width canonicalize+hash
-    # pass over BOTH sides — grows linearly while the probe reads only the
-    # pk columns. Same fixed-cost-vs-work-saved shape as _MAX_INLIST.
-    _PROBE_MIN_EST_ROWS = 20_000
-
-    def _estimate_rows(self) -> int:
-        # memoized: inputs are fixed per instance, and the plan-stats probe
-        # costs a Catalyst optimize (~85 ms) per call
-        if self._est_rows_memo is None:
-            self._est_rows_memo = self._estimate_rows_uncached()
-        return self._est_rows_memo
-
-    def _estimate_rows_uncached(self) -> int:
-        if self.options.row_count_hint is not None:  # catalog stats (TABLE_ROWS)
-            return max(1, self.options.row_count_hint)
-        try:  # plan statistics via py4j internals — absent under Spark Connect
-            stats = self.left._jdf.queryExecution().optimizedPlan().stats()
-            if stats.rowCount().isDefined():
-                return int(str(stats.rowCount().get()))
-            size = int(str(stats.sizeInBytes()))
-            if 0 < size < (1 << 50):  # unknown sources report Long.Max-ish sizes
-                return max(1, size // self._BYTES_PER_ROW_GUESS)
-        except Exception:
-            pass
-        return self.left.count()  # last resort: one narrow count job
 
     # -- digest phase (B5/B6) ----------------------------------------------
     def _narrow_side(self, side: str) -> DataFrame:
@@ -270,104 +226,6 @@ class TableCompare:
         )
         return agg.filter(bad).select("__bucket")
 
-    # -- drift pre-probe -----------------------------------------------------
-    def _probe_enabled(self) -> bool:
-        if not self.options.drift_probe:
-            return False  # default OFF — see CompareOptions.drift_probe
-        try:  # the concurrent probe needs job groups/cancellation (py4j)
-            self.spark.sparkContext
-        except Exception:
-            return False  # Spark Connect: keep the plain digest pass
-        return True  # explicit opt-in overrides
-
-    def _probed_digest_collect(self, collect_fn):
-        """Run the digest-pass collect CONCURRENTLY with the count-only
-        probe (guide §2.6: overlap independent jobs).
-
-        Sequenced probe-then-digest was measured to REGRESS mixed-drift
-        compares whose count drift lands under the skip threshold while
-        their digest drift lands over it (the sf0.1 reconcile entry at
-        4096 buckets: probe False → full digest anyway → the probe scan
-        was pure waste, +0.3 s). Overlapped, the False verdict costs ~zero
-        wall clock — the digest was already running on idle cores — and a
-        heavy verdict cancels the digest mid-flight (its only yield would
-        have been "skip restriction"). Returns the collected bad-bucket
-        ids, or None when the probe's heavy verdict made them moot.
-
-        Thread-safety: pinned-thread mode (default since Spark 3.2) maps
-        this Python thread to its own JVM thread, so the job group set
-        inside it cannot leak to the caller's jobs; the caller's job
-        description is forwarded so UI/event-log attribution survives.
-        """
-        import threading
-        import uuid
-
-        sc = self.spark.sparkContext
-        group = f"graft-digest-{uuid.uuid4().hex[:8]}"
-        desc = sc.getLocalProperty("spark.job.description")
-        box: dict = {}
-
-        def _run() -> None:
-            sc.setJobGroup(group, desc or "compare digest pass",
-                           interruptOnCancel=True)
-            try:
-                box["ids"] = collect_fn()
-            except BaseException as exc:  # surfaced on the main thread
-                box["err"] = exc
-
-        t = threading.Thread(target=_run, daemon=True)
-        t.start()
-        try:
-            heavy = self._count_drift_is_heavy()
-        except BaseException:
-            sc.cancelJobGroup(group)
-            t.join()
-            raise
-        if heavy:
-            sc.cancelJobGroup(group)
-            t.join()
-            return None
-        t.join()
-        if "err" in box:
-            raise box["err"]
-        return box["ids"]
-
-    def _count_drift_is_heavy(self) -> bool:
-        """Deterministic count-only drift probe: True when MORE than
-        ``_RESTRICT_SKIP_FRACTION`` of buckets differ in per-bucket ROW
-        COUNT between the sides.
-
-        A count mismatch implies a digest mismatch, so a heavy verdict
-        here is a *sufficient* condition for the decision the full digest
-        pass would reach — ``_bad_bucket_state`` can skip restriction
-        without running it, saving a full-width canonicalize+hash pass
-        over both sides whose only yield would have been "don't restrict"
-        (round-12 verdict item 2: at 100 TB that is two full table scans
-        spent on a decision). The probe reads ONLY the pk columns (column
-        pruning reaches the parquet scan — no compare-column pages, no
-        row_hash), shuffles ∝ n_buckets with map-side combine, and is one
-        job. It cannot flip a verdict: False (count-balanced drift, e.g.
-        update-only feeds, or light drift) just falls through to the full
-        digest pass, which remains the decision of record.
-        """
-        n_buckets = self._n_buckets()
-        skip_above = self._RESTRICT_SKIP_FRACTION * n_buckets
-        tagged = [
-            df.select(
-                bucket_id(self.pk, n_buckets, df).alias("__bucket"),
-                F.lit(side).alias("__side"),
-            )
-            for df, side in ((self.left, 0), (self.right, 1))
-        ]
-        u = tagged[0].unionByName(tagged[1])
-        agg = u.groupBy("__bucket").agg(
-            F.count(F.when(F.col("__side") == 0, 1)).alias("l_cnt"),
-            F.count(F.when(F.col("__side") == 1, 1)).alias("r_cnt"),
-        )
-        bad = agg.filter(F.col("l_cnt") != F.col("r_cnt"))
-        limit_n = int(skip_above) + 1
-        return bad.limit(limit_n).count() > skip_above
-
     # -- drill-down (B8/B9) --------------------------------------------------
     def _bad_bucket_state(self) -> tuple[int, list | None, DataFrame | None]:
         """Materialize the mismatched-bucket set once, for every consumer.
@@ -405,26 +263,9 @@ class TableCompare:
             n_buckets = self._n_buckets()
             skip_above = self._RESTRICT_SKIP_FRACTION * n_buckets
             bad = self.mismatched_buckets()
-
-            def _collect_ids() -> list:
-                return [
-                    r["__bucket"]
-                    for r in bad.limit(self._MAX_INLIST + 1).collect()
-                ]
-
-            if self._probe_enabled():
-                # regime-aware shortcut: the count-only probe runs
-                # CONCURRENTLY with the digest collect — a heavy verdict
-                # proves "skip restriction" and cancels the digest (whose
-                # only yield that was); a False verdict costs ~zero wall
-                # clock. Size-gated, so small compares run zero extra jobs,
-                # and the decision of record is unchanged either way.
-                bad_ids = self._probed_digest_collect(_collect_ids)
-                if bad_ids is None:
-                    self._bad_state = (n_buckets, None, None)
-                    return self._bad_state
-            else:
-                bad_ids = _collect_ids()
+            bad_ids = [
+                r["__bucket"] for r in bad.limit(self._MAX_INLIST + 1).collect()
+            ]
             if len(bad_ids) <= self._MAX_INLIST:
                 if bad_ids and len(bad_ids) > skip_above:
                     self._bad_state = (n_buckets, None, None)

@@ -14,6 +14,8 @@ model (`operators/compare.py`).
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -118,10 +120,7 @@ def verify_repair(tc, repaired: DataFrame) -> DataFrame:
             "verify_repair needs a keyed compare (bucket scoping is "
             "PK-determined); re-verify multiset compares in full"
         )
-    from tidb_large_table_compare_spark.operators.compare import (
-        CompareOptions,
-        compare_tables,
-    )
+    from tidb_large_table_compare_spark.operators.compare import compare_tables
 
     n_buckets, bad_ids, bad_frame = tc._bad_bucket_state()
     if bad_ids is None and bad_frame is None:
@@ -136,27 +135,15 @@ def verify_repair(tc, repaired: DataFrame) -> DataFrame:
         n_bad = len(bad_ids) if bad_ids is not None else bad_frame.count()
         scope_helps = n_bad <= _SCOPE_FRACTION * n_buckets
     if not scope_helps:
-        # drift_probe off: a post-repair verification is the textbook
-        # LOW-drift compare (the repair just ran), so the count-only
-        # pre-probe can never say "heavy" — it would only execute the
-        # repaired plan one extra time to learn nothing (measured +1.4 s
-        # on the sf0.1 reconcile entry when left on)
-        opts_full = CompareOptions(
-            **{**tc.options.__dict__, "drift_probe": False}
-        )
         full = compare_tables(
-            tc.spark, tc.left, repaired, tc.pk, opts_full, tc.table_name
+            tc.spark, tc.left, repaired, tc.pk, tc.options, tc.table_name
         )
         return full.summary()
     # pin the original bucket count: granularity is already drift-scoped,
     # and the pin skips the scoped compare's row-estimate probe (which
     # would otherwise fall back to an extra count() job on the filtered
-    # frame, whose stats Catalyst cannot see through the hash filter).
-    # drift_probe off for the same reason as the full branch above: the
-    # scoped re-verify is low-drift by construction.
-    opts = CompareOptions(
-        **{**tc.options.__dict__, "n_buckets": n_buckets, "drift_probe": False}
-    )
+    # frame, whose stats Catalyst cannot see through the hash filter)
+    opts = dataclasses.replace(tc.options, n_buckets=n_buckets)
     scoped = compare_tables(
         tc.spark,
         tc._restrict_to_bad_buckets(tc.left),

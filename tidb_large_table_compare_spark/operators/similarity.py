@@ -395,10 +395,13 @@ def derive_max_cells(corpus: DataFrame, floor: int = 1024) -> int:
     sizing (probe candidates ∝ N/cells × n_probe, quantizer cost ∝ cells;
     √N balances the two as the corpus grows; see e.g. the FAISS IVF
     guidelines). N comes from the same estimate ladder the comparison
-    engine uses (`operators/compare.py::_estimate_rows`): optimizer plan
+    engine uses (`functions/partitioning.py::estimate_rows`): optimizer plan
     statistics first (zero Spark jobs for parquet scans — file sizes are
-    known), one narrow count job as the last resort. √ makes the estimate
-    error-tolerant: a 2× row misestimate moves the cell count 1.4×.
+    known), one narrow count job as the last resort. Embeddings rows are
+    dominated by the quantized vector (8 bytes per component + id/label
+    overhead), hence 160 bytes per row for the size-based estimate. √ makes
+    the estimate error-tolerant: a 2× row misestimate moves the cell count
+    1.4×.
 
     ``floor`` keeps small corpora on the fixed default (1024): below
     floor² rows the derived value never binds, so driver-SF outputs are
@@ -407,23 +410,11 @@ def derive_max_cells(corpus: DataFrame, floor: int = 1024) -> int:
     """
     import math
 
-    rows: int | None = None
-    try:  # plan statistics via py4j internals — absent under Spark Connect
-        stats = corpus._jdf.queryExecution().optimizedPlan().stats()
-        if stats.rowCount().isDefined():
-            rows = int(str(stats.rowCount().get()))
-        else:
-            size = int(str(stats.sizeInBytes()))
-            if 0 < size < (1 << 50):  # unknown sources report Long.Max-ish
-                # embeddings rows are dominated by the quantized vector:
-                # 8 bytes per component + id/label overhead. Infer the
-                # width from the schema when the vector column is present;
-                # a wrong guess is damped by the √ anyway.
-                rows = max(1, size // 160)
-    except Exception:
-        pass
-    if rows is None:
-        rows = corpus.count()  # last resort: one narrow count job
+    from tidb_large_table_compare_spark.functions.partitioning import (
+        estimate_rows,
+    )
+
+    rows = estimate_rows(corpus, bytes_per_row=160)
     return max(floor, math.isqrt(max(rows, 0)))
 
 

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from tidb_large_table_compare_spark.operators.compare import (
     CompareOptions,
+    TableCompare,
     compare_tables,
 )
 
@@ -49,14 +50,37 @@ class CompareRun:
 
     run_ts: str
     summaries: DataFrame  # (run_ts, table, structure_ok, upcount, downcount)
-    ok_count: int
-    fail_count: int
-    failed_tables: list[str]
+    # the TableCompare behind each successful summary — drill-down consumers
+    # (column drift, fix-SQL, repair) reuse its digest pass and persisted
+    # diff instead of comparing the table again
+    compares: dict[str, TableCompare]
+    # "ExceptionClass: first message line" per failed table
+    failures: dict[str, str]
+
+    @property
+    def ok_count(self) -> int:
+        return len(self.compares)
+
+    @property
+    def fail_count(self) -> int:
+        return len(self.failures)
+
+    @property
+    def failed_tables(self) -> list[str]:
+        return sorted(self.failures)
 
     @property
     def exit_code(self) -> int:
         """Nonzero if any table failed (``step3_run_syncdiff.sh:247-249``)."""
         return 1 if self.fail_count else 0
+
+
+def _failure_cause(exc: BaseException) -> str:
+    """``ExceptionClass: first message line`` — enough to tell a missing
+    column from a corrupt file without the traceback."""
+    lines = str(exc).strip().splitlines()
+    name = type(exc).__name__
+    return f"{name}: {lines[0]}" if lines else name
 
 
 def format_progress(
@@ -97,43 +121,39 @@ def run_jobs(
 
     def one(job: CompareJob):
         t0 = time.monotonic()
-        cmp = compare_tables(
-            spark, job.left, job.right, job.pk, job.options, job.table
-        )
-        row = cmp.summary().collect()[0]
+        try:
+            cmp = compare_tables(
+                spark, job.left, job.right, job.pk, job.options, job.table
+            )
+            row = cmp.summary().collect()[0]
+        except Exception as exc:  # isolated per table (step3:111-122)
+            return job.table, None, None, None, _failure_cause(exc)
         # per-table wall-clock, the reference's duration accounting
         # (step3_run_syncdiff.sh:125-134)
-        return job.table, row, round(time.monotonic() - t0, 3)
+        return job.table, cmp, row, round(time.monotonic() - t0, 3), None
 
-    def emit(table: str, secs: float | None) -> None:
+    results: list[tuple[str, object, float]] = []
+    compares: dict[str, TableCompare] = {}
+    failures: dict[str, str] = {}
+
+    def record(table, cmp, row, secs, cause) -> None:
         nonlocal done
+        if cause is not None:
+            failures[table] = cause
+        else:
+            compares[table] = cmp
+            results.append((table, row, secs))
         done += 1
         if progress is not None:
             progress(format_progress(done, total, table, secs))
 
-    results: list[tuple[str, object]] = []
-    failed: list[str] = []
     if parallelism > 1 and len(jobs) > 1:
         with ThreadPoolExecutor(max_workers=parallelism) as pool:
-            futures = {pool.submit(one, j): j.table for j in jobs}
-            for fut in as_completed(futures):
-                table = futures[fut]
-                try:
-                    res = fut.result()
-                    results.append(res)
-                    emit(table, res[2])
-                except Exception:
-                    failed.append(table)
-                    emit(table, None)
+            for fut in as_completed([pool.submit(one, j) for j in jobs]):
+                record(*fut.result())
     else:
         for j in jobs:
-            try:
-                res = one(j)
-                results.append(res)
-                emit(j.table, res[2])
-            except Exception:
-                failed.append(j.table)
-                emit(j.table, None)
+            record(*one(j))
 
     rows = [
         (run_ts, table, row.structure_ok, row.upcount, row.downcount, secs)
@@ -145,9 +165,5 @@ def run_jobs(
         "upcount bigint, downcount bigint, duration_s double",
     )
     return CompareRun(
-        run_ts=run_ts,
-        summaries=summaries,
-        ok_count=len(results),
-        fail_count=len(failed),
-        failed_tables=sorted(failed),
+        run_ts=run_ts, summaries=summaries, compares=compares, failures=failures
     )

@@ -65,6 +65,11 @@ def _path_key(path: str) -> tuple | None:
     would serve a stale schema/handle (round-12 ADVICE). Fold the child
     entries' stats in: max child mtime_ns, total size, and entry count
     (one os.scandir — metadata only, the same class of work as the stat).
+
+    Assumes a FLAT directory table (data files directly under ``path``, as
+    every loader here writes them): only the first level is scanned, so a
+    file rewritten in place inside a partition subdirectory (``k=v/``)
+    leaves the fingerprint unchanged and can serve a stale schema/handle.
     """
     rp = os.path.realpath(path)
     try:
@@ -183,13 +188,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def _read_parquet_cached_schema(spark: SparkSession, path: str, key: tuple) -> DataFrame:
+def _read_parquet_cached_schema(
+    spark: SparkSession, path: str, key: tuple | None
+) -> DataFrame:
     """``spark.read.parquet`` with one schema inference per path fingerprint
     per process (see ``_SCHEMA_CACHE``). The first read infers and caches;
     every later read passes the schema explicitly, which skips the
     footer-inference job entirely — the parquet reader still validates the
     requested schema against each file's footer at scan time, so a
-    swapped-out file fails loudly rather than reading wrong."""
+    swapped-out file fails loudly rather than reading wrong. An
+    unfingerprintable path (``key is None``) always infers: a schema cached
+    under ``None`` would be served to every other such path, and the
+    by-name read would turn its missing columns into silent NULLs."""
+    if key is None:
+        return spark.read.parquet(path)
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         df = spark.read.parquet(path)

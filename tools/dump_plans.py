@@ -4,9 +4,8 @@
 Usage: python3 tools/dump_plans.py <outdir> <suffix> [entry ...]
 e.g.   python3 tools/dump_plans.py plans/r13 after cmp_summary_orders ...
 
-The explain covers the RETURNED frame's plan; eager subplans (the compare
-digest pass, the drift probe) are dumped by the companion snippets below
-when named with the cmp_digest_pass / cmp_drift_probe pseudo-entries.
+The explain covers the RETURNED frame's plan; the compare's eager digest
+pass is dumped when named with the cmp_digest_pass pseudo-entry.
 """
 
 from __future__ import annotations
@@ -16,8 +15,6 @@ import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-from pyspark.sql import functions as F  # noqa: E402
 
 from tidb_large_table_compare_spark.session import get_spark  # noqa: E402
 
@@ -35,10 +32,7 @@ def main() -> None:
     spark = get_spark("plans")
     os.makedirs(outdir, exist_ok=True)
 
-    from tidb_large_table_compare_spark.operators.compare import (
-        CompareOptions,
-        TableCompare,
-    )
+    from tidb_large_table_compare_spark.operators.compare import TableCompare
     from tidb_large_table_compare_spark.perturb import perturbed_orders
     from tidb_large_table_compare_spark.registry import QUERIES
     from tidb_large_table_compare_spark.sources.tables import load_table
@@ -50,32 +44,6 @@ def main() -> None:
                 spark, orders, perturbed_orders(orders), ["o_orderkey"]
             )
             df = cmp.mismatched_buckets()
-        elif name == "cmp_drift_probe":
-            orders = load_table(spark, sf_dir, "orders")
-            cmp = TableCompare(
-                spark, orders, perturbed_orders(orders), ["o_orderkey"]
-            )
-            n_buckets = cmp._n_buckets()
-            from tidb_large_table_compare_spark.functions.hashing import (
-                bucket_id,
-            )
-
-            tagged = [
-                side.select(
-                    bucket_id(cmp.pk, n_buckets, side).alias("__bucket"),
-                    F.lit(i).alias("__side"),
-                )
-                for side, i in ((cmp.left, 0), (cmp.right, 1))
-            ]
-            u = tagged[0].unionByName(tagged[1])
-            df = (
-                u.groupBy("__bucket")
-                .agg(
-                    F.count(F.when(F.col("__side") == 0, 1)).alias("l_cnt"),
-                    F.count(F.when(F.col("__side") == 1, 1)).alias("r_cnt"),
-                )
-                .filter(F.col("l_cnt") != F.col("r_cnt"))
-            )
         else:
             df = QUERIES[name](spark, sf_dir)
         path = Path(outdir) / f"{name}_{suffix}.txt"
