@@ -16,6 +16,7 @@ from tidb_large_table_compare_spark.operators.compare import (
     compare_tables,
 )
 from tidb_large_table_compare_spark.operators.fixsql import fix_sql
+from tests.conftest import SF_SMALL
 from tests.fixtures import (
     K_EXTRA,
     K_MISSING,
@@ -298,6 +299,54 @@ def test_reconcile_repairs_drifted_side(spark):
     # exact multiset equality, independent of the compare operator
     assert repaired.exceptAll(orders).count() == 0
     assert orders.exceptAll(repaired).count() == 0
+
+
+def test_repair_consumers_share_one_materialized_diff(spark, monkeypatch):
+    """Every bucket drifted, so restriction is skipped and the diff is lazy:
+    fix-SQL export and apply_fixes both read ``repair_diff``, which runs the
+    full drill-down join once for the two of them. Outputs are what the
+    diff defines: one REPLACE per missing/modified row, one DELETE per
+    extra row, and a repaired side equal to the master."""
+    import tidb_large_table_compare_spark.operators.compare as compare_mod
+    from tidb_large_table_compare_spark.operators.reconcile import apply_fixes
+    from tidb_large_table_compare_spark.perturb import perturbed_orders
+    from tidb_large_table_compare_spark.sources.tables import load_table
+
+    materialized = []
+    real = compare_mod.materialize
+
+    def counting(df, mode=None):
+        materialized.append(mode)
+        return real(df, mode)
+
+    monkeypatch.setattr(compare_mod, "materialize", counting)
+    orders = load_table(spark, SF_SMALL, "orders")
+    slave = perturbed_orders(orders)
+    tc = compare_tables(
+        spark, orders, slave, ["o_orderkey"],
+        options=CompareOptions(n_buckets=4), table_name="o",
+    )
+    _, bad_ids, bad = tc._bad_bucket_state()
+    assert bad_ids is None and bad is None  # restriction skipped
+
+    stmts = [r.fix_sql for r in fix_sql(tc).collect()]
+    repaired = apply_fixes(orders, slave, ["o_orderkey"], tc.repair_diff())
+    assert repaired.exceptAll(orders).count() == 0
+    assert orders.exceptAll(repaired).count() == 0
+    assert len(materialized) == 1
+
+    kinds = {
+        r.diff_type: r["count"]
+        for r in tc.diff_rows().groupBy("diff_type").count().collect()
+    }
+    assert sum(s.startswith("REPLACE INTO o ") for s in stmts) == (
+        kinds.get("missing_in_right", 0) + kinds.get("modified", 0)
+    )
+    assert sum(s.startswith("DELETE FROM o ") for s in stmts) == kinds.get(
+        "extra_in_right", 0
+    )
+    assert len(stmts) == sum(kinds.values()) > 0
+    tc.close()
 
 
 def test_verify_repair_scoped_catches_broken_repair(spark):

@@ -750,6 +750,50 @@ def test_cli_drilldowns_reuse_the_summary_compare(
     assert repaired.count() == orders.count()
 
 
+def test_cli_releases_persisted_compare_state(spark, tmp_path):
+    """A drill-down run leaves no persisted RDD behind: each table's
+    IN-list diff, repair diff and bad-bucket frame are released after its
+    last consumer. The fleet spans both persisting regimes: a few drifted
+    orders (IN-list diff, persisted by the compare) and a lineitem with
+    every bucket drifted (lazy diff, materialized once for repair)."""
+    from tidb_large_table_compare_spark.cli import main
+
+    slave_dir = tmp_path / "slave"
+    slave_dir.mkdir()
+    orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
+    key = F.col("o_orderkey")
+    orders.filter(key != 7).withColumn(
+        "o_totalprice",
+        F.when(key % 500 == 1, F.col("o_totalprice") + 1.0).otherwise(
+            F.col("o_totalprice")
+        ),
+    ).write.parquet(str(slave_dir / "orders.parquet"))
+    lineitem = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet")
+    lineitem.withColumn(
+        "l_quantity",
+        F.when(F.col("l_linenumber") == 1, F.col("l_quantity") + 1).otherwise(
+            F.col("l_quantity")
+        ),
+    ).write.parquet(str(slave_dir / "lineitem.parquet"))
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    code = main(
+        [
+            "--left-dir", SF_SMALL,
+            "--right-dir", str(slave_dir),
+            "--tables", "orders,lineitem",
+            "--pk", "orders=o_orderkey",
+            "--pk", "lineitem=l_orderkey,l_linenumber",
+            "--column-drift",
+            "--fix-sql-out", str(tmp_path / "fix"),
+            "--reconcile-out", str(tmp_path / "repaired"),
+        ]
+    )
+    assert code == 0
+    assert persisted().size() == before
+
+
 def test_cli_fk_audit_reports_slave_orphans(spark, tmp_path, capsys):
     """--fk: deleting parent orders on the slave orphans their lineitems —
     the cross-table damage the per-table diff can't see."""

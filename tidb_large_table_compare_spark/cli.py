@@ -316,15 +316,28 @@ def _run(args) -> int:
         parallelism=args.parallelism,
         progress=lambda line: print(line, file=sys.stderr),
     )
+    try:
+        return _report_and_drill(args, spark, jobs, run, read_failures)
+    finally:
+        # every consumer has run: release each table's persisted diff and
+        # bad-bucket state, so the session holds none of it after the run
+        for cmp in run.compares.values():
+            cmp.close()
+
+
+def _report_and_drill(args, spark, jobs, run, read_failures) -> int:
+    """Everything that reads ``run``: failure lines, the final report, the
+    per-table consumers (profile, column drift, FK audit, fix-SQL, repair
+    + verify) and the run's exit code."""
     for name, cause in sorted(run.failures.items()):
         print(f"compare failed for {name}: {cause}", file=sys.stderr)
 
     # report (A16-A25): the reference's complete final-report block
     # (step3_run_syncdiff.sh:175-244), then a machine-readable line.
-    # run.summaries is a driver-local createDataFrame relation
-    # (plans/pipeline.py::run_jobs), so the two actions below (render +
-    # totals) re-scan a handful of local rows, not a distributed plan —
-    # no persist needed.
+    # run.summaries is a local relation (plans/pipeline.py::run_jobs via
+    # functions/localframe.py), so the two actions below (render + totals)
+    # read a handful of driver-held rows with no Python worker — no
+    # persist needed.
     lines = [r.line for r in render_final_report(run.summaries).collect()]
     totals = report_totals(run.summaries).collect()[0]
     report = "\n".join(lines) + (
@@ -449,7 +462,7 @@ def _run(args) -> int:
         )
 
         for job, cmp in drill:
-            repaired = apply_fixes(job.left, job.right, job.pk, cmp.diff_rows())
+            repaired = apply_fixes(job.left, job.right, job.pk, cmp.repair_diff())
             out = f"{args.reconcile_out}/{job.table.replace('.', '_')}_repaired"
             repaired.write.mode("overwrite").parquet(out)
             if args.verify_repaired:

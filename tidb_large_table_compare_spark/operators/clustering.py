@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tidb_large_table_compare_spark.functions.localframe import local_frame
 from tidb_large_table_compare_spark.functions.materialize import materialize
 
 __all__ = ["connected_components"]
@@ -48,13 +49,10 @@ def _driver_components(pairs: DataFrame) -> DataFrame:
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     out = [(n, find(n)) for n in sorted(parent)]
-    # pandas input takes the Arrow batch path — at the 100k-edge bound the
-    # assignment list is ~2e5 rows, ~6 s of per-row py4j otherwise
-    import pandas as pd
-
-    return pairs.sparkSession.createDataFrame(
-        pd.DataFrame(out, columns=["node", "cluster_id"]),
-        schema="node bigint, cluster_id bigint",
+    # Arrow, not per-row py4j: at the 100k-edge bound the assignment list is
+    # ~2e5 rows, ~6 s of row-by-row marshaling otherwise
+    return local_frame(
+        pairs.sparkSession, out, "node bigint, cluster_id bigint"
     )
 
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tidb_large_table_compare_spark.functions.fsutil import hadoop_fs
+from tidb_large_table_compare_spark.functions.localframe import local_frame
 
 __all__ = [
     "compaction_plan",
@@ -293,14 +294,9 @@ def file_inventory(
                 for fut in pending:
                     fut.cancel()
                 return _file_inventory_distributed(spark, dir_path)
-    # pandas input takes the Arrow batch path (list-of-tuples marshals
-    # row-by-row over py4j: measured 6.0 s vs 1.3 s per 100k rows)
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["path", "bytes"]),
-        schema="path string, bytes bigint",
-    )
+    # Arrow, not per-row py4j (list-of-tuples createDataFrame marshals
+    # row-by-row: measured 6.0 s vs 1.3 s per 100k rows)
+    return local_frame(spark, rows, "path string, bytes bigint")
 
 
 def execute_compaction(

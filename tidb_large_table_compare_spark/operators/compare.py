@@ -42,6 +42,8 @@ from tidb_large_table_compare_spark.functions.hashing import (
     in_list,
     row_hash,
 )
+from tidb_large_table_compare_spark.functions.localframe import local_frame
+from tidb_large_table_compare_spark.functions.materialize import materialize
 from tidb_large_table_compare_spark.functions.partitioning import estimate_rows
 from tidb_large_table_compare_spark.operators.schema_diff import schema_diff
 
@@ -112,6 +114,7 @@ class TableCompare:
         self._schema_diff: DataFrame | None = None
         self._structure_ok: bool | None = None
         self._diff_rows: DataFrame | None = None
+        self._repair_diff: DataFrame | None = None
         # memoized narrow (pk, __bucket, __row_hash) projections: the digest
         # pass and the drill-down each rebuilt them (~94 ms of py4j per
         # build, round-12 micro-profile); the projection is a pure function
@@ -254,10 +257,9 @@ class TableCompare:
         Returns ``(n_buckets, ids | None, persisted_frame | None)``: at
         most one of ids/frame is non-None; both None (with a non-empty
         diff) means restriction is a deliberate no-op. The persisted
-        frame is a deliberate session-lifetime cache — it is embedded in
-        returned lazy diff plans that callers re-consume (fix-SQL,
-        reconcile); releasing it here would re-run the digest compare per
-        consumer.
+        frame lives until :meth:`close` — it is embedded in returned lazy
+        diff plans that callers re-consume (fix-SQL, reconcile); releasing
+        it earlier would re-run the digest compare per consumer.
         """
         if self._bad_state is None:
             n_buckets = self._n_buckets()
@@ -386,11 +388,51 @@ class TableCompare:
             # is drift-sized, and every consumer fan-out (summary, fix-SQL,
             # reconcile, column_drift's key collect, CLI's composed flags)
             # otherwise re-executes the drill-down join per action — persist
-            # it with the same session-lifetime contract as the bad-bucket
-            # state. Heavy-drift forms (frame / restriction-skip) stay lazy:
-            # their diff is not size-bounded.
+            # it until close(), like the bad-bucket frame. Heavy-drift forms
+            # (frame / restriction-skip) stay lazy: their diff is not
+            # size-bounded (repair_diff materializes it for the repair
+            # consumers).
             self._diff_rows = self._diff_rows.persist()
         return self._diff_rows
+
+    def repair_diff(self) -> DataFrame:
+        """:meth:`diff_rows` as a re-readable frame, computed at most once.
+
+        fix-SQL export and ``apply_fixes`` each read the diff several
+        times. The bounded (IN-list) diff is already persisted and is
+        returned as it is. A heavy-drift diff is lazy, and each read would
+        re-run the full drill-down join, so it is materialized once here
+        for both consumers; it is diff-sized, which they already assume is
+        broadcastable. It is persisted rather than locally checkpointed
+        because :meth:`close` can then release it.
+        """
+        if self._repair_diff is None:
+            diff = self.diff_rows()
+            try:
+                from pyspark import StorageLevel
+
+                lazy = diff.storageLevel == StorageLevel.NONE
+            except Exception:
+                # Spark Connect: storageLevel is unavailable, so the diff
+                # stays lazy. Only the probe is guarded; a materialize()
+                # failure (executor loss, OOM) propagates.
+                lazy = False
+            self._repair_diff = (
+                materialize(diff, mode="persist") if lazy else diff
+            )
+        return self._repair_diff
+
+    def close(self) -> None:
+        """Release what this compare persisted: the IN-list diff, the
+        materialized repair diff and the bad-bucket frame. Call it after
+        the table's last consumer; later reads recompute. The diffs go
+        first: they may be built on the bad-bucket frame."""
+        frames = [self._diff_rows, self._repair_diff]
+        if self._bad_state is not None:
+            frames.append(self._bad_state[2])
+        for frame in frames:
+            if frame is not None:
+                frame.unpersist()
 
     def _diff_rows_multiset(self) -> DataFrame:
         """exceptAll-style multiset diff keyed by whole-row hash.
@@ -469,8 +511,8 @@ class TableCompare:
         pk = set(self.pk)
         cols = [c for c in self.compare_cols if c not in pk]
         if not cols:
-            return self.spark.createDataFrame(
-                [], "column_name string, mismatch_rows bigint"
+            return local_frame(
+                self.spark, [], "column_name string, mismatch_rows bigint"
             )
         fr = self.options.float_round
         ltypes = {f.name: f.dataType for f in self.left.schema.fields}
@@ -544,7 +586,8 @@ class TableCompare:
         """
         struct_ok = self.structure_ok()
         if self.options.check_struct_only:
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(self.table_name, struct_ok, 0, 0, struct_ok)],
                 "table string, structure_ok boolean, upcount bigint, "
                 "downcount bigint, equivalent boolean",

@@ -56,26 +56,10 @@ def fix_sql(cmp) -> DataFrame:
     pk = cmp.pk
     if not pk:
         raise ValueError("fix_sql requires a primary key (multiset diffs are not addressable)")
-    diff = cmp.diff_rows()
     # the diff feeds BOTH output branches (REPLACE retrieval and DELETE
-    # rendering); the heavy-drift form arrives lazy and would re-run its
-    # full-table drill-down join per branch — materialize once, same
-    # discipline (and same already-assumed diff-sized bound) as
-    # reconcile.apply_fixes. Persisted (bounded-drift) diffs pass through.
-    from tidb_large_table_compare_spark.functions.materialize import materialize
-
-    try:
-        from pyspark import StorageLevel
-
-        needs_materialize = diff.storageLevel == StorageLevel.NONE
-    except Exception:
-        # Spark Connect: storageLevel unavailable — keep the lazy diff.
-        # Only the probe is guarded; materialize() failures propagate
-        # (round-12 ADVICE: a swallowed executor loss silently degraded
-        # to re-running the drill-down per consumer).
-        needs_materialize = False
-    if needs_materialize:
-        diff = materialize(diff)
+    # rendering): read the compare's one re-readable copy, shared with
+    # reconcile.apply_fixes, so a heavy-drift drill-down join runs once
+    diff = cmp.repair_diff()
     table = cmp.table_name
     left = cmp.left
     fields = {f.name: f.dataType for f in left.schema.fields}

@@ -19,8 +19,6 @@ import dataclasses
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tidb_large_table_compare_spark.functions.materialize import materialize
-
 __all__ = ["apply_fixes", "verify_repair"]
 
 
@@ -29,34 +27,17 @@ def apply_fixes(
 ) -> DataFrame:
     """Return ``right`` repaired to match ``left`` under ``diff``.
 
-    ``diff`` is :meth:`TableCompare.diff_rows` output — ``(pk..., diff_type)``
+    ``diff`` is :meth:`TableCompare.diff_rows`-shaped — ``(pk..., diff_type)``
     with REPLACE semantics: ``modified`` rows are deleted from the right and
     re-inserted from the left; ``extra_in_right`` deleted; ``missing_in_right``
     inserted.
 
-    The diff is consumed TWICE here (the delete and insert broadcast
-    builds) and again by every action over the returned repaired frame —
-    left lazy, a heavy-drift diff (which ``TableCompare.diff_rows`` does
-    not persist) re-runs its full-table drill-down join per consumer,
-    measured as the dominant term of the sf0.1 reconcile bench entry
-    (round 12). One eager materialization bounds that at one execution;
-    the result is diff-sized, which this operator already assumes is
-    broadcastable. Diffs that arrive persisted (the bounded-drift form)
-    are reused as-is — no extra job.
+    The diff is read TWICE here (the delete and insert broadcast builds)
+    and again by every action over the returned repaired frame, so the
+    caller passes a re-readable diff: :meth:`TableCompare.repair_diff`,
+    which is computed once and shared with fix-SQL export. A lazy
+    heavy-drift diff would re-run its full-table drill-down join per read.
     """
-    try:
-        from pyspark import StorageLevel
-
-        needs_materialize = diff.storageLevel == StorageLevel.NONE
-    except Exception:
-        # storageLevel is a classic-session API (absent under Spark
-        # Connect); Connect sessions simply keep the lazy diff. Only the
-        # PROBE is guarded — a genuine materialization failure (executor
-        # loss, OOM) must propagate, not silently degrade to re-running
-        # the drill-down per consumer (round-12 ADVICE).
-        needs_materialize = False
-    if needs_materialize:
-        diff = materialize(diff)
     to_delete = diff.filter(F.col("diff_type") != "missing_in_right").select(*pk)
     to_insert = diff.filter(F.col("diff_type") != "extra_in_right").select(*pk)
     kept = right.join(F.broadcast(to_delete), pk, "left_anti")

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tidb_large_table_compare_spark.functions.localframe import local_frame
+
 _SCHEMA = T.StructType(
     [
         T.StructField("column_name", T.StringType(), False),
@@ -42,7 +44,7 @@ def schema_as_df(spark: SparkSession, df: DataFrame) -> DataFrame:
         (f.name, f.dataType.simpleString(), f.nullable, i)
         for i, f in enumerate(df.schema.fields)
     ]
-    return spark.createDataFrame(rows, _SCHEMA)
+    return local_frame(spark, rows, _SCHEMA)
 
 
 def schema_diff(spark: SparkSession, left: DataFrame, right: DataFrame) -> DataFrame:

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import window as W
 
+from tidb_large_table_compare_spark.functions.localframe import local_frame
 from tidb_large_table_compare_spark.functions.materialize import materialize
 
 __all__ = [
@@ -478,8 +479,8 @@ def build_ivf_index(
         # the caller's list IS the quantizer — write it for probers, use
         # it directly (no Spark roundtrip just to collect it back)
         cent_rows = [(int(i), list(v)) for i, v in centroids]
-        spark.createDataFrame(
-            cent_rows, "id long, qv array<long>"
+        local_frame(
+            spark, cent_rows, "id long, qv array<long>"
         ).write.mode("overwrite").parquet(f"{path}/centroids")
     else:
         cents = (

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from tidb_large_table_compare_spark.functions.localframe import local_frame
 from tidb_large_table_compare_spark.sources.tables import load_table
 
 __all__ = [
@@ -698,7 +699,8 @@ def yearly_volume_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def extract_table_from_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A27: FROM-clause table extraction with db.table split + fallback
     (reference behavior) — inline rows instead of a VALUES CTE."""
-    sqls = spark.createDataFrame(
+    sqls = local_frame(
+        spark,
         [
             (1, "SELECT * FROM my_database.users WHERE id > 0"),
             (2, "SELECT COUNT(*) FROM app_db.orders o JOIN x.y ON 1=1"),

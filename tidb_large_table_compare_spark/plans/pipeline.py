@@ -24,6 +24,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from tidb_large_table_compare_spark.functions.localframe import local_frame
 from tidb_large_table_compare_spark.operators.compare import (
     CompareOptions,
     TableCompare,
@@ -159,7 +160,8 @@ def run_jobs(
         (run_ts, table, row.structure_ok, row.upcount, row.downcount, secs)
         for table, row, secs in results
     ]
-    summaries = spark.createDataFrame(
+    summaries = local_frame(
+        spark,
         rows,
         "run_ts string, table string, structure_ok boolean, "
         "upcount bigint, downcount bigint, duration_s double",

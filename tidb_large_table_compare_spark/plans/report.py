@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import window as W
 
+from tidb_large_table_compare_spark.functions.localframe import local_frame
+
 EQUIVALENT_MARKER = (
     "The table structure and data in following tables are equivalent"
 )  # step3_run_syncdiff.sh:204
@@ -116,10 +118,12 @@ def render_report(summaries: DataFrame) -> DataFrame:
         F.concat(F.lit("1_"), F.col("table")).alias("__ord"),
     )
     spark = summaries.sparkSession
-    frame = spark.createDataFrame(
-        [(border, "0_0"), (header, "0_1"), (border, "0_2")], "line string, __ord string"
+    frame = local_frame(
+        spark,
+        [(border, "0_0"), (header, "0_1"), (border, "0_2")],
+        "line string, __ord string",
     )
-    tail = spark.createDataFrame([(border, "2_0")], "line string, __ord string")
+    tail = local_frame(spark, [(border, "2_0")], "line string, __ord string")
     return frame.unionByName(body).unionByName(tail).orderBy("__ord").select("line")
 
 
@@ -198,7 +202,7 @@ def render_final_report(summaries: DataFrame) -> DataFrame:
     schema = "line string, __ord string"
     if n_files == 0:
         head.append((NO_SUMMARY_LINE, "0_4"))
-        return spark.createDataFrame(head, schema).orderBy("__ord").select("line")
+        return local_frame(spark, head, schema).orderBy("__ord").select("line")
     head += [
         (f"[INFO] 找到 {n_files} 个 summary.txt 文件", "0_4"),
         ("", "0_5"),
@@ -209,8 +213,8 @@ def render_final_report(summaries: DataFrame) -> DataFrame:
         ("", "4_0"),
         ("", "6_0"),
     ]
-    frame = spark.createDataFrame(
-        head + [(r["line"], r["__ord"]) for r in body_rows], schema
+    frame = local_frame(
+        spark, head + [(r["line"], r["__ord"]) for r in body_rows], schema
     )
     tail = _summary_block_ordered(summaries, prefix="5_")
     return frame.unionByName(tail).orderBy("__ord").select("line")

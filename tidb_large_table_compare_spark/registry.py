@@ -38,6 +38,7 @@ from tidb_large_table_compare_spark.perturb import (
     perturbed_orders_multi,
 )
 from tidb_large_table_compare_spark.functions.layout import morton_key, morton_key_sql
+from tidb_large_table_compare_spark.functions.localframe import local_frame
 from tidb_large_table_compare_spark.functions.materialize import materialize
 from tidb_large_table_compare_spark.functions.partitioning import ensure_min_partitions
 from tidb_large_table_compare_spark.operators.spans import (
@@ -215,7 +216,7 @@ def _cmp_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, orders, slave, pk=["o_orderkey"],
         options=CompareOptions(n_buckets=4096), table_name="main.orders",
     )
-    repaired = apply_fixes(orders, slave, ["o_orderkey"], tc.diff_rows())
+    repaired = apply_fixes(orders, slave, ["o_orderkey"], tc.repair_diff())
     return verify_repair(tc, repaired)
 
 
@@ -769,7 +770,8 @@ def _report_latest_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
                        table_name="main.orders_self")
         .summary().withColumn("run_ts", F.lit("20240202_000000"))
     )
-    old = spark.createDataFrame(
+    old = local_frame(
+        spark,
         [("20240101_000000", "main.orders", False, 9, 9)],
         "run_ts string, table string, structure_ok boolean, upcount bigint, downcount bigint",
     )
@@ -3069,8 +3071,8 @@ def _dedup_final_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = corpus.join(drop, "doc_id", "left_anti")
     # both counts run here, so every cache this builder took is released
     # before returning (the result is a literal two-count frame)
-    out = spark.createDataFrame(
-        [(corpus.count(), kept.count())], "n_before bigint, n_after bigint"
+    out = local_frame(
+        spark, [(corpus.count(), kept.count())], "n_before bigint, n_after bigint"
     )
     corpus.unpersist()
     return out
@@ -4391,8 +4393,8 @@ def _cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for r in top
     ]
-    return spark.createDataFrame(
-        rows, "token string, exact_count bigint, within_eps boolean"
+    return local_frame(
+        spark, rows, "token string, exact_count bigint, within_eps boolean"
     )
 
 

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from tidb_large_table_compare_spark.functions.localframe import local_frame
+
 CATALOG_SCHEMA = T.StructType(
     [
         T.StructField("table_schema", T.StringType(), False),
@@ -39,6 +41,9 @@ def parquet_catalog(
 ) -> DataFrame:
     """Catalog DataFrame from parquet footer row counts (metadata-only).
 
+    The rows are read on the driver and returned as a local relation, so
+    collecting the catalog runs zero Spark jobs.
+
     ``row_scale`` lets tests emulate the reference's billion-row regime on
     small files (the discovery predicate compares against 1e9).
     """
@@ -47,7 +52,7 @@ def parquet_catalog(
         n = _footer_row_count(f"{sf_dir}/{name}.parquet")
         pk_type = "NONCLUSTERED" if name in NONCLUSTERED_TABLES else "CLUSTERED"
         rows.append((schema_name, name, n * row_scale, pk_type))
-    return spark.createDataFrame(rows, CATALOG_SCHEMA)
+    return local_frame(spark, rows, CATALOG_SCHEMA)
 
 
 def _footer_row_count(path: str) -> int:
