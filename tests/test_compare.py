@@ -27,6 +27,9 @@ from tests.fixtures import (
     cmp_slave_schema_drift,
 )
 
+# the bucket-scope IN-list cap, patched down to reach the frame regime
+_INLIST_CAP = "tidb_large_table_compare_spark.operators.compare._MAX_INLIST"
+
 
 @pytest.fixture(scope="module")
 def master(spark):
@@ -326,8 +329,8 @@ def test_repair_consumers_share_one_materialized_diff(spark, monkeypatch):
         spark, orders, slave, ["o_orderkey"],
         options=CompareOptions(n_buckets=4), table_name="o",
     )
-    _, bad_ids, bad = tc._bad_bucket_state()
-    assert bad_ids is None and bad is None  # restriction skipped
+    scope = tc.scope()
+    assert scope.ids is None and scope.frame is None  # restriction skipped
 
     stmts = [r.fix_sql for r in fix_sql(tc).collect()]
     repaired = apply_fixes(orders, slave, ["o_orderkey"], tc.repair_diff())
@@ -376,7 +379,8 @@ def test_verify_repair_scoped_catches_broken_repair(spark):
         spark, orders, slave, ["o_orderkey"],
         CompareOptions(n_buckets=4096), table_name="o",
     )
-    n_buckets, bad_ids, _ = tc._bad_bucket_state()
+    scope = tc.scope()
+    n_buckets, bad_ids = scope.n_buckets, scope.ids
     assert bad_ids is not None and len(bad_ids) <= 0.25 * n_buckets
 
     # a "repair" built from only half the diff: modified rows never patched
@@ -401,6 +405,60 @@ def test_verify_repair_scoped_catches_broken_repair(spark):
     )
     with pytest.raises(ValueError, match="keyed"):
         verify_repair(tc_ms, repaired)
+
+
+def test_verify_repair_releases_its_inner_compare(spark):
+    """A non-equivalent repair leaves the scoped re-verify's IN-list diff
+    persisted; verify_repair must release it, since no caller can reach
+    the compare it builds internally."""
+    from tidb_large_table_compare_spark.operators.reconcile import (
+        apply_fixes,
+        verify_repair,
+    )
+    from tidb_large_table_compare_spark.perturb import perturbed_orders
+    from tidb_large_table_compare_spark.sources.tables import load_table
+
+    orders = load_table(spark, SF_SMALL, "orders")
+    slave = perturbed_orders(orders)
+    tc = compare_tables(
+        spark, orders, slave, ["o_orderkey"],
+        CompareOptions(n_buckets=4096), table_name="o",
+    )
+    tc.summary().collect()  # tc's own persisted diff exists before the count
+    half = tc.diff_rows().filter("diff_type != 'modified'")
+    broken = apply_fixes(orders, slave, ["o_orderkey"], half)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    verdict = verify_repair(tc, broken).collect()[0]
+    assert not verdict.equivalent and verdict.upcount > 0
+    assert persisted().size() == before
+    tc.close()
+
+
+def test_bucket_scope_decision_lives_in_compare():
+    """The restriction regime is chosen in one place: the IN-list cap, the
+    skip fraction and BucketScope construction appear in no other package
+    module, so no consumer re-derives the decision."""
+    from pathlib import Path
+
+    import tidb_large_table_compare_spark as pkg
+
+    root = Path(pkg.__file__).resolve().parent
+    names = (
+        "_MAX_INLIST",
+        "_RESTRICT_SKIP_FRACTION",
+        "BucketScope(",
+        "_bad_bucket_state",
+        "_restrict_to_bad_buckets",
+    )
+    hits = [
+        f"{path.relative_to(root)}:{n}: {name}"
+        for path in sorted(root.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        for name in names
+        if name in line
+    ]
+    assert hits and all(h.startswith("operators/compare.py:") for h in hits), hits
 
 
 def test_fk_orphans_null_and_composite_semantics(spark):
@@ -444,7 +502,7 @@ def test_fk_orphans_null_and_composite_semantics(spark):
 def test_column_drift_wide_drift_broadcast_path(spark, master, slave, monkeypatch):
     """When more buckets drift than the IN-list cap, column_drift and
     diff_rows share the persisted broadcast bad-bucket frame (materialized
-    once via _bad_bucket_state) and results match the IN-list path."""
+    once via TableCompare.scope) and results match the IN-list path."""
     # n_buckets pinned well above the ~100 drifted keys: the bad set must
     # overflow the (monkeypatched) IN-list cap yet stay under the
     # restriction-skip fraction, so the broadcast-frame form is exercised
@@ -455,7 +513,7 @@ def test_column_drift_wide_drift_broadcast_path(spark, master, slave, monkeypatc
     baseline = {r.column_name: r.mismatch_rows
                 for r in baseline_cmp.column_drift().collect()}
 
-    monkeypatch.setattr(TableCompare, "_MAX_INLIST", 2)
+    monkeypatch.setattr(_INLIST_CAP, 2)
     cmp = compare_tables(
         spark, master, slave, pk=["pk"],
         options=CompareOptions(n_buckets=512), table_name="t",
@@ -463,10 +521,10 @@ def test_column_drift_wide_drift_broadcast_path(spark, master, slave, monkeypatc
     wide = {r.column_name: r.mismatch_rows for r in cmp.column_drift().collect()}
     assert wide == baseline
     # both consumers reuse the same materialized state object
-    state = cmp._bad_state
-    assert state is not None and state[1] is None and state[2] is not None
+    state = cmp._scope
+    assert state is not None and state.ids is None and state.frame is not None
     assert cmp.diff_rows().count() == K_MISSING + K_EXTRA + K_MODIFIED
-    assert cmp._bad_state is state
+    assert cmp._scope is state
 
 
 def test_verify_repair_scoped_via_broadcast_frame(spark, monkeypatch):
@@ -483,12 +541,13 @@ def test_verify_repair_scoped_via_broadcast_frame(spark, monkeypatch):
 
     orders = load_table(spark, "/root/testdata/sf0.001", "orders")
     slave = perturbed_orders(orders)
-    monkeypatch.setattr(TableCompare, "_MAX_INLIST", 2)
+    monkeypatch.setattr(_INLIST_CAP, 2)
     tc = compare_tables(
         spark, orders, slave, ["o_orderkey"],
         CompareOptions(n_buckets=4096), table_name="o",
     )
-    n_buckets, bad_ids, bad_frame = tc._bad_bucket_state()
+    scope = tc.scope()
+    n_buckets, bad_ids, bad_frame = scope.n_buckets, scope.ids, scope.frame
     assert bad_ids is None and bad_frame is not None  # frame form
     assert bad_frame.count() <= 0.25 * n_buckets  # but in-regime
 
@@ -505,7 +564,8 @@ def test_heavy_drift_skips_bucket_restriction(spark, master, slave):
         spark, master, slave, pk=["pk"],
         options=CompareOptions(chunk_size=500), table_name="t",
     )
-    n_buckets, ids, frame = cmp._bad_bucket_state()
+    scope = cmp.scope()
+    ids, frame = scope.ids, scope.frame
     assert ids is None and frame is None  # the deliberate no-op form
     counts = dict(
         (r.diff_type, r["count"])

@@ -114,9 +114,9 @@ def test_incremental_wide_drift_takes_broadcast_path(spark, tmp_path, monkeypatc
     wide-drift analog of ``test_compare_drilldown_scans_bounded``. The cap is
     shrunk so the perturbation's drift exceeds it without needing 50k real
     buckets; results must equal the full compare either way."""
-    from tidb_large_table_compare_spark.operators.compare import TableCompare
-
-    monkeypatch.setattr(TableCompare, "_MAX_INLIST", 2)
+    monkeypatch.setattr(
+        "tidb_large_table_compare_spark.operators.compare._MAX_INLIST", 2
+    )
     orders = _orders(spark)
     path = str(tmp_path / "digests")
     # enough buckets that the drift stays clearly under the restriction-skip

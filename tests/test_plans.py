@@ -7,6 +7,8 @@ and the compare drill-down no longer recomputing the digest subtree.
 
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -112,15 +114,16 @@ def test_verify_repair_filters_before_row_hash(spark):
         spark, orders, slave, pk=["o_orderkey"],
         options=CompareOptions(n_buckets=4096), table_name="t",
     )
-    n_buckets, bad_ids, _ = tc._bad_bucket_state()
+    scope = tc.scope()
+    n_buckets, bad_ids = scope.n_buckets, scope.ids
     assert bad_ids is not None and len(bad_ids) < 0.25 * n_buckets
     repaired = apply_fixes(orders, slave, ["o_orderkey"], tc.diff_rows())
     scoped = compare_tables(
         spark,
-        tc._restrict_to_bad_buckets(tc.left),
-        tc._restrict_to_bad_buckets(repaired),
+        scope.restrict(tc.left, tc.pk),
+        scope.restrict(repaired, tc.pk),
         tc.pk,
-        CompareOptions(**{**tc.options.__dict__, "n_buckets": n_buckets}),
+        dataclasses.replace(tc.options, n_buckets=n_buckets),
         "t",
     )
     plan = _plan(scoped.mismatched_buckets())

@@ -3,7 +3,7 @@ must always produce exact golden diff counts from the compare engine."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from tidb_large_table_compare_spark.operators.compare import (
@@ -80,16 +80,54 @@ def test_equal_values_equivalent_across_any_widening_pair(spark, lt, rt, vals, n
     assert row.upcount == 0 and row.downcount == 0
 
 
+def _reference_diff(master, slave):
+    """(pk, diff_type) rows of a plain full-outer join on pk with
+    null-safe column equality — no digests, no bucket scope."""
+    from pyspark.sql import functions as F
+
+    l = master.select("pk", *[F.col(c).alias(f"l_{c}") for c in ("s", "d")],
+                      F.lit(True).alias("l_row"))
+    r = slave.select("pk", *[F.col(c).alias(f"r_{c}") for c in ("s", "d")],
+                     F.lit(True).alias("r_row"))
+    j = l.join(r, "pk", "full_outer")
+    same = F.col("l_s").eqNullSafe(F.col("r_s")) & F.col("l_d").eqNullSafe(
+        F.col("r_d")
+    )
+    kind = (
+        F.when(F.col("r_row").isNull(), "missing_in_right")
+        .when(F.col("l_row").isNull(), "extra_in_right")
+        .when(~same, "modified")
+    )
+    return j.select("pk", kind.alias("diff_type")).filter("diff_type IS NOT NULL")
+
+
 @settings(
     max_examples=12,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(plan=perturbation_plan(), nb=st.sampled_from([None, 8, 4096]))
-def test_compare_counts_match_construction(spark, plan, nb):
-    # nb spans the bad-state forms: 8 buckets pushes most perturbations
-    # over the restriction-skip fraction (no-op form), 4096 keeps them in
-    # the bounded IN-list form, None exercises the chunk-size sizing path
+@given(
+    plan=perturbation_plan(),
+    nb=st.sampled_from([None, 8, 4096]),
+    cap=st.sampled_from([None, 2]),
+)
+# one pinned draw per scope kind — frame (more bad buckets than a cap of
+# 2, under half of 4096), IN-list, skip (30 drifted keys in 8 buckets),
+# empty
+@example(plan=(60, [1, 2, 3], [4, 5], 2), nb=4096, cap=2)
+@example(plan=(60, [1, 2, 3], [4, 5], 2), nb=4096, cap=None)
+@example(plan=(60, list(range(1, 11)), list(range(11, 21)), 10), nb=8, cap=None)
+@example(plan=(60, [], [], 0), nb=8, cap=None)
+def test_compare_counts_match_construction(spark, plan, nb, cap):
+    # nb × cap spans every bucket-scope kind: 8 buckets pushes most
+    # perturbations over the restriction-skip fraction (skip), 4096 keeps
+    # them in the bounded IN-list form, or past a cap of 2 in the
+    # persisted broadcast frame; None exercises the chunk-size sizing path
+    import pytest
+
+    from tidb_large_table_compare_spark.functions.hashing import bucket_id
+    from tidb_large_table_compare_spark.operators import compare as compare_mod
+
     n, missing, modified, n_extra = plan
     schema = "pk bigint, s string, d double"
     master = spark.createDataFrame(_master_rows(n), schema)
@@ -102,11 +140,32 @@ def test_compare_counts_match_construction(spark, plan, nb):
     opts = (
         CompareOptions(chunk_size=16) if nb is None else CompareOptions(n_buckets=nb)
     )
-    cmp = compare_tables(spark, master, slave, ["pk"], opts, "prop")
-    row = cmp.summary().collect()[0]
+    with pytest.MonkeyPatch.context() as mp:
+        if cap is not None:
+            mp.setattr(compare_mod, "_MAX_INLIST", cap)
+        cmp = compare_tables(spark, master, slave, ["pk"], opts, "prop")
+        row = cmp.summary().collect()[0]
+        got = {(r.pk, r.diff_type) for r in cmp.diff_rows().collect()}
+        scope = cmp.scope()
+        cmp.close()
     assert row.upcount == len(missing) + len(modified)
     assert row.downcount == n_extra + len(modified)
     assert row.equivalent == (not missing and not modified and n_extra == 0)
+
+    ref = _reference_diff(master, slave)
+    ref = ref.withColumn("b", bucket_id(["pk"], scope.n_buckets, ref)).collect()
+    assert got == {(r.pk, r.diff_type) for r in ref}
+    n_bad = len({r.b for r in ref})
+    assert scope.n_bad == n_bad
+    if n_bad == 0:
+        want = "empty"
+    elif n_bad > scope.n_buckets / 2:
+        want = "skip"
+    elif n_bad <= (cap or compare_mod._MAX_INLIST):
+        want = "ids"
+    else:
+        want = "frame"
+    assert scope.kind == want
 
 
 @settings(

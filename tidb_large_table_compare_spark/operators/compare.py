@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -47,9 +47,23 @@ from tidb_large_table_compare_spark.functions.materialize import materialize
 from tidb_large_table_compare_spark.functions.partitioning import estimate_rows
 from tidb_large_table_compare_spark.operators.schema_diff import schema_diff
 
-__all__ = ["CompareOptions", "TableCompare", "compare_tables"]
+__all__ = [
+    "BucketScope",
+    "CompareOptions",
+    "TableCompare",
+    "bucket_scope",
+    "compare_tables",
+]
 
 DEFAULT_CHUNK_SIZE = 5000  # reference chunk-size (config.toml:21)
+# clamp on the estimated bucket count (CompareOptions.n_buckets overrides)
+_MIN_BUCKETS = 32
+_MAX_BUCKETS = 1 << 20
+_MAX_INLIST = 50_000  # bad-bucket count above which we broadcast instead
+# bad-bucket FRACTION above which restriction is skipped outright — the
+# filter would discard under half the rows while every downstream job
+# re-pays the big-IN/semi-join plan cost (see bucket_scope)
+_RESTRICT_SKIP_FRACTION = 0.5
 
 
 @dataclass(frozen=True)
@@ -62,8 +76,6 @@ class CompareOptions:
     float_round: int | None = None  # declared double tolerance (SURVEY.md §7)
     check_struct_only: bool = False  # template check-struct-only
     force_multiset: bool = False  # keyless/duplicate-PK fallback
-    min_buckets: int = 32
-    max_buckets: int = 1 << 20
     # Caller/catalog-supplied row count for bucket sizing — the analog of the
     # reference reading TABLE_ROWS from information_schema
     # (step1_query_tables.sh:115-117). Takes precedence over the plan-stats
@@ -81,6 +93,93 @@ def _narrow(df: DataFrame, pk: list[str], compare_cols: list[str], n_buckets: in
         bucket_id(pk, n_buckets, df).alias("__bucket"),
         row_hash(df, compare_cols, float_round).alias("__row_hash"),
     )
+
+
+@dataclass(frozen=True)
+class BucketScope:
+    """Which buckets a drill-down reads: the one restriction decision.
+
+    ``n_bad`` mismatched buckets out of ``n_buckets``. At most one of
+    ``ids``/``frame`` is set, which gives four kinds (:attr:`kind`):
+    ``empty`` (``ids == []``), ``ids`` (an IN-list of bucket ids),
+    ``frame`` (a persisted one-column ``__bucket`` frame, broadcast
+    semi-joined) and ``skip`` (neither: drift too wide to restrict).
+    """
+
+    n_buckets: int
+    n_bad: int
+    ids: list | None = None
+    frame: DataFrame | None = None
+
+    @property
+    def kind(self) -> str:
+        if self.frame is not None:
+            return "frame"
+        if self.ids is None:
+            return "skip"
+        return "ids" if self.ids else "empty"
+
+    def restrict(self, df: DataFrame, pk: list[str] | None = None) -> DataFrame:
+        """``df`` filtered to rows in a mismatched bucket — the scan-level
+        discard that keeps drill-down cost ∝ drift. ``df`` carries a
+        ``__bucket`` column, or ``pk`` names the key columns it is
+        computed from (per frame: ``bucket_id`` widens by ``df``'s own
+        schema, and the sides may carry different integral widths)."""
+        if self.kind == "skip":
+            return df
+        withb = df if pk is None else df.withColumn(
+            "__bucket", bucket_id(pk, self.n_buckets, df)
+        )
+        if self.frame is not None:
+            out = withb.join(F.broadcast(self.frame), "__bucket", "left_semi")
+        else:
+            # in_list, not Column.isin: the py4j per-element literal cost
+            # of isin is ~30 s of driver time at the 50k cap
+            # (hashing.in_list); an empty list is a constant false
+            out = withb.filter(in_list("__bucket", self.ids))
+        return out if pk is None else out.drop("__bucket")
+
+
+def bucket_scope(bad: DataFrame, n_buckets: int) -> BucketScope:
+    """Materialize the one-column ``__bucket`` frame ``bad`` into a
+    :class:`BucketScope` — the only place the restriction regime is chosen.
+
+    Left as a lazy subtree, the bad set would be *recomputed* per
+    consumer (a digest pass re-scans both tables), so it is materialized
+    once: small sets become an IN-list evaluated at the scan (no join at
+    all); sets over ``_MAX_INLIST`` fall back to one persisted broadcast
+    semi-join frame. Either way downstream joins see only bad-bucket rows
+    — bytes ∝ diff size, not table size — and the materialized form is
+    BOUNDED (one long per bucket, few MB at the 2^20 cap), never ∝ diff
+    rows.
+
+    When the bad set covers MOST buckets (heavy drift), restriction would
+    discard almost nothing while embedding a thousands-element IN
+    predicate that every downstream job re-pays in analysis and optimizer
+    time (INSET conversion is per-action; measured ~0.2-0.4 s per job at
+    2-10k elements, PERFORMANCE.md round-8) — so above
+    ``_RESTRICT_SKIP_FRACTION`` the scope is ``skip`` and the drill-down
+    compares everything: sound because clean-bucket rows hash-equal and
+    drop out of the diff join, and cheaper because the join reads at most
+    1/fraction more rows than the restricted plan would.
+
+    A ``frame`` scope stays persisted until its owner releases it
+    (:meth:`TableCompare.close`): it is embedded in lazy diff plans that
+    callers re-consume (fix-SQL, reconcile); releasing it earlier would
+    re-run the digest compare per consumer.
+    """
+    skip_above = _RESTRICT_SKIP_FRACTION * n_buckets
+    ids = [r["__bucket"] for r in bad.limit(_MAX_INLIST + 1).collect()]
+    if len(ids) <= _MAX_INLIST:
+        if len(ids) > skip_above:
+            return BucketScope(n_buckets, len(ids))
+        return BucketScope(n_buckets, len(ids), ids=ids)
+    bad = bad.persist()
+    n_bad = bad.count()
+    if n_bad > skip_above:
+        bad.unpersist()
+        return BucketScope(n_buckets, n_bad)
+    return BucketScope(n_buckets, n_bad, frame=bad)
 
 
 class TableCompare:
@@ -122,8 +221,7 @@ class TableCompare:
         # instance
         self._narrows: dict[str, DataFrame] = {}
         self._n_buckets_memo: int | None = None
-        # (n_buckets, in-list ids | None, persisted bad-bucket frame | None)
-        self._bad_state: tuple[int, list | None, DataFrame | None] | None = None
+        self._scope: BucketScope | None = None
 
     # -- structure (B1) ----------------------------------------------------
     def schema_diff(self) -> DataFrame:
@@ -158,15 +256,9 @@ class TableCompare:
             rows = estimate_rows(
                 self.left, bytes_per_row=64, hint=opt.row_count_hint
             )
-            n = max(opt.min_buckets, rows // max(opt.chunk_size, 1) + 1)
-            self._n_buckets_memo = min(n, opt.max_buckets)
+            n = max(_MIN_BUCKETS, rows // max(opt.chunk_size, 1) + 1)
+            self._n_buckets_memo = min(n, _MAX_BUCKETS)
         return self._n_buckets_memo
-
-    _MAX_INLIST = 50_000  # bad-bucket count above which we broadcast instead
-    # bad-bucket FRACTION above which restriction is skipped outright —
-    # the filter would discard under half the rows while every downstream
-    # job re-pays the big-IN/semi-join plan cost (see _bad_bucket_state)
-    _RESTRICT_SKIP_FRACTION = 0.5
 
     # -- digest phase (B5/B6) ----------------------------------------------
     def _narrow_side(self, side: str) -> DataFrame:
@@ -230,74 +322,12 @@ class TableCompare:
         return agg.filter(bad).select("__bucket")
 
     # -- drill-down (B8/B9) --------------------------------------------------
-    def _bad_bucket_state(self) -> tuple[int, list | None, DataFrame | None]:
-        """Materialize the mismatched-bucket set once, for every consumer.
-
-        The set is tiny when tables mostly agree. Left as a lazy subtree it
-        would be *recomputed* per consumer (the digest pass re-scans both
-        tables), so it is materialized exactly once per TableCompare: small
-        sets become an IN-list evaluated at the scan (no join at all);
-        unexpectedly large sets fall back to one persisted broadcast
-        semi-join frame. Either way downstream joins see only bad-bucket
-        rows — bytes ∝ diff size, not table size — and the materialized
-        form is BOUNDED (one long per bucket, few MB at the 2^20 cap),
-        never ∝ diff rows.
-
-        When the bad set covers MOST buckets (heavy drift), restriction
-        would discard almost nothing while embedding a thousands-element
-        IN predicate that every downstream job re-pays in analysis and
-        optimizer time (INSET conversion is per-action; measured ~0.2-0.4 s
-        per job at 2-10k elements, PERFORMANCE.md round-8) — so above
-        ``_RESTRICT_SKIP_FRACTION`` the state records "no restriction"
-        and the drill-down simply compares everything: sound because
-        clean-bucket rows hash-equal and drop out of the diff join, and
-        cheaper because the join reads at most 1/fraction more rows than
-        the restricted plan would.
-
-        Returns ``(n_buckets, ids | None, persisted_frame | None)``: at
-        most one of ids/frame is non-None; both None (with a non-empty
-        diff) means restriction is a deliberate no-op. The persisted
-        frame lives until :meth:`close` — it is embedded in returned lazy
-        diff plans that callers re-consume (fix-SQL, reconcile); releasing
-        it earlier would re-run the digest compare per consumer.
-        """
-        if self._bad_state is None:
-            n_buckets = self._n_buckets()
-            skip_above = self._RESTRICT_SKIP_FRACTION * n_buckets
-            bad = self.mismatched_buckets()
-            bad_ids = [
-                r["__bucket"] for r in bad.limit(self._MAX_INLIST + 1).collect()
-            ]
-            if len(bad_ids) <= self._MAX_INLIST:
-                if bad_ids and len(bad_ids) > skip_above:
-                    self._bad_state = (n_buckets, None, None)
-                else:
-                    self._bad_state = (n_buckets, bad_ids, None)
-            else:
-                bad = bad.persist()
-                if bad.count() > skip_above:
-                    bad.unpersist()
-                    self._bad_state = (n_buckets, None, None)
-                else:
-                    self._bad_state = (n_buckets, None, bad)
-        return self._bad_state
-
-    def _restrict_to_bad_buckets(self, df: DataFrame) -> DataFrame:
-        """``df`` (a full-width side of this compare) filtered to rows whose
-        PK hashes into a mismatched bucket — the scan-level discard that
-        keeps drill-down cost ∝ drift (skipped when drift covers most
-        buckets; see _bad_bucket_state)."""
-        n_buckets, bad_ids, bad = self._bad_bucket_state()
-        if bad_ids is None and bad is None:
-            return df
-        withb = df.withColumn("__bucket", bucket_id(self.pk, n_buckets, df))
-        if bad_ids is not None:
-            # in_list, not Column.isin: the py4j per-element literal cost of
-            # isin is ~30 s of driver time at the 50k cap (hashing.in_list)
-            restricted = withb.filter(in_list("__bucket", bad_ids))
-        else:
-            restricted = withb.join(F.broadcast(bad), "__bucket", "left_semi")
-        return restricted.drop("__bucket")
+    def scope(self) -> BucketScope:
+        """The mismatched-bucket scope (:func:`bucket_scope`), built once
+        per compare and shared by every drill-down consumer."""
+        if self._scope is None:
+            self._scope = bucket_scope(self.mismatched_buckets(), self._n_buckets())
+        return self._scope
 
     def _bounded_pushdown_keys(self, frame: DataFrame, col: str) -> list | None:
         """``col``'s values from ``frame`` when they qualify for the pk-IN
@@ -306,11 +336,10 @@ class TableCompare:
         — the TiDB unsigned-BIGINT mapping — identifier-charset strings
         like UUID keys, dates, binary, and — dtype-declared — both
         timestamp flavors). Returns None when oversized or unrenderable —
-        the one eligibility rule shared by fix_sql's master retrieval and
-        column_drift's pair retrieval, defined by the same predicate as
-        in_list's fast path, so the cap and the type gate cannot drift
-        apart. Callers must pass ``frame``'s own dtype for ``col`` into
-        the ``in_list`` that consumes the returned ids."""
+        the one eligibility rule behind :meth:`pk_pushdown`, defined by
+        the same predicate as in_list's fast path, so the cap and the type
+        gate cannot drift apart. The ``in_list`` that consumes the
+        returned ids must get ``frame``'s own dtype for ``col``."""
         from tidb_large_table_compare_spark.functions.hashing import (
             render_sql_id,
         )
@@ -331,13 +360,28 @@ class TableCompare:
                 return None
         ids = [
             r[0]
-            for r in frame.select(col).limit(self._MAX_INLIST + 1).collect()
+            for r in frame.select(col).limit(_MAX_INLIST + 1).collect()
         ]
-        if len(ids) <= self._MAX_INLIST and all(
+        if len(ids) <= _MAX_INLIST and all(
             render_sql_id(i, dtype) is not None for i in ids
         ):
             return ids
         return None
+
+    def pk_pushdown(self, keys: DataFrame) -> Column | None:
+        """``pk IN (keys' pk values)`` for pushing into a side's scan, or
+        None when the pushdown does not apply: a composite key, a scope
+        other than the bounded IN-list form (there the diff is persisted
+        and drift-sized, so collecting its keys is a cache read; the
+        heavy-drift forms keep the lazy semi-join shape), or keys that
+        fail :meth:`_bounded_pushdown_keys`."""
+        if len(self.pk) != 1 or not self.scope().ids:
+            return None
+        col = self.pk[0]
+        ids = self._bounded_pushdown_keys(keys, col)
+        if ids is None:
+            return None
+        return in_list(col, ids, keys.schema[col].dataType)
 
     def diff_rows(self) -> DataFrame:
         """(pk..., diff_type) for every differing row.
@@ -352,24 +396,19 @@ class TableCompare:
         if self.options.force_multiset or not self.pk:
             self._diff_rows = self._diff_rows_multiset()
             return self._diff_rows
-        n_buckets, bad_ids, bad = self._bad_bucket_state()
+        scope = self.scope()
         lh = self._narrow_side("left")
-        rh = self._narrow_side("right")
-        if bad_ids is not None:
-            if not bad_ids:
-                # equal-tables fast path; cached so repeat calls don't re-run
-                # the digest comparison
-                self._diff_rows = lh.select(*self.pk).limit(0).withColumn(
-                    "diff_type", F.lit(None).cast("string")
-                )
-                return self._diff_rows
-            lh = lh.filter(in_list("__bucket", bad_ids))
-            rh = rh.filter(in_list("__bucket", bad_ids))
-        elif bad is not None:
-            lh = lh.join(F.broadcast(bad), "__bucket", "left_semi")
-            rh = rh.join(F.broadcast(bad), "__bucket", "left_semi")
-        # else: heavy drift — restriction skipped, clean rows hash-equal
-        # and drop out of the diff join below (see _bad_bucket_state)
+        if scope.kind == "empty":
+            # equal-tables fast path; cached so repeat calls don't re-run
+            # the digest comparison
+            self._diff_rows = lh.select(*self.pk).limit(0).withColumn(
+                "diff_type", F.lit(None).cast("string")
+            )
+            return self._diff_rows
+        # a skip scope leaves both sides whole: clean rows hash-equal and
+        # drop out of the diff join below (see bucket_scope)
+        lh = scope.restrict(lh)
+        rh = scope.restrict(self._narrow_side("right"))
         lh = lh.select(*self.pk, F.col("__row_hash").alias("l_hash"))
         rh = rh.select(*self.pk, F.col("__row_hash").alias("r_hash"))
         joined = lh.join(rh, self.pk, "full_outer")
@@ -383,7 +422,7 @@ class TableCompare:
             .filter(F.col("diff_type").isNotNull())
             .select(*self.pk, "diff_type")
         )
-        if bad_ids is not None:
+        if scope.ids is not None:
             # bounded drift (IN-list form): the narrow (pk, diff_type) frame
             # is drift-sized, and every consumer fan-out (summary, fix-SQL,
             # reconcile, column_drift's key collect, CLI's composed flags)
@@ -428,8 +467,8 @@ class TableCompare:
         the table's last consumer; later reads recompute. The diffs go
         first: they may be built on the bad-bucket frame."""
         frames = [self._diff_rows, self._repair_diff]
-        if self._bad_state is not None:
-            frames.append(self._bad_state[2])
+        if self._scope is not None:
+            frames.append(self._scope.frame)
         for frame in frames:
             if frame is not None:
                 frame.unpersist()
@@ -517,10 +556,9 @@ class TableCompare:
         fr = self.options.float_round
         ltypes = {f.name: f.dataType for f in self.left.schema.fields}
         rtypes = {f.name: f.dataType for f in self.right.schema.fields}
-        lsrc = rsrc = None
-        # pk-IN retrieval only when (a) the bad state is the bounded
-        # IN-list form — there the diff frame is persisted (drift-sized;
-        # see diff_rows) so collecting the modified keys is a cache read —
+        # pk-IN retrieval only when (a) pk_pushdown applies — its IN-list
+        # scope gate means the diff frame is persisted (drift-sized; see
+        # diff_rows) so collecting the modified keys is a cache read —
         # AND (b) some consumer already computed the diff (the CLI's
         # composed flow runs the summary first; sharing its materialized
         # frame makes this retrieval strictly cheaper than the bucket
@@ -528,18 +566,17 @@ class TableCompare:
         # shape: materializing the drill-down solely to learn the keys
         # measured SLOWER than the restriction it would replace (sf1
         # in-regime: 1.45 s vs 1.22 s, PERFORMANCE.md round-8).
-        _, bad_ids, _ = self._bad_bucket_state()
-        if len(self.pk) == 1 and bad_ids and self._diff_rows is not None:
-            mod = self.diff_rows().filter(F.col("diff_type") == "modified")
-            ids = self._bounded_pushdown_keys(mod, self.pk[0])
-            if ids is not None:
-                pred = in_list(
-                    self.pk[0], ids, mod.schema[self.pk[0]].dataType
-                )
-                lsrc, rsrc = self.left.filter(pred), self.right.filter(pred)
-        if lsrc is None:
-            lsrc = self._restrict_to_bad_buckets(self.left)
-            rsrc = self._restrict_to_bad_buckets(self.right)
+        pred = None
+        if self._diff_rows is not None:
+            pred = self.pk_pushdown(
+                self._diff_rows.filter(F.col("diff_type") == "modified")
+            )
+        if pred is not None:
+            lsrc, rsrc = self.left.filter(pred), self.right.filter(pred)
+        else:
+            scope = self.scope()
+            lsrc = scope.restrict(self.left, self.pk)
+            rsrc = scope.restrict(self.right, self.pk)
         lrows = lsrc.select(
             *self.pk,
             *[

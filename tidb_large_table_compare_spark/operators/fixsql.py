@@ -21,8 +21,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from tidb_large_table_compare_spark.functions.hashing import in_list
-
 __all__ = ["sql_literal", "fix_sql"]
 
 
@@ -73,21 +71,14 @@ def fix_sql(cmp) -> DataFrame:
     # pruning on pk-clustered files — the same adaptive trick as the
     # admission index's verify-scan pushdown, dedup_index.py; the key set
     # is the drill-down's own bounded output and in_list renders it in
-    # one py4j call). Composite/unrenderable PKs or an oversized diff
-    # keep the semi-join — AQE broadcasts the small diff side, so the
-    # master scan still never shuffles (it just cannot prune).
-    master_rows = None
-    _, bad_ids, _ = cmp._bad_bucket_state()
-    # the pushdown engages only in the bounded IN-list form, where the
-    # diff frame is persisted (drift-sized) and the key collect is a cache
-    # read; heavy-drift forms keep the lazy semi-join shape untouched
-    if len(pk) == 1 and bad_ids:
-        ids = cmp._bounded_pushdown_keys(to_replace, pk[0])
-        if ids is not None:
-            master_rows = left.filter(
-                in_list(pk[0], ids, to_replace.schema[pk[0]].dataType)
-            )
-    if master_rows is None:
+    # one py4j call). Composite/unrenderable PKs, an oversized diff or a
+    # heavy-drift scope keep the semi-join (TableCompare.pk_pushdown) —
+    # AQE broadcasts the small diff side, so the master scan still never
+    # shuffles (it just cannot prune).
+    keys_in = cmp.pk_pushdown(to_replace)
+    if keys_in is not None:
+        master_rows = left.filter(keys_in)
+    else:
         master_rows = left.join(to_replace, pk, "left_semi")
     values = F.concat_ws(", ", *[sql_literal(F.col(c), fields[c]) for c in cols])
     replaces = master_rows.select(

@@ -21,12 +21,15 @@ the same bucketing), and the scoped compare re-checks that pin.
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tidb_large_table_compare_spark.operators.compare import (
     CompareOptions,
     TableCompare,
+    bucket_scope,
     compare_tables,
 )
 
@@ -285,7 +288,7 @@ def _changed_buckets_from(
     """:func:`changed_buckets` body over an already-loaded artifact —
     shared with :func:`incremental_compare`, which otherwise re-read the
     artifact (and its pin sidecar) a second time per call."""
-    opts = CompareOptions(**{**options.__dict__, "n_buckets": n_buckets})
+    opts = dataclasses.replace(options, n_buckets=n_buckets)
     cur = TableCompare(spark, current, current, pk, opts).bucket_digests("left")
     l = stored.withColumnsRenamed(
         {"cnt": "l_cnt", "xor_digest": "l_xor", "sum_digest": "l_sum"}
@@ -320,70 +323,19 @@ def incremental_compare(
     """
     stored, n_buckets = read_digests(spark, digests_path)
     changed = _changed_buckets_from(spark, stored, n_buckets, right, pk, options)
-    opts = CompareOptions(**{**options.__dict__, "n_buckets": n_buckets})
+    opts = dataclasses.replace(options, n_buckets=n_buckets)
     cmp = compare_tables(spark, left, right, pk, opts, table_name)
-    from tidb_large_table_compare_spark.functions.hashing import bucket_id, in_list
-
-    # Bounded driver collect (mirrors TableCompare.diff_rows): small drift
-    # becomes an IN-list evaluated at the scan; wide drift — millions of
-    # bucket ids at 100× scale — switches to a broadcast semi-join per side,
-    # which avoids embedding a multi-MB IN-list literal in the plan (the
-    # broadcast build still stages the bucket set through the driver, but as
-    # compact exchange payload, not as a plan-tree literal Catalyst must
-    # re-analyze).
-    cap = TableCompare._MAX_INLIST
-    skip_above = TableCompare._RESTRICT_SKIP_FRACTION * n_buckets
-    # persist BEFORE the first action: the changed-bucket frame sits above
-    # the full digest aggregation of `right`, and the branches below take
-    # up to two actions over it — unpersisted, each action re-ran that
-    # whole linear scan (the count() in the frame branch literally doubled
-    # the digest pass). count() first materializes every partition, so the
-    # later collect is a pure cache read.
-    changed = changed.persist()
-    n_changed = changed.count()
-    # scope cmp.left/right (post-range_sql) rather than the raw inputs so a
-    # configured range predicate stays in force
-    if n_changed == 0:
-        cmp.left = cmp.left.limit(0)
-        cmp.right = cmp.right.limit(0)
-        changed.unpersist()
-    elif n_changed > skip_above:
-        # most buckets drifted since the snapshot: the scope would keep
-        # most rows while every job re-pays the predicate — run the plain
-        # full compare (same skip rule as TableCompare._bad_bucket_state)
-        changed.unpersist()
-    elif n_changed <= cap:
-        # in_list, not Column.isin — same per-element py4j cost note as
-        # TableCompare._restrict_to_bad_buckets (hashing.in_list); the
-        # predicate needs a named column, so stage the bucket id
-        ids = [r["__bucket"] for r in changed.collect()]
-        changed.unpersist()
-        # per-side bucket columns: the sides may carry different integral
-        # widths and bucket_id widens by the given frame's schema
-        cmp.left = (
-            cmp.left.withColumn("__bucket", bucket_id(pk, n_buckets, cmp.left))
-            .filter(in_list("__bucket", ids))
-            .drop("__bucket")
-        )
-        cmp.right = (
-            cmp.right.withColumn("__bucket", bucket_id(pk, n_buckets, cmp.right))
-            .filter(in_list("__bucket", ids))
-            .drop("__bucket")
-        )
-    else:
-        # deliberate session-lifetime cache, same contract as the compare
-        # drill-down's bucket set: embedded in the returned lazy plan and
-        # bounded by the bucket cap (one long per changed bucket)
-        cmp.left = (
-            cmp.left.withColumn("__bucket", bucket_id(pk, n_buckets, cmp.left))
-            .join(F.broadcast(changed), "__bucket", "left_semi")
-            .drop("__bucket")
-        )
-        cmp.right = (
-            cmp.right.withColumn("__bucket", bucket_id(pk, n_buckets, cmp.right))
-            .join(F.broadcast(changed), "__bucket", "left_semi")
-            .drop("__bucket")
-        )
+    # the changed-bucket set takes the drill-down's own scope (small →
+    # IN-list at the scan, wide → broadcast semi-join, most buckets → no
+    # scope at all: the plain full compare). A frame scope stays persisted
+    # for the session: it is embedded in the returned lazy plan and
+    # bounded by the bucket cap (one long per changed bucket); building it
+    # re-runs the digest of `right` once more for its count. Scope
+    # cmp.left/right (post-range_sql) rather than the raw inputs so a
+    # configured range predicate stays in force.
+    scope = bucket_scope(changed, n_buckets)
+    cmp.left = scope.restrict(cmp.left, pk)
+    cmp.right = scope.restrict(cmp.right, pk)
     return cmp
 
 
@@ -456,7 +408,7 @@ def apply_changes_to_digests(
             f"{BUCKETING_VERSION} into it could permanently corrupt its "
             f"per-bucket digests — re-snapshot with write_digests first"
         )
-    opts = CompareOptions(**{**options.__dict__, "n_buckets": n_buckets})
+    opts = dataclasses.replace(options, n_buckets=n_buckets)
 
     # ONE aggregation over the sign-tagged union of both change batches
     # (same rewrite as TableCompare.mismatched_buckets): the former

@@ -55,6 +55,8 @@ def verify_repair(tc, repaired: DataFrame) -> DataFrame:
     """Re-verify ``repaired`` against ``tc.left``, scoped to ``tc``'s
     mismatched buckets — same one-row summary schema as
     :meth:`TableCompare.summary`, full-table semantics, drift-sized cost.
+    The re-verify runs when this is called; the returned frame holds its
+    one row as a local relation.
 
     Sound because :func:`apply_fixes` cannot touch a clean bucket: every
     key it deletes or inserts comes from ``tc.diff_rows()``, whose
@@ -101,36 +103,35 @@ def verify_repair(tc, repaired: DataFrame) -> DataFrame:
             "verify_repair needs a keyed compare (bucket scoping is "
             "PK-determined); re-verify multiset compares in full"
         )
+    from tidb_large_table_compare_spark.functions.localframe import local_frame
     from tidb_large_table_compare_spark.operators.compare import compare_tables
 
-    n_buckets, bad_ids, bad_frame = tc._bad_bucket_state()
-    if bad_ids is None and bad_frame is None:
-        # the compare itself already judged the drift heavy enough to skip
-        # bucket restriction (_RESTRICT_SKIP_FRACTION) — never in-regime
-        scope_helps = False
-    else:
-        # the frame form (bad set past the IN-list cap) can still be a
-        # small fraction at lake-scale bucket counts (e.g. 60k of 2^20) —
-        # it is persisted, so counting it is a cache read, not a digest
-        # re-run
-        n_bad = len(bad_ids) if bad_ids is not None else bad_frame.count()
-        scope_helps = n_bad <= _SCOPE_FRACTION * n_buckets
-    if not scope_helps:
-        full = compare_tables(
+    # a skip scope (most buckets bad) is never in-regime; a frame scope
+    # (bad set past the IN-list cap) still can be, at lake-scale bucket
+    # counts (e.g. 60k of 2^20)
+    scope = tc.scope()
+    if scope.n_bad > _SCOPE_FRACTION * scope.n_buckets:
+        cmp = compare_tables(
             tc.spark, tc.left, repaired, tc.pk, tc.options, tc.table_name
         )
-        return full.summary()
-    # pin the original bucket count: granularity is already drift-scoped,
-    # and the pin skips the scoped compare's row-estimate probe (which
-    # would otherwise fall back to an extra count() job on the filtered
-    # frame, whose stats Catalyst cannot see through the hash filter)
-    opts = dataclasses.replace(tc.options, n_buckets=n_buckets)
-    scoped = compare_tables(
-        tc.spark,
-        tc._restrict_to_bad_buckets(tc.left),
-        tc._restrict_to_bad_buckets(repaired),
-        tc.pk,
-        opts,
-        tc.table_name,
-    )
-    return scoped.summary()
+    else:
+        # pin the original bucket count: granularity is already
+        # drift-scoped, and the pin skips the scoped compare's row-estimate
+        # probe (which would otherwise fall back to an extra count() job on
+        # the filtered frame, whose stats Catalyst cannot see through the
+        # hash filter)
+        cmp = compare_tables(
+            tc.spark,
+            scope.restrict(tc.left, tc.pk),
+            scope.restrict(repaired, tc.pk),
+            tc.pk,
+            dataclasses.replace(tc.options, n_buckets=scope.n_buckets),
+            tc.table_name,
+        )
+    # the inner compare persists its own state (a non-equivalent repair's
+    # IN-list diff): collect the one row and release it here, since no
+    # caller can reach this compare to close it
+    summary = cmp.summary()
+    rows = summary.collect()
+    cmp.close()
+    return local_frame(tc.spark, rows, summary.schema)
