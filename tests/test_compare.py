@@ -461,6 +461,29 @@ def test_bucket_scope_decision_lives_in_compare():
     assert hits and all(h.startswith("operators/compare.py:") for h in hits), hits
 
 
+def test_digest_aggregation_lives_in_compare():
+    """The (cnt, xor, sum) digest triple is aggregated in one place: the
+    bit_xor aggregate and the decimal(38,0) digest sum appear in no other
+    package module, and incremental.py neither joins against a stored
+    artifact nor self-compares a frame to reach its digest."""
+    from pathlib import Path
+
+    import tidb_large_table_compare_spark as pkg
+
+    root = Path(pkg.__file__).resolve().parent
+    names = ("bit_xor(", 'cast("decimal(38,0)")')
+    hits = [
+        f"{path.relative_to(root)}:{n}: {name}"
+        for path in sorted(root.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        for name in names
+        if name in line
+    ]
+    assert hits and all(h.startswith("operators/compare.py:") for h in hits), hits
+    incremental = (root / "operators" / "incremental.py").read_text()
+    assert ".join(" not in incremental and "TableCompare(" not in incremental
+
+
 def test_fk_orphans_null_and_composite_semantics(spark):
     from tidb_large_table_compare_spark.operators.integrity import (
         fk_orphans,

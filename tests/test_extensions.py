@@ -10,11 +10,7 @@ import pytest
 
 from tidb_large_table_compare_spark.operators.dedup import (
     hashed_word_ngrams,
-    lsh_candidate_pairs,
     lsh_candidate_pairs_from_array,
-    minhash_signature,
-    minhash_signature_from_sets,
-    minhash_signature_oph,
     minhash_signature_oph_np,
     simhash,
     word_ngrams,
@@ -29,27 +25,17 @@ def test_word_ngrams_short_text_guard(spark):
     assert [r.n for r in out] == [0, 3]
 
 
-@pytest.mark.parametrize("variant", ["oph", "universal", "exploded"])
-def test_lsh_recall_on_constructed_dups(spark, variant):
-    """Every constructed near-dup pair must survive LSH banding in all three
-    signature formulations (the verified output is oracle-checked elsewhere;
-    this pins the recall property)."""
+def test_lsh_recall_on_constructed_dups(spark):
+    """Every constructed near-dup pair must survive LSH banding in the
+    production signature path, hashed shingles → OPH sketch → banded
+    candidates (the verified output is oracle-checked elsewhere; this pins
+    the recall property)."""
     corpus = _near_dup_corpus(spark, SF_SMALL)
     shingle_sets = corpus.select(
-        "doc_id", word_ngrams(F.col("text"), 5).alias("shingles")
+        "doc_id", hashed_word_ngrams("text", 5).alias("shingles")
     )
-    if variant == "oph":
-        sigs = minhash_signature_oph(shingle_sets, "doc_id")
-        cands = lsh_candidate_pairs_from_array(sigs, "doc_id")
-    elif variant == "universal":
-        sigs = minhash_signature_from_sets(shingle_sets, "doc_id")
-        cands = lsh_candidate_pairs(sigs, "doc_id")
-    else:
-        shingled = shingle_sets.select(
-            "doc_id", F.explode("shingles").alias("shingle")
-        )
-        sigs = minhash_signature(shingled, "doc_id", "shingle")
-        cands = lsh_candidate_pairs(sigs, "doc_id")
+    sigs = minhash_signature_oph_np(shingle_sets, "doc_id")
+    cands = lsh_candidate_pairs_from_array(sigs, "doc_id")
     expected = {
         (r.doc_id, r.doc_id + 100_000)
         for r in corpus.filter(F.col("doc_id") % 10 == 3)
@@ -504,23 +490,18 @@ def test_band_buckets_expr_matches_column_form(spark):
 
 
 def test_minhash_from_sets_drops_empty_shingle_sets(spark):
-    """Docs with empty shingle arrays must be dropped, not given all-NULL
-    signatures — xxhash64 over NULLs is a seed-derived constant, so every
-    empty doc would share one bucket in every band (quadratic pairs)."""
-    from tidb_large_table_compare_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signature_from_sets,
-    )
-
+    """Docs with empty shingle arrays must be dropped, not given a shared
+    all-empty signature — every empty doc would then share one bucket in
+    every band (quadratic pairs)."""
     sets = spark.createDataFrame(
-        [(1, ["a b c d e"]), (2, ["a b c d e"]), (3, []), (4, []), (5, [])],
-        "doc_id bigint, shingles array<string>",
+        [(1, [7, 8, 9]), (2, [7, 8, 9]), (3, []), (4, []), (5, [])],
+        "doc_id bigint, shingles array<bigint>",
     )
-    sigs = minhash_signature_from_sets(sets, "doc_id")
+    sigs = minhash_signature_oph_np(sets, "doc_id")
     assert {r.doc_id for r in sigs.select("doc_id").collect()} == {1, 2}
     pairs = {
         (r.id_a, r.id_b)
-        for r in lsh_candidate_pairs(sigs, "doc_id").collect()
+        for r in lsh_candidate_pairs_from_array(sigs, "doc_id").collect()
     }
     assert pairs == {(1, 2)}  # no empty-doc mega-bucket pairs
 

@@ -59,9 +59,9 @@ def test_operator_parity_under_persist_mode(spark):
     identical pairs under both modes — the seam must be invisible to
     results."""
     from tidb_large_table_compare_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signature_from_sets,
         hashed_word_ngrams,
+        lsh_candidate_pairs_from_array,
+        minhash_signature_oph_np,
     )
 
     docs = spark.createDataFrame(
@@ -72,12 +72,12 @@ def test_operator_parity_under_persist_mode(spark):
     sets_ = docs.select(
         "doc_id", hashed_word_ngrams(F.col("text"), 3).alias("shingles")
     )
-    sigs = minhash_signature_from_sets(sets_, "doc_id")
+    sigs = minhash_signature_oph_np(sets_, "doc_id")
 
     def pairs():
         return sorted(
             (r.id_a, r.id_b)
-            for r in lsh_candidate_pairs(sigs, "doc_id").collect()
+            for r in lsh_candidate_pairs_from_array(sigs, "doc_id").collect()
         )
 
     base = pairs()
@@ -189,15 +189,16 @@ def test_observation_latches_through_materialize(spark, mode):
     """The CC convergence probe (round 13) rides observe() metrics on the
     materialize job itself. That only removes the per-round count job if
     the metric actually LATCHES on the checkpoint/persist action in both
-    seam modes — if it did not, _observation_count's fallback would count
+    seam modes — if it did not, observed_count's fallback would count
     the (empty) __moved filter and return 0 here, not the metric."""
     from pyspark.sql import Observation
 
-    from tidb_large_table_compare_spark.operators.clustering import (
-        _observation_count,
+    from tidb_large_table_compare_spark.functions.materialize import (
+        observed_count,
     )
 
     obs = Observation()
     df = spark.range(100).observe(obs, F.sum("id").alias("n_changed"))
     out = materialize(df, mode=mode)
-    assert _observation_count(obs, out.withColumn("__moved", F.lit(False))) == 4950
+    moved = out.withColumn("__moved", F.lit(False)).filter(F.col("__moved"))
+    assert observed_count(obs, "n_changed", moved.count) == 4950

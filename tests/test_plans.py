@@ -160,7 +160,7 @@ def test_digest_map_side_combine(spark):
     )
     plan = _plan(cmp.bucket_digests("left"))
     pre_shuffle = plan.split("Exchange hashpartitioning(__bucket")[-1]
-    assert "partial_count" in pre_shuffle and "partial_bit_xor" in pre_shuffle
+    assert "partial_sum" in pre_shuffle and "partial_bit_xor" in pre_shuffle
 
 
 # --- skew stress (SURVEY.md §7): hot keys must not unbound any shuffle ------
@@ -787,3 +787,33 @@ def test_digest_pass_single_exchange_no_join(spark):
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "Join" not in plan, plan
     assert "Union" in plan
+
+
+def test_changed_buckets_and_fold_single_exchange_no_join(spark, tmp_path):
+    """Changed-bucket detection and the CDC fold are the same signed digest
+    aggregation as the compare: stored digest rows and the current table
+    (or change batches) in one union, one shuffle on ``__bucket``, and no
+    join against the stored artifact."""
+    from tidb_large_table_compare_spark.operators.compare import CompareOptions
+    from tidb_large_table_compare_spark.operators.incremental import (
+        _fold,
+        changed_buckets,
+        read_digests,
+        write_digests,
+    )
+
+    orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
+    opts = CompareOptions(n_buckets=64)
+    path = str(tmp_path / "digests")
+    write_digests(spark, orders, ["o_orderkey"], path, opts)
+    stored, n_buckets = read_digests(spark, path)
+    inserts = orders.filter(F.col("o_orderkey") % 11 == 0)
+    deletes = orders.filter(F.col("o_orderkey") % 13 == 0)
+    for df in (
+        changed_buckets(spark, path, perturbed_orders(orders), ["o_orderkey"], opts),
+        _fold(stored, n_buckets, ["o_orderkey"], inserts, deletes, opts),
+    ):
+        plan = _plan(df)
+        assert plan.count("Exchange hashpartitioning(__bucket") == 1, plan
+        assert plan.count("Exchange") == 1, plan
+        assert "Join" not in plan, plan

@@ -39,7 +39,6 @@ __all__ = [
     "row_hash",
     "bucket_id",
     "in_list",
-    "with_hash_columns",
 ]
 
 
@@ -434,16 +433,3 @@ def bucket_id(
     return F.expr(
         f"pmod(xxhash64({', '.join(parts)}), {int(n_buckets)})"
     ).alias("bucket")
-
-
-def with_hash_columns(
-    df: DataFrame,
-    pk_cols: list[str],
-    n_buckets: int,
-    compare_cols: list[str] | None = None,
-    float_round: int | None = None,
-) -> DataFrame:
-    """Attach ``__bucket`` and ``__row_hash`` columns used by the compare plan."""
-    return df.withColumn("__bucket", bucket_id(pk_cols, n_buckets, df)).withColumn(
-        "__row_hash", row_hash(df, compare_cols, float_round)
-    )

@@ -11,10 +11,10 @@ engine, no UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["morton_key", "morton_key_sql", "zorder_by"]
+__all__ = ["morton_key", "morton_key_sql"]
 
 
 def morton_key(x: Column, y: Column, bits: int = 16) -> Column:
@@ -40,19 +40,3 @@ def morton_key_sql(x: str, y: str, bits: int = 16) -> str:
         terms.append(f"((({x} >> {j}) & 1) << {2 * j})")
         terms.append(f"((({y} >> {j}) & 1) << {2 * j + 1})")
     return "(" + " | ".join(terms) + ")"
-
-
-def zorder_by(
-    df: DataFrame, x: str, y: str, n_files: int, bits: int = 16
-) -> DataFrame:
-    """Cluster ``df`` for writing: range-partition + sort by the Morton key
-    of (x, y), so each output file holds one compact Z-curve segment and its
-    parquet min/max stats are tight on BOTH columns. The key is dropped
-    before write — layout is a property of row order, not schema."""
-    key = morton_key(F.col(x), F.col(y), bits)
-    return (
-        df.withColumn("__z", key)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )

@@ -28,12 +28,16 @@ least stay out of it. A caller that owns a release hook passes
 ``TableCompare.close``).
 
 Both modes run one eager job and yield bit-identical downstream results
-(pinned by tests/test_materialize.py).
+(pinned by tests/test_materialize.py). Stage counts ride ``observe()``
+metrics on those jobs and are read back through :func:`observed_count`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import threading
+from typing import Callable
+
+from pyspark.sql import DataFrame, Observation
 
 MODE_CONF = "spark.graft.materialize.mode"
 
@@ -58,3 +62,29 @@ def materialize(df: DataFrame, mode: str | None = None) -> DataFrame:
             f"{MODE_CONF}={mode!r}: expected 'localCheckpoint' or 'persist'"
         )
     return df.localCheckpoint(eager=True)
+
+
+def observed_count(
+    obs: Observation, metric: str, recount: Callable[[], int]
+) -> int:
+    """Read an Observation's ``metric``, with a recount fallback.
+
+    ``Observation.get`` blocks until the first action over the observed
+    frame finishes; callers read a metric after that action has run, so
+    this returns immediately. The thread+timeout guard is a belt against
+    the one pathological case — an execution path where the observed node
+    ends up entirely behind a populated cache so its metrics never surface
+    — in which case ``recount()`` runs after 30 s instead (costing the one
+    extra job the observation was meant to save, never a hang).
+    """
+    box: dict[str, int] = {}
+
+    def _grab() -> None:
+        box["n"] = int(obs.get[metric])
+
+    t = threading.Thread(target=_grab, daemon=True)
+    t.start()
+    t.join(30.0)
+    if "n" in box:
+        return box["n"]
+    return recount()

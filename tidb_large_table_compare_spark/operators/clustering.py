@@ -18,7 +18,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tidb_large_table_compare_spark.functions.localframe import local_frame
-from tidb_large_table_compare_spark.functions.materialize import materialize
+from tidb_large_table_compare_spark.functions.materialize import (
+    materialize,
+    observed_count,
+)
 
 __all__ = ["connected_components"]
 
@@ -54,28 +57,6 @@ def _driver_components(pairs: DataFrame) -> DataFrame:
     return local_frame(
         pairs.sparkSession, out, "node bigint, cluster_id bigint"
     )
-
-
-def _observation_count(obs, merged) -> int:
-    """Read a CC round's ``n_changed`` metric. ``Observation.get`` blocks
-    until the observed action finishes — the materialize job has already
-    run by this point, so it returns immediately. Timeout + recompute
-    fallback (same belt as ``plans/curate.py::_observed_count``): the
-    fallback costs the one count job the observation was meant to save,
-    never a hang, and reads the already-materialized frame."""
-    import threading
-
-    box: dict[str, int] = {}
-
-    def _grab() -> None:
-        box["n"] = int(obs.get["n_changed"])
-
-    t = threading.Thread(target=_grab, daemon=True)
-    t.start()
-    t.join(30.0)
-    if "n" in box:
-        return box["n"]
-    return merged.filter(F.col("__moved")).count()
 
 
 def connected_components(
@@ -174,7 +155,10 @@ def connected_components(
                 ).alias("n_changed"),
             )
         )
-        changed = _observation_count(obs, merged)
+        # the count fallback reads the already-materialized frame
+        changed = observed_count(
+            obs, "n_changed", merged.filter(F.col("__moved")).count
+        )
         labels = merged.select("node", "label")
         if changed == 0:
             break

@@ -8,7 +8,9 @@ pins via its per-table TOML template (SURVEY.md §2.B):
   (reference ``syncdiff_config2/my_database_users.toml:46``)
 - B5  chunk split (``chunk-size``)  → hash buckets ``pmod(xxhash64(pk), n)``
   (reference ``my_database_users.toml:45``, ``config.toml:21``)
-- B6  per-chunk checksum + count    → ``groupBy(bucket).agg(count, bit_xor(hash), sum(hash))``
+- B6  per-chunk checksum + count    → one signed per-bucket ``(cnt, xor, sum)``
+  aggregation (:func:`digest_sum`) shared by the compare, the digest
+  snapshot, changed-bucket detection and the CDC fold
 - B8  row-level drill-down          → PK full-outer join *restricted to
   mismatched buckets* via a broadcast semi-join
 - B9  UPCOUNT/DOWNCOUNT classification (reference report columns,
@@ -31,6 +33,7 @@ multiplicities — an ``exceptAll``-style diff that needs no key at all.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,6 +56,12 @@ __all__ = [
     "TableCompare",
     "bucket_scope",
     "compare_tables",
+    "digest_sum",
+    "drifted_buckets",
+    "range_scoped",
+    "signed_digest",
+    "signed_table_rows",
+    "size_buckets",
 ]
 
 DEFAULT_CHUNK_SIZE = 5000  # reference chunk-size (config.toml:21)
@@ -93,6 +102,102 @@ def _narrow(df: DataFrame, pk: list[str], compare_cols: list[str], n_buckets: in
         bucket_id(pk, n_buckets, df).alias("__bucket"),
         row_hash(df, compare_cols, float_round).alias("__row_hash"),
     )
+
+
+def range_scoped(df: DataFrame, options: CompareOptions) -> DataFrame:
+    """``df`` restricted by the B4 ``range_sql`` predicate, if any."""
+    return df.filter(F.expr(options.range_sql)) if options.range_sql else df
+
+
+def size_buckets(df: DataFrame, options: CompareOptions) -> int:
+    """The bucket count for a compare of (range-scoped) ``df``.
+
+    The ``n_buckets`` override, else sized from catalog stats
+    (``row_count_hint`` — the reference reads TABLE_ROWS,
+    step1_query_tables.sh:115-117) or optimizer plan statistics (file
+    sizes for parquet scans) — zero Spark jobs. Bucket count only tunes
+    drill-down granularity; results are invariant to it
+    (test_bucket_count_invariance), so a coarse estimate is fine.
+    """
+    if options.n_buckets is not None:
+        return options.n_buckets
+    rows = estimate_rows(df, bytes_per_row=64, hint=options.row_count_hint)
+    n = max(_MIN_BUCKETS, rows // max(options.chunk_size, 1) + 1)
+    return min(n, _MAX_BUCKETS)
+
+
+# -- the bucket digest (B6) ------------------------------------------------
+# The per-bucket (cnt, xor_digest, sum_digest) triple is an abelian group:
+# counts and sums add, xor is its own inverse. So every digest operation is
+# ONE aggregation (digest_sum) over signed digest rows: a snapshot is one
+# side at +1, a compare is left at +1 and right at -1, changed-bucket
+# detection is the current table at +1 and the stored digest at -1, and
+# the CDC fold is the stored digest plus inserts at +1 and deletes at -1.
+# One groupBy over a union plans one exchange and no join, and map-side
+# combine keeps bytes shuffled ∝ n_buckets, not rows.
+
+
+def signed_digest(rows: DataFrame, sign: int = 1) -> DataFrame:
+    """Signed ``(__bucket, cnt, xor_digest, sum_digest)`` digest rows.
+
+    ``rows`` is either narrow ``(__bucket, __row_hash)`` rows (one digest
+    row per table row, ``cnt`` ±1) or a digest itself. ``sign = -1``
+    negates ``cnt`` and ``sum_digest``; ``xor_digest`` is its own inverse.
+    bit_xor alone cancels duplicate rows pairwise, so count and sum are the
+    independent second and third digests. The sum is taken in
+    decimal(38,0): a bigint sum of 64-bit hashes overflows (ANSI mode
+    raises), and wrap-around would weaken the digest.
+    """
+    if "__row_hash" in rows.columns:
+        h = F.col("__row_hash")
+        cnt, xor, total = F.lit(1).cast("bigint"), h, h.cast("decimal(38,0)")
+    else:
+        cnt, xor, total = F.col("cnt"), F.col("xor_digest"), F.col("sum_digest")
+    if sign < 0:
+        cnt, total = -cnt, -total
+    return rows.select(
+        "__bucket",
+        cnt.alias("cnt"),
+        xor.alias("xor_digest"),
+        total.alias("sum_digest"),
+    )
+
+
+def digest_sum(*signed: DataFrame) -> DataFrame:
+    """Per-bucket sum of signed digest rows: one shuffle, no join."""
+    return (
+        reduce(DataFrame.unionByName, signed)
+        .groupBy("__bucket")
+        .agg(
+            F.sum("cnt").alias("cnt"),
+            F.bit_xor("xor_digest").alias("xor_digest"),
+            F.sum("sum_digest").alias("sum_digest"),
+        )
+    )
+
+
+def drifted_buckets(*signed: DataFrame) -> DataFrame:
+    """``__bucket`` ids whose signed digest rows do not cancel out."""
+    nonzero = (
+        (F.col("cnt") != 0)
+        | (F.col("xor_digest") != 0)
+        | (F.col("sum_digest") != 0)
+    )
+    return digest_sum(*signed).filter(nonzero).select("__bucket")
+
+
+def signed_table_rows(
+    df: DataFrame,
+    pk: list[str],
+    n_buckets: int,
+    options: CompareOptions,
+    sign: int = 1,
+) -> DataFrame:
+    """Signed digest rows of a whole table: range-scoped, every column
+    hashed — the rows a digest snapshot of ``df`` sums."""
+    df = range_scoped(df, options)
+    narrow = _narrow(df, pk, sorted(df.columns), n_buckets, options.float_round)
+    return signed_digest(narrow, sign)
 
 
 @dataclass(frozen=True)
@@ -202,11 +307,8 @@ class TableCompare:
         self.options = options
         self.table_name = table_name
         self.pk = list(pk) if pk else []
-        if options.range_sql:  # B4
-            left = left.filter(F.expr(options.range_sql))
-            right = right.filter(F.expr(options.range_sql))
-        self.left = left
-        self.right = right
+        self.left = range_scoped(left, options)  # B4
+        self.right = range_scoped(right, options)
         # Data diff runs over the columns both sides share; structure diff
         # reports the rest (sync-diff compares data only when structure allows).
         self.compare_cols = sorted(set(left.columns) & set(right.columns))
@@ -241,23 +343,11 @@ class TableCompare:
 
     # -- sizing ------------------------------------------------------------
     def _n_buckets(self) -> int:
-        opt = self.options
-        if opt.n_buckets is not None:
-            return opt.n_buckets
+        # cached: the plan-stats probe costs a Catalyst optimize of the
+        # left plan (~85 ms driver time, round-12 micro-profile), and the
+        # inputs are fixed per instance
         if self._n_buckets_memo is None:
-            # Size from catalog stats (row_count_hint — the reference reads
-            # TABLE_ROWS, step1_query_tables.sh:115-117) or optimizer plan
-            # statistics (file sizes for parquet scans) — zero Spark jobs.
-            # The probe costs a Catalyst optimize of the left plan (~85 ms
-            # driver time, round-12 micro-profile), so the result is cached;
-            # inputs are fixed per instance. Bucket count only tunes
-            # drill-down granularity; results are invariant to it
-            # (test_bucket_count_invariance), so a coarse estimate is fine.
-            rows = estimate_rows(
-                self.left, bytes_per_row=64, hint=opt.row_count_hint
-            )
-            n = max(_MIN_BUCKETS, rows // max(opt.chunk_size, 1) + 1)
-            self._n_buckets_memo = min(n, _MAX_BUCKETS)
+            self._n_buckets_memo = size_buckets(self.left, self.options)
         return self._n_buckets_memo
 
     # -- digest phase (B5/B6) ----------------------------------------------
@@ -271,55 +361,16 @@ class TableCompare:
         return nf
 
     def bucket_digests(self, side: str = "left") -> DataFrame:
-        narrow = self._narrow_side(side)
-        # bit_xor is order-independent but cancels duplicate rows pairwise;
-        # count + sum(hash) are the independent second/third digests (B6).
-        # The sum accumulates in decimal(38,0): a bigint sum of 64-bit hashes
-        # overflows (ANSI mode raises), and wrap-around would weaken the digest.
-        return narrow.groupBy("__bucket").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.bit_xor("__row_hash").alias("xor_digest"),
-            F.sum(F.col("__row_hash").cast("decimal(38,0)")).alias("sum_digest"),
-        )
+        return digest_sum(signed_digest(self._narrow_side(side)))
 
     def mismatched_buckets(self) -> DataFrame:
-        # ONE shuffle, no join: both sides' narrow (bucket, hash) rows are
-        # unioned under a side tag and digested by a single per-bucket
-        # aggregation with side-conditional count/xor/sum. The former
-        # per-side groupBy + full-outer join shape shuffled the same bytes
-        # (2 × n_buckets partial aggregates) but planned two exchanges plus
-        # a join stage — with AQE that is three query-stage rounds of
-        # scheduling per digest pass, pure fixed cost at any scale and the
-        # dominant term at bench SFs (guide §2.4: two operations keyed the
-        # same way share one exchange). Verdict-equivalence with the join
-        # form: a bucket absent from one side previously read NULL on that
-        # side's columns; here its conditional count is 0 and its xor/sum
-        # stay NULL (no non-null inputs) — either way eqNullSafe against a
-        # populated side fails and the bucket is flagged. Buckets absent
-        # from both sides appear in neither formulation.
-        tagged = [
-            self._narrow_side(side_name).select(
-                "__bucket", "__row_hash", F.lit(side).alias("__side")
-            )
-            for side_name, side in (("left", 0), ("right", 1))
-        ]
-        u = tagged[0].unionByName(tagged[1])
-        lrow = F.when(F.col("__side") == 0, F.col("__row_hash"))
-        rrow = F.when(F.col("__side") == 1, F.col("__row_hash"))
-        agg = u.groupBy("__bucket").agg(
-            F.count(lrow).alias("l_cnt"),
-            F.count(rrow).alias("r_cnt"),
-            F.bit_xor(lrow).alias("l_xor"),
-            F.bit_xor(rrow).alias("r_xor"),
-            F.sum(lrow.cast("decimal(38,0)")).alias("l_sum"),
-            F.sum(rrow.cast("decimal(38,0)")).alias("r_sum"),
+        # left at +1, right at -1: a bucket absent from one side keeps the
+        # other side's nonzero triple and is flagged; buckets absent from
+        # both sides appear nowhere
+        return drifted_buckets(
+            signed_digest(self._narrow_side("left")),
+            signed_digest(self._narrow_side("right"), -1),
         )
-        bad = (
-            (F.col("l_cnt") != F.col("r_cnt"))
-            | ~F.col("l_xor").eqNullSafe(F.col("r_xor"))
-            | ~F.col("l_sum").eqNullSafe(F.col("r_sum"))
-        )
-        return agg.filter(bad).select("__bucket")
 
     # -- drill-down (B8/B9) --------------------------------------------------
     def scope(self) -> BucketScope:

@@ -23,8 +23,8 @@ from tidb_large_table_compare_spark.functions.materialize import materialize
 __all__ = [
     "exact_dedup_groups",
     "word_ngrams",
-    "minhash_signature",
-    "lsh_candidate_pairs",
+    "minhash_signature_oph_np",
+    "lsh_candidate_pairs_from_array",
     "jaccard_verified_pairs",
     "prefix_filtered_candidates",
     "simhash",
@@ -122,115 +122,6 @@ def hashed_word_ngrams(text: Column | str, n: int) -> Column:
     )
     return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(
         F.array().cast("array<bigint>")
-    )
-
-
-def minhash_signature(
-    shingled: DataFrame, id_col: str, shingle_col: str, n_hashes: int = 128
-) -> DataFrame:
-    """(id, h0..h{n-1}) MinHash signature from exploded shingles.
-
-    One aggregation pass: ``min(xxhash64(shingle, seed_i))`` per seed — the
-    shuffle carries n_hashes longs per document, independent of doc length.
-    Prefer :func:`minhash_signature_from_sets` when the shingles are already
-    an array column — it is map-only (no shuffle at all).
-    """
-    mins = [
-        F.min(F.xxhash64(F.col(shingle_col), F.lit(i))).alias(f"h{i}")
-        for i in range(n_hashes)
-    ]
-    return shingled.groupBy(id_col).agg(*mins)
-
-
-_MERSENNE_31 = (1 << 31) - 1
-
-
-def _permutation_params(n_hashes: int) -> list[tuple[int, int]]:
-    """Deterministic (a, b) pairs for the universal-hash permutation family."""
-    import random
-
-    rng = random.Random(0x5EED)
-    return [
-        (rng.randrange(1, _MERSENNE_31), rng.randrange(0, _MERSENNE_31))
-        for _ in range(n_hashes)
-    ]
-
-
-def minhash_signature_from_sets(
-    shingle_sets: DataFrame,
-    id_col: str,
-    shingles_col: str = "shingles",
-    n_hashes: int = 128,
-) -> DataFrame:
-    """MinHash signatures computed per-row from a shingle *array* column.
-
-    Pure map-side (no shuffle): each shingle is hashed ONCE with xxhash64,
-    then the n permutations are cheap universal hashes ``(a*g + b) mod
-    2^31-1`` over that base hash — ~n times less string hashing than n
-    independently-seeded hashes, with the same LSH guarantees. ``a*g`` stays
-    under 2^62, so ANSI-mode bigint arithmetic cannot overflow.
-
-    NB: transform() lambdas here must take exactly one argument — a
-    two-argument lambda makes Spark pass the ELEMENT INDEX as the second
-    argument, silently replacing a closed-over seed.
-
-    Empty shingle sets are dropped (matching every other signature
-    variant): ``array_min`` over an empty array is NULL, so an empty doc
-    would get an all-NULL signature — and xxhash64 over NULLs is a
-    seed-derived CONSTANT, which would put every sub-n-token doc into one
-    shared bucket in every band and blow the band self-join up
-    quadratically in their count.
-    """
-    base = F.transform(
-        F.col(shingles_col),
-        lambda s: F.xxhash64(s).bitwiseAND(F.lit(_MERSENNE_31)),
-    )
-    prepped = shingle_sets.filter(
-        F.size(F.col(shingles_col)) > 0
-    ).select(F.col(id_col), base.alias("__g"))
-
-    def perm(a: int, b: int):
-        # single-parameter lambda via closure: default-arg tricks would raise
-        # the lambda's arity and change transform()'s calling convention
-        return lambda g: (g * F.lit(a) + F.lit(b)) % F.lit(_MERSENNE_31)
-
-    sigs = [
-        F.array_min(F.transform(F.col("__g"), perm(a, b))).alias(f"h{i}")
-        for i, (a, b) in enumerate(_permutation_params(n_hashes))
-    ]
-    return prepped.select(F.col(id_col), *sigs)
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame, id_col: str, n_hashes: int = 128, n_bands: int = 32
-) -> DataFrame:
-    """Banded LSH: docs colliding in any band become (id_a < id_b) candidates.
-
-    Shuffle ∝ docs × n_bands; the quadratic blow-up is confined to rows that
-    share a band bucket (true near-dups plus a vanishing false-positive rate).
-    """
-    rows = n_hashes // n_bands
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(*[F.col(f"h{b * rows + r}") for r in range(rows)]).alias(
-                    "bucket"
-                ),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    exploded = signatures.select(F.col(id_col), F.explode(bands).alias("bb")).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    a = exploded.withColumnRenamed(id_col, "id_a")
-    b = exploded.withColumnRenamed(id_col, "id_b")
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
     )
 
 
@@ -387,58 +278,7 @@ def simhash(
     return agg.select(F.col(id_col), fingerprint.alias("simhash"))
 
 
-def minhash_signature_oph(
-    shingle_sets: DataFrame,
-    id_col: str,
-    shingles_col: str = "shingles",
-    n_hashes: int = 128,
-) -> DataFrame:
-    """One-Permutation Hashing MinHash: O(shingles) work, not O(shingles × n).
-
-    Each shingle is hashed ONCE; its hash picks a bin (the "one permutation"
-    split into n ranges) and the per-bin minimum forms the sketch — the
-    classic n-permutation sketch costs n passes per shingle, OPH costs one
-    (Li, Owen & Zhang 2012). Empty bins are densified by borrowing from the
-    circularly-NEXT non-empty bin, offset-encoded by the exact distance
-    (rotation densification, Shrivastava 2014 — see the in-body comment for
-    why bounded probes with a sentinel fallback would be wrong here).
-
-    Returns (id, sig array<long>). Values are confined to 31 bits so the
-    densification offsets can never overflow ANSI-mode bigint arithmetic.
-
-    Takes RAW shingles (hashes them itself). Value-compatible with
-    :func:`minhash_signature_oph_np` only under the intended pairing:
-    this over raw shingles ≡ oph_np over those shingles pre-hashed with
-    xxhash64. Feeding this function pre-hashed ints double-hashes them —
-    the sketches then share no collisions with an oph_np-built index.
-    """
-    exploded = shingle_sets.select(F.col(id_col), F.explode(shingles_col).alias("__s"))
-    g = F.xxhash64("__s")
-    binned = exploded.select(
-        F.col(id_col),
-        F.pmod(F.shiftrightunsigned(g, 33), F.lit(n_hashes)).alias("bin"),
-        g.bitwiseAND(F.lit(_MERSENNE_31)).alias("val"),
-    )
-    per_bin = binned.groupBy(id_col, "bin").agg(F.min("val").alias("mv"))
-    maps = per_bin.groupBy(id_col).agg(
-        F.map_from_entries(F.collect_list(F.struct("bin", "mv"))).alias("__m")
-    )
-
-    # Rotation densification (Shrivastava 2014): every empty bin borrows from
-    # its circularly-nearest non-empty bin, offset-encoded by the distance.
-    # Bounded probes with a shared sentinel would be WRONG for sparse docs
-    # (S << n bins): sentinel values are doc-independent, so sparse docs
-    # collide in bands en masse (observed: 3.8M false candidates on a corpus
-    # whose docs average ~50 shingles over 128 bins → 68% empty bins).
-    def densified(i):
-        dist = F.array_min(
-            F.transform(F.map_keys(F.col("__m")), lambda k: F.pmod(k - i, F.lit(n_hashes)))
-        )
-        src = F.pmod(i + dist, F.lit(n_hashes))
-        return F.element_at(F.col("__m"), src) + dist * F.lit(1 << 31)
-
-    sig = F.transform(F.sequence(F.lit(0), F.lit(n_hashes - 1)), densified)
-    return maps.select(F.col(id_col), sig.alias("sig"))
+_MERSENNE_31 = (1 << 31) - 1
 
 
 def minhash_signature_oph_np(
@@ -449,15 +289,20 @@ def minhash_signature_oph_np(
 ) -> DataFrame:
     """Map-only OPH MinHash over pre-hashed (int64) shingles.
 
-    Same sketch as :func:`minhash_signature_oph` — one-permutation binning
-    with rotation densification — but computed per document inside an
-    Arrow batch instead of explode → groupBy → groupBy: a per-doc-local
-    computation needs ZERO shuffles, and at 100 TB the two saved shuffles
-    (doc×shingle rows, then doc×bin rows) are the dominant cost. The bin is
-    taken from the logical (unsigned) top bits and the value from the low
-    31 bits of the already-hashed shingle, so no re-hash either. Docs with
-    empty shingle sets produce no signature row (matching the exploded
-    formulation, where they vanish at the explode).
+    One-Permutation Hashing: each shingle's hash picks a bin (the one
+    permutation split into n ranges) and the per-bin minimum forms the
+    sketch — O(shingles) work, not O(shingles × n) (Li, Owen & Zhang
+    2012). An empty bin borrows from the circularly-next non-empty bin,
+    offset-encoded by the distance (rotation densification, Shrivastava
+    2014); a shared sentinel for empty bins would be doc-independent, so
+    sparse docs would collide in bands en masse. Computed per document
+    inside an Arrow batch: a per-doc-local computation needs ZERO
+    shuffles. The bin is taken from the logical (unsigned) top bits and
+    the value from the low 31 bits of the already-hashed shingle, so no
+    re-hash either, and the offsets cannot overflow ANSI-mode bigint
+    arithmetic. Docs with empty shingle sets produce no signature row:
+    an all-empty sketch would put every such doc into one shared bucket
+    in every band and blow the band self-join up quadratically.
     """
     import numpy as np
 
@@ -531,7 +376,7 @@ def lsh_candidate_pairs_from_array(
     n_bands: int = 32,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Banded LSH over an array-form signature (see :func:`minhash_signature_oph`).
+    """Banded LSH over an array-form signature (see :func:`minhash_signature_oph_np`).
 
     ``max_bucket_size`` guards the 100 TB failure mode of banded LSH: one
     boilerplate-heavy ``(band, bucket)`` shared by k documents self-joins

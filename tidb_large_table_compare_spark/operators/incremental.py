@@ -10,8 +10,9 @@ is the CDC-shaped complement of :mod:`.compare`:
 - ``write_digests``: one narrow aggregation of the table → a tiny parquet
   artifact (O(n_buckets) rows, ~40 bytes each — ~8 MB for 1e9 rows at the
   reference's 5000-row chunks);
-- ``changed_buckets``: recompute current digests (one linear scan, zero
-  joins against the other side) and anti-diff them against the stored ones;
+- ``changed_buckets``: one signed aggregation of the current table (+1)
+  and the stored digest (-1) — one linear scan, no join — keeping the
+  buckets that do not cancel;
 - ``incremental_compare``: a full row-level :class:`TableCompare` scoped to
   the changed buckets only — the drill-down never touches clean chunks.
 
@@ -31,6 +32,12 @@ from tidb_large_table_compare_spark.operators.compare import (
     TableCompare,
     bucket_scope,
     compare_tables,
+    digest_sum,
+    drifted_buckets,
+    range_scoped,
+    signed_digest,
+    signed_table_rows,
+    size_buckets,
 )
 
 __all__ = [
@@ -199,14 +206,18 @@ def write_digests(
     """Persist the per-bucket digest of ``df`` to ``path``; returns the
     pinned bucket count. Columns: (__bucket, cnt, xor_digest, sum_digest,
     n_buckets), plus the pin-preserving ``_n_buckets`` sidecar."""
-    cmp = TableCompare(spark, df, df, pk, options)
-    n_buckets = cmp._n_buckets()
-    (
-        cmp.bucket_digests("left")
-        .withColumn("n_buckets", F.lit(n_buckets))
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    n_buckets = size_buckets(range_scoped(df, options), options)
+    digest = digest_sum(signed_table_rows(df, pk, n_buckets, options))
+    return _write_artifact(spark, digest, path, n_buckets)
+
+
+def _write_artifact(
+    spark: SparkSession, digest: DataFrame, path: str, n_buckets: int
+) -> int:
+    """Write ``digest`` with its in-data and sidecar ``n_buckets`` pins."""
+    digest.withColumn("n_buckets", F.lit(n_buckets)).write.mode(
+        "overwrite"
+    ).parquet(path)
     _write_pin(spark, path, n_buckets)
     return n_buckets
 
@@ -269,40 +280,16 @@ def changed_buckets(
 ) -> DataFrame:
     """Bucket ids whose digests drifted since the stored snapshot.
 
-    One linear scan of ``current`` (map-side combine → O(n_buckets) shuffle)
-    plus a join against the tiny stored artifact. New and vanished buckets
-    both count as changed (full-outer semantics).
+    One signed aggregation: ``current``'s rows at +1 and the stored digest
+    rows negated; buckets whose triple does not cancel drifted. One linear
+    scan of ``current`` (map-side combine → O(n_buckets) shuffle) and no
+    join. New and vanished buckets both count as changed.
     """
     stored, n_buckets = read_digests(spark, digests_path)
-    return _changed_buckets_from(spark, stored, n_buckets, current, pk, options)
-
-
-def _changed_buckets_from(
-    spark: SparkSession,
-    stored: DataFrame,
-    n_buckets: int,
-    current: DataFrame,
-    pk: list[str],
-    options: CompareOptions,
-) -> DataFrame:
-    """:func:`changed_buckets` body over an already-loaded artifact —
-    shared with :func:`incremental_compare`, which otherwise re-read the
-    artifact (and its pin sidecar) a second time per call."""
-    opts = dataclasses.replace(options, n_buckets=n_buckets)
-    cur = TableCompare(spark, current, current, pk, opts).bucket_digests("left")
-    l = stored.withColumnsRenamed(
-        {"cnt": "l_cnt", "xor_digest": "l_xor", "sum_digest": "l_sum"}
+    return drifted_buckets(
+        signed_digest(stored, -1),
+        signed_table_rows(current, pk, n_buckets, options),
     )
-    r = cur.withColumnsRenamed(
-        {"cnt": "r_cnt", "xor_digest": "r_xor", "sum_digest": "r_sum"}
-    )
-    joined = l.join(r, "__bucket", "full_outer")
-    drifted = (
-        ~F.col("l_cnt").eqNullSafe(F.col("r_cnt"))
-        | ~F.col("l_xor").eqNullSafe(F.col("r_xor"))
-        | ~F.col("l_sum").eqNullSafe(F.col("r_sum"))
-    )
-    return joined.filter(drifted).select("__bucket")
 
 
 def incremental_compare(
@@ -322,7 +309,10 @@ def incremental_compare(
     pins the snapshot's bucket count so bucket ids line up.
     """
     stored, n_buckets = read_digests(spark, digests_path)
-    changed = _changed_buckets_from(spark, stored, n_buckets, right, pk, options)
+    changed = drifted_buckets(
+        signed_digest(stored, -1),
+        signed_table_rows(right, pk, n_buckets, options),
+    )
     opts = dataclasses.replace(options, n_buckets=n_buckets)
     cmp = compare_tables(spark, left, right, pk, opts, table_name)
     # the changed-bucket set takes the drill-down's own scope (small →
@@ -353,9 +343,9 @@ def apply_changes_to_digests(
     The per-bucket digest triple is an abelian group: ``cnt``/``sum_digest``
     add, ``xor_digest`` is its own inverse. So a CDC batch folds in exactly:
     inserted rows add their digests, deleted rows subtract (xor again, count
-    down), and an update is delete-old + insert-new. Cost is one narrow
-    aggregation over the *change batch* plus a join against the tiny stored
-    artifact — O(changes + n_buckets), independent of table size. This is
+    down), and an update is delete-old + insert-new. Cost is one signed
+    aggregation over the *change batch* and the tiny stored artifact, with
+    no join — O(changes + n_buckets), independent of table size. This is
     the continuous-verification shape at 100 TB: the nightly full scan
     becomes a per-batch fold, and :func:`changed_buckets` /
     :func:`incremental_compare` consume the maintained snapshot unchanged.
@@ -408,72 +398,29 @@ def apply_changes_to_digests(
             f"{BUCKETING_VERSION} into it could permanently corrupt its "
             f"per-bucket digests — re-snapshot with write_digests first"
         )
-    opts = dataclasses.replace(options, n_buckets=n_buckets)
+    folded = _fold(stored, n_buckets, pk, inserts, deletes, options)
+    return _write_artifact(spark, folded, out_path, n_buckets)
 
-    # ONE aggregation over the sign-tagged union of both change batches
-    # (same rewrite as TableCompare.mismatched_buckets): the former
-    # per-batch bucket_digests + union + re-aggregation shape ran THREE
-    # shuffles (insert digest, delete digest, delta re-group) where the
-    # group algebra needs one — cnt is Σsign, sum is Σ(hash·sign), and
-    # xor of all rows equals xor(xor_ins, xor_del) because xor is its own
-    # inverse. Map-side combine still bounds shuffled bytes ∝ n_buckets.
-    from tidb_large_table_compare_spark.functions.hashing import (
-        bucket_id,
-        row_hash,
-    )
 
-    def _tagged(df: DataFrame, sign: int) -> DataFrame:
-        if opts.range_sql:
-            # write_digests routes the table through TableCompare, which
-            # applies range_sql to both sides BEFORE digesting (compare.py
-            # B4) — the artifact is range-scoped. The fold must scope each
-            # change batch the same way, or out-of-range insert/delete rows
-            # are folded into in-scope buckets: silent, permanent corruption
-            # of the per-bucket (cnt, xor, sum) triples (round-12 ADVICE).
-            df = df.filter(F.expr(opts.range_sql))
-        cols = sorted(df.columns)  # == TableCompare(df, df).compare_cols
-        return df.select(
-            bucket_id(pk, n_buckets, df).alias("__bucket"),
-            row_hash(df, cols, opts.float_round).alias("__row_hash"),
-            F.lit(sign).alias("__sign"),
-        )
-
-    parts = []
-    if inserts is not None:
-        parts.append(_tagged(inserts, 1))
-    if deletes is not None:
-        parts.append(_tagged(deletes, -1))
-    if not parts:
-        stored.withColumn("n_buckets", F.lit(n_buckets)).write.mode(
-            "overwrite"
-        ).parquet(out_path)
-        _write_pin(spark, out_path, n_buckets)
-        return n_buckets
-    tagged = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    delta = tagged.groupBy("__bucket").agg(
-        F.sum("__sign").alias("d_cnt"),
-        F.bit_xor("__row_hash").alias("d_xor"),
-        F.sum(
-            F.col("__row_hash").cast("decimal(38,0)") * F.col("__sign")
-        ).alias("d_sum"),
-    )
-
-    merged = stored.join(delta, "__bucket", "full_outer").select(
-        "__bucket",
-        (F.coalesce("cnt", F.lit(0)) + F.coalesce("d_cnt", F.lit(0))).alias("cnt"),
-        F.coalesce("xor_digest", F.lit(0))
-        .bitwiseXOR(F.coalesce("d_xor", F.lit(0)))
-        .alias("xor_digest"),
-        (
-            F.coalesce(F.col("sum_digest"), F.lit(0).cast("decimal(38,0)"))
-            + F.coalesce(F.col("d_sum"), F.lit(0).cast("decimal(38,0)"))
-        ).alias("sum_digest"),
-    )
-    (
-        merged.filter(F.col("cnt") > 0)
-        .withColumn("n_buckets", F.lit(n_buckets))
-        .write.mode("overwrite")
-        .parquet(out_path)
-    )
-    _write_pin(spark, out_path, n_buckets)
-    return n_buckets
+def _fold(
+    stored: DataFrame,
+    n_buckets: int,
+    pk: list[str],
+    inserts: DataFrame | None,
+    deletes: DataFrame | None,
+    options: CompareOptions,
+) -> DataFrame:
+    """The folded digest: stored rows and inserts at +1, deletes at -1,
+    summed per bucket; buckets whose count reaches zero drop out.
+    ``signed_table_rows`` range-scopes each batch exactly as
+    :func:`write_digests` scoped the snapshot, so out-of-range change rows
+    never fold into in-scope buckets."""
+    batches = [(inserts, 1), (deletes, -1)]
+    return digest_sum(
+        signed_digest(stored),
+        *[
+            signed_table_rows(df, pk, n_buckets, options, sign)
+            for df, sign in batches
+            if df is not None
+        ],
+    ).filter(F.col("cnt") > 0)

@@ -120,54 +120,6 @@ def _perturbed_orders_multi(orders: DataFrame) -> DataFrame:
     return modified.unionByName(extra.select(modified.columns))
 
 
-def perturbed_lineitem(lineitem: DataFrame) -> DataFrame:
-    """Drifted slave copy of ``lineitem``.
-
-    CAVEAT: in the synthetic test data (l_orderkey, l_linenumber) is NOT
-    unique (multiplicity up to 6), so keyed comparison over it hits the
-    duplicate-PK degradation (SURVEY.md §7) — use the multiset path, or the
-    split-orders composite key in registry.py for unique-composite-PK
-    coverage.
-
-    - DELETE rows with (l_orderkey * 7 + l_linenumber) % 101 = 5
-    - MODIFY l_quantity + 1.0 where (l_orderkey * 7 + l_linenumber) % 97 = 11
-    - INSERT copies with l_linenumber + 100 where l_orderkey % 500 = 9 AND
-      l_linenumber = 1 (fresh composite keys)
-    """
-    key = F.col("l_orderkey") * 7 + F.col("l_linenumber")
-    kept = lineitem.filter(key % 101 != 5)
-    modified = kept.withColumn(
-        "l_quantity",
-        F.when(
-            (F.col("l_orderkey") * 7 + F.col("l_linenumber")) % 97 == 11,
-            F.col("l_quantity") + 1.0,
-        ).otherwise(F.col("l_quantity")),
-    )
-    extra = lineitem.filter(
-        (F.col("l_orderkey") % 500 == 9) & (F.col("l_linenumber") == 1)
-    ).withColumn("l_linenumber", (F.col("l_linenumber") + 100).cast("int"))
-    return modified.unionByName(extra.select(modified.columns))
-
-
-# DuckDB/ANSI CTE body equivalent to perturbed_lineitem() — keep in lockstep.
-# The column list appears literally in BOTH branches below — there is no
-# shared constant feeding it, so edit both.
-PERTURBED_LINEITEM_SQL = f"""
-    SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber,
-           CASE WHEN (l_orderkey * 7 + l_linenumber) % 97 = 11
-                THEN l_quantity + 1.0 ELSE l_quantity END AS l_quantity,
-           l_extendedprice, l_discount, l_tax, l_returnflag, l_linestatus, l_shipdate
-    FROM lineitem
-    WHERE (l_orderkey * 7 + l_linenumber) % 101 <> 5
-    UNION ALL
-    SELECT l_orderkey, l_partkey, l_suppkey, CAST(l_linenumber + 100 AS INTEGER),
-           l_quantity, l_extendedprice, l_discount, l_tax, l_returnflag,
-           l_linestatus, l_shipdate
-    FROM lineitem
-    WHERE l_orderkey % 500 = 9 AND l_linenumber = 1
-"""
-
-
 # DuckDB/ANSI CTE body equivalent to perturbed_orders_multi() — keep in lockstep.
 PERTURBED_ORDERS_MULTI_SQL = f"""
     SELECT o_orderkey, o_custkey,

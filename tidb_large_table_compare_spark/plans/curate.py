@@ -23,12 +23,12 @@ no dedicated count() jobs, and the job total is regression-capped in
 from __future__ import annotations
 
 import json
-import threading
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from tidb_large_table_compare_spark.functions.materialize import observed_count
 from tidb_large_table_compare_spark.operators.clustering import connected_components
 from tidb_large_table_compare_spark.operators.dedup import (
     hashed_word_ngrams,
@@ -39,30 +39,6 @@ from tidb_large_table_compare_spark.operators.dedup import (
 from tidb_large_table_compare_spark.operators.textops import quality_features
 
 __all__ = ["curate_corpus"]
-
-
-def _observed_count(obs: Observation, frame: DataFrame, timeout_sec: float = 30.0) -> int:
-    """Read an Observation's count metric, with a recompute fallback.
-
-    ``Observation.get`` blocks until the first action over the observed
-    frame finishes; by the time the pipeline reads a metric that action has
-    already run, so this returns immediately. The thread+timeout guard is a
-    belt against the one pathological case — an execution path where the
-    observed node ends up entirely behind a populated cache so its metrics
-    never surface — in which case the count is recomputed directly (costing
-    the one extra job the observation was meant to save, never a hang).
-    """
-    box: dict[str, int] = {}
-
-    def _grab() -> None:
-        box["n"] = int(obs.get["n"])
-
-    t = threading.Thread(target=_grab, daemon=True)
-    t.start()
-    t.join(timeout_sec)
-    if "n" in box:
-        return box["n"]
-    return frame.count()
 
 
 def _quality_keep(text_col: Column) -> Column:
@@ -177,8 +153,8 @@ def curate_corpus(
     # in a single full-scan action (a LIMIT probe could stop early and latch
     # partial metrics), and doubles as connected_components' size probe.
     n_pairs = pairs.count()
-    n_input = _observed_count(obs_input, docs)
-    n_exact = _observed_count(obs_exact, exact)
+    n_input = observed_count(obs_input, "n", docs.count)
+    n_exact = observed_count(obs_exact, "n", exact.count)
     clusters = connected_components(pairs, edge_count=n_pairs)
     drop = clusters.filter(F.col("node") != F.col("cluster_id")).select(
         F.col("node").alias("doc_id")
@@ -282,8 +258,8 @@ def curate_corpus(
     n_quality = sum(s["n_docs"] for s in split_counts.values())
     # the write above is the first action over the observed survivors frame
     # (and over the near-dup junction it hangs off)
-    n_neardup = _observed_count(obs_neardup, neardup_cached)
-    n_decontaminated = _observed_count(obs_decon, survivors)
+    n_neardup = observed_count(obs_neardup, "n", neardup_cached.count)
+    n_decontaminated = observed_count(obs_decon, "n", survivors.count)
     # dedicated handle: unpersisted regardless of the decontamination branch
     # (rebinding `survivors` must not orphan the cached junction)
     neardup_cached.unpersist()

@@ -4485,7 +4485,8 @@ def _zorder_lineitem_extents(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket the curve into segments (z >> 14 ≈ one segment per would-be
     file), and report each segment's min/max extent on BOTH dimensions plus
     row count — the exact numbers parquet min/max stats would expose for
-    pruning after `functions/layout.zorder_by`. The bit math is identical
+    pruning if the table were written sorted by the Morton key
+    (`functions/layout.morton_key`). The bit math is identical
     SQL in both engines; the whole query is one scan + one hash aggregate."""
     li = load_table(spark, sf_dir, "lineitem")
     z = morton_key(F.col("l_partkey"), F.col("l_suppkey"), bits=16)

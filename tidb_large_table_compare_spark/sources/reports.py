@@ -27,11 +27,6 @@ from pyspark.sql import functions as F
 from tidb_large_table_compare_spark.plans.report import EQUIVALENT_MARKER
 
 
-def read_summary_lines(spark: SparkSession, glob: str) -> DataFrame:
-    """A14: scan all summary files under a glob, tagged with their path."""
-    return _numbered_summary_lines(spark, glob).select("path", "line")
-
-
 def _numbered_summary_lines(spark: SparkSession, glob: str) -> DataFrame:
     """Lines tagged with a within-file ``__line_no`` that is deterministic
     BY CONSTRUCTION, not by scan layout.

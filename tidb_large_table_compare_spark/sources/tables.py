@@ -95,12 +95,6 @@ def _path_key(path: str) -> tuple | None:
         return None
     return (rp, mx, total, n)
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.1"
-
-
-def sf_dir_from_env() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
     """Normalize ``events.ts`` to microsecond TIMESTAMP_NTZ, adapting to how
