@@ -484,6 +484,120 @@ def test_digest_aggregation_lives_in_compare():
     assert ".join(" not in incremental and "TableCompare(" not in incremental
 
 
+def test_row_pairing_is_one_signed_aggregation():
+    """The keyed and multiset drill-downs pair rows through the one
+    ``signed_rows`` aggregation: compare.py holds no full-outer join, and
+    neither diff path joins at all."""
+    import inspect
+    from pathlib import Path
+
+    from tidb_large_table_compare_spark.operators import compare as compare_mod
+
+    assert '"full_outer"' not in Path(compare_mod.__file__).read_text()
+    for path in (TableCompare.diff_rows, TableCompare._diff_rows_multiset):
+        src = inspect.getsource(path)
+        assert "signed_rows(" in src and ".join(" not in src, path.__name__
+
+
+# a unique-key pair plus one unchanged NULL-key row and one duplicate key
+# whose two rows are identical on both sides: no scope may report either
+_REGIME_SCHEMA = "pk bigint, v bigint"
+_REGIME_BASE = [(k, k * 10) for k in range(200)] + [
+    (None, 42),
+    (500, 1),
+    (500, 2),
+]
+_REGIME_MISSING = [3, 17, 45, 88, 120, 151]
+_REGIME_MODIFIED = [9, 33, 64, 101, 140, 199]
+_REGIME_EXTRA = [1000, 1001, 1002, 1003]
+
+
+def _regime_right(base):
+    return [
+        (k, v + 1 if k in _REGIME_MODIFIED else v)
+        for k, v in base
+        if k not in _REGIME_MISSING
+    ] + [(k, 7) for k in _REGIME_EXTRA]
+
+
+def _regime_verdict(spark, monkeypatch, left_rows, right_rows, nb, cap, table="t"):
+    if cap is not None:
+        monkeypatch.setattr(_INLIST_CAP, cap)
+    cmp = compare_tables(
+        spark,
+        spark.createDataFrame(left_rows, _REGIME_SCHEMA),
+        spark.createDataFrame(right_rows, _REGIME_SCHEMA),
+        ["pk"],
+        CompareOptions(n_buckets=nb),
+        table,
+    )
+    try:
+        kind = cmp.scope().kind
+        s = cmp.summary().collect()[0]
+        rows = sorted(
+            (str(r.pk), r.diff_type) for r in cmp.diff_rows().collect()
+        )
+        return kind, (s.upcount, s.downcount, s.equivalent), rows
+    finally:
+        cmp.close()
+        monkeypatch.undo()
+
+
+def test_null_and_duplicate_key_verdict_is_scope_independent(spark, monkeypatch):
+    """Identical NULL-key and duplicate-key rows cancel before any pairing,
+    so whether their bucket is drilled (skip scope) or not (IN-list,
+    frame) cannot change the verdict: every scope kind reports exactly the
+    seeded drift."""
+    truth_rows = sorted(
+        [(str(k), "missing_in_right") for k in _REGIME_MISSING]
+        + [(str(k), "modified") for k in _REGIME_MODIFIED]
+        + [(str(k), "extra_in_right") for k in _REGIME_EXTRA]
+    )
+    truth = (
+        (len(_REGIME_MISSING) + len(_REGIME_MODIFIED),
+         len(_REGIME_EXTRA) + len(_REGIME_MODIFIED), False),
+        truth_rows,
+    )
+    right = _regime_right(_REGIME_BASE)
+    for nb, cap, kind in ((4096, None, "ids"), (4096, 2, "frame"), (8, None, "skip")):
+        got = _regime_verdict(spark, monkeypatch, _REGIME_BASE, right, nb, cap)
+        assert got == (kind, *truth), (nb, cap, got)
+    got = _regime_verdict(spark, monkeypatch, _REGIME_BASE, list(_REGIME_BASE), 8, None)
+    assert got == ("empty", (0, 0, True), [])
+
+
+def test_drifted_duplicate_key_raises_naming_the_table(spark, monkeypatch):
+    """A duplicate key whose rows drifted cannot be paired by key: in every
+    drilled scope the keyed compare raises an error that names the table
+    and points to multiset mode, and run_jobs records it as that table's
+    cause. Multiset mode compares the same pair."""
+    from tidb_large_table_compare_spark.plans.pipeline import CompareJob, run_jobs
+
+    left = _REGIME_BASE + [(600, 1), (600, 2)]
+    right = _regime_right(_REGIME_BASE) + [(600, 3), (600, 4)]
+    refusal = r"db\.dupkeys: duplicate primary key \(600\)"
+    for nb, cap in ((4096, None), (4096, 2), (8, None)):
+        with pytest.raises(Exception, match=refusal):
+            _regime_verdict(spark, monkeypatch, left, right, nb, cap, "db.dupkeys")
+
+    ldf = spark.createDataFrame(left, _REGIME_SCHEMA)
+    rdf = spark.createDataFrame(right, _REGIME_SCHEMA)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    run = run_jobs(spark, [CompareJob("db.dupkeys", ldf, rdf, ["pk"])], parallelism=1)
+    assert run.exit_code == 1 and not run.compares
+    assert persisted().size() == before  # the failed compare was closed
+    cause = run.failures["db.dupkeys"]
+    assert "db.dupkeys: duplicate primary key (600)" in cause, cause
+    assert "multiset" in cause, cause
+
+    s = compare_tables(spark, ldf, rdf, None, table_name="db.dupkeys").summary()
+    row = s.collect()[0]
+    n_up = len(_REGIME_MISSING) + len(_REGIME_MODIFIED) + 2
+    n_down = len(_REGIME_EXTRA) + len(_REGIME_MODIFIED) + 2
+    assert (row.upcount, row.downcount) == (n_up, n_down)
+
+
 def test_fk_orphans_null_and_composite_semantics(spark):
     from tidb_large_table_compare_spark.operators.integrity import (
         fk_orphans,
@@ -582,7 +696,7 @@ def test_verify_repair_scoped_via_broadcast_frame(spark, monkeypatch):
 def test_heavy_drift_skips_bucket_restriction(spark, master, slave):
     """When drift marks more than half the buckets, restriction is dropped
     outright — no big-IN predicate, no broadcast frame — and the diff is
-    still exact (clean rows hash-equal and vanish in the full-outer join)."""
+    still exact (clean rows hash-equal and cancel in the row pairing)."""
     cmp = compare_tables(
         spark, master, slave, pk=["pk"],
         options=CompareOptions(chunk_size=500), table_name="t",

@@ -755,12 +755,15 @@ def test_cli_releases_persisted_compare_state(spark, tmp_path):
     IN-list diff, repair diff and bad-bucket frame are released after its
     last consumer. The fleet spans both persisting regimes: a few drifted
     orders (IN-list diff, persisted by the compare) and a lineitem with
-    every bucket drifted (lazy diff, materialized once for repair)."""
+    every bucket drifted (lazy diff, materialized once for repair). The
+    test data's lineitem repeats some (l_orderkey, l_linenumber) pairs,
+    which a keyed compare refuses once they drift, so both sides keep one
+    row per key."""
     from tidb_large_table_compare_spark.cli import main
 
-    slave_dir = tmp_path / "slave"
-    slave_dir.mkdir()
+    master_dir, slave_dir = tmp_path / "master", tmp_path / "slave"
     orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
+    orders.write.parquet(str(master_dir / "orders.parquet"))
     key = F.col("o_orderkey")
     orders.filter(key != 7).withColumn(
         "o_totalprice",
@@ -768,7 +771,10 @@ def test_cli_releases_persisted_compare_state(spark, tmp_path):
             F.col("o_totalprice")
         ),
     ).write.parquet(str(slave_dir / "orders.parquet"))
-    lineitem = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet")
+    spark.read.parquet(f"{SF_SMALL}/lineitem.parquet").dropDuplicates(
+        ["l_orderkey", "l_linenumber"]
+    ).write.parquet(str(master_dir / "lineitem.parquet"))
+    lineitem = spark.read.parquet(str(master_dir / "lineitem.parquet"))
     lineitem.withColumn(
         "l_quantity",
         F.when(F.col("l_linenumber") == 1, F.col("l_quantity") + 1).otherwise(
@@ -780,7 +786,7 @@ def test_cli_releases_persisted_compare_state(spark, tmp_path):
     before = persisted().size()
     code = main(
         [
-            "--left-dir", SF_SMALL,
+            "--left-dir", str(master_dir),
             "--right-dir", str(slave_dir),
             "--tables", "orders,lineitem",
             "--pk", "orders=o_orderkey",

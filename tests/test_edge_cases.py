@@ -71,8 +71,8 @@ def test_null_pk_rows_have_defined_semantics(spark):
     """TiDB PKs are NOT NULL, but the engine's behavior on null keys must be
     defined, not accidental. Identical null-key rows cancel in the algebraic
     digest (no join is involved, so SQL null-equality rules never apply) and
-    the tables compare equivalent; a MODIFIED null-key row cannot pair with
-    itself in the drill-down's full-outer join, so it surfaces as
+    the tables compare equivalent; a MODIFIED null-key row is paired by its
+    row hash, not its key, in the drill-down, so it surfaces as
     missing_in_right + extra_in_right — upcount 1 / downcount 1, i.e. a
     delete+insert repair, which is exactly what an update means in the
     reference's UPCOUNT/DOWNCOUNT vocabulary."""

@@ -144,6 +144,31 @@ def test_incremental_wide_drift_takes_broadcast_path(spark, tmp_path, monkeypatc
     assert inc_rows == full_rows and inc_rows
 
 
+def test_incremental_close_releases_changed_bucket_frame(
+    spark, tmp_path, monkeypatch
+):
+    """A changed-bucket set over the IN-list cap is persisted as the
+    broadcast frame the scoped sides semi-join. It belongs to the returned
+    compare: close() must release it with the compare's own persisted
+    state, leaving no RDD behind for the rest of the session."""
+    monkeypatch.setattr(
+        "tidb_large_table_compare_spark.operators.compare._MAX_INLIST", 2
+    )
+    orders = _orders(spark)
+    path = str(tmp_path / "digests")
+    opts = CompareOptions(n_buckets=256)
+    write_digests(spark, orders, ["o_orderkey"], path, opts)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    inc = incremental_compare(
+        spark, orders, perturbed_orders(orders), ["o_orderkey"], path, opts, "t"
+    )
+    assert inc.diff_rows().count() > 0
+    assert persisted().size() > before
+    inc.close()
+    assert persisted().size() == before
+
+
 def test_incremental_heavy_drift_skips_scope(spark, tmp_path):
     """When most buckets changed since the snapshot, scoping would keep most
     rows while every job re-pays the predicate — the compare must fall back

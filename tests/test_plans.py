@@ -194,8 +194,12 @@ def _shuffle_records_written(df) -> int:
 def test_aqe_skew_join_splits_hot_key(spark):
     """A join key held by 10% of all rows must trigger AQE's skew-join
     split (session enables it; thresholds lowered here so test-sized data
-    crosses them). Assertion is on the final adaptive plan, not wall-clock."""
+    crosses them). Assertion is on the final adaptive plan, not wall-clock.
+    The shuffle width is pinned too: the session sizes it to the host's
+    core count, and at 4 partitions the hot key is under twice the median
+    partition, so AQE rightly declines to split it."""
     saved = {
+        "spark.sql.shuffle.partitions": None,
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": None,
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": None,
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": None,
@@ -207,6 +211,7 @@ def test_aqe_skew_join_splits_hot_key(spark):
         except Exception:
             saved[k] = None
     try:
+        spark.conf.set("spark.sql.shuffle.partitions", "32")
         spark.conf.set(
             "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32KB"
         )
@@ -787,6 +792,35 @@ def test_digest_pass_single_exchange_no_join(spark):
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "Join" not in plan, plan
     assert "Union" in plan
+
+
+def test_row_pairing_plans_have_no_join(spark):
+    """The drill-downs pair rows the way the digest pairs buckets: one
+    signed aggregation over a side-tagged union, no join node. The
+    multiset diff shuffles once, on the row hash. The keyed diff shuffles
+    the table-side rows once, on pk, and at most once more over the
+    drift-sized survivors (their per-key grouping)."""
+    from tidb_large_table_compare_spark.operators.compare import CompareOptions
+
+    orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
+    right = perturbed_orders(orders)
+    multiset = _plan(
+        compare_tables(spark, orders, right, None, table_name="t").diff_rows()
+    )
+    assert "Join" not in multiset, multiset
+    assert multiset.count("Exchange") == 1, multiset
+    assert "Exchange hashpartitioning(__row_hash" in multiset, multiset
+    for nb in (8, 4096):  # skip scope, IN-list scope
+        cmp = compare_tables(
+            spark, orders, right, ["o_orderkey"], CompareOptions(n_buckets=nb), "t"
+        )
+        keyed = cmp.diff_rows()
+        keyed.unpersist()  # the IN-list diff's cache would hide its plan
+        plan = _plan(keyed)
+        assert "Join" not in plan, plan
+        assert plan.count("Exchange hashpartitioning(o_orderkey") == 1, plan
+        assert 1 <= plan.count("Exchange") <= 2, plan
+        cmp.close()
 
 
 def test_changed_buckets_and_fold_single_exchange_no_join(spark, tmp_path):

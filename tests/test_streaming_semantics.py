@@ -63,11 +63,11 @@ def test_watermark_drops_late_rows(spark, tmp_path):
 def test_compare_null_pk_semantics(spark):
     """NULL-PK behavior (SURVEY.md §7 hard part):
 
-    - when both sides agree, null-pk rows digest identically and never reach
-      the PK join — the digest-first design makes them compare clean;
-    - when a null-pk row differs, the drill-down full-outer join cannot match
-      NULL = NULL, so it degrades to one missing + one extra (instead of one
-      modified); the multiset path is the documented remedy.
+    - when both sides agree, null-pk rows digest identically and cancel —
+      in the digest and, if their bucket is drilled, in the row pairing;
+    - when a null-pk row differs, the drill-down pairs it by row hash, not
+      by key, so it is one missing + one extra (instead of one modified);
+      the multiset path reports the same totals.
     """
     from tidb_large_table_compare_spark.operators.compare import compare_tables
 

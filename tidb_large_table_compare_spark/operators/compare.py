@@ -11,8 +11,8 @@ pins via its per-table TOML template (SURVEY.md §2.B):
 - B6  per-chunk checksum + count    → one signed per-bucket ``(cnt, xor, sum)``
   aggregation (:func:`digest_sum`) shared by the compare, the digest
   snapshot, changed-bucket detection and the CDC fold
-- B8  row-level drill-down          → PK full-outer join *restricted to
-  mismatched buckets* via a broadcast semi-join
+- B8  row-level drill-down          → one signed ``(pk, row_hash)``
+  multiset difference (:func:`signed_rows`) over mismatched buckets only
 - B9  UPCOUNT/DOWNCOUNT classification (reference report columns,
   ``step3_run_syncdiff.sh:191-192, 216-218``)
 - B11 equivalence verdict (``step3_run_syncdiff.sh:204``)
@@ -20,14 +20,15 @@ pins via its per-table TOML template (SURVEY.md §2.B):
 100 TB design: the digest pass shuffles only ``n_buckets`` partial aggregates
 per map task (map-side combine makes bytes-shuffled ∝ n_buckets, not rows);
 the drill-down pass re-scans both sides but discards all rows outside the
-mismatched buckets at the scan operator via a broadcast hash semi-join, so the
-PK join shuffles bytes ∝ diff size, not table size. Two narrow scans beat one
-full-table shuffle by orders of magnitude when tables mostly agree — which is
-the reference's entire reason to exist (1e9-row tables, ``config.toml:16``).
+mismatched buckets at the scan operator, so the row pairing shuffles bytes ∝
+diff size, not table size. Two narrow scans beat one full-table shuffle by
+orders of magnitude when tables mostly agree — which is the reference's entire
+reason to exist (1e9-row tables, ``config.toml:16``).
 
-Duplicate/NULL PKs degrade a PK join (SURVEY.md §7 hard parts): the multiset
-path (``pk=None`` or ``force_multiset``) instead compares whole-row-hash
-multiplicities — an ``exceptAll``-style diff that needs no key at all.
+A drifted duplicate PK (SURVEY.md §7 hard parts) cannot be paired by key:
+the keyed drill-down raises, and the multiset path (``pk=None`` or
+``force_multiset``) instead compares whole-row-hash multiplicities — an
+``exceptAll``-style diff that needs no key at all.
 """
 
 from __future__ import annotations
@@ -43,6 +44,7 @@ from tidb_large_table_compare_spark.functions.hashing import (
     bucket_id,
     canonical_value,
     in_list,
+    render_sql_id,
     row_hash,
 )
 from tidb_large_table_compare_spark.functions.localframe import local_frame
@@ -60,6 +62,7 @@ __all__ = [
     "drifted_buckets",
     "range_scoped",
     "signed_digest",
+    "signed_rows",
     "signed_table_rows",
     "size_buckets",
 ]
@@ -200,6 +203,28 @@ def signed_table_rows(
     return signed_digest(narrow, sign)
 
 
+def signed_rows(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame:
+    """``(keys..., __row_hash, __d)`` rows whose left-minus-right count
+    ``__d`` is nonzero: the row-level pairing (B8), with no join.
+
+    Rows pair the way buckets do (:func:`digest_sum`): left +1, right −1,
+    one groupBy, so identical rows cancel and SQL null-equality never
+    applies. With keys, the union is partitioned on them, so a per-key
+    aggregation of the survivors reuses this one exchange.
+    """
+    cols = [*keys, "__row_hash"]
+    signed = left.select(*cols, F.lit(1).alias("__d")).unionByName(
+        right.select(*cols, F.lit(-1).alias("__d"))
+    )
+    if keys:
+        signed = signed.repartition(*keys)
+    return (
+        signed.groupBy(*cols)
+        .agg(F.sum("__d").alias("__d"))
+        .filter(F.col("__d") != 0)
+    )
+
+
 @dataclass(frozen=True)
 class BucketScope:
     """Which buckets a drill-down reads: the one restriction decision.
@@ -253,7 +278,7 @@ def bucket_scope(bad: DataFrame, n_buckets: int) -> BucketScope:
     consumer (a digest pass re-scans both tables), so it is materialized
     once: small sets become an IN-list evaluated at the scan (no join at
     all); sets over ``_MAX_INLIST`` fall back to one persisted broadcast
-    semi-join frame. Either way downstream joins see only bad-bucket rows
+    semi-join frame. Either way the row pairing sees only bad-bucket rows
     — bytes ∝ diff size, not table size — and the materialized form is
     BOUNDED (one long per bucket, few MB at the 2^20 cap), never ∝ diff
     rows.
@@ -265,8 +290,8 @@ def bucket_scope(bad: DataFrame, n_buckets: int) -> BucketScope:
     2-10k elements, PERFORMANCE.md round-8) — so above
     ``_RESTRICT_SKIP_FRACTION`` the scope is ``skip`` and the drill-down
     compares everything: sound because clean-bucket rows hash-equal and
-    drop out of the diff join, and cheaper because the join reads at most
-    1/fraction more rows than the restricted plan would.
+    cancel in the row pairing, and cheaper because the pairing reads at
+    most 1/fraction more rows than the restricted plan would.
 
     A ``frame`` scope stays persisted until its owner releases it
     (:meth:`TableCompare.close`): it is embedded in lazy diff plans that
@@ -324,6 +349,8 @@ class TableCompare:
         self._narrows: dict[str, DataFrame] = {}
         self._n_buckets_memo: int | None = None
         self._scope: BucketScope | None = None
+        # frames persisted for this compare by its builder; close() frees them
+        self.held: list[DataFrame] = []
 
     # -- structure (B1) ----------------------------------------------------
     def schema_diff(self) -> DataFrame:
@@ -391,10 +418,6 @@ class TableCompare:
         the same predicate as in_list's fast path, so the cap and the type
         gate cannot drift apart. The ``in_list`` that consumes the
         returned ids must get ``frame``'s own dtype for ``col``."""
-        from tidb_large_table_compare_spark.functions.hashing import (
-            render_sql_id,
-        )
-
         dtype = frame.schema[col].dataType
         if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
             # a timestamp rendering is flavor-specific (instant vs wall
@@ -441,47 +464,53 @@ class TableCompare:
         missing+modified rows need INSERT/REPLACE on the target (UPCOUNT),
         extra+modified need DELETE/REPLACE (DOWNCOUNT) — matching the
         reference report's semantics (B9).
+
+        The scoped sides pair in :func:`signed_rows`, so identical rows
+        cancel in every scope (an empty scope's constant-false filter plans
+        no scan at all). Survivors group per key (a NULL key per row hash:
+        a modified NULL-key row is missing + extra). A lone left row is
+        missing, a lone right row extra, one of each modified; anything
+        else is a drifted duplicate key, and the action raises.
         """
         if self._diff_rows is not None:
             return self._diff_rows
         if self.options.force_multiset or not self.pk:
             self._diff_rows = self._diff_rows_multiset()
             return self._diff_rows
-        scope = self.scope()
-        lh = self._narrow_side("left")
-        if scope.kind == "empty":
-            # equal-tables fast path; cached so repeat calls don't re-run
-            # the digest comparison
-            self._diff_rows = lh.select(*self.pk).limit(0).withColumn(
-                "diff_type", F.lit(None).cast("string")
-            )
-            return self._diff_rows
-        # a skip scope leaves both sides whole: clean rows hash-equal and
-        # drop out of the diff join below (see bucket_scope)
-        lh = scope.restrict(lh)
-        rh = scope.restrict(self._narrow_side("right"))
-        lh = lh.select(*self.pk, F.col("__row_hash").alias("l_hash"))
-        rh = rh.select(*self.pk, F.col("__row_hash").alias("r_hash"))
-        joined = lh.join(rh, self.pk, "full_outer")
+        scope, pk = self.scope(), self.pk
+        null_key = reduce(Column.__or__, [F.col(c).isNull() for c in pk])
+        w, net = F.sum(F.abs("__d")), F.sum("__d")
+        unpairable = F.concat(
+            F.lit(f"{self.table_name}: duplicate primary key ("),
+            F.concat_ws(", ", *[F.col(c).cast("string") for c in pk]),
+            F.lit(") drifted; compare this table in multiset mode"),
+        )
         diff_type = (
-            F.when(F.col("r_hash").isNull(), F.lit("missing_in_right"))
-            .when(F.col("l_hash").isNull(), F.lit("extra_in_right"))
-            .when(F.col("l_hash") != F.col("r_hash"), F.lit("modified"))
+            F.when((w == 1) & (net > 0), F.lit("missing_in_right"))
+            .when(w == 1, F.lit("extra_in_right"))
+            .when((w == 2) & (net == 0), F.lit("modified"))
+            .otherwise(F.raise_error(unpairable))
         )
+        # the always-true filter keeps diff_type, and so its raise, in every
+        # plan: a bare count() would otherwise prune it
         self._diff_rows = (
-            joined.withColumn("diff_type", diff_type)
+            signed_rows(
+                scope.restrict(self._narrow_side("left")),
+                scope.restrict(self._narrow_side("right")),
+                pk,
+            )
+            .groupBy(*pk, F.when(null_key, F.col("__row_hash")))
+            .agg(diff_type.alias("diff_type"))
+            .select(*pk, "diff_type")
             .filter(F.col("diff_type").isNotNull())
-            .select(*self.pk, "diff_type")
         )
-        if scope.ids is not None:
-            # bounded drift (IN-list form): the narrow (pk, diff_type) frame
-            # is drift-sized, and every consumer fan-out (summary, fix-SQL,
-            # reconcile, column_drift's key collect, CLI's composed flags)
-            # otherwise re-executes the drill-down join per action — persist
-            # it until close(), like the bad-bucket frame. Heavy-drift forms
-            # (frame / restriction-skip) stay lazy: their diff is not
-            # size-bounded (repair_diff materializes it for the repair
-            # consumers).
+        if scope.ids:
+            # bounded drift (IN-list form): the diff is drift-sized, and each
+            # consumer (summary, fix-SQL, reconcile, column_drift, the CLI's
+            # composed flags) would re-run the drill-down per action, so it
+            # stays persisted until close(), like the bad-bucket frame. The
+            # frame/skip forms are not size-bounded and stay lazy
+            # (repair_diff materializes them for the repair consumers).
             self._diff_rows = self._diff_rows.persist()
         return self._diff_rows
 
@@ -491,7 +520,7 @@ class TableCompare:
         fix-SQL export and ``apply_fixes`` each read the diff several
         times. The bounded (IN-list) diff is already persisted and is
         returned as it is. A heavy-drift diff is lazy, and each read would
-        re-run the full drill-down join, so it is materialized once here
+        re-run the full drill-down, so it is materialized once here
         for both consumers; it is diff-sized, which they already assume is
         broadcastable. It is persisted rather than locally checkpointed
         because :meth:`close` can then release it.
@@ -514,51 +543,34 @@ class TableCompare:
 
     def close(self) -> None:
         """Release what this compare persisted: the IN-list diff, the
-        materialized repair diff and the bad-bucket frame. Call it after
-        the table's last consumer; later reads recompute. The diffs go
-        first: they may be built on the bad-bucket frame."""
+        materialized repair diff, the bad-bucket frame and the
+        :attr:`held` frames. Call it after the table's last consumer;
+        later reads recompute. The diffs go first: they may be built on
+        the bad-bucket frame, and everything may be built on a held one."""
         frames = [self._diff_rows, self._repair_diff]
         if self._scope is not None:
             frames.append(self._scope.frame)
-        for frame in frames:
+        for frame in [*frames, *self.held]:
             if frame is not None:
                 frame.unpersist()
 
     def _diff_rows_multiset(self) -> DataFrame:
-        """exceptAll-style multiset diff keyed by whole-row hash.
-
-        Returns (__row_hash, diff_type, __n) where __n is the multiplicity
-        delta; used when PKs are absent or duplicated (SURVEY.md §7 hard
-        parts). The reserved ``__n`` name keeps the weight column from ever
-        colliding with a user PK column in :meth:`summary`.
-        """
+        """exceptAll-style multiset diff keyed by whole-row hash, for absent
+        or duplicated PKs (SURVEY.md §7 hard parts): (__row_hash,
+        diff_type, __n), ``__n`` the multiplicity delta. The reserved name
+        keeps it from colliding with a user PK column in :meth:`summary`."""
         fr = self.options.float_round
-        l = (
-            self.left.select(row_hash(self.left, self.compare_cols, fr).alias("__row_hash"))
-            .groupBy("__row_hash")
-            .agg(F.count(F.lit(1)).alias("l_cnt"))
+        left, right = (
+            df.select(row_hash(df, self.compare_cols, fr).alias("__row_hash"))
+            for df in (self.left, self.right)
         )
-        r = (
-            self.right.select(row_hash(self.right, self.compare_cols, fr).alias("__row_hash"))
-            .groupBy("__row_hash")
-            .agg(F.count(F.lit(1)).alias("r_cnt"))
-        )
-        joined = l.join(r, "__row_hash", "full_outer").select(
+        return signed_rows(left, right, []).select(
             "__row_hash",
-            F.coalesce("l_cnt", F.lit(0)).alias("l_cnt"),
-            F.coalesce("r_cnt", F.lit(0)).alias("r_cnt"),
+            F.when(F.col("__d") > 0, F.lit("missing_in_right"))
+            .otherwise(F.lit("extra_in_right"))
+            .alias("diff_type"),
+            F.abs("__d").alias("__n"),
         )
-        missing = joined.filter(F.col("l_cnt") > F.col("r_cnt")).select(
-            "__row_hash",
-            F.lit("missing_in_right").alias("diff_type"),
-            (F.col("l_cnt") - F.col("r_cnt")).alias("__n"),
-        )
-        extra = joined.filter(F.col("r_cnt") > F.col("l_cnt")).select(
-            "__row_hash",
-            F.lit("extra_in_right").alias("diff_type"),
-            (F.col("r_cnt") - F.col("l_cnt")).alias("__n"),
-        )
-        return missing.unionByName(extra)
 
     # -- column-level drill-down (B8 refinement) ---------------------------
     def column_drift(self) -> DataFrame:
@@ -605,8 +617,6 @@ class TableCompare:
                 self.spark, [], "column_name string, mismatch_rows bigint"
             )
         fr = self.options.float_round
-        ltypes = {f.name: f.dataType for f in self.left.schema.fields}
-        rtypes = {f.name: f.dataType for f in self.right.schema.fields}
         # pk-IN retrieval only when (a) pk_pushdown applies — its IN-list
         # scope gate means the diff frame is persisted (drift-sized; see
         # diff_rows) so collecting the modified keys is a cache read —
@@ -628,33 +638,20 @@ class TableCompare:
             scope = self.scope()
             lsrc = scope.restrict(self.left, self.pk)
             rsrc = scope.restrict(self.right, self.pk)
-        lrows = lsrc.select(
-            *self.pk,
-            *[
-                canonical_value(F.col(c), ltypes[c], fr).alias(f"__l_{c}")
-                for c in cols
-            ],
+        lrows, rrows = (
+            src.select(
+                *self.pk,
+                *[
+                    canonical_value(F.col(c), df.schema[c].dataType, fr)
+                    .alias(f"__{side}_{c}")
+                    for c in cols
+                ],
+            )
+            for src, df, side in ((lsrc, self.left, "l"), (rsrc, self.right, "r"))
         )
-        rrows = rsrc.select(
-            *self.pk,
+        counts = lrows.join(rrows, self.pk).agg(
             *[
-                canonical_value(F.col(c), rtypes[c], fr).alias(f"__r_{c}")
-                for c in cols
-            ],
-        )
-        paired = lrows.join(rrows, self.pk)
-        counts = paired.agg(
-            *[
-                F.coalesce(
-                    F.sum(
-                        F.when(
-                            ~F.col(f"__l_{c}").eqNullSafe(F.col(f"__r_{c}")), 1
-                        ).otherwise(0)
-                    ),
-                    F.lit(0),
-                )
-                .cast("bigint")
-                .alias(c)
+                F.count_if(~F.col(f"__l_{c}").eqNullSafe(F.col(f"__r_{c}"))).alias(c)
                 for c in cols
             ]
         )
@@ -718,11 +715,11 @@ def compare_tables(
 
     Null PK values (impossible against TiDB, whose PKs are NOT NULL, but
     possible on arbitrary parquet) have defined semantics: identical
-    null-key rows cancel in the algebraic digest and compare equivalent; a
-    modified null-key row cannot pair with itself in the drill-down's
-    full-outer join and is reported as missing_in_right + extra_in_right —
-    a delete+insert repair, which is what an update means in UPCOUNT/
-    DOWNCOUNT terms (pinned by
+    null-key rows cancel in the algebraic digest and in the row pairing, in
+    every scope, and compare equivalent; a modified null-key row is paired
+    by its row hash, not its key, and is reported as missing_in_right +
+    extra_in_right — a delete+insert repair, which is what an update means
+    in UPCOUNT/DOWNCOUNT terms (pinned by
     tests/test_edge_cases.py::test_null_pk_rows_have_defined_semantics).
     """
     return TableCompare(spark, left, right, pk, options, table_name)

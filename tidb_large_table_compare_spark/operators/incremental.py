@@ -306,7 +306,9 @@ def incremental_compare(
     Sound when the snapshot was taken from a verified-equivalent state of
     ``left``: clean buckets digest-match the snapshot on both sides, so
     every differing row lives in a drifted bucket. The returned compare
-    pins the snapshot's bucket count so bucket ids line up.
+    pins the snapshot's bucket count so bucket ids line up, and its
+    ``close()`` releases the changed-bucket frame with the rest of its
+    persisted state.
     """
     stored, n_buckets = read_digests(spark, digests_path)
     changed = drifted_buckets(
@@ -317,15 +319,16 @@ def incremental_compare(
     cmp = compare_tables(spark, left, right, pk, opts, table_name)
     # the changed-bucket set takes the drill-down's own scope (small →
     # IN-list at the scan, wide → broadcast semi-join, most buckets → no
-    # scope at all: the plain full compare). A frame scope stays persisted
-    # for the session: it is embedded in the returned lazy plan and
-    # bounded by the bucket cap (one long per changed bucket); building it
-    # re-runs the digest of `right` once more for its count. Scope
-    # cmp.left/right (post-range_sql) rather than the raw inputs so a
-    # configured range predicate stays in force.
+    # scope at all: the plain full compare). A frame scope is embedded in
+    # the returned lazy plan, so it stays persisted until the compare's
+    # close(); building it re-runs the digest of `right` once more for its
+    # count. Scope cmp.left/right (post-range_sql) rather than the raw
+    # inputs so a configured range predicate stays in force.
     scope = bucket_scope(changed, n_buckets)
     cmp.left = scope.restrict(cmp.left, pk)
     cmp.right = scope.restrict(cmp.right, pk)
+    if scope.frame is not None:
+        cmp.held.append(scope.frame)
     return cmp
 
 

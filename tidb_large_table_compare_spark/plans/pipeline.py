@@ -122,12 +122,15 @@ def run_jobs(
 
     def one(job: CompareJob):
         t0 = time.monotonic()
+        cmp = None
         try:
             cmp = compare_tables(
                 spark, job.left, job.right, job.pk, job.options, job.table
             )
             row = cmp.summary().collect()[0]
         except Exception as exc:  # isolated per table (step3:111-122)
+            if cmp is not None:
+                cmp.close()  # a failed table leaves no persisted state
             return job.table, None, None, None, _failure_cause(exc)
         # per-table wall-clock, the reference's duration accounting
         # (step3_run_syncdiff.sh:125-134)
