@@ -305,24 +305,30 @@ def test_reconcile_repairs_drifted_side(spark):
 
 
 def test_repair_consumers_share_one_materialized_diff(spark, monkeypatch):
-    """Every bucket drifted, so restriction is skipped and the diff is lazy:
-    fix-SQL export and apply_fixes both read ``repair_diff``, which runs the
-    full drill-down join once for the two of them. Outputs are what the
-    diff defines: one REPLACE per missing/modified row, one DELETE per
-    extra row, and a repaired side equal to the master."""
+    """Every bucket drifted, so restriction is skipped: the summary,
+    fix-SQL export and apply_fixes all read the one persisted keyed diff,
+    so the drill-down runs once for the three of them. A probe counts the
+    signed rows each drill-down execution emits. Outputs are what the diff
+    defines: one REPLACE per missing/modified row, one DELETE per extra
+    row, and a repaired side equal to the master."""
     import tidb_large_table_compare_spark.operators.compare as compare_mod
     from tidb_large_table_compare_spark.operators.reconcile import apply_fixes
     from tidb_large_table_compare_spark.perturb import perturbed_orders
     from tidb_large_table_compare_spark.sources.tables import load_table
 
-    materialized = []
-    real = compare_mod.materialize
+    emitted = spark.sparkContext.accumulator(0)
 
-    def counting(df, mode=None):
-        materialized.append(mode)
-        return real(df, mode)
+    def count(_):
+        emitted.add(1)
+        return True
 
-    monkeypatch.setattr(compare_mod, "materialize", counting)
+    probe = F.udf(count, "boolean")
+    real = compare_mod.signed_rows
+
+    def probed(left, right, keys):
+        return real(left, right, keys).filter(probe(F.col("__d")))
+
+    monkeypatch.setattr(compare_mod, "signed_rows", probed)
     orders = load_table(spark, SF_SMALL, "orders")
     slave = perturbed_orders(orders)
     tc = compare_tables(
@@ -332,11 +338,14 @@ def test_repair_consumers_share_one_materialized_diff(spark, monkeypatch):
     scope = tc.scope()
     assert scope.ids is None and scope.frame is None  # restriction skipped
 
+    assert not tc.summary().collect()[0].equivalent
+    once = emitted.value
+    assert once > 0
     stmts = [r.fix_sql for r in fix_sql(tc).collect()]
-    repaired = apply_fixes(orders, slave, ["o_orderkey"], tc.repair_diff())
+    repaired = apply_fixes(orders, slave, ["o_orderkey"], tc.diff_rows())
     assert repaired.exceptAll(orders).count() == 0
     assert orders.exceptAll(repaired).count() == 0
-    assert len(materialized) == 1
+    assert emitted.value == once
 
     kinds = {
         r.diff_type: r["count"]
@@ -566,6 +575,44 @@ def test_null_and_duplicate_key_verdict_is_scope_independent(spark, monkeypatch)
     assert got == ("empty", (0, 0, True), [])
 
 
+def test_keyed_diff_is_persisted_once_per_drilled_scope(spark, monkeypatch):
+    """In the IN-list, frame and skip scopes the keyed diff is one persisted
+    frame that every consumer shares; an empty scope's diff stays lazy.
+    All derived state lives in the compare's one memo, and close() leaves
+    no persistent RDD behind."""
+    from pyspark import StorageLevel
+
+    from tidb_large_table_compare_spark.operators.reconcile import apply_fixes
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    right = _regime_right(_REGIME_BASE)
+    cases = ((4096, None, right, "ids"), (4096, 2, right, "frame"),
+             (8, None, right, "skip"), (8, None, list(_REGIME_BASE), "empty"))
+    for nb, cap, right_rows, kind in cases:
+        if cap is not None:
+            monkeypatch.setattr(_INLIST_CAP, cap)
+        before = persisted()
+        ldf = spark.createDataFrame(_REGIME_BASE, _REGIME_SCHEMA)
+        rdf = spark.createDataFrame(right_rows, _REGIME_SCHEMA)
+        cmp = compare_tables(
+            spark, ldf, rdf, ["pk"], CompareOptions(n_buckets=nb), "t"
+        )
+        fields = set(vars(cmp))
+        cmp.summary().collect()
+        fix_sql(cmp).collect()
+        cmp.column_drift().collect()
+        apply_fixes(ldf, rdf, ["pk"], cmp.diff_rows()).collect()
+        diff = cmp.diff_rows()
+        assert cmp.scope().kind == kind
+        assert (diff.storageLevel != StorageLevel.NONE) == (kind != "empty"), kind
+        assert set(vars(cmp)) == fields
+        cmp.close()
+        assert persisted() - before == set(), kind
+        monkeypatch.undo()
+
+
 def test_drifted_duplicate_key_raises_naming_the_table(spark, monkeypatch):
     """A duplicate key whose rows drifted cannot be paired by key: in every
     drilled scope the keyed compare raises an error that names the table
@@ -658,10 +705,10 @@ def test_column_drift_wide_drift_broadcast_path(spark, master, slave, monkeypatc
     wide = {r.column_name: r.mismatch_rows for r in cmp.column_drift().collect()}
     assert wide == baseline
     # both consumers reuse the same materialized state object
-    state = cmp._scope
-    assert state is not None and state.ids is None and state.frame is not None
+    state = cmp.scope()
+    assert state.ids is None and state.frame is not None
     assert cmp.diff_rows().count() == K_MISSING + K_EXTRA + K_MODIFIED
-    assert cmp._scope is state
+    assert cmp.scope() is state
 
 
 def test_verify_repair_scoped_via_broadcast_frame(spark, monkeypatch):

@@ -752,13 +752,12 @@ def test_cli_drilldowns_reuse_the_summary_compare(
 
 def test_cli_releases_persisted_compare_state(spark, tmp_path):
     """A drill-down run leaves no persisted RDD behind: each table's
-    IN-list diff, repair diff and bad-bucket frame are released after its
-    last consumer. The fleet spans both persisting regimes: a few drifted
-    orders (IN-list diff, persisted by the compare) and a lineitem with
-    every bucket drifted (lazy diff, materialized once for repair). The
-    test data's lineitem repeats some (l_orderkey, l_linenumber) pairs,
-    which a keyed compare refuses once they drift, so both sides keep one
-    row per key."""
+    persisted keyed diff and bad-bucket frame are released after its last
+    consumer. The fleet spans two scope kinds: a few drifted orders
+    (IN-list scope) and a lineitem with every bucket drifted (skip scope).
+    The test data's lineitem repeats some (l_orderkey, l_linenumber)
+    pairs, which a keyed compare refuses once they drift, so both sides
+    keep one row per key."""
     from tidb_large_table_compare_spark.cli import main
 
     master_dir, slave_dir = tmp_path / "master", tmp_path / "slave"

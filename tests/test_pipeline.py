@@ -113,6 +113,61 @@ def test_run_jobs_failure_isolated(spark):
     assert run.failures["main.bad"].startswith("AnalysisException: ")
 
 
+def test_run_jobs_parallel_over_shared_handles_matches_serial(spark, monkeypatch):
+    """Eight compares over the same ``load_table`` handles, four at a time,
+    give the serial run's summaries, and closing every compare leaves no
+    persistent RDD behind. The jobs reach every scope kind and the
+    multiset path. The check is on RDD ids, not the count: Spark keeps one
+    cache entry per plan, so a close() also releases an equal plan another
+    test left cached, and the context cleaner may drop leftovers meanwhile."""
+    from tidb_large_table_compare_spark.perturb import perturbed_orders
+    from tidb_large_table_compare_spark.sources.tables import load_table
+
+    monkeypatch.setattr(
+        "tidb_large_table_compare_spark.operators.compare._MAX_INLIST", 8
+    )
+    orders = load_table(spark, SF_SMALL, "orders")
+    nation = load_table(spark, SF_SMALL, "nation")
+    one_gone = orders.filter(F.col("o_orderkey") != 7)
+    pk = ["o_orderkey"]
+
+    def jobs():
+        slave = perturbed_orders(load_table(spark, SF_SMALL, "orders"))
+        return [
+            CompareJob("db.same", orders, orders, pk),
+            CompareJob("db.one_gone", orders, one_gone, pk),
+            CompareJob("db.frame", orders, slave, pk, CompareOptions(n_buckets=4096)),
+            CompareJob("db.skip", orders, slave, pk, CompareOptions(n_buckets=4)),
+            CompareJob("db.multiset", orders, slave, None),
+            CompareJob("db.range", orders, slave, pk,
+                       CompareOptions(range_sql="o_orderkey < 3000")),
+            CompareJob("db.nation", nation, nation.filter(F.col("n_nationkey") != 3),
+                       ["n_nationkey"], CompareOptions(chunk_size=5)),
+            CompareJob("db.buckets64", orders, slave, pk, CompareOptions(n_buckets=64)),
+        ]
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    got = {}
+    for parallelism in (1, 4):
+        run = run_jobs(spark, jobs(), parallelism=parallelism)
+        assert run.fail_count == 0
+        kinds = {
+            c.scope().kind for c in run.compares.values() if c.pk
+        }
+        got[parallelism] = sorted(
+            (r.table, r.structure_ok, r.upcount, r.downcount)
+            for r in run.summaries.collect()
+        )
+        for cmp in run.compares.values():
+            cmp.close()
+        assert persisted() - before == set()
+        assert kinds == {"empty", "ids", "frame", "skip"}
+    assert got[4] == got[1] and len(got[1]) == 8
+
+
 # ---- report aggregation (A16-A25) --------------------------------------------
 
 SUMMARIES = [

@@ -462,7 +462,7 @@ def _report_and_drill(args, spark, jobs, run, read_failures) -> int:
         )
 
         for job, cmp in drill:
-            repaired = apply_fixes(job.left, job.right, job.pk, cmp.repair_diff())
+            repaired = apply_fixes(job.left, job.right, job.pk, cmp.diff_rows())
             out = f"{args.reconcile_out}/{job.table.replace('.', '_')}_repaired"
             repaired.write.mode("overwrite").parquet(out)
             if args.verify_repaired:

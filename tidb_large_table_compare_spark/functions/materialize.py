@@ -23,9 +23,7 @@ and can be dropped early via the returned handle's ``unpersist()``. The
 operators themselves cannot unpersist (they return open DataFrames), which
 is exactly why persist is opt-in rather than the default: an un-dropped
 persist pins the storage-memory pool, while localCheckpoint blocks at
-least stay out of it. A caller that owns a release hook passes
-``mode="persist"`` itself (``TableCompare.repair_diff``, released by
-``TableCompare.close``).
+least stay out of it.
 
 Both modes run one eager job and yield bit-identical downstream results
 (pinned by tests/test_materialize.py). Stage counts ride ``observe()``

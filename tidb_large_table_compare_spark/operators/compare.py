@@ -33,8 +33,8 @@ the keyed drill-down raises, and the multiset path (``pk=None`` or
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from functools import reduce
+from dataclasses import dataclass, replace
+from functools import reduce, wraps
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,7 +48,6 @@ from tidb_large_table_compare_spark.functions.hashing import (
     row_hash,
 )
 from tidb_large_table_compare_spark.functions.localframe import local_frame
-from tidb_large_table_compare_spark.functions.materialize import materialize
 from tidb_large_table_compare_spark.functions.partitioning import estimate_rows
 from tidb_large_table_compare_spark.operators.schema_diff import schema_diff
 
@@ -61,6 +60,7 @@ __all__ = [
     "digest_sum",
     "drifted_buckets",
     "range_scoped",
+    "scoped_compare",
     "signed_digest",
     "signed_rows",
     "signed_table_rows",
@@ -294,9 +294,10 @@ def bucket_scope(bad: DataFrame, n_buckets: int) -> BucketScope:
     most 1/fraction more rows than the restricted plan would.
 
     A ``frame`` scope stays persisted until its owner releases it
-    (:meth:`TableCompare.close`): it is embedded in lazy diff plans that
-    callers re-consume (fix-SQL, reconcile); releasing it earlier would
-    re-run the digest compare per consumer.
+    (:meth:`TableCompare.close`, after the diff built on it): the keyed
+    diff's cache is filled through it and ``column_drift`` restricts
+    through it, and releasing it earlier would re-run the digest compare
+    in every plan that still reads it.
     """
     skip_above = _RESTRICT_SKIP_FRACTION * n_buckets
     ids = [r["__bucket"] for r in bad.limit(_MAX_INLIST + 1).collect()]
@@ -312,11 +313,26 @@ def bucket_scope(bad: DataFrame, n_buckets: int) -> BucketScope:
     return BucketScope(n_buckets, n_bad, frame=bad)
 
 
+def _memoized(method):
+    """Compute a zero-argument :class:`TableCompare` method once, into
+    the instance's one ``_memo`` dict that :meth:`TableCompare.close` frees."""
+    name = method.__name__
+
+    @wraps(method)
+    def cached(self):
+        if name not in self._memo:
+            self._memo[name] = method(self)
+        return self._memo[name]
+
+    return cached
+
+
 class TableCompare:
     """A lazily-planned comparison of two DataFrames.
 
     All result accessors return DataFrames; nothing is executed until the
-    caller acts on them.
+    caller acts on them. Derived state is memoized (:func:`_memoized`), so
+    the inputs are fixed after construction (see :func:`scoped_compare`).
     """
 
     def __init__(
@@ -337,75 +353,59 @@ class TableCompare:
         # Data diff runs over the columns both sides share; structure diff
         # reports the rest (sync-diff compares data only when structure allows).
         self.compare_cols = sorted(set(left.columns) & set(right.columns))
-        self._schema_diff: DataFrame | None = None
-        self._structure_ok: bool | None = None
-        self._diff_rows: DataFrame | None = None
-        self._repair_diff: DataFrame | None = None
-        # memoized narrow (pk, __bucket, __row_hash) projections: the digest
-        # pass and the drill-down each rebuilt them (~94 ms of py4j per
-        # build, round-12 micro-profile); the projection is a pure function
-        # of (side, pk, compare_cols, n_buckets, float_round), all fixed per
-        # instance
-        self._narrows: dict[str, DataFrame] = {}
-        self._n_buckets_memo: int | None = None
-        self._scope: BucketScope | None = None
+        self._memo: dict[str, object] = {}
         # frames persisted for this compare by its builder; close() frees them
         self.held: list[DataFrame] = []
 
     # -- structure (B1) ----------------------------------------------------
     def schema_diff(self) -> DataFrame:
-        if self._schema_diff is None:
-            self._schema_diff = schema_diff(self.spark, self.left, self.right)
-        return self._schema_diff
+        return schema_diff(self.spark, self.left, self.right)
 
     def structure_ok(self) -> bool:
         # Pure driver-side check: both schemas are already local StructTypes,
         # so no Spark job is needed (schema_diff() stays available as the
         # DataFrame-shaped report of *what* differs).
-        if self._structure_ok is None:
-            lf = [(f.name, f.dataType.simpleString()) for f in self.left.schema.fields]
-            rf = [(f.name, f.dataType.simpleString()) for f in self.right.schema.fields]
-            self._structure_ok = lf == rf
-        return self._structure_ok
+        lf = [(f.name, f.dataType.simpleString()) for f in self.left.schema.fields]
+        rf = [(f.name, f.dataType.simpleString()) for f in self.right.schema.fields]
+        return lf == rf
 
     # -- sizing ------------------------------------------------------------
+    @_memoized
     def _n_buckets(self) -> int:
-        # cached: the plan-stats probe costs a Catalyst optimize of the
-        # left plan (~85 ms driver time, round-12 micro-profile), and the
-        # inputs are fixed per instance
-        if self._n_buckets_memo is None:
-            self._n_buckets_memo = size_buckets(self.left, self.options)
-        return self._n_buckets_memo
+        # the plan-stats probe costs a Catalyst optimize of the left plan
+        # (~85 ms driver time, round-12 micro-profile)
+        return size_buckets(self.left, self.options)
 
     # -- digest phase (B5/B6) ----------------------------------------------
-    def _narrow_side(self, side: str) -> DataFrame:
-        nf = self._narrows.get(side)
-        if nf is None:
-            df = self.left if side == "left" else self.right
-            nf = _narrow(df, self.pk, self.compare_cols, self._n_buckets(),
-                         self.options.float_round)
-            self._narrows[side] = nf
-        return nf
+    @_memoized
+    def _narrows(self) -> dict[str, DataFrame]:
+        # the narrow (pk, __bucket, __row_hash) projection of each side,
+        # shared by the digest pass and the drill-down (~94 ms of py4j per
+        # build, round-12 micro-profile)
+        n, fr = self._n_buckets(), self.options.float_round
+        return {
+            "left": _narrow(self.left, self.pk, self.compare_cols, n, fr),
+            "right": _narrow(self.right, self.pk, self.compare_cols, n, fr),
+        }
 
     def bucket_digests(self, side: str = "left") -> DataFrame:
-        return digest_sum(signed_digest(self._narrow_side(side)))
+        return digest_sum(signed_digest(self._narrows()[side]))
 
     def mismatched_buckets(self) -> DataFrame:
         # left at +1, right at -1: a bucket absent from one side keeps the
         # other side's nonzero triple and is flagged; buckets absent from
         # both sides appear nowhere
         return drifted_buckets(
-            signed_digest(self._narrow_side("left")),
-            signed_digest(self._narrow_side("right"), -1),
+            signed_digest(self._narrows()["left"]),
+            signed_digest(self._narrows()["right"], -1),
         )
 
     # -- drill-down (B8/B9) --------------------------------------------------
+    @_memoized
     def scope(self) -> BucketScope:
         """The mismatched-bucket scope (:func:`bucket_scope`), built once
         per compare and shared by every drill-down consumer."""
-        if self._scope is None:
-            self._scope = bucket_scope(self.mismatched_buckets(), self._n_buckets())
-        return self._scope
+        return bucket_scope(self.mismatched_buckets(), self._n_buckets())
 
     def _bounded_pushdown_keys(self, frame: DataFrame, col: str) -> list | None:
         """``col``'s values from ``frame`` when they qualify for the pk-IN
@@ -445,10 +445,10 @@ class TableCompare:
     def pk_pushdown(self, keys: DataFrame) -> Column | None:
         """``pk IN (keys' pk values)`` for pushing into a side's scan, or
         None when the pushdown does not apply: a composite key, a scope
-        other than the bounded IN-list form (there the diff is persisted
-        and drift-sized, so collecting its keys is a cache read; the
-        heavy-drift forms keep the lazy semi-join shape), or keys that
-        fail :meth:`_bounded_pushdown_keys`."""
+        other than the bounded IN-list form (there the diff is
+        drift-sized, so collecting its keys is a small cache read; the
+        heavy-drift forms keep the semi-join shape), or keys that fail
+        :meth:`_bounded_pushdown_keys`."""
         if len(self.pk) != 1 or not self.scope().ids:
             return None
         col = self.pk[0]
@@ -457,6 +457,7 @@ class TableCompare:
             return None
         return in_list(col, ids, keys.schema[col].dataType)
 
+    @_memoized
     def diff_rows(self) -> DataFrame:
         """(pk..., diff_type) for every differing row.
 
@@ -471,12 +472,15 @@ class TableCompare:
         a modified NULL-key row is missing + extra). A lone left row is
         missing, a lone right row extra, one of each modified; anything
         else is a drifted duplicate key, and the action raises.
+
+        A drilled scope's keyed diff is persisted until :meth:`close`:
+        the summary fills the cache, and fix-SQL, ``apply_fixes``,
+        ``column_drift`` and the pk-IN key collect read it (a summary-only
+        run holds it too: no larger than the drill-down's own shuffle).
+        The multiset diff stays lazy: :meth:`summary` is its one consumer.
         """
-        if self._diff_rows is not None:
-            return self._diff_rows
         if self.options.force_multiset or not self.pk:
-            self._diff_rows = self._diff_rows_multiset()
-            return self._diff_rows
+            return self._diff_rows_multiset()
         scope, pk = self.scope(), self.pk
         null_key = reduce(Column.__or__, [F.col(c).isNull() for c in pk])
         w, net = F.sum(F.abs("__d")), F.sum("__d")
@@ -493,10 +497,10 @@ class TableCompare:
         )
         # the always-true filter keeps diff_type, and so its raise, in every
         # plan: a bare count() would otherwise prune it
-        self._diff_rows = (
+        diff = (
             signed_rows(
-                scope.restrict(self._narrow_side("left")),
-                scope.restrict(self._narrow_side("right")),
+                scope.restrict(self._narrows()["left"]),
+                scope.restrict(self._narrows()["right"]),
                 pk,
             )
             .groupBy(*pk, F.when(null_key, F.col("__row_hash")))
@@ -504,55 +508,25 @@ class TableCompare:
             .select(*pk, "diff_type")
             .filter(F.col("diff_type").isNotNull())
         )
-        if scope.ids:
-            # bounded drift (IN-list form): the diff is drift-sized, and each
-            # consumer (summary, fix-SQL, reconcile, column_drift, the CLI's
-            # composed flags) would re-run the drill-down per action, so it
-            # stays persisted until close(), like the bad-bucket frame. The
-            # frame/skip forms are not size-bounded and stay lazy
-            # (repair_diff materializes them for the repair consumers).
-            self._diff_rows = self._diff_rows.persist()
-        return self._diff_rows
-
-    def repair_diff(self) -> DataFrame:
-        """:meth:`diff_rows` as a re-readable frame, computed at most once.
-
-        fix-SQL export and ``apply_fixes`` each read the diff several
-        times. The bounded (IN-list) diff is already persisted and is
-        returned as it is. A heavy-drift diff is lazy, and each read would
-        re-run the full drill-down, so it is materialized once here
-        for both consumers; it is diff-sized, which they already assume is
-        broadcastable. It is persisted rather than locally checkpointed
-        because :meth:`close` can then release it.
-        """
-        if self._repair_diff is None:
-            diff = self.diff_rows()
-            try:
-                from pyspark import StorageLevel
-
-                lazy = diff.storageLevel == StorageLevel.NONE
-            except Exception:
-                # Spark Connect: storageLevel is unavailable, so the diff
-                # stays lazy. Only the probe is guarded; a materialize()
-                # failure (executor loss, OOM) propagates.
-                lazy = False
-            self._repair_diff = (
-                materialize(diff, mode="persist") if lazy else diff
-            )
-        return self._repair_diff
+        # an empty scope's constant-false filter plans no scan, so there is
+        # nothing to keep, and a persist would add a cache-building job
+        return diff if scope.kind == "empty" else diff.persist()
 
     def close(self) -> None:
-        """Release what this compare persisted: the IN-list diff, the
-        materialized repair diff, the bad-bucket frame and the
+        """Release what this compare persisted: the frames its memo holds
+        (the keyed diff, the scope's bad-bucket frame) and the
         :attr:`held` frames. Call it after the table's last consumer;
-        later reads recompute. The diffs go first: they may be built on
-        the bad-bucket frame, and everything may be built on a held one."""
-        frames = [self._diff_rows, self._repair_diff]
-        if self._scope is not None:
-            frames.append(self._scope.frame)
-        for frame in [*frames, *self.held]:
-            if frame is not None:
+        later reads recompute. The memo releases newest first, since a
+        later entry may be built on an earlier one (the diff on the
+        bad-bucket frame), and everything may be built on a held one."""
+        for value in reversed(self._memo.values()):
+            frame = value.frame if isinstance(value, BucketScope) else value
+            # a lazy frame is skipped: unpersisting it would drop any equal
+            # plan another owner cached
+            if isinstance(frame, DataFrame) and frame.is_cached:
                 frame.unpersist()
+        for frame in self.held:
+            frame.unpersist()
 
     def _diff_rows_multiset(self) -> DataFrame:
         """exceptAll-style multiset diff keyed by whole-row hash, for absent
@@ -618,19 +592,19 @@ class TableCompare:
             )
         fr = self.options.float_round
         # pk-IN retrieval only when (a) pk_pushdown applies — its IN-list
-        # scope gate means the diff frame is persisted (drift-sized; see
-        # diff_rows) so collecting the modified keys is a cache read —
-        # AND (b) some consumer already computed the diff (the CLI's
-        # composed flow runs the summary first; sharing its materialized
-        # frame makes this retrieval strictly cheaper than the bucket
-        # join). A standalone column_drift keeps the bucket-restriction
-        # shape: materializing the drill-down solely to learn the keys
-        # measured SLOWER than the restriction it would replace (sf1
-        # in-regime: 1.45 s vs 1.22 s, PERFORMANCE.md round-8).
+        # scope gate means the persisted diff is drift-sized, so collecting
+        # the modified keys is a small cache read — AND (b) some consumer
+        # already built the diff (the CLI's composed flow runs the summary
+        # first; sharing its persisted frame makes this retrieval strictly
+        # cheaper than the bucket join). A standalone column_drift keeps
+        # the bucket-restriction shape: materializing the drill-down
+        # solely to learn the keys measured SLOWER than the restriction it
+        # would replace (sf1 in-regime: 1.45 s vs 1.22 s, PERFORMANCE.md
+        # round-8).
         pred = None
-        if self._diff_rows is not None:
+        if "diff_rows" in self._memo:
             pred = self.pk_pushdown(
-                self._diff_rows.filter(F.col("diff_type") == "modified")
+                self.diff_rows().filter(F.col("diff_type") == "modified")
             )
         if pred is not None:
             lsrc, rsrc = self.left.filter(pred), self.right.filter(pred)
@@ -723,3 +697,26 @@ def compare_tables(
     tests/test_edge_cases.py::test_null_pk_rows_have_defined_semantics).
     """
     return TableCompare(spark, left, right, pk, options, table_name)
+
+
+def scoped_compare(
+    spark: SparkSession,
+    left: DataFrame,
+    right: DataFrame,
+    pk: list[str],
+    scope: BucketScope,
+    options: CompareOptions = CompareOptions(),
+    table_name: str = "table",
+) -> TableCompare:
+    """A compare of ``left`` and ``right`` restricted to ``scope``'s
+    buckets. Pinning ``scope.n_buckets`` lines the bucket ids up and spares
+    a sizing count() (plan stats cannot see through the bucket filter).
+    The caller keeps owning ``scope.frame``."""
+    return TableCompare(
+        spark,
+        scope.restrict(left, pk),
+        scope.restrict(right, pk),
+        pk,
+        replace(options, n_buckets=scope.n_buckets),
+        table_name,
+    )

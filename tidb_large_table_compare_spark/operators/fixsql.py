@@ -55,9 +55,9 @@ def fix_sql(cmp) -> DataFrame:
     if not pk:
         raise ValueError("fix_sql requires a primary key (multiset diffs are not addressable)")
     # the diff feeds BOTH output branches (REPLACE retrieval and DELETE
-    # rendering): read the compare's one re-readable copy, shared with
-    # reconcile.apply_fixes, so a heavy-drift drill-down join runs once
-    diff = cmp.repair_diff()
+    # rendering): the compare's one persisted copy, shared with the
+    # summary and reconcile.apply_fixes, so the drill-down runs once
+    diff = cmp.diff_rows()
     table = cmp.table_name
     left = cmp.left
     fields = {f.name: f.dataType for f in left.schema.fields}

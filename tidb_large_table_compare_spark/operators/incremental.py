@@ -22,8 +22,6 @@ the same bucketing), and the scoped compare re-checks that pin.
 
 from __future__ import annotations
 
-import dataclasses
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,10 +29,10 @@ from tidb_large_table_compare_spark.operators.compare import (
     CompareOptions,
     TableCompare,
     bucket_scope,
-    compare_tables,
     digest_sum,
     drifted_buckets,
     range_scoped,
+    scoped_compare,
     signed_digest,
     signed_table_rows,
     size_buckets,
@@ -315,18 +313,13 @@ def incremental_compare(
         signed_digest(stored, -1),
         signed_table_rows(right, pk, n_buckets, options),
     )
-    opts = dataclasses.replace(options, n_buckets=n_buckets)
-    cmp = compare_tables(spark, left, right, pk, opts, table_name)
     # the changed-bucket set takes the drill-down's own scope (small →
     # IN-list at the scan, wide → broadcast semi-join, most buckets → no
     # scope at all: the plain full compare). A frame scope is embedded in
-    # the returned lazy plan, so it stays persisted until the compare's
-    # close(); building it re-runs the digest of `right` once more for its
-    # count. Scope cmp.left/right (post-range_sql) rather than the raw
-    # inputs so a configured range predicate stays in force.
+    # the returned lazy plan, so the compare holds it until its close();
+    # building it re-runs the digest of `right` once more for its count.
     scope = bucket_scope(changed, n_buckets)
-    cmp.left = scope.restrict(cmp.left, pk)
-    cmp.right = scope.restrict(cmp.right, pk)
+    cmp = scoped_compare(spark, left, right, pk, scope, options, table_name)
     if scope.frame is not None:
         cmp.held.append(scope.frame)
     return cmp

@@ -14,8 +14,6 @@ model (`operators/compare.py`).
 
 from __future__ import annotations
 
-import dataclasses
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -34,9 +32,9 @@ def apply_fixes(
 
     The diff is read TWICE here (the delete and insert broadcast builds)
     and again by every action over the returned repaired frame, so the
-    caller passes a re-readable diff: :meth:`TableCompare.repair_diff`,
-    which is computed once and shared with fix-SQL export. A lazy
-    heavy-drift diff would re-run its full-table drill-down join per read.
+    caller passes a re-readable diff: :meth:`TableCompare.diff_rows`,
+    persisted once and shared with fix-SQL export. A lazy diff would
+    re-run its drill-down per read.
     """
     to_delete = diff.filter(F.col("diff_type") != "missing_in_right").select(*pk)
     to_insert = diff.filter(F.col("diff_type") != "extra_in_right").select(*pk)
@@ -104,7 +102,10 @@ def verify_repair(tc, repaired: DataFrame) -> DataFrame:
             "PK-determined); re-verify multiset compares in full"
         )
     from tidb_large_table_compare_spark.functions.localframe import local_frame
-    from tidb_large_table_compare_spark.operators.compare import compare_tables
+    from tidb_large_table_compare_spark.operators.compare import (
+        compare_tables,
+        scoped_compare,
+    )
 
     # a skip scope (most buckets bad) is never in-regime; a frame scope
     # (bad set past the IN-list cap) still can be, at lake-scale bucket
@@ -115,22 +116,12 @@ def verify_repair(tc, repaired: DataFrame) -> DataFrame:
             tc.spark, tc.left, repaired, tc.pk, tc.options, tc.table_name
         )
     else:
-        # pin the original bucket count: granularity is already
-        # drift-scoped, and the pin skips the scoped compare's row-estimate
-        # probe (which would otherwise fall back to an extra count() job on
-        # the filtered frame, whose stats Catalyst cannot see through the
-        # hash filter)
-        cmp = compare_tables(
-            tc.spark,
-            scope.restrict(tc.left, tc.pk),
-            scope.restrict(repaired, tc.pk),
-            tc.pk,
-            dataclasses.replace(tc.options, n_buckets=scope.n_buckets),
-            tc.table_name,
+        cmp = scoped_compare(
+            tc.spark, tc.left, repaired, tc.pk, scope, tc.options, tc.table_name
         )
-    # the inner compare persists its own state (a non-equivalent repair's
-    # IN-list diff): collect the one row and release it here, since no
-    # caller can reach this compare to close it
+    # the inner compare persists its own state (its keyed diff): collect
+    # the one row and release it here, since no caller can reach this
+    # compare to close it
     summary = cmp.summary()
     rows = summary.collect()
     cmp.close()

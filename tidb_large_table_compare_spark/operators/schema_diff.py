@@ -8,7 +8,9 @@ the report's STRUCTURE column (``step3_run_syncdiff.sh:204-209``).
 Here both schemas become DataFrames of ``(column_name, data_type, nullable,
 position)`` and a full outer join on column name classifies every column:
 ``ok`` / ``type_mismatch`` / ``missing_in_right`` / ``extra_in_right`` /
-``reordered``. ``structure_ok`` is True iff every column is ``ok``.
+``reordered``. The verdict itself, :meth:`TableCompare.structure_ok`, is
+True iff every column would be ``ok``, and is computed driver-side from the
+two schemas without a Spark job.
 
 Nullability is REIFIED for display (``schema_as_df``) but deliberately
 EXCLUDED from the verdict: Spark's inferred ``nullable`` flag is not a
@@ -75,9 +77,3 @@ def schema_diff(spark: SparkSession, left: DataFrame, right: DataFrame) -> DataF
     return joined.withColumn("status", status).orderBy(
         F.coalesce("left_pos", "right_pos"), "column_name"
     )
-
-
-def structure_ok(spark: SparkSession, left: DataFrame, right: DataFrame) -> bool:
-    """True iff schemas match exactly (names, types, order)."""
-    diff = schema_diff(spark, left, right)
-    return diff.filter(F.col("status") != "ok").isEmpty()

@@ -216,7 +216,7 @@ def _cmp_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, orders, slave, pk=["o_orderkey"],
         options=CompareOptions(n_buckets=4096), table_name="main.orders",
     )
-    repaired = apply_fixes(orders, slave, ["o_orderkey"], tc.repair_diff())
+    repaired = apply_fixes(orders, slave, ["o_orderkey"], tc.diff_rows())
     return verify_repair(tc, repaired)
 
 
