@@ -1023,3 +1023,56 @@ def test_cli_isolates_unreadable_table(spark, tmp_path, capsys):
     assert "read failed for main.nation" in cap.err
     assert "FAILED tables: main.nation" in cap.err
     assert "main.orders" in cap.out  # the healthy table still reported
+
+
+@pytest.mark.parametrize("threshold", ["0", "1"])
+def test_cli_isolates_unreadable_left_table(spark, tmp_path, capsys, threshold):
+    """One missing parquet on the LEFT side fails THAT table too — the
+    catalog is built over the readable tables, so the run still compares and
+    reports the others, with or without threshold discovery."""
+    import shutil
+
+    from tidb_large_table_compare_spark.cli import main
+
+    left = tmp_path / "left"
+    left.mkdir()
+    shutil.copy(f"{SF_SMALL}/orders.parquet", left / "orders.parquet")
+    # nation.parquet deliberately absent on the left
+
+    code = main(
+        [
+            "--left-dir", str(left),
+            "--right-dir", SF_SMALL,
+            "--tables", "orders,nation",
+            "--pk", "orders=o_orderkey",
+            "--row-threshold", threshold,
+        ]
+    )
+    cap = capsys.readouterr()
+    assert code == 1
+    assert "read failed for main.nation" in cap.err
+    assert "FAILED tables: main.nation" in cap.err
+    assert "main.orders" in cap.out  # the healthy table still reported
+    assert "tables=1 " in cap.out
+
+
+def test_cli_run_with_every_table_unreadable_prints_zero_totals(tmp_path, capsys):
+    """No latest-run rows: the totals are zeros, not NULL, in the machine
+    line and in the rendered report."""
+    from tidb_large_table_compare_spark.cli import main
+
+    code = main(
+        [
+            "--left-dir", SF_SMALL,
+            "--right-dir", str(tmp_path),
+            "--tables", "nation",
+        ]
+    )
+    cap = capsys.readouterr()
+    assert code == 1
+    assert "FAILED tables: main.nation" in cap.err
+    assert (
+        "tables=0 structure_ok=0 structure_diff=0 upcount=0 downcount=0"
+        in cap.out
+    )
+    assert "None" not in cap.out

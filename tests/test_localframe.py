@@ -133,3 +133,20 @@ def test_create_dataframe_only_in_the_seam():
         if "createDataFrame(" in line
     ]
     assert hits and all(h.startswith("functions/localframe.py:") for h in hits), hits
+
+
+def test_cli_report_call_runs_at_most_two_jobs(spark):
+    """The CLI's report over ``run.summaries`` is one collect of the latest
+    run — the window's two jobs — and every line and total is rendered from
+    those rows on the driver."""
+    from tidb_large_table_compare_spark.plans.pipeline import CompareJob, run_jobs
+    from tidb_large_table_compare_spark.plans.report import report
+
+    nation = spark.read.parquet(f"{SF_SMALL}/nation.parquet")
+    run = run_jobs(
+        spark, [CompareJob("main.nation", nation, nation, ["n_nationkey"])],
+        parallelism=1,
+    )
+    got = []
+    assert _jobs_in_group(spark, lambda: got.append(report(run.summaries))) <= 2
+    assert got[0].totals.tables_checked == 1

@@ -390,3 +390,33 @@ def test_parse_summaries_text_path(spark, tmp_path):
     totals = report_totals(parsed).collect()[0]
     assert totals.tables_checked == 3  # users@latest, items, weird
     assert totals.total_upcount == 12 and totals.total_downcount == 41
+
+
+def test_final_report_renders_a_tableless_summary_inside_the_table(spark, tmp_path):
+    """A summary.txt with no data row parses to a NULL-table row (kept on
+    purpose). Its row renders inside the table block, after the named
+    rows — not above the banner — and counts as a structure diff."""
+    from tidb_large_table_compare_spark.plans.report import (
+        REPORT_BANNER,
+        REPORT_BORDER,
+        REPORT_HEADER,
+        render_final_report,
+    )
+
+    _write_summary(tmp_path, "a", "20240103_010101", 0, 0, True)
+    d = tmp_path / "db_b_20240103_010101"
+    d.mkdir()
+    (d / "summary.txt").write_text("+----+\n| TABLE |\n+----+\ncheck failed\n")
+
+    parsed = parse_summaries(spark, f"{tmp_path}/*/summary.txt")
+    lines = [r.line for r in render_final_report(parsed).collect()]
+    assert lines[0] == REPORT_BANNER
+    h = lines.index(REPORT_HEADER)
+    assert lines[h + 1 : h + 5] == [
+        REPORT_BORDER,
+        "| `db`.`a`          | 一致    |       0 |         0 |",
+        "|                   | 差异    |         |           |",
+        REPORT_BORDER,
+    ]
+    assert "[INFO] 找到 2 个 summary.txt 文件" in lines
+    assert "  结构差异: 1 张" in lines

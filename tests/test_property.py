@@ -347,34 +347,26 @@ _CELL_CHARS = st.sampled_from(list("ab_.`0一致差异表行汇总\U0001F600"))
 _CELL_TEXT = st.text(alphabet=_CELL_CHARS, min_size=0, max_size=8)
 
 
-@settings(max_examples=30, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@settings(max_examples=30, deadline=None)
 @given(table=_CELL_TEXT, status=_CELL_TEXT,
        up=st.one_of(st.none(), st.integers(0, 9_999_999)),
        down=st.one_of(st.none(), st.integers(0, 999_999_999)))
-def test_report_row_line_pads_by_bytes(spark, table, status, up, down):
+def test_report_row_line_pads_by_bytes(table, status, up, down):
     """``report_row_line`` must reproduce bash printf's BYTE-counting padding
     for any unicode cell content: every line whose cells fit their widths is
     exactly 55 bytes (the reference's fixed table width), wider cells extend
     it by exactly their overflow, and NULL counts render as spaces."""
-    from pyspark.sql import functions as F
-
     from tidb_large_table_compare_spark.plans.report import report_row_line
 
-    row = spark.createDataFrame(
-        [(table, status, up, down)],
-        "t string, s string, u bigint, d bigint",
-    ).select(
-        report_row_line(F.col("t"), F.col("s"), F.col("u"), F.col("d")).alias("line")
-    ).collect()[0]
-    nbytes = len(row.line.encode("utf-8"))
+    line = report_row_line(table, status, up, down)
+    nbytes = len(line.encode("utf-8"))
 
     def overflow(text, width):
         return max(0, len(("" if text is None else str(text)).encode("utf-8")) - width)
 
     expected = 55 + overflow(table, 17) + overflow(status, 9) \
         + overflow(up, 7) + overflow(down, 9)
-    assert nbytes == expected, (row.line, nbytes, expected)
+    assert nbytes == expected, (line, nbytes, expected)
 
 
 @st.composite

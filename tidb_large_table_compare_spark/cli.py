@@ -35,10 +35,7 @@ from tidb_large_table_compare_spark.operators.compare import CompareOptions
 from tidb_large_table_compare_spark.operators.fixsql import fix_sql
 from tidb_large_table_compare_spark.plans.discover import discover
 from tidb_large_table_compare_spark.plans.pipeline import CompareJob, run_jobs
-from tidb_large_table_compare_spark.plans.report import (
-    render_final_report,
-    report_totals,
-)
+from tidb_large_table_compare_spark.plans.report import report
 from tidb_large_table_compare_spark.runlock import LockHeld, RunLock
 from tidb_large_table_compare_spark.session import get_spark
 from tidb_large_table_compare_spark.sources.catalog import parquet_catalog
@@ -255,8 +252,27 @@ def _run(args) -> int:
 
     spark = get_spark("table-compare-cli")
 
+    # per-table read isolation, mirroring run_jobs: one missing/corrupt
+    # parquet must fail THAT table, not abort the whole run before any
+    # comparison happens. The left side is read before discovery, so the
+    # catalog below only reads footers Spark could open.
+    read_failures: list[str] = []
+
+    def read(t: str, side_dir: str):
+        try:
+            return spark.read.parquet(f"{side_dir}/{t}.parquet")
+        except Exception as exc:  # noqa: BLE001 — reported, run continues
+            name = f"{args.schema}.{t}"
+            print(f"read failed for {name}: {exc}", file=sys.stderr)
+            read_failures.append(name)
+            return None
+
+    lefts = {t: df for t in tables if (df := read(t, args.left_dir)) is not None}
+
     # discover: catalog from the master side, reference predicate shape (A1-A6)
-    catalog = parquet_catalog(spark, args.left_dir, tables, schema_name=args.schema)
+    catalog = parquet_catalog(
+        spark, args.left_dir, list(lefts), schema_name=args.schema
+    )
     if args.row_threshold > 0:
         # pk_type=None: the parquet catalog's pk_type is a TiDB-shaped
         # STAND-IN (a fixed test-schema name set, catalog.py) — gating the
@@ -271,8 +287,8 @@ def _run(args) -> int:
             ).collect()
         ]
     else:
-        worklist = tables
-    if not worklist:
+        worklist = list(lefts)
+    if not worklist and not read_failures:
         print("no tables matched the discovery predicate (normal; nothing to do)")
         return 0
 
@@ -287,24 +303,15 @@ def _run(args) -> int:
     # information_schema read, step1_query_tables.sh:115-117) sizes each
     # job's digest buckets with zero extra Spark jobs (row_count_hint)
     catalog_rows = {r.table_name: r.table_rows for r in catalog.collect()}
-    # per-table read isolation, mirroring run_jobs: one missing/corrupt
-    # parquet must fail THAT table, not abort the whole run before any
-    # comparison happens
     jobs: list[CompareJob] = []
-    read_failures: list[str] = []
     for t in worklist:
-        name = f"{args.schema}.{t}"
-        try:
-            left = spark.read.parquet(f"{args.left_dir}/{t}.parquet")
-            right = spark.read.parquet(f"{args.right_dir}/{t}.parquet")
-        except Exception as exc:  # noqa: BLE001 — reported, run continues
-            print(f"read failed for {name}: {exc}", file=sys.stderr)
-            read_failures.append(name)
+        right = read(t, args.right_dir)
+        if right is None:
             continue
         jobs.append(
             CompareJob(
-                table=name,
-                left=left,
+                table=f"{args.schema}.{t}",
+                left=lefts[t],
                 right=right,
                 pk=pk_map.get(t),
                 options=CompareOptions(**opts, row_count_hint=catalog_rows.get(t)),
@@ -335,21 +342,20 @@ def _report_and_drill(args, spark, jobs, run, read_failures) -> int:
     # report (A16-A25): the reference's complete final-report block
     # (step3_run_syncdiff.sh:175-244), then a machine-readable line.
     # run.summaries is a local relation (plans/pipeline.py::run_jobs via
-    # functions/localframe.py), so the two actions below (render + totals)
-    # read a handful of driver-held rows with no Python worker — no
-    # persist needed.
-    lines = [r.line for r in render_final_report(run.summaries).collect()]
-    totals = report_totals(run.summaries).collect()[0]
-    report = "\n".join(lines) + (
+    # functions/localframe.py); report() collects its latest run once and
+    # renders every line and total from those rows on the driver.
+    rep = report(run.summaries)
+    totals = rep.totals
+    text = "\n".join(rep.final) + (
         f"\ntables={totals.tables_checked} structure_ok={totals.structure_ok_cnt} "
         f"structure_diff={totals.structure_diff_cnt} "
         f"upcount={totals.total_upcount} downcount={totals.total_downcount} "
         f"volume={totals.volume_label}"
     )
-    print(report)
+    print(text)
     if args.report_out:
         with open(args.report_out, "w") as fh:
-            fh.write(report + "\n")
+            fh.write(text + "\n")
 
     # per-column profiles of both sides — the ANALYZE-style first look and
     # the cheap drift tripwire (a diverging profile is a one-screen signal)

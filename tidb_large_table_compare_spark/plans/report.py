@@ -4,16 +4,26 @@ Input: a ``summaries`` DataFrame of per-table, per-run results
 ``(run_ts, table, structure_ok, upcount, downcount)`` — the structured analog
 of the parsed ``summary.txt`` fields (``step3_run_syncdiff.sh:204-229``).
 
-The pipeline reproduces the reference's final report exactly:
-- keep only rows from the latest run timestamp (A16, ``step3:169-172``)
+:func:`report` reproduces the reference's final report in one pass, the way
+``step3_run_syncdiff.sh:169-244`` does: it collects the latest run once
+(A16, ``step3:169-172``) and ``printf``-s everything else from those rows on
+the driver:
 - guarded casts: non-numeric counts drop out of sums (A20, ``step3:223-226``)
 - structure-ok vs structure-diff tallies (A21, ``step3:206-209``)
 - TOTAL_UPCOUNT / TOTAL_DOWNCOUNT sums (A22, ``step3:224-227``)
 - scaled "N M 行" volume formatting (A23, ``step3:241``)
-- fixed-width rendered table (A24, ``step3:190-234``)
+- fixed-width rendered table (A24/A25, ``step3:190-234``)
+
+The latest run is driver-sized by definition — one summary row per compared
+table, the reference's terminal/tee artifact — so the rendering is plain
+Python. :func:`render_final_report`, :func:`render_report`,
+:func:`render_summary_block` and :func:`report_totals` are ``local_frame``
+views of one :func:`report` for sinks and the registry's oracle entries.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,33 +46,53 @@ REPORT_BANNER = "═" * 60  # step3_run_syncdiff.sh:176
 REPORT_TITLE = "                    最终比对报告                                    "
 NO_SUMMARY_LINE = "没有找到 summary.txt 文件"  # step3_run_syncdiff.sh:182
 
+_TOTALS_SCHEMA = (
+    "tables_checked bigint, structure_ok_cnt bigint, structure_diff_cnt bigint, "
+    "total_upcount bigint, total_downcount bigint, volume_label string"
+)
 
-def _pad_cell(col: F.Column, width: int, align: str = "left") -> F.Column:
+
+class Totals(NamedTuple):
+    """A20-A23 over the latest run; field names are :func:`report_totals`'
+    columns."""
+
+    tables_checked: int
+    structure_ok_cnt: int
+    structure_diff_cnt: int
+    total_upcount: int
+    total_downcount: int
+    volume_label: str
+
+
+class Report(NamedTuple):
+    """One rendering of the latest run: the complete final-report block, the
+    table block and the 汇总统计 tail it embeds, and the totals."""
+
+    final: list[str]
+    table: list[str]
+    tail: list[str]
+    totals: Totals
+
+
+def _pad(value: object, width: int, right: bool = False) -> str:
     """Pad a cell the way bash ``printf %Ns`` does — by BYTES, not characters.
 
-    ``printf "%-9s" 一致`` emits the 6 UTF-8 bytes plus 3 spaces; Java's
-    ``format_string`` would pad the 2 *characters* to 9 and break bit-parity
-    (step3_run_syncdiff.sh:221). Overlong values pass through unpadded,
-    matching printf (Spark's lpad/rpad would truncate them), and NULL cells
-    render as all-spaces like printf's empty string (A20: a summary whose
-    count failed the numeric guard still renders its row).
+    ``printf "%-9s" 一致`` emits the 6 UTF-8 bytes plus 3 spaces
+    (step3_run_syncdiff.sh:221). Overlong values pass through unpadded, and
+    None renders as all-spaces like printf's empty string (A20: a summary
+    whose count failed the numeric guard still renders its row).
     """
-    s = F.coalesce(col.cast("string"), F.lit(""))
-    pad = F.repeat(F.lit(" "), F.greatest(F.lit(0), F.lit(width) - F.octet_length(s)))
-    return F.concat(pad, s) if align == "right" else F.concat(s, pad)
+    s = "" if value is None else str(value)
+    pad = " " * max(0, width - len(s.encode("utf-8")))
+    return pad + s if right else s + pad
 
 
-def report_row_line(
-    table: F.Column, status: F.Column, up: F.Column, down: F.Column
-) -> F.Column:
+def report_row_line(table: object, status: object, up: object, down: object) -> str:
     """One rendered body row: ``| %-17s | %-9s | %7s | %9s |`` in printf-byte
     semantics (step3_run_syncdiff.sh:221)."""
-    return F.concat(
-        F.lit("| "), _pad_cell(table, 17),
-        F.lit(" | "), _pad_cell(status, 9),
-        F.lit(" | "), _pad_cell(up, 7, "right"),
-        F.lit(" | "), _pad_cell(down, 9, "right"),
-        F.lit(" |"),
+    return (
+        f"| {_pad(table, 17)} | {_pad(status, 9)} "
+        f"| {_pad(up, 7, right=True)} | {_pad(down, 9, right=True)} |"
     )
 
 
@@ -78,143 +108,85 @@ def latest_run(summaries: DataFrame) -> DataFrame:
     ).drop("__max_ts")
 
 
-def report_totals(summaries: DataFrame) -> DataFrame:
-    """A20-A23: one-row totals over the latest run."""
-    latest = latest_run(summaries)
-    up = F.col("upcount").cast("string").try_cast("long")
-    down = F.col("downcount").cast("string").try_cast("long")
-    return latest.agg(
-        F.count(F.lit(1)).alias("tables_checked"),
-        F.sum(F.when(F.col("structure_ok"), 1).otherwise(0)).alias("structure_ok_cnt"),
-        F.sum(F.when(F.col("structure_ok"), 0).otherwise(1)).alias("structure_diff_cnt"),
-        F.coalesce(F.sum(up), F.lit(0)).alias("total_upcount"),
-        F.coalesce(F.sum(down), F.lit(0)).alias("total_downcount"),
-    ).withColumn(
-        # "总数据量: $((TOTAL_UPCOUNT / 1000000))M 行" — upcount only, not
-        # up+down (step3_run_syncdiff.sh:241)
-        "volume_label",
-        F.format_string("%dM 行", F.floor(F.col("total_upcount") / 1_000_000)),
-    )
+def report(summaries: DataFrame) -> Report:
+    """The reference's final report from one collect of the latest run
+    (``step3_run_syncdiff.sh:175-244``, ANSI colors omitted).
 
-
-def render_report(summaries: DataFrame) -> DataFrame:
-    """A24/A25: fixed-width ASCII table lines, one row per table, sorted.
-
-    Returns a single-column ``line`` DataFrame (text-sink ready) shaped like
-    the reference's final report (``step3_run_syncdiff.sh:190-234``).
-    """
-    latest = latest_run(summaries)
-    border = REPORT_BORDER
-    header = REPORT_HEADER
-    status = F.when(F.col("structure_ok"), F.lit(STRUCTURE_OK_LABEL)).otherwise(
-        F.lit(STRUCTURE_DIFF_LABEL)
-    )
-    body = latest.select(
-        report_row_line(
-            F.col("table"), status, F.col("upcount"), F.col("downcount")
-        ).alias("line"),
-        # explicit ordering key: union does not preserve row order, and a
-        # rendered report is meaningless if its lines can interleave
-        F.concat(F.lit("1_"), F.col("table")).alias("__ord"),
-    )
-    spark = summaries.sparkSession
-    frame = local_frame(
-        spark,
-        [(border, "0_0"), (header, "0_1"), (border, "0_2")],
-        "line string, __ord string",
-    )
-    tail = local_frame(spark, [(border, "2_0")], "line string, __ord string")
-    return frame.unionByName(body).unionByName(tail).orderBy("__ord").select("line")
-
-
-def render_summary_block(summaries: DataFrame) -> DataFrame:
-    """A21-A23 rendered as the reference's 汇总统计 tail block
-    (``step3_run_syncdiff.sh:237-243``; the ANSI color escapes around
-    ``[INFO]`` and the diff count are omitted — they are terminal dressing,
-    not report content).
-
-    The 结构差异 line appears only when the diff count is positive, exactly
-    like the reference's ``if [ "$STRUCTURE_DIFF" -gt 0 ]`` guard.
-    """
-    return _summary_block_ordered(summaries).orderBy("__ord").select("line")
-
-
-def _summary_block_ordered(summaries: DataFrame, prefix: str = "") -> DataFrame:
-    t = report_totals(summaries)
-    lines = t.select(
-        F.array_compact(
-            F.array(
-                F.format_string("[INFO] 汇总统计: 共 %d 张表", F.col("tables_checked")),
-                F.format_string("  结构一致: %d 张", F.col("structure_ok_cnt")),
-                F.when(
-                    F.col("structure_diff_cnt") > 0,
-                    F.format_string("  结构差异: %d 张", F.col("structure_diff_cnt")),
-                ),
-                F.format_string("  总数据量: %s", F.col("volume_label")),
-            )
-        ).alias("lines")
-    )
-    return lines.select(F.posexplode("lines").alias("__pos", "line")).select(
-        "line", F.format_string(f"{prefix}%d", F.col("__pos")).alias("__ord")
-    )
-
-
-def render_final_report(summaries: DataFrame) -> DataFrame:
-    """The reference's complete tee block (``step3_run_syncdiff.sh:175-244``,
-    ANSI colors omitted): banner + title, the found-files line, the rendered
-    table, and the 汇总统计 tail — or the no-summaries message when there is
-    nothing to report. One ``line`` column, sink-ready.
-
-    The found-files count is the number of latest-run summary rows (one per
-    parsed summary.txt in the text-parser path, one per compared table
-    natively) — ``SUMMARY_FILES`` is already latest-run-filtered when
+    ``final`` is the complete tee block: banner + title, the found-files
+    line, the table and the 汇总统计 tail — or the no-summaries message when
+    the latest run is empty. The found-files count is the number of
+    latest-run rows: ``SUMMARY_FILES`` is already latest-run-filtered when
     ``SUMMARY_COUNT=$(... | wc -l)`` runs (step3:169-172, 185).
+
+    Table rows sort by table name (code-point order, which is Spark's UTF-8
+    binary order); a row without a table name (a parsed summary.txt with no
+    data row) renders after the named rows. The 结构差异 line appears only
+    when the diff count is positive, like the reference's
+    ``if [ "$STRUCTURE_DIFF" -gt 0 ]`` guard.
     """
-    spark = summaries.sparkSession
-    # One job renders and collects the body rows: the found-files count (which
-    # picks the report shape, so it must be eager) and the body lines come from
-    # the same pass — no persist, so nothing is left cached across renders
-    # (ADVICE r4: the previous persist was never released on the normal path).
-    # Driver state is bounded by construction: one ~60-byte rendered line per
-    # compared table of the latest run — the report is a terminal/tee artifact
-    # in the reference (step3_run_syncdiff.sh:175) and is driver-sized by
-    # definition, the same budget as the drill-down IN-list cap.
-    status = F.when(F.col("structure_ok"), F.lit(STRUCTURE_OK_LABEL)).otherwise(
-        F.lit(STRUCTURE_DIFF_LABEL)
-    )
-    body_rows = (
+    rows = (
         latest_run(summaries)
         .select(
-            report_row_line(
-                F.col("table"), status, F.col("upcount"), F.col("downcount")
-            ).alias("line"),
-            F.concat(F.lit("2_"), F.col("table")).alias("__ord"),
+            "table",
+            "structure_ok",
+            F.col("upcount").cast("string").alias("up"),
+            F.col("downcount").cast("string").alias("down"),
+            # A20: a non-numeric count renders raw but drops out of the sums
+            F.col("upcount").cast("string").try_cast("long").alias("up_n"),
+            F.col("downcount").cast("string").try_cast("long").alias("down_n"),
         )
         .collect()
     )
-    n_files = len(body_rows)
-    head = [
-        (REPORT_BANNER, "0_0"),
-        (REPORT_TITLE, "0_1"),
-        (REPORT_BANNER, "0_2"),
-        ("", "0_3"),
-    ]
-    schema = "line string, __ord string"
-    if n_files == 0:
-        head.append((NO_SUMMARY_LINE, "0_4"))
-        return local_frame(spark, head, schema).orderBy("__ord").select("line")
-    head += [
-        (f"[INFO] 找到 {n_files} 个 summary.txt 文件", "0_4"),
-        ("", "0_5"),
-        (REPORT_BORDER, "1_0"),
-        (REPORT_HEADER, "1_1"),
-        (REPORT_BORDER, "1_2"),
-        (REPORT_BORDER, "3_0"),
-        ("", "4_0"),
-        ("", "6_0"),
-    ]
-    frame = local_frame(
-        spark, head + [(r["line"], r["__ord"]) for r in body_rows], schema
+    rows.sort(key=lambda r: (r.table is None, r.table or ""))
+    n, ok = len(rows), sum(1 for r in rows if r.structure_ok)
+    diff = n - ok  # a NULL structure_ok counts as a diff
+    up = sum(r.up_n for r in rows if r.up_n is not None)
+    down = sum(r.down_n for r in rows if r.down_n is not None)
+    # "总数据量: $((TOTAL_UPCOUNT / 1000000))M 行" — upcount only, not
+    # up+down (step3_run_syncdiff.sh:241)
+    totals = Totals(n, ok, diff, up, down, f"{up // 1_000_000}M 行")
+    table = [REPORT_BORDER, REPORT_HEADER, REPORT_BORDER]
+    for r in rows:
+        status = STRUCTURE_OK_LABEL if r.structure_ok else STRUCTURE_DIFF_LABEL
+        table.append(report_row_line(r.table, status, r.up, r.down))
+    table.append(REPORT_BORDER)
+    tail = [f"[INFO] 汇总统计: 共 {n} 张表", f"  结构一致: {ok} 张"]
+    if diff > 0:
+        tail.append(f"  结构差异: {diff} 张")
+    tail.append(f"  总数据量: {totals.volume_label}")
+    final = [REPORT_BANNER, REPORT_TITLE, REPORT_BANNER, ""]
+    if rows:
+        found = f"[INFO] 找到 {n} 个 summary.txt 文件"
+        final += [found, "", *table, "", *tail, ""]
+    else:
+        final.append(NO_SUMMARY_LINE)
+    return Report(final, table, tail, totals)
+
+
+def _lines(summaries: DataFrame, lines: list[str]) -> DataFrame:
+    return local_frame(summaries.sparkSession, [(s,) for s in lines], "line string")
+
+
+def render_final_report(summaries: DataFrame) -> DataFrame:
+    """:func:`report`'s complete final-report block as a sink-ready ``line``
+    column."""
+    return _lines(summaries, report(summaries).final)
+
+
+def render_report(summaries: DataFrame) -> DataFrame:
+    """A24/A25: :func:`report`'s fixed-width ASCII table as a ``line``
+    column, one row per table of the latest run."""
+    return _lines(summaries, report(summaries).table)
+
+
+def render_summary_block(summaries: DataFrame) -> DataFrame:
+    """A21-A23: :func:`report`'s 汇总统计 tail block
+    (``step3_run_syncdiff.sh:237-243``) as a ``line`` column."""
+    return _lines(summaries, report(summaries).tail)
+
+
+def report_totals(summaries: DataFrame) -> DataFrame:
+    """A20-A23: :func:`report`'s totals as a one-row frame."""
+    return local_frame(
+        summaries.sparkSession, [report(summaries).totals], _TOTALS_SCHEMA
     )
-    tail = _summary_block_ordered(summaries, prefix="5_")
-    return frame.unionByName(tail).orderBy("__ord").select("line")
