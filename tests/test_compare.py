@@ -223,6 +223,77 @@ def test_column_drift_requires_pk(spark, master, slave):
         cmp.column_drift()
 
 
+@pytest.mark.parametrize(
+    "kind, n_buckets, cap, n_drift",
+    [
+        ("ids", 4096, None, 6),
+        ("frame", 4096, 2, 6),
+        ("skip", 8, None, 40),
+        ("empty", 8, None, 0),
+    ],
+)
+def test_column_drift_counts_match_construction_in_every_scope(
+    spark, monkeypatch, kind, n_buckets, cap, n_drift
+):
+    """column_drift's per-column counts equal the counts known by
+    construction in every scope kind, both standalone (bucket restriction)
+    and after the summary filled the diff (pk-IN retrieval in the IN-list
+    scope). Every slave
+    row rewrites 0.0 to -0.0 (top level and inside a reordered map): no
+    drift. Keys 1..n_drift drift s (pk % 3 == 0), d and m (pk % 3 == 1),
+    or s and the dotted column x.y (pk % 3 == 2); k never drifts."""
+    if cap is not None:
+        monkeypatch.setattr(_INLIST_CAP, cap)
+    schema = (
+        "pk bigint, s string, d double, m map<string, double>, `x.y` int, "
+        "k string"
+    )
+    master_rows = [
+        (pk, f"s{pk}", 0.0 if pk % 4 == 0 else pk * 0.25,
+         {"a": float(pk), "z": 0.0}, pk, "same")
+        for pk in range(1, 201)
+    ]
+    slave_rows = []
+    for pk, s, d, m, xy, k in master_rows:
+        d = -0.0 if d == 0.0 else d
+        m = {"z": -0.0, "a": m["a"]}
+        if pk <= n_drift:
+            if pk % 3 == 1:
+                d, m["a"] = d + 1.0, m["a"] + 0.5
+            else:
+                s = s + "_x"
+            if pk % 3 == 2:
+                xy += 1
+        slave_rows.append((pk, s, d, m, xy, k))
+    left = spark.createDataFrame(master_rows, schema)
+    right = spark.createDataFrame(slave_rows, schema)
+    drifted = range(1, n_drift + 1)
+    by_rem = [sum(1 for pk in drifted if pk % 3 == r) for r in range(3)]
+    want = {
+        "s": by_rem[0] + by_rem[2],
+        "d": by_rem[1],
+        "m": by_rem[1],
+        "x.y": by_rem[2],
+        "k": 0,
+    }
+
+    def counts(cmp):
+        return {r.column_name: r.mismatch_rows for r in cmp.column_drift().collect()}
+
+    cmp = compare_tables(
+        spark, left, right, pk=["pk"],
+        options=CompareOptions(n_buckets=n_buckets), table_name="t",
+    )
+    try:
+        assert cmp.scope().kind == kind
+        assert counts(cmp) == want
+        row = cmp.summary().collect()[0]
+        assert (row.upcount, row.downcount) == (n_drift, n_drift)
+        assert counts(cmp) == want
+    finally:
+        cmp.close()
+
+
 def test_fix_sql_statements(spark, master, slave):
     cmp = compare_tables(spark, master, slave, pk=["pk"], table_name="db.t")
     stmts = [r["fix_sql"] for r in fix_sql(cmp).collect()]
@@ -491,6 +562,43 @@ def test_digest_aggregation_lives_in_compare():
     assert hits and all(h.startswith("operators/compare.py:") for h in hits), hits
     incremental = (root / "operators" / "incremental.py").read_text()
     assert ".join(" not in incremental and "TableCompare(" not in incremental
+
+
+def test_canonical_form_has_one_definition():
+    """The hash-stable canonical form is written once: every string
+    literal in the package that renders ``DECIMAL(38`` or ``0.0D`` sits
+    inside ``hashing._canonical_sql`` (comments and docstrings aside), and
+    neither hashing.py nor compare.py hashes through ``F.xxhash64``."""
+    import ast
+    import inspect
+    from pathlib import Path
+
+    import tidb_large_table_compare_spark as pkg
+    from tidb_large_table_compare_spark.functions import hashing
+
+    root = Path(pkg.__file__).resolve().parent
+    lines, start = inspect.getsourcelines(hashing._canonical_sql)
+    inside = range(start, start + len(lines))
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        docstrings = {
+            id(n.value) for n in ast.walk(tree)
+            if isinstance(n, ast.Expr) and isinstance(n.value, ast.Constant)
+        }
+        hits += [
+            (path.relative_to(root).as_posix(), node.lineno)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and id(node) not in docstrings
+            and ("DECIMAL(38" in node.value or "0.0D" in node.value)
+        ]
+    assert hits and all(
+        p == "functions/hashing.py" and n in inside for p, n in hits
+    ), hits
+    for mod in ("functions/hashing.py", "operators/compare.py"):
+        assert "F.xxhash64(" not in (root / mod).read_text(), mod
 
 
 def test_row_pairing_is_one_signed_aggregation():
@@ -871,57 +979,56 @@ def test_compare_tolerates_bigint_vs_decimal20_pk(spark):
 
 
 def test_sql_fragment_hash_identity(spark):
-    """Round-12 fast path: row_hash/bucket_id built as one SQL expression
-    must be BIT-identical to the Column-built definition of record —
-    bucket assignments feed persisted digest artifacts, so any divergence
-    here would require a BUCKETING_VERSION bump. Covers the widening,
-    double (-0.0 / rounding), null-flag, and passthrough branches."""
-    from pyspark.sql import types as T
-
+    """row_hash, bucket_id and canonical_value reproduce golden values
+    produced by the Column-built canonicalizer the one SQL-text definition
+    replaced (tests/canonical_golden.py): every scalar branch, maps,
+    arrays and structs nested in each other, field and column names
+    holding a dot and a backtick, at float_round None and 3. Bucket ids
+    feed persisted digest artifacts, so a moved value needs a
+    BUCKETING_VERSION bump."""
+    from tests import canonical_golden as G
     from tidb_large_table_compare_spark.functions import hashing as H
 
-    rows = [
-        (1, 0.0, None, None),
-        (2, -0.0, "x", "2024-01-01 00:00:01"),
-        (3, 1.23456789, "", None),
-        (4, None, "y", "1999-12-31 23:59:59"),
-    ]
-    df = spark.createDataFrame(rows, "id int, d double, s string, t string")
-    df = df.withColumn("t", F.col("t").cast("timestamp_ntz")).withColumn(
-        "dec", (F.col("id") * 7).cast("decimal(12,2)")
-    )
+    assert H.BUCKETING_VERSION == 3
 
-    def old_row_hash(frame, fr):
-        return F.xxhash64(*H.canonical_columns(frame, None, fr))
+    def by_id(frame, cols):
+        rows = frame.select("id", *cols).orderBy("id").collect()
+        return [[r[i + 1] for r in rows] for i in range(len(cols))]
 
-    def old_bucket(pk, n, frame):
-        cols = []
-        fields = {f.name: f.dataType for f in frame.schema.fields}
-        for c in pk:
-            col = F.col(c)
-            dt = fields.get(c)
-            if isinstance(
-                dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-            ):
-                col = col.cast(T.DecimalType(38, 0))
-            elif isinstance(dt, T.DecimalType):
-                col = col.cast(T.DecimalType(38, dt.scale))
-            cols.append(col)
-        return F.pmod(F.xxhash64(*cols), F.lit(n)).alias("bucket")
-
+    df = spark.createDataFrame(G.ROWS, G.SCHEMA)
+    sdf = spark.createDataFrame(G.SCALAR_ROWS, G.SCALAR_DDL)
+    fields = {f.name: f.dataType for f in df.schema.fields}
+    sfields = {f.name: f.dataType for f in sdf.schema.fields}
+    sub = [c for c in df.columns if c != "id"]
     for fr in (None, 3):
-        n_bad = df.select(
-            (H.row_hash(df, None, fr) != old_row_hash(df, fr))
-            .cast("int")
-            .alias("m")
-        ).agg(F.coalesce(F.sum("m"), F.lit(0))).collect()[0][0]
-        assert n_bad == 0
-    n_bad = df.select(
-        (H.bucket_id(["id", "dec"], 4096, df) != old_bucket(["id", "dec"], 4096, df))
-        .cast("int")
-        .alias("m")
-    ).agg(F.coalesce(F.sum("m"), F.lit(0))).collect()[0][0]
-    assert n_bad == 0
-    # complex dtypes must fall back to the Column-built path, not raise
-    arr = df.withColumn("a", F.array("id"))
-    assert arr.select(H.row_hash(arr)).collect()
+        got = by_id(df, [H.row_hash(df, None, fr), H.row_hash(df, sub, fr)])
+        assert got == [G.ROW_HASH[f"{fr}"], G.ROW_HASH[f"{fr}_sub"]]
+        # aliased like the struct column sm: sm's fields m and a must not
+        # resolve to the top-level columns m and as
+        aliased = df.alias("sm")
+        assert by_id(aliased, [H.row_hash(aliased, None, fr)]) == [
+            G.ROW_HASH[f"{fr}"]
+        ]
+        scalar = [H.row_hash(sdf, None, fr)] + [
+            F.xxhash64(H.canonical_value(n, sfields[n], fr)) for n in sdf.columns
+        ]
+        assert by_id(sdf, scalar) == [G.ROW_HASH[f"scalar_{fr}"]] + [
+            G.CANONICAL[f"scalar:{n}|{fr}"] for n in sdf.columns
+        ]
+        values = [H.canonical_value(n, fields[n], fr) for n in df.columns]
+        sums = df.agg(
+            *[
+                F.sum(
+                    F.xxhash64("id", F.xxhash64(v), F.to_json(F.struct(v.alias("v"))))
+                    .cast("decimal(38,0)")
+                )
+                for v in values
+            ]
+        ).collect()[0]
+        assert dict(zip(df.columns, sums)) == {
+            n: G.CANONICAL[f"{n}|{fr}"] for n in df.columns
+        }
+    keys = [k for k in G.BUCKET if k != "scalar"]
+    got = by_id(df, [H.bucket_id(k.split("+"), 4096, df) for k in keys])
+    assert dict(zip(keys, got)) == {k: G.BUCKET[k] for k in keys}
+    assert by_id(sdf, [H.bucket_id(G.SCALAR_PK, 4096, sdf)]) == [G.BUCKET["scalar"]]

@@ -273,7 +273,7 @@ def test_hashed_word_ngrams_same_sets(spark):
     )
     both = df.select(
         F.size(word_ngrams(F.col("text"), 3)).alias("ns"),
-        F.size(hashed_word_ngrams(F.col("text"), 3)).alias("nh"),
+        F.size(hashed_word_ngrams("text", 3)).alias("nh"),
     ).collect()
     assert all(r.ns == r.nh for r in both)
     assert [r.nh for r in both] == [3, 6, 0]
@@ -293,7 +293,7 @@ def test_lsh_hot_bucket_cap_bounds_candidates(spark):
     ]
     docs = spark.createDataFrame(boiler + pairs, "doc_id long, text string")
     shingle_sets = docs.select(
-        "doc_id", hashed_word_ngrams(F.col("text"), 5).alias("shingles")
+        "doc_id", hashed_word_ngrams("text", 5).alias("shingles")
     ).persist()
     sigs = minhash_signature_oph_np(shingle_sets, "doc_id").persist()
 
@@ -465,7 +465,7 @@ def test_band_buckets_expr_matches_column_form(spark):
     )
     sigs = minhash_signature_oph_np(
         docs.select(
-            "doc_id", hashed_word_ngrams(F.col("text"), 5).alias("shingles")
+            "doc_id", hashed_word_ngrams("text", 5).alias("shingles")
         ),
         "doc_id",
     ).persist()
@@ -1327,7 +1327,7 @@ def test_prefix_filtered_candidates_complete_vs_naive(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     sets_ = docs.select(
-        "doc_id", hashed_word_ngrams(F.col("text"), 3).alias("shingles")
+        "doc_id", hashed_word_ngrams("text", 3).alias("shingles")
     ).persist()
 
     eg = sets_.select("doc_id", F.explode("shingles").alias("__gram"))
@@ -1365,18 +1365,35 @@ def test_prefix_filtered_candidates_complete_vs_naive(spark):
 
 
 def test_hashed_ngrams_expr_matches_column_form(spark):
-    """The name-based SQL-fragment path of hashed_word_ngrams (round-13
-    construction-cost rewrite) must be bit-identical to the Column-built
-    definition of record — persisted shingle sets and admission indexes
-    key on these hashes. Covers the short-text empty-set branch too."""
-    docs = spark.createDataFrame(
-        [(1, "a b c d e f g h"), (2, "a b"), (3, ""), (4, "x y z w v u")],
-        "doc_id long, text string",
-    )
-    for n in (3, 5):
-        new = docs.select("doc_id", hashed_word_ngrams("text", n).alias("s"))
-        old = docs.select(
-            "doc_id", hashed_word_ngrams(F.col("text"), n).alias("s")
+    """hashed_word_ngrams' hashes are pinned: persisted shingle sets and
+    admission indexes key on them. The golden arrays were produced by the
+    Column-built form this function used to keep as its definition of
+    record. Covers the short-text empty-set branch, and column names
+    holding a backtick (quoted, so it parses) or named like the
+    expression's lambda variable."""
+    from pyspark.sql import types as T
+
+    golden = {
+        3: {
+            1: [-2167479932694485896, 6117671922678514684, -527395794716158111,
+                1275397950698444913, -6814540328198212769, -606970198980039393],
+            2: [], 3: [],
+            4: [-9457663061986884, -735796498069460301, -1438552493079207489,
+                3181214874642800428],
+        },
+        5: {
+            1: [-1706306387128673947, -7055413412549296485,
+                5130039190668232007, 6071042112327139208],
+            2: [], 3: [],
+            4: [-1558849947958070938, 8747853398255708588],
+        },
+    }
+    rows = [(1, "a b c d e f g h"), (2, "a b"), (3, ""), (4, "x y z w v u")]
+    for name in ("text", "te`xt", "i"):
+        docs = spark.createDataFrame(
+            rows, f"doc_id long, `{name.replace('`', '``')}` string"
         )
-        assert new.schema == old.schema
-        assert sorted(map(str, new.collect())) == sorted(map(str, old.collect()))
+        for n in (3, 5):
+            out = docs.select("doc_id", hashed_word_ngrams(name, n).alias("s"))
+            assert out.schema["s"].dataType == T.ArrayType(T.LongType())
+            assert {r.doc_id: r.s for r in out.collect()} == golden[n]

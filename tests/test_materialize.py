@@ -70,7 +70,7 @@ def test_operator_parity_under_persist_mode(spark):
         "doc_id long, text string",
     )
     sets_ = docs.select(
-        "doc_id", hashed_word_ngrams(F.col("text"), 3).alias("shingles")
+        "doc_id", hashed_word_ngrams("text", 3).alias("shingles")
     )
     sigs = minhash_signature_oph_np(sets_, "doc_id")
 

@@ -82,16 +82,33 @@ def test_equal_values_equivalent_across_any_widening_pair(spark, lt, rt, vals, n
 
 def _reference_diff(master, slave):
     """(pk, diff_type) rows of a plain full-outer join on pk with
-    null-safe column equality — no digests, no bucket scope."""
-    from pyspark.sql import functions as F
+    null-safe column equality (a map as its sorted entries) — no digests,
+    no bucket scope."""
+    from functools import reduce
 
-    l = master.select("pk", *[F.col(c).alias(f"l_{c}") for c in ("s", "d")],
-                      F.lit(True).alias("l_row"))
-    r = slave.select("pk", *[F.col(c).alias(f"r_{c}") for c in ("s", "d")],
-                     F.lit(True).alias("r_row"))
-    j = l.join(r, "pk", "full_outer")
-    same = F.col("l_s").eqNullSafe(F.col("r_s")) & F.col("l_d").eqNullSafe(
-        F.col("r_d")
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    cols = [f for f in master.schema.fields if f.name != "pk"]
+
+    def side(df, p):
+        return df.select(
+            "pk",
+            *[
+                (
+                    F.array_sort(F.map_entries(f.name))
+                    if isinstance(f.dataType, T.MapType)
+                    else F.col(f.name)
+                ).alias(f"{p}_{f.name}")
+                for f in cols
+            ],
+            F.lit(True).alias(f"{p}_row"),
+        )
+
+    j = side(master, "l").join(side(slave, "r"), "pk", "full_outer")
+    same = reduce(
+        lambda a, b: a & b,
+        [F.col(f"l_{f.name}").eqNullSafe(F.col(f"r_{f.name}")) for f in cols],
     )
     kind = (
         F.when(F.col("r_row").isNull(), "missing_in_right")
@@ -129,13 +146,32 @@ def test_compare_counts_match_construction(spark, plan, nb, cap):
     from tidb_large_table_compare_spark.operators import compare as compare_mod
 
     n, missing, modified, n_extra = plan
-    schema = "pk bigint, s string, d double"
-    master = spark.createDataFrame(_master_rows(n), schema)
-    slave_rows = [
-        (pk, (s + "_x" if s else "mod") if pk in modified else s, d)
+    # every 11th d and every third map value is 0.0 on the master and
+    # -0.0 on the slave (map entries also in reverse order): canonically
+    # equal, never drift. A modified row drifts s (odd pk) or only its
+    # map (even pk).
+    schema = "pk bigint, s string, d double, m map<string, double>"
+    master_rows = [
+        (pk, s, 0.0 if pk % 11 == 0 else d,
+         {"a": pk * 0.5, "z": 0.0 if pk % 3 == 0 else 1.0})
         for pk, s, d in _master_rows(n)
-        if pk not in missing
-    ] + [(n + 1000 + i, f"extra{i}", float(i)) for i in range(n_extra)]
+    ]
+    master = spark.createDataFrame(master_rows, schema)
+    slave_rows = []
+    for pk, s, d, m in master_rows:
+        if pk in missing:
+            continue
+        d = -0.0 if d == 0.0 else d
+        m = {k: -0.0 if v == 0.0 else v for k, v in reversed(m.items())}
+        if pk in modified and pk % 2:
+            s = s + "_x" if s else "mod"
+        elif pk in modified:
+            m["a"] += 1.0
+        slave_rows.append((pk, s, d, m))
+    slave_rows += [
+        (n + 1000 + i, f"extra{i}", float(i), {"a": float(i)})
+        for i in range(n_extra)
+    ]
     slave = spark.createDataFrame(slave_rows, schema)
     opts = (
         CompareOptions(chunk_size=16) if nb is None else CompareOptions(n_buckets=nb)

@@ -2,6 +2,5 @@
 
 from tidb_large_table_compare_spark.functions.hashing import (  # noqa: F401
     bucket_id,
-    canonical_columns,
     row_hash,
 )

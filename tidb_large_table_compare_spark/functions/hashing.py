@@ -8,7 +8,8 @@ and compares chunk-by-chunk before drilling down (SURVEY.md §2.B B5/B6).
 Hard parts handled here (SURVEY.md §7):
 
 - **Type-stable canonical forms.** ``xxhash64`` hashes Spark's internal binary
-  representation, so every column is first normalized to a canonical value:
+  representation, so every column is first normalized to a canonical value,
+  written once as SQL text (``_canonical_sql``) for every dtype:
   floats/doubles get ``-0.0 → 0.0`` (they compare equal but have different
   bits) and optional declared rounding for cross-engine tolerance; map columns
   are serialized via sorted-key JSON (Spark refuses to hash MapType because
@@ -34,9 +35,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 __all__ = [
-    "canonical_columns",
     "canonical_value",
+    "quote_name",
     "row_hash",
+    "sql_string",
     "bucket_id",
     "in_list",
 ]
@@ -81,8 +83,7 @@ def in_list(col_name: str, ids: list, dtype: T.DataType | None = None) -> Column
         return F.lit(False)
     rendered = [render_sql_id(i, dtype) for i in ids]
     if all(r is not None for r in rendered):
-        quoted = col_name.replace("`", "``")  # user PK names may need quoting
-        return F.expr(f"`{quoted}` IN ({','.join(rendered)})")
+        return F.expr(f"{quote_name(col_name)} IN ({','.join(rendered)})")
     return F.col(col_name).isin(ids)
 
 
@@ -201,9 +202,39 @@ def _ts_body(dt: datetime.datetime) -> str:
     )
 
 
-def _canonical(col: Column, dtype: T.DataType, float_round: int | None) -> Column:
-    """Normalize one column to a hash-stable canonical form."""
-    if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+def quote_name(name: str) -> str:
+    """``name`` as one backticked SQL identifier, inner backticks doubled:
+    it resolves verbatim, dots and backticks included."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(s: str) -> str:
+    """``s`` as one single-quoted SQL string literal (backslashes and
+    quotes escaped)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _null_flag(ref: str) -> str:
+    return f"CAST(({ref} IS NULL) AS INT)"
+
+
+def _canonical_sql(
+    ref: str, dtype: T.DataType, float_round: int | None, depth: int = 0
+) -> str:
+    """SQL text of ``ref``'s hash-stable canonical form — the one
+    definition ``row_hash``, ``bucket_id`` and ``canonical_value`` share.
+
+    ``ref`` is SQL text naming the value: a quoted column, or a path from
+    a lambda variable; ``depth`` counts the enclosing lambdas, so each
+    nesting level binds its own variable name. One ``F.expr`` over this
+    text crosses py4j once and parses JVM-side, where building the same
+    tree through the Column API costs several round trips per node
+    (PERFORMANCE.md "One canonical form").
+    """
+    if isinstance(dtype, _INTEGRAL):
         # Widen ALL scale-0 numerics — integrals and DECIMAL(p,0) alike —
         # to one canonical form, DECIMAL(38,0): equal values must digest
         # equally across the whole benign-widening chain
@@ -213,133 +244,80 @@ def _canonical(col: Column, dtype: T.DataType, float_round: int | None) -> Colum
         # native bigint. xxhash64 hashes the PHYSICAL form (long vs
         # unscaled-bytes, flipping at precision 19), so no narrower form
         # covers the chain. The structure diff still reports the type
-        # change (B1); cost vs hashing raw longs measured in-session at
-        # noise level (cmp_summary_orders 1.05 vs 1.06 s medians,
-        # PERFORMANCE.md round-9).
-        return col.cast(T.DecimalType(38, 0))
+        # change (B1).
+        return f"CAST({ref} AS DECIMAL(38,0))"
     if isinstance(dtype, T.DecimalType):
         # Decimals with a nonzero scale widen to the max precision at the
-        # DECLARED scale — equal values digest equally across benign
-        # precision widening; a SCALE mismatch stays a structure-diff-
-        # reported type change (5 vs 5.00 is a declared-semantics change,
-        # not a widening). Scale-0 decimals land on the integral chain's
-        # canonical form above, closing the bigint↔DECIMAL(20,0) pair.
-        return col.cast(T.DecimalType(38, dtype.scale))
+        # DECLARED scale; a SCALE mismatch stays a structure-diff-reported
+        # type change (5 vs 5.00 is a declared-semantics change, not a
+        # widening). Scale-0 decimals land on the integral form above.
+        return f"CAST({ref} AS DECIMAL(38,{dtype.scale}))"
     if isinstance(dtype, (T.DoubleType, T.FloatType)):
-        c = col.cast("double")
+        c = f"CAST({ref} AS DOUBLE)"
         if float_round is not None:
-            c = F.round(c, float_round)
-        # -0.0 == 0.0 is true, so this folds negative zero onto positive zero;
-        # NaN is left alone (Spark canonicalizes NaN bits in UnsafeRow).
-        return F.when(c == F.lit(0.0), F.lit(0.0)).otherwise(c)
+            c = f"round({c}, {int(float_round)})"
+        # -0.0 = 0.0 is true, so this folds negative zero onto positive
+        # zero; NaN is left alone (Spark canonicalizes NaN bits in
+        # UnsafeRow). The D suffix pins a DOUBLE literal: a bare 0.0
+        # parses as DECIMAL(1,1).
+        return f"CASE WHEN {c} = 0.0D THEN 0.0D ELSE {c} END"
+    x = f"__x{depth}"
     if isinstance(dtype, T.MapType):
-        # Serialize via sorted entries (Spark refuses to hash MapType), with
-        # keys/values recursively canonicalized so e.g. double map values get
-        # the same rounding/-0.0 treatment as top-level doubles.
-        entry_type = T.StructType(
+        # Spark refuses to hash MapType (iteration order is undefined):
+        # serialize the sorted entries, keys and values canonicalized too
+        entry = T.StructType(
             [
                 T.StructField("key", dtype.keyType),
                 T.StructField("value", dtype.valueType),
             ]
         )
-        entries = F.transform(
-            F.array_sort(F.map_entries(col)),
-            _element_canonicalizer(entry_type, float_round),
+        element = _canonical_element(x, entry, float_round, depth)
+        return (
+            f"to_json(transform(array_sort(map_entries({ref})), "
+            f"{x} -> {element}))"
         )
-        return F.to_json(entries)
     if isinstance(dtype, T.ArrayType):
-        return F.transform(col, _element_canonicalizer(dtype.elementType, float_round))
+        element = _canonical_element(x, dtype.elementType, float_round, depth)
+        return f"transform({ref}, {x} -> {element})"
     if isinstance(dtype, T.StructType):
-        # Rebuild the struct with an interleaved null-flag per field (nested
-        # NULL-skip ambiguity mirrors the top-level one) and recursively
-        # canonicalized field values.
-        parts: list[Column] = []
+        # an interleaved null flag per field (the nested NULL-skip
+        # ambiguity mirrors the top-level one). struct(), not
+        # named_struct(): its automatic field names (a field extraction
+        # keeps the field's name, any other expression is colN) appear in
+        # a map's JSON, so they are part of the hashed form. Fields are
+        # extracted as ref['name'], never ref.name: a dotted path would
+        # resolve to a top-level column when the frame's alias equals the
+        # struct column's name.
+        parts: list[str] = []
         for f in dtype.fields:
-            parts.append(F.isnull(col.getField(f.name)).cast("int"))
-            parts.append(_canonical(col.getField(f.name), f.dataType, float_round))
-        return F.struct(*parts)
-    return col
+            v = f"{ref}[{sql_string(f.name)}]"
+            parts += [_null_flag(v), _canonical_sql(v, f.dataType, float_round, depth)]
+        return f"struct({', '.join(parts)})"
+    return ref
 
 
-def _element_canonicalizer(dtype: T.DataType, float_round: int | None):
-    """1-arg lambda factory for F.transform — transform's lambda arity is
-    semantic (a 2-arg lambda receives (element, index)), so never close over
-    extra defaults. Elements are wrapped as (null-flag, canonical value) so
-    NULL elements can't alias adjacent values in the hashed byte stream."""
-
-    def canon(x: Column) -> Column:
-        return F.struct(
-            F.isnull(x).cast("int").alias("isnull"),
-            _canonical(x, dtype, float_round).alias("v"),
-        )
-
-    return canon
+def _canonical_element(
+    x: str, dtype: T.DataType, float_round: int | None, depth: int
+) -> str:
+    """A collection element as (null flag, canonical value), so NULL
+    elements cannot alias adjacent values in the hashed byte stream."""
+    return (
+        f"named_struct('isnull', {_null_flag(x)}, "
+        f"'v', {_canonical_sql(x, dtype, float_round, depth + 1)})"
+    )
 
 
 def canonical_value(
-    col: Column, dtype: T.DataType, float_round: int | None = None
+    name: str, dtype: T.DataType, float_round: int | None = None
 ) -> Column:
-    """Public form of the canonical normalization ``row_hash`` applies.
+    """Column ``name``'s canonical form, as ``row_hash`` hashes it.
 
     Lets other operators compare *individual* columns under exactly the
     equality the digests use (integral widening, -0.0 folding, declared
     float rounding, hashable map/struct forms) — e.g. the per-column drift
     drill-down, whose counts must reconcile with the row-level verdicts.
     """
-    return _canonical(col, dtype, float_round)
-
-
-def canonical_columns(
-    df: DataFrame,
-    cols: list[str] | None = None,
-    float_round: int | None = None,
-) -> list[Column]:
-    """Interleaved (null-flag, canonical-value) expressions in sorted column order."""
-    names = sorted(cols if cols is not None else df.columns)
-    fields = {f.name: f.dataType for f in df.schema.fields}
-    out: list[Column] = []
-    for name in names:
-        out.append(F.isnull(F.col(name)).cast("int"))
-        out.append(_canonical(F.col(name), fields[name], float_round))
-    return out
-
-
-def _quote_name(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _canonical_sql_fragment(
-    name: str, dtype: T.DataType, float_round: int | None
-) -> str | None:
-    """SQL-text form of :func:`_canonical` for SCALAR dtypes, or ``None``
-    when the dtype needs the Column-built path (map/array/struct).
-
-    Why a string form exists at all: each Column-API operation costs
-    several py4j round trips, and the canonical projection over a
-    9-column table measured ~94 ms of pure driver time PER BUILD (round
-    12 micro-profile: ~430 round trips), rebuilt four times per compare
-    entry. One ``F.expr`` over the whole fragment list crosses py4j once
-    and parses JVM-side into the IDENTICAL Catalyst nodes — ``CAST(c AS
-    DECIMAL(38,0))`` ≡ ``col.cast(DecimalType(38,0))``, ``CASE WHEN c =
-    0.0D THEN 0.0D ELSE c END`` ≡ the when/otherwise build (the ``D``
-    suffix pins a DOUBLE literal; a bare ``0.0`` would parse as
-    DECIMAL(1,1) and coerce differently) — so hashes and bucket
-    assignments are bit-identical (pinned by
-    test_sql_fragment_hash_identity; no BUCKETING_VERSION bump needed).
-    """
-    q = _quote_name(name)
-    if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return f"CAST({q} AS DECIMAL(38,0))"
-    if isinstance(dtype, T.DecimalType):
-        return f"CAST({q} AS DECIMAL(38,{dtype.scale}))"
-    if isinstance(dtype, (T.DoubleType, T.FloatType)):
-        c = f"CAST({q} AS DOUBLE)"
-        if float_round is not None:
-            c = f"round({c}, {int(float_round)})"
-        return f"CASE WHEN {c} = 0.0D THEN 0.0D ELSE {c} END"
-    if isinstance(dtype, (T.MapType, T.ArrayType, T.StructType)):
-        return None
-    return q
+    return F.expr(_canonical_sql(quote_name(name), dtype, float_round))
 
 
 def row_hash(
@@ -347,22 +325,15 @@ def row_hash(
     cols: list[str] | None = None,
     float_round: int | None = None,
 ) -> Column:
-    """64-bit canonical row hash over ``cols`` (default: all columns).
-
-    All-scalar schemas take the single-``F.expr`` fast path (one py4j
-    round trip instead of ~430 — see :func:`_canonical_sql_fragment`);
-    any complex column falls back to the Column-built form, which remains
-    the definition of record."""
-    names = sorted(cols if cols is not None else df.columns)
+    """64-bit canonical row hash over ``cols`` (default: all columns):
+    xxhash64 over an interleaved (null flag, canonical value) pair per
+    column, in sorted column-name order."""
     fields = {f.name: f.dataType for f in df.schema.fields}
-    frags = [_canonical_sql_fragment(n, fields[n], float_round) for n in names]
-    if all(f is not None for f in frags):
-        parts: list[str] = []
-        for n, f in zip(names, frags):
-            parts.append(f"CAST(({_quote_name(n)} IS NULL) AS INT)")
-            parts.append(f)
-        return F.expr(f"xxhash64({', '.join(parts)})")
-    return F.xxhash64(*canonical_columns(df, cols, float_round))
+    parts: list[str] = []
+    for n in sorted(cols if cols is not None else df.columns):
+        q = quote_name(n)
+        parts += [_null_flag(q), _canonical_sql(q, fields[n], float_round)]
+    return F.expr(f"xxhash64({', '.join(parts)})")
 
 
 # Version of the bucket-ASSIGNMENT function below. Persisted digest
@@ -386,50 +357,27 @@ def row_hash(
 BUCKETING_VERSION = 3
 
 
-def bucket_id(
-    pk_cols: list[str], n_buckets: int, df: DataFrame | None = None
-) -> Column:
+def bucket_id(pk_cols: list[str], n_buckets: int, df: DataFrame) -> Column:
     """Hash-bucket id from the PK — the engine's 'chunk' (SURVEY.md §1.1).
 
     Physical PK-range chunks (reference ``chunk-size = 5000``) become hash
     buckets: Spark partitioning already gives locality, and hash bucketing is
     skew-resistant without needing PK statistics.
 
-    Pass ``df`` so numeric PK columns are widened to their canonical
-    chain form BEFORE hashing — DECIMAL(38,0) for every scale-0 numeric
-    (integrals and DECIMAL(p,0) alike), DECIMAL(38, scale) otherwise —
-    the same canonicalization ``row_hash`` applies. Without it, an INT
-    pk on one side and a BIGINT (or DECIMAL(20,0), the TiDB
-    unsigned-BIGINT JDBC mapping) on the other put identical rows in
-    DIFFERENT buckets (xxhash64 hashes the raw physical bytes),
-    flagging every bucket bad.
-
-    Omitting ``df`` hashes the columns RAW (the schema is unknown, and a
-    string pk must not be cast to decimal) — such buckets are NOT
-    comparable with any df-supplied assignment, including every digest
-    artifact the compare family writes. Every production call site
-    passes ``df``; the df-less form is expression-building convenience
-    only.
+    Numeric PK columns (by ``df``'s schema) are hashed in their canonical
+    form — DECIMAL(38,0) for every scale-0 numeric, DECIMAL(38, scale)
+    otherwise — so an INT pk on one side and a BIGINT (or DECIMAL(20,0),
+    the TiDB unsigned-BIGINT JDBC mapping) on the other put identical rows
+    in the SAME bucket. Every other PK type hashes raw: applying the
+    double or complex forms here would move bucket assignments
+    (``BUCKETING_VERSION``).
     """
-    fields = (
-        {f.name: f.dataType for f in df.schema.fields} if df is not None else {}
-    )
-    # single-F.expr fast path (same rationale and identity argument as
-    # row_hash's — see _canonical_sql_fragment); only the two numeric
-    # widening branches and the raw passthrough exist here, so every PK
-    # column is expressible unless its name defeats quoting
+    fields = {f.name: f.dataType for f in df.schema.fields}
     parts: list[str] = []
     for c in pk_cols:
-        q = _quote_name(c)
-        dtype = fields.get(c)
-        if isinstance(
-            dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-        ):
-            parts.append(f"CAST({q} AS DECIMAL(38,0))")  # scale-0 chain form
-        elif isinstance(dtype, T.DecimalType):
-            parts.append(f"CAST({q} AS DECIMAL(38,{dtype.scale}))")
-        else:
-            parts.append(q)
+        q, dtype = quote_name(c), fields.get(c)
+        numeric = isinstance(dtype, (*_INTEGRAL, T.DecimalType))
+        parts.append(_canonical_sql(q, dtype, None) if numeric else q)
     return F.expr(
         f"pmod(xxhash64({', '.join(parts)}), {int(n_buckets)})"
     ).alias("bucket")

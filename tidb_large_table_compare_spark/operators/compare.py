@@ -46,6 +46,7 @@ from tidb_large_table_compare_spark.functions.hashing import (
     in_list,
     render_sql_id,
     row_hash,
+    sql_string,
 )
 from tidb_large_table_compare_spark.functions.localframe import local_frame
 from tidb_large_table_compare_spark.functions.partitioning import estimate_rows
@@ -612,24 +613,28 @@ class TableCompare:
             scope = self.scope()
             lsrc = scope.restrict(self.left, self.pk)
             rsrc = scope.restrict(self.right, self.pk)
+        # positional aliases: a user column name never reaches a parsed
+        # column reference, only the stack's string literal
         lrows, rrows = (
             src.select(
                 *self.pk,
                 *[
-                    canonical_value(F.col(c), df.schema[c].dataType, fr)
-                    .alias(f"__{side}_{c}")
-                    for c in cols
+                    canonical_value(c, df.schema[c].dataType, fr)
+                    .alias(f"__{side}{i}")
+                    for i, c in enumerate(cols)
                 ],
             )
             for src, df, side in ((lsrc, self.left, "l"), (rsrc, self.right, "r"))
         )
         counts = lrows.join(rrows, self.pk).agg(
             *[
-                F.count_if(~F.col(f"__l_{c}").eqNullSafe(F.col(f"__r_{c}"))).alias(c)
-                for c in cols
+                F.count_if(~F.col(f"__l{i}").eqNullSafe(F.col(f"__r{i}"))).alias(
+                    f"__n{i}"
+                )
+                for i in range(len(cols))
             ]
         )
-        stack_args = ", ".join(f"'{c}', `{c}`" for c in cols)
+        stack_args = ", ".join(f"{sql_string(c)}, __n{i}" for i, c in enumerate(cols))
         return counts.select(
             F.expr(
                 f"stack({len(cols)}, {stack_args}) AS (column_name, mismatch_rows)"

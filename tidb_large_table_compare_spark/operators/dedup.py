@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tidb_large_table_compare_spark.functions.hashing import quote_name
 from tidb_large_table_compare_spark.functions.materialize import materialize
 
 __all__ = [
@@ -92,8 +93,9 @@ def word_ngrams(text: Column, n: int) -> Column:
     )
 
 
-def hashed_word_ngrams(text: Column | str, n: int) -> Column:
-    """Distinct word n-gram shingles, hashed to int64 at creation.
+def hashed_word_ngrams(text: str, n: int) -> Column:
+    """Distinct word n-gram shingles of column ``text``, hashed to int64
+    at creation.
 
     Identical set semantics to :func:`word_ngrams` (modulo 2^-64 hash
     collisions), but every downstream stage — minhash binning, LSH band
@@ -101,27 +103,18 @@ def hashed_word_ngrams(text: Column | str, n: int) -> Column:
     ~n-word strings: smaller persisted intermediates, cheaper
     array_intersect/array_union, same Jaccard values.
 
-    A plain column NAME takes the single ``F.expr`` SQL-fragment path
-    (~2× cheaper to construct than the Column-built tree — the same
-    round-13 treatment as ``signature_band_buckets``; value-identity
-    pinned by ``test_hashed_ngrams_expr_matches_column_form``). An
-    arbitrary ``Column`` keeps the Column-built definition of record.
+    Built as one ``F.expr``, ~2× cheaper to construct than the same tree
+    through the Column API (as for ``signature_band_buckets``); hashes
+    pinned by ``test_hashed_ngrams_expr_matches_column_form``.
     """
-    if isinstance(text, str):
-        t = f"split(`{text}`, ' ')"
-        return F.expr(
-            f"CASE WHEN size({t}) >= {n} THEN array_distinct(transform("
-            f"sequence(1, size({t}) - {n} + 1), "
-            f"i -> xxhash64(concat_ws(' ', slice({t}, i, {n}))))) "
-            f"ELSE CAST(array() AS array<bigint>) END"
-        )
-    toks = F.split(text, " ")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - n + 1),
-        lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i, n))),
-    )
-    return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<bigint>")
+    # the lambda variable shadows a column of the same name inside the
+    # lambda body, so it takes a name no text column is expected to have
+    t = f"split({quote_name(text)}, ' ')"
+    return F.expr(
+        f"CASE WHEN size({t}) >= {n} THEN array_distinct(transform("
+        f"sequence(1, size({t}) - {n} + 1), "
+        f"__i -> xxhash64(concat_ws(' ', slice({t}, __i, {n}))))) "
+        f"ELSE CAST(array() AS array<bigint>) END"
     )
 
 

@@ -25,7 +25,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from tidb_large_table_compare_spark.functions.hashing import canonical_value
+from tidb_large_table_compare_spark.functions.hashing import (
+    canonical_value,
+    quote_name,
+    sql_string,
+)
 
 __all__ = ["profile_table"]
 
@@ -52,14 +56,13 @@ def profile_table(
     fields = {f.name: f.dataType for f in df.schema.fields}
     aggs = []
     for c in names:
-        # explicit backtick quoting: a bare F.col(c)/df[c] PARSES the name
-        # (dots → nesting, a lone backtick → syntax error), so quote the
-        # whole name with inner backticks doubled — resolves verbatim
-        col = F.col(f"`{c.replace('`', '``')}`")
+        # a bare F.col(c)/df[c] PARSES the name (dots → nesting, a lone
+        # backtick → syntax error), so quote it: resolves verbatim
+        col = F.col(quote_name(c))
         if isinstance(fields[c], T.MapType):
             # maps are neither groupable nor orderable — profile the same
             # sorted-entry JSON serialization the row digests hash
-            col = canonical_value(col, fields[c], None)
+            col = canonical_value(c, fields[c], None)
         aggs += [
             F.count(F.lit(1)).cast("bigint").alias(f"__rows_{c}"),
             F.count(F.when(col.isNull(), 1)).cast("bigint").alias(f"__nulls_{c}"),
@@ -70,17 +73,11 @@ def profile_table(
     one = df.agg(*aggs)
     # user column names land in a rendered SQL fragment twice — as a
     # string literal and inside backticked identifiers — so escape both
-    # forms (same class of bug as hashing.in_list's backtick escape): a
-    # name containing ' or ` or \ must not break or mis-split the expr
-    def lit(c: str) -> str:
-        return c.replace("\\", "\\\\").replace("'", "\\'")
-
-    def ident(c: str) -> str:
-        return c.replace("`", "``")
-
+    # forms: a name containing ' or ` or \ must not break or mis-split
+    # the expr
+    stats = ("rows", "nulls", "dist", "min", "max")
     stack_args = ", ".join(
-        f"'{lit(c)}', `__rows_{ident(c)}`, `__nulls_{ident(c)}`, "
-        f"`__dist_{ident(c)}`, `__min_{ident(c)}`, `__max_{ident(c)}`"
+        ", ".join([sql_string(c)] + [quote_name(f"__{s}_{c}") for s in stats])
         for c in names
     )
     return one.select(
