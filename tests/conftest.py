@@ -11,6 +11,7 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 import os
+import uuid
 
 SF_SMALL = "/root/testdata/sf0.001"
 # the driver checks at sf0.01; override to sweep other scales, e.g.
@@ -25,3 +26,15 @@ def spark():
 
     spark = get_spark("tests")
     yield spark
+
+
+def jobs_in_group(spark, action) -> int:
+    """Spark jobs ``action`` ran, counted through its own job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

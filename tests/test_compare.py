@@ -16,7 +16,7 @@ from tidb_large_table_compare_spark.operators.compare import (
     compare_tables,
 )
 from tidb_large_table_compare_spark.operators.fixsql import fix_sql
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, jobs_in_group
 from tests.fixtures import (
     K_EXTRA,
     K_MISSING,
@@ -721,6 +721,53 @@ def test_keyed_diff_is_persisted_once_per_drilled_scope(spark, monkeypatch):
         monkeypatch.undo()
 
 
+def test_bucket_scope_is_one_action_in_every_kind(spark, monkeypatch):
+    """bucket_scope collects the mismatched-bucket set once and picks the
+    kind from it: in the empty, IN-list, frame and skip kinds the scope
+    runs the jobs of one action over the digest, with no second pass to
+    count or persist the set. The frame kind's ids are a local relation."""
+    right = _regime_right(_REGIME_BASE)
+    cases = ((4096, None, right, "ids"), (4096, 2, right, "frame"),
+             (8, None, right, "skip"), (8, None, list(_REGIME_BASE), "empty"))
+    for nb, cap, right_rows, kind in cases:
+        if cap is not None:
+            monkeypatch.setattr(_INLIST_CAP, cap)
+
+        def build():
+            return compare_tables(
+                spark,
+                spark.createDataFrame(_REGIME_BASE, _REGIME_SCHEMA),
+                spark.createDataFrame(right_rows, _REGIME_SCHEMA),
+                ["pk"],
+                CompareOptions(n_buckets=nb),
+                "t",
+            )
+
+        one_action = jobs_in_group(spark, build().mismatched_buckets().toArrow)
+        cmp = build()
+        assert jobs_in_group(spark, cmp.scope) == one_action, kind
+        scope = cmp.scope()
+        assert scope.kind == kind
+        if kind == "frame":
+            plan = scope.frame._jdf.queryExecution().analyzed().toString()
+            assert "LocalRelation" in plan and "InMemoryRelation" not in plan
+        monkeypatch.undo()
+
+
+def test_compare_persists_only_the_keyed_diff():
+    """The keyed diff is the one frame compare.py persists: no scope kind
+    holds executor state, so TableCompare has no builder-held frames."""
+    import inspect
+    from pathlib import Path
+
+    from tidb_large_table_compare_spark.operators import compare as compare_mod
+
+    text = Path(compare_mod.__file__).read_text()
+    assert text.count(".persist(") == 1
+    assert ".persist(" in inspect.getsource(TableCompare.diff_rows)
+    assert ".held" not in text
+
+
 def test_drifted_duplicate_key_raises_naming_the_table(spark, monkeypatch):
     """A duplicate key whose rows drifted cannot be paired by key: in every
     drilled scope the keyed compare raises an error that names the table
@@ -793,8 +840,9 @@ def test_fk_orphans_null_and_composite_semantics(spark):
 
 def test_column_drift_wide_drift_broadcast_path(spark, master, slave, monkeypatch):
     """When more buckets drift than the IN-list cap, column_drift and
-    diff_rows share the persisted broadcast bad-bucket frame (materialized
-    once via TableCompare.scope) and results match the IN-list path."""
+    diff_rows share the broadcast local relation of the bad-bucket ids
+    (collected once via TableCompare.scope) and results match the IN-list
+    path."""
     # n_buckets pinned well above the ~100 drifted keys: the bad set must
     # overflow the (monkeypatched) IN-list cap yet stay under the
     # restriction-skip fraction, so the broadcast-frame form is exercised
@@ -814,14 +862,14 @@ def test_column_drift_wide_drift_broadcast_path(spark, master, slave, monkeypatc
     assert wide == baseline
     # both consumers reuse the same materialized state object
     state = cmp.scope()
-    assert state.ids is None and state.frame is not None
+    assert state.kind == "frame"
     assert cmp.diff_rows().count() == K_MISSING + K_EXTRA + K_MODIFIED
     assert cmp.scope() is state
 
 
 def test_verify_repair_scoped_via_broadcast_frame(spark, monkeypatch):
-    """Past the IN-list cap the bad-bucket set restricts via the persisted
-    broadcast frame; a small FRACTION must still take the scoped path and
+    """Past the IN-list cap the bad-bucket set restricts via a broadcast
+    local relation of its ids; a small FRACTION must still take the scoped path and
     produce the full-table verdict (lake-scale bucket counts can exceed
     the cap while drift stays in-regime)."""
     from tidb_large_table_compare_spark.operators.reconcile import (
@@ -839,9 +887,8 @@ def test_verify_repair_scoped_via_broadcast_frame(spark, monkeypatch):
         CompareOptions(n_buckets=4096), table_name="o",
     )
     scope = tc.scope()
-    n_buckets, bad_ids, bad_frame = scope.n_buckets, scope.ids, scope.frame
-    assert bad_ids is None and bad_frame is not None  # frame form
-    assert bad_frame.count() <= 0.25 * n_buckets  # but in-regime
+    assert scope.kind == "frame"
+    assert scope.n_bad <= 0.25 * scope.n_buckets  # but in-regime
 
     repaired = apply_fixes(orders, slave, ["o_orderkey"], tc.diff_rows())
     verdict = verify_repair(tc, repaired).collect()[0]

@@ -1,4 +1,4 @@
-"""Config parsing (A7/A8), job planning (A9/A10), and the CLI workflow."""
+"""Config parsing (A7/A8) and the CLI workflow."""
 
 from __future__ import annotations
 
@@ -7,12 +7,7 @@ import base64
 import pytest
 from pyspark.sql import functions as F
 
-from tidb_large_table_compare_spark.config import (
-    CompareJobSpec,
-    decode_password,
-    load_config,
-    plan_jobs_from_config,
-)
+from tidb_large_table_compare_spark.config import decode_password, load_config
 from tests.conftest import SF_SMALL
 
 TOML = """
@@ -51,17 +46,6 @@ def test_load_config(tmp_path):
     assert cfg.slave.password == "plaintext-pass"
     assert cfg.chunk_size == 5000 and cfg.thread_count == 8
     assert cfg.range_sql == "id > 0"
-
-
-def test_plan_jobs_from_config(tmp_path):
-    pwd = base64.b64encode(b"x").decode()
-    f = tmp_path / "config.toml"
-    f.write_text(TOML.format(b64_pwd=pwd))
-    cfg = load_config(f)
-    jobs = plan_jobs_from_config(cfg, [("my_database", "users"), ("app", "t1")])
-    assert [j.config_name for j in jobs] == ["my_database_users.toml", "app_t1.toml"]
-    assert jobs[0].qualified_name == "my_database.users"
-    assert all(j.chunk_size == 5000 and j.range_sql == "id > 0" for j in jobs)
 
 
 def test_cli_end_to_end(spark, tmp_path, capsys):
@@ -122,8 +106,24 @@ def test_cli_check_connection_smoke(spark, tmp_path, capsys):
     # session + 2 sides x 2 tables + check-SQL per side (left AND right)
     assert out.count("[ OK ]") == 7
     assert "check-SQL (left)" in out and "check-SQL (right)" in out
-    assert "tables readable" in out
+    # the work list a run compares: both tables at the default threshold 0
+    assert out.count("2 tables readable, 2 match") == 2
     assert "[FAIL]" not in out
+
+    # --row-threshold gates the count as it gates the run: orders (1500
+    # rows) passes 1000, nation (25) does not
+    code = main(
+        [
+            "--left-dir", SF_SMALL,
+            "--right-dir", SF_SMALL,
+            "--tables", "orders,nation",
+            "--row-threshold", "1000",
+            "--check-connection",
+        ]
+    )
+    out = capsys.readouterr().out
+    assert code == 0
+    assert out.count("2 tables readable, 1 match") == 2
 
     code = main(
         [
@@ -163,6 +163,29 @@ def test_cli_discovery_threshold_filters_tables(spark, tmp_path, capsys):
 
 
 # --- operational shell: run lock, progress, detach (reference parity) -------
+
+
+def test_default_lock_path_normalizes_dir_spellings(tmp_path, monkeypatch):
+    """A trailing slash or a relative spelling of the same target dirs maps
+    to one run lock, so two runs against one target cannot both start."""
+    from argparse import Namespace
+
+    from tidb_large_table_compare_spark.cli import _default_lock_path
+
+    (tmp_path / "master").mkdir()
+    (tmp_path / "slave").mkdir()
+    monkeypatch.chdir(tmp_path)
+
+    def lock(left, right, schema="main"):
+        return _default_lock_path(
+            Namespace(left_dir=left, right_dir=right, schema=schema)
+        )
+
+    canonical = lock(f"{tmp_path}/master", f"{tmp_path}/slave")
+    assert lock(f"{tmp_path}/master/", f"{tmp_path}/slave/") == canonical
+    assert lock("master", "./slave") == canonical
+    assert lock("master", "slave", "other") != canonical
+    assert lock("slave", "master") != canonical
 
 
 def test_runlock_refuses_live_holder(tmp_path):
@@ -752,8 +775,7 @@ def test_cli_drilldowns_reuse_the_summary_compare(
 
 def test_cli_releases_persisted_compare_state(spark, tmp_path):
     """A drill-down run leaves no persisted RDD behind: each table's
-    persisted keyed diff and bad-bucket frame are released after its last
-    consumer. The fleet spans two scope kinds: a few drifted orders
+    persisted keyed diff is released after its last consumer. The fleet spans two scope kinds: a few drifted orders
     (IN-list scope) and a lineitem with every bucket drifted (skip scope).
     The test data's lineitem repeats some (l_orderkey, l_linenumber)
     pairs, which a keyed compare refuses once they drift, so both sides

@@ -142,15 +142,19 @@ def test_incremental_wide_drift_takes_broadcast_path(spark, tmp_path, monkeypatc
         (r["o_orderkey"], r["diff_type"]) for r in full.diff_rows().collect()
     }
     assert inc_rows == full_rows and inc_rows
+    # release the keyed diffs: the next test builds the same plans and
+    # checks that its own compare persists, then releases, its diff
+    inc.close()
+    full.close()
 
 
 def test_incremental_close_releases_changed_bucket_frame(
     spark, tmp_path, monkeypatch
 ):
-    """A changed-bucket set over the IN-list cap is persisted as the
-    broadcast frame the scoped sides semi-join. It belongs to the returned
-    compare: close() must release it with the compare's own persisted
-    state, leaving no RDD behind for the rest of the session."""
+    """A changed-bucket set over the IN-list cap becomes a broadcast local
+    relation the scoped sides semi-join; nothing of the scope is
+    persisted. The returned compare's close() releases its own persisted
+    keyed diff, leaving no RDD behind for the rest of the session."""
     monkeypatch.setattr(
         "tidb_large_table_compare_spark.operators.compare._MAX_INLIST", 2
     )

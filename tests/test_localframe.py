@@ -9,13 +9,12 @@ worker and, for the catalog, run no Spark job at all.
 
 from __future__ import annotations
 
-import uuid
 from pathlib import Path
 
 import pytest
 from pyspark.sql import types as T
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, jobs_in_group
 from tidb_large_table_compare_spark.functions.localframe import local_frame
 
 PACKAGE = Path(__file__).resolve().parent.parent / "tidb_large_table_compare_spark"
@@ -96,24 +95,12 @@ def test_compare_cli_frames_plan_no_python_rdd(spark):
         assert "LocalRelation" in plan, f"{name}: {plan[:300]}"
 
 
-def _jobs_in_group(spark, action) -> int:
-    """Spark jobs ``action`` ran, counted through its own job group."""
-    sc = spark.sparkContext
-    group = f"localframe-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count")
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_catalog_collect_runs_no_spark_job(spark):
     from tidb_large_table_compare_spark.sources.catalog import parquet_catalog
 
     catalog = parquet_catalog(spark, SF_SMALL, ["nation", "orders"])
     rows = []
-    assert _jobs_in_group(spark, lambda: rows.extend(catalog.collect())) == 0
+    assert jobs_in_group(spark, lambda: rows.extend(catalog.collect())) == 0
     assert {r.table_name: r.table_rows for r in rows} == {
         "nation": 25,
         "orders": 1500,
@@ -121,7 +108,7 @@ def test_catalog_collect_runs_no_spark_job(spark):
     # the counter does see jobs: the same rows as a list-of-tuples
     # createDataFrame run one
     python_rdd = spark.createDataFrame([tuple(r) for r in rows], catalog.schema)
-    assert _jobs_in_group(spark, python_rdd.collect) >= 1
+    assert jobs_in_group(spark, python_rdd.collect) >= 1
 
 
 def test_create_dataframe_only_in_the_seam():
@@ -148,5 +135,5 @@ def test_cli_report_call_runs_at_most_two_jobs(spark):
         parallelism=1,
     )
     got = []
-    assert _jobs_in_group(spark, lambda: got.append(report(run.summaries))) <= 2
+    assert jobs_in_group(spark, lambda: got.append(report(run.summaries))) <= 2
     assert got[0].totals.tables_checked == 1

@@ -139,7 +139,7 @@ def test_compare_counts_match_construction(spark, plan, nb, cap):
     # nb × cap spans every bucket-scope kind: 8 buckets pushes most
     # perturbations over the restriction-skip fraction (skip), 4096 keeps
     # them in the bounded IN-list form, or past a cap of 2 in the
-    # persisted broadcast frame; None exercises the chunk-size sizing path
+    # broadcast frame; None exercises the chunk-size sizing path
     import pytest
 
     from tidb_large_table_compare_spark.functions.hashing import bucket_id

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import argparse
 import hashlib
+import os
 import subprocess
 import sys
 import tempfile
@@ -136,8 +137,14 @@ def _parse_args(argv: list[str] | None):
 
 def _default_lock_path(args) -> str:
     """One lock per comparison target: concurrent runs against the same
-    (left, right, schema) are refused; unrelated comparisons don't collide."""
-    key = f"{args.left_dir}|{args.right_dir}|{args.schema}"
+    (left, right, schema) are refused; unrelated comparisons don't collide.
+    The dirs are normalized like curate_cli's and maintenance_cli's, so
+    /data/master, /data/master/ and a relative spelling share one lock."""
+    left, right = (
+        os.path.abspath(d).rstrip("/") or "/"
+        for d in (args.left_dir, args.right_dir)
+    )
+    key = f"{left}|{right}|{args.schema}"
     digest = hashlib.sha256(key.encode()).hexdigest()[:16]
     return str(Path(tempfile.gettempdir()) / f"table_compare_{digest}.lock")
 
@@ -168,6 +175,19 @@ def _detach(argv: list[str], log_dir: str) -> int:
     return 0
 
 
+def _worklist(catalog, row_threshold: int) -> list[str]:
+    """The catalog tables a run compares, in catalog order: all of them at
+    ``row_threshold`` 0, else those the A2 discovery predicate keeps.
+    pk_type=None: the parquet catalog's pk_type is a TiDB-shaped STAND-IN
+    (a fixed test-schema name set, catalog.py), and gating on it silently
+    dropped any table outside that set; real PK-type discovery belongs to
+    a real information_schema catalog (the registry's catalog_discovery
+    entry keeps the full reference predicate)."""
+    if row_threshold > 0:
+        catalog = discover(catalog, row_threshold=row_threshold, pk_type=None)
+    return [r.table_name for r in catalog.collect()]
+
+
 def _check_connection(args) -> int:
     """test_connection.sh analog (reference README.md:49-58): the three
     checks map as client-installed → session starts, connection-works →
@@ -195,13 +215,13 @@ def _check_connection(args) -> int:
 
     # the catalog/check-SQL probe runs against BOTH dirs (the reference's
     # smoke tests master and slave connections alike); the readable count is
-    # unfiltered — the discovery predicate (pk_type) is reported separately
+    # unfiltered — the work list a run would compare is reported separately
     # so a legitimately-empty discovery doesn't read as unreachable tables
     for side, root in (("left", args.left_dir), ("right", args.right_dir)):
         try:
             catalog = parquet_catalog(spark, root, tables, schema_name=args.schema)
             n_visible = catalog.count()
-            n_match = discover(catalog, row_threshold=0).count()
+            n_match = len(_worklist(catalog, args.row_threshold))
             print(
                 f"[ OK ] check-SQL ({side}): catalog query ran — "
                 f"{n_visible} tables readable, "
@@ -273,21 +293,7 @@ def _run(args) -> int:
     catalog = parquet_catalog(
         spark, args.left_dir, list(lefts), schema_name=args.schema
     )
-    if args.row_threshold > 0:
-        # pk_type=None: the parquet catalog's pk_type is a TiDB-shaped
-        # STAND-IN (a fixed test-schema name set, catalog.py) — gating the
-        # CLI's threshold discovery on it silently dropped any table
-        # outside that set; real PK-type discovery belongs to a real
-        # information_schema catalog (the registry's catalog_discovery
-        # entry keeps the full reference predicate)
-        worklist = [
-            r.table_name
-            for r in discover(
-                catalog, row_threshold=args.row_threshold, pk_type=None
-            ).collect()
-        ]
-    else:
-        worklist = list(lefts)
+    worklist = _worklist(catalog, args.row_threshold)
     if not worklist and not read_failures:
         print("no tables matched the discovery predicate (normal; nothing to do)")
         return 0

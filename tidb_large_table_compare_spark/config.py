@@ -1,13 +1,14 @@
-"""Engine configuration — reference `config.toml` parity (SURVEY.md §1.1, A7-A9).
+"""Engine configuration — reference `config.toml` parity (SURVEY.md §1.1, A7/A8).
 
 The reference "parses" its TOML with grep/cut/awk (only top-level ``key =
 value`` lines are visible to it, ``step1_query_tables.sh:67-95``) and decodes
 base64 passwords with a decode-or-passthrough fallback
 (``step1_query_tables.sh:30-48``, duplicated at
 ``step2_generate_configs.sh:32-46``). Here: a real ``tomllib`` parse into a
-dataclass, the same password fallback semantics, and the per-table job
-instantiation that replaces the 12-rule ``sed`` template substitution
-(``step2_generate_configs.sh:112-124``) with a plain dataclass build.
+dataclass and the same password fallback semantics. The per-table job that
+replaces the 12-rule ``sed`` template substitution
+(``step2_generate_configs.sh:112-124``) is :class:`..plans.pipeline.CompareJob`,
+which the CLI builds once per table.
 """
 
 from __future__ import annotations
@@ -85,48 +86,3 @@ def load_config(path: str | Path) -> EngineConfig:
         export_fix_sql=bool(cfg.get("export_fix_sql", True)),
         range_sql=cfg.get("range", "1 = 1"),
     )
-
-
-@dataclass(frozen=True)
-class CompareJobSpec:
-    """Per-table job spec — the generated-TOML analog (A9/A10).
-
-    The reference instantiates ``{{.var}}`` placeholders via 12 sed rules
-    into ``generated_configs/{schema}_{table}.toml``; natively the binding is
-    a dataclass, no file intermediary.
-    """
-
-    schema: str
-    table: str
-    chunk_size: int
-    thread_count: int
-    range_sql: str
-    export_fix_sql: bool
-    output_dir: str
-
-    @property
-    def qualified_name(self) -> str:
-        return f"{self.schema}.{self.table}"
-
-    @property
-    def config_name(self) -> str:
-        """The file name the reference would have generated (step2:103)."""
-        return f"{self.schema}_{self.table}.toml"
-
-
-def plan_jobs_from_config(
-    config: EngineConfig, worklist: list[tuple[str, str]]
-) -> list[CompareJobSpec]:
-    """A10 fan-out: one job spec per (schema, table) in the work list."""
-    return [
-        CompareJobSpec(
-            schema=schema,
-            table=table,
-            chunk_size=config.chunk_size,
-            thread_count=config.thread_count,
-            range_sql=config.range_sql,
-            export_fix_sql=config.export_fix_sql,
-            output_dir=config.output_dir,
-        )
-        for schema, table in worklist
-    ]

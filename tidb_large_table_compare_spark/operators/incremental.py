@@ -14,7 +14,8 @@ is the CDC-shaped complement of :mod:`.compare`:
   and the stored digest (-1) — one linear scan, no join — keeping the
   buckets that do not cancel;
 - ``incremental_compare``: a full row-level :class:`TableCompare` scoped to
-  the changed buckets only — the drill-down never touches clean chunks.
+  the changed buckets only (their ids collected once, nothing persisted) —
+  the drill-down never touches clean chunks.
 
 The digest artifact pins ``n_buckets`` (bucket ids are only comparable at
 the same bucketing), and the scoped compare re-checks that pin.
@@ -304,25 +305,19 @@ def incremental_compare(
     Sound when the snapshot was taken from a verified-equivalent state of
     ``left``: clean buckets digest-match the snapshot on both sides, so
     every differing row lives in a drifted bucket. The returned compare
-    pins the snapshot's bucket count so bucket ids line up, and its
-    ``close()`` releases the changed-bucket frame with the rest of its
-    persisted state.
+    pins the snapshot's bucket count so bucket ids line up.
     """
     stored, n_buckets = read_digests(spark, digests_path)
     changed = drifted_buckets(
         signed_digest(stored, -1),
         signed_table_rows(right, pk, n_buckets, options),
     )
-    # the changed-bucket set takes the drill-down's own scope (small →
-    # IN-list at the scan, wide → broadcast semi-join, most buckets → no
-    # scope at all: the plain full compare). A frame scope is embedded in
-    # the returned lazy plan, so the compare holds it until its close();
-    # building it re-runs the digest of `right` once more for its count.
+    # the changed-bucket set takes the drill-down's own scope, collected
+    # once (small → IN-list at the scan, wide → broadcast semi-join against
+    # a local relation of the ids, most buckets → no scope at all: the
+    # plain full compare); no kind persists anything
     scope = bucket_scope(changed, n_buckets)
-    cmp = scoped_compare(spark, left, right, pk, scope, options, table_name)
-    if scope.frame is not None:
-        cmp.held.append(scope.frame)
-    return cmp
+    return scoped_compare(spark, left, right, pk, scope, options, table_name)
 
 
 def apply_changes_to_digests(

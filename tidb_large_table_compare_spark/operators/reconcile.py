@@ -80,8 +80,9 @@ def verify_repair(tc, repaired: DataFrame) -> DataFrame:
     buckets bad — the scope engages when drift is below ~1/chunk_size
     (tens of drifted rows in millions: the steady-state regime of a sync
     pipeline that repairs every cycle; at lake-scale bucket counts the
-    bad set may exceed the IN-list cap and restrict via the persisted
-    broadcast frame instead — still in-regime if the fraction is small).
+    bad set may exceed the IN-list cap and restrict via the broadcast
+    local relation of its ids instead — still in-regime if the fraction
+    is small).
     Above the fraction gate (heavy drift) the scope discards nothing
     and the plain full re-compare is used — the sf0.1 bench perturbation
     drifts every one of its 31 buckets and measured 2.9 s scoped vs

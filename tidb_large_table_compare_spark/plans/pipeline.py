@@ -36,7 +36,9 @@ __all__ = ["CompareJob", "CompareRun", "format_progress", "run_jobs"]
 
 @dataclass
 class CompareJob:
-    """Per-table comparison spec (the generated-TOML analog, SURVEY.md §1.1)."""
+    """One table's comparison: its two sides, key and options. The CLI
+    builds one per table from its flags, where the reference rendered a
+    per-table TOML from a template (A9/A10, SURVEY.md §1.1)."""
 
     table: str  # '{schema}.{table}' display name
     left: DataFrame
