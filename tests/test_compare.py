@@ -27,7 +27,8 @@ from tests.fixtures import (
     cmp_slave_schema_drift,
 )
 
-# the bucket-scope IN-list cap, patched down to reach the frame regime
+# the pk-IN pushdown cap, patched down to pin a bitset scope with the
+# pushdown off
 _INLIST_CAP = "tidb_large_table_compare_spark.operators.compare._MAX_INLIST"
 
 
@@ -226,8 +227,8 @@ def test_column_drift_requires_pk(spark, master, slave):
 @pytest.mark.parametrize(
     "kind, n_buckets, cap, n_drift",
     [
-        ("ids", 4096, None, 6),
-        ("frame", 4096, 2, 6),
+        ("bitset", 4096, None, 6),
+        ("bitset", 4096, 2, 6),
         ("skip", 8, None, 40),
         ("empty", 8, None, 0),
     ],
@@ -237,8 +238,8 @@ def test_column_drift_counts_match_construction_in_every_scope(
 ):
     """column_drift's per-column counts equal the counts known by
     construction in every scope kind, both standalone (bucket restriction)
-    and after the summary filled the diff (pk-IN retrieval in the IN-list
-    scope). Every slave
+    and after the summary filled the diff (pk-IN retrieval in a bitset
+    scope under the pushdown cap, bucket restriction above it). Every slave
     row rewrites 0.0 to -0.0 (top level and inside a reordered map): no
     drift. Keys 1..n_drift drift s (pk % 3 == 0), d and m (pk % 3 == 1),
     or s and the dotted column x.y (pk % 3 == 2); k never drifts."""
@@ -407,7 +408,7 @@ def test_repair_consumers_share_one_materialized_diff(spark, monkeypatch):
         options=CompareOptions(n_buckets=4), table_name="o",
     )
     scope = tc.scope()
-    assert scope.ids is None and scope.frame is None  # restriction skipped
+    assert scope.kind == "skip"  # restriction skipped
 
     assert not tc.summary().collect()[0].equivalent
     once = emitted.value
@@ -460,8 +461,7 @@ def test_verify_repair_scoped_catches_broken_repair(spark):
         CompareOptions(n_buckets=4096), table_name="o",
     )
     scope = tc.scope()
-    n_buckets, bad_ids = scope.n_buckets, scope.ids
-    assert bad_ids is not None and len(bad_ids) <= 0.25 * n_buckets
+    assert scope.kind == "bitset" and scope.n_bad <= 0.25 * scope.n_buckets
 
     # a "repair" built from only half the diff: modified rows never patched
     partial_diff = tc.diff_rows().filter("diff_type != 'modified'")
@@ -516,9 +516,9 @@ def test_verify_repair_releases_its_inner_compare(spark):
 
 
 def test_bucket_scope_decision_lives_in_compare():
-    """The restriction regime is chosen in one place: the IN-list cap, the
-    skip fraction and BucketScope construction appear in no other package
-    module, so no consumer re-derives the decision."""
+    """The restriction regime is chosen in one place: the pk-IN pushdown
+    cap, the skip fraction and BucketScope construction appear in no other
+    package module, so no consumer re-derives the decision."""
     from pathlib import Path
 
     import tidb_large_table_compare_spark as pkg
@@ -662,9 +662,9 @@ def _regime_verdict(spark, monkeypatch, left_rows, right_rows, nb, cap, table="t
 
 def test_null_and_duplicate_key_verdict_is_scope_independent(spark, monkeypatch):
     """Identical NULL-key and duplicate-key rows cancel before any pairing,
-    so whether their bucket is drilled (skip scope) or not (IN-list,
-    frame) cannot change the verdict: every scope kind reports exactly the
-    seeded drift."""
+    so whether their bucket is drilled (skip scope) or not (bitset, with
+    the pk-IN pushdown on or off) cannot change the verdict: every scope
+    kind reports exactly the seeded drift."""
     truth_rows = sorted(
         [(str(k), "missing_in_right") for k in _REGIME_MISSING]
         + [(str(k), "modified") for k in _REGIME_MODIFIED]
@@ -676,7 +676,8 @@ def test_null_and_duplicate_key_verdict_is_scope_independent(spark, monkeypatch)
         truth_rows,
     )
     right = _regime_right(_REGIME_BASE)
-    for nb, cap, kind in ((4096, None, "ids"), (4096, 2, "frame"), (8, None, "skip")):
+    cases = ((4096, None, "bitset"), (4096, 2, "bitset"), (8, None, "skip"))
+    for nb, cap, kind in cases:
         got = _regime_verdict(spark, monkeypatch, _REGIME_BASE, right, nb, cap)
         assert got == (kind, *truth), (nb, cap, got)
     got = _regime_verdict(spark, monkeypatch, _REGIME_BASE, list(_REGIME_BASE), 8, None)
@@ -684,8 +685,9 @@ def test_null_and_duplicate_key_verdict_is_scope_independent(spark, monkeypatch)
 
 
 def test_keyed_diff_is_persisted_once_per_drilled_scope(spark, monkeypatch):
-    """In the IN-list, frame and skip scopes the keyed diff is one persisted
-    frame that every consumer shares; an empty scope's diff stays lazy.
+    """In the bitset (pk-IN pushdown on or off) and skip scopes the keyed
+    diff is one persisted frame that every consumer shares; an empty
+    scope's diff stays lazy.
     All derived state lives in the compare's one memo, and close() leaves
     no persistent RDD behind."""
     from pyspark import StorageLevel
@@ -696,7 +698,7 @@ def test_keyed_diff_is_persisted_once_per_drilled_scope(spark, monkeypatch):
         return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
     right = _regime_right(_REGIME_BASE)
-    cases = ((4096, None, right, "ids"), (4096, 2, right, "frame"),
+    cases = ((4096, None, right, "bitset"), (4096, 2, right, "bitset"),
              (8, None, right, "skip"), (8, None, list(_REGIME_BASE), "empty"))
     for nb, cap, right_rows, kind in cases:
         if cap is not None:
@@ -723,11 +725,11 @@ def test_keyed_diff_is_persisted_once_per_drilled_scope(spark, monkeypatch):
 
 def test_bucket_scope_is_one_action_in_every_kind(spark, monkeypatch):
     """bucket_scope collects the mismatched-bucket set once and picks the
-    kind from it: in the empty, IN-list, frame and skip kinds the scope
-    runs the jobs of one action over the digest, with no second pass to
-    count or persist the set. The frame kind's ids are a local relation."""
+    kind from it: in the empty, bitset and skip kinds the scope runs the
+    jobs of one action over the digest, with no second pass to count or
+    persist the set. A bitset restriction is one Filter, with no join."""
     right = _regime_right(_REGIME_BASE)
-    cases = ((4096, None, right, "ids"), (4096, 2, right, "frame"),
+    cases = ((4096, None, right, "bitset"), (4096, 2, right, "bitset"),
              (8, None, right, "skip"), (8, None, list(_REGIME_BASE), "empty"))
     for nb, cap, right_rows, kind in cases:
         if cap is not None:
@@ -748,9 +750,100 @@ def test_bucket_scope_is_one_action_in_every_kind(spark, monkeypatch):
         assert jobs_in_group(spark, cmp.scope) == one_action, kind
         scope = cmp.scope()
         assert scope.kind == kind
-        if kind == "frame":
-            plan = scope.frame._jdf.queryExecution().analyzed().toString()
-            assert "LocalRelation" in plan and "InMemoryRelation" not in plan
+        if kind == "bitset":
+            plan = scope.restrict(cmp.left, cmp.pk)._jdf
+            plan = plan.queryExecution().optimizedPlan().toString()
+            assert plan.count("Filter ") == 1 and "LeftSemi" not in plan, plan
+        monkeypatch.undo()
+
+
+@pytest.mark.parametrize("n_buckets", [32, 100, 4096, 1 << 20])
+def test_bitset_restrict_is_set_membership(spark, n_buckets):
+    """restrict keeps exactly the bad buckets: the word edges (0, 63, 64,
+    the last bucket, a last word cut short when 64 does not divide
+    ``n_buckets``), a lone bit 63 (its word is Long.MIN_VALUE) and a
+    random spread."""
+    import random
+
+    from tidb_large_table_compare_spark.functions.localframe import local_frame
+    from tidb_large_table_compare_spark.operators.compare import bucket_scope
+
+    edges = {b for b in (0, 63, 64, n_buckets - 1) if b < n_buckets}
+    spread = set(random.Random(n_buckets).sample(range(n_buckets), n_buckets // 8))
+    buckets = spark.range(n_buckets).withColumnRenamed("id", "__bucket")
+    for bad in (edges, {min(63, n_buckets - 1)}, spread | edges):
+        scope = bucket_scope(
+            local_frame(spark, [(b,) for b in bad], "__bucket bigint"), n_buckets
+        )
+        assert (scope.kind, scope.n_bad) == ("bitset", len(bad))
+        got = {r["__bucket"] for r in scope.restrict(buckets).collect()}
+        assert got == bad, sorted(got ^ bad)[:10]
+
+
+def test_bitset_literal_is_folded_in_the_plan(spark):
+    """The bitset reaches the optimized plan as one folded array literal:
+    no per-row JSON parse and no join, over a parquet scan that computes
+    the bucket from the key."""
+    from tidb_large_table_compare_spark.functions.localframe import local_frame
+    from tidb_large_table_compare_spark.operators.compare import bucket_scope
+
+    orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
+    bad = local_frame(spark, [(63,), (70,), (4000,)], "__bucket bigint")
+    restricted = bucket_scope(bad, 4096).restrict(orders, ["o_orderkey"])
+    plan = restricted._jdf.queryExecution().optimizedPlan().toString()
+    assert "getbit(element_at([" in plan, plan
+    assert "-9223372036854775808" in plan  # bucket 63: the lone high bit
+    for token in ("from_json", "JsonToStructs", "LeftSemi", "Join"):
+        assert token.lower() not in plan.lower(), token
+
+
+def test_bucket_scope_is_one_literal_filter():
+    """The scope restricts through its bitset alone: compare.py holds no
+    semi-join and no bucket IN-list, and the scope builds no local frame."""
+    import inspect
+    from pathlib import Path
+
+    from tidb_large_table_compare_spark.operators import compare as compare_mod
+
+    text = Path(compare_mod.__file__).read_text()
+    assert "left_semi" not in text and 'in_list("__bucket"' not in text
+    for part in (compare_mod.BucketScope, compare_mod.bucket_scope):
+        assert "local_frame" not in inspect.getsource(part), part.__name__
+
+
+def test_fix_sql_repair_round_trip_in_every_kind(spark, monkeypatch):
+    """In every scope kind (empty, bitset with the pk-IN pushdown on and
+    off, skip) fix-SQL names every differing key once, and the right side
+    repaired with the compare's diff compares equivalent to the left on a
+    full, unscoped compare."""
+    from tidb_large_table_compare_spark.operators.reconcile import apply_fixes
+
+    base = _REGIME_BASE[:200]
+    right = _regime_right(base)
+    cases = ((8, None, list(base), "empty", False),
+             (4096, None, right, "bitset", True),
+             (4096, 2, right, "bitset", False),
+             (8, None, right, "skip", False))
+    for nb, cap, right_rows, kind, pushdown in cases:
+        if cap is not None:
+            monkeypatch.setattr(_INLIST_CAP, cap)
+        ldf = spark.createDataFrame(base, _REGIME_SCHEMA)
+        rdf = spark.createDataFrame(right_rows, _REGIME_SCHEMA)
+        cmp = compare_tables(spark, ldf, rdf, ["pk"], CompareOptions(n_buckets=nb), "t")
+        assert cmp.scope().kind == kind
+        assert (cmp.pk_pushdown(cmp.diff_rows()) is not None) == pushdown, kind
+        stmts = [r.fix_sql for r in fix_sql(cmp).collect()]
+        n_replace = sum(s.startswith("REPLACE INTO t ") for s in stmts)
+        n_delete = sum(s.startswith("DELETE FROM t ") for s in stmts)
+        drifted = bool(right_rows != base)
+        assert n_replace == drifted * (len(_REGIME_MISSING) + len(_REGIME_MODIFIED))
+        assert n_delete == drifted * len(_REGIME_EXTRA)
+        repaired = apply_fixes(ldf, rdf, ["pk"], cmp.diff_rows())
+        full = compare_tables(spark, ldf, repaired, ["pk"], CompareOptions(), "t")
+        row = full.summary().collect()[0]
+        assert (row.upcount, row.downcount, row.equivalent) == (0, 0, True), kind
+        full.close()
+        cmp.close()
         monkeypatch.undo()
 
 
@@ -839,13 +932,12 @@ def test_fk_orphans_null_and_composite_semantics(spark):
 
 
 def test_column_drift_wide_drift_broadcast_path(spark, master, slave, monkeypatch):
-    """When more buckets drift than the IN-list cap, column_drift and
-    diff_rows share the broadcast local relation of the bad-bucket ids
-    (collected once via TableCompare.scope) and results match the IN-list
-    path."""
+    """When more buckets drift than the pk-IN pushdown cap, column_drift
+    and diff_rows share one bitset scope (collected once via
+    TableCompare.scope) and results match the uncapped run."""
     # n_buckets pinned well above the ~100 drifted keys: the bad set must
-    # overflow the (monkeypatched) IN-list cap yet stay under the
-    # restriction-skip fraction, so the broadcast-frame form is exercised
+    # overflow the (monkeypatched) pushdown cap yet stay under the
+    # restriction-skip fraction
     baseline_cmp = compare_tables(
         spark, master, slave, pk=["pk"],
         options=CompareOptions(n_buckets=512), table_name="t",
@@ -862,16 +954,16 @@ def test_column_drift_wide_drift_broadcast_path(spark, master, slave, monkeypatc
     assert wide == baseline
     # both consumers reuse the same materialized state object
     state = cmp.scope()
-    assert state.kind == "frame"
+    assert state.kind == "bitset" and state.n_bad > 2
     assert cmp.diff_rows().count() == K_MISSING + K_EXTRA + K_MODIFIED
     assert cmp.scope() is state
 
 
 def test_verify_repair_scoped_via_broadcast_frame(spark, monkeypatch):
-    """Past the IN-list cap the bad-bucket set restricts via a broadcast
-    local relation of its ids; a small FRACTION must still take the scoped path and
-    produce the full-table verdict (lake-scale bucket counts can exceed
-    the cap while drift stays in-regime)."""
+    """Past the pk-IN pushdown cap the bad-bucket set still restricts
+    through its bitset; a small FRACTION must still take the scoped path
+    and produce the full-table verdict (lake-scale bucket counts can
+    exceed the cap while drift stays in-regime)."""
     from tidb_large_table_compare_spark.operators.reconcile import (
         apply_fixes,
         verify_repair,
@@ -887,7 +979,7 @@ def test_verify_repair_scoped_via_broadcast_frame(spark, monkeypatch):
         CompareOptions(n_buckets=4096), table_name="o",
     )
     scope = tc.scope()
-    assert scope.kind == "frame"
+    assert scope.kind == "bitset" and scope.n_bad > 2
     assert scope.n_bad <= 0.25 * scope.n_buckets  # but in-regime
 
     repaired = apply_fixes(orders, slave, ["o_orderkey"], tc.diff_rows())
@@ -897,15 +989,13 @@ def test_verify_repair_scoped_via_broadcast_frame(spark, monkeypatch):
 
 def test_heavy_drift_skips_bucket_restriction(spark, master, slave):
     """When drift marks more than half the buckets, restriction is dropped
-    outright — no big-IN predicate, no broadcast frame — and the diff is
-    still exact (clean rows hash-equal and cancel in the row pairing)."""
+    outright — no bitset filter — and the diff is still exact (clean rows
+    hash-equal and cancel in the row pairing)."""
     cmp = compare_tables(
         spark, master, slave, pk=["pk"],
         options=CompareOptions(chunk_size=500), table_name="t",
     )
-    scope = cmp.scope()
-    ids, frame = scope.ids, scope.frame
-    assert ids is None and frame is None  # the deliberate no-op form
+    assert cmp.scope().kind == "skip"  # the deliberate no-op form
     counts = dict(
         (r.diff_type, r["count"])
         for r in cmp.diff_rows().groupBy("diff_type").count().collect()

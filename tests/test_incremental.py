@@ -108,12 +108,13 @@ def test_incremental_respects_range_predicate(spark, tmp_path):
     assert odd == 0  # scoped rows stay within the configured range
 
 
-def test_incremental_wide_drift_takes_broadcast_path(spark, tmp_path, monkeypatch):
-    """When more buckets drift than the IN-list cap, the scoping must stay
-    distributed (broadcast semi-join), never a driver-side IN-list — the
-    wide-drift analog of ``test_compare_drilldown_scans_bounded``. The cap is
-    shrunk so the perturbation's drift exceeds it without needing 50k real
-    buckets; results must equal the full compare either way."""
+def test_incremental_wide_drift_takes_bitset_path(spark, tmp_path, monkeypatch):
+    """When more buckets drift than the pk-IN pushdown cap, the scoped
+    sides still filter on the one bitset literal: no join and no
+    ``__bucket`` IN-list — the wide-drift analog of
+    ``test_compare_drilldown_scans_bounded``. The cap is shrunk so the
+    perturbation's drift exceeds it without needing 50k real buckets;
+    results must equal the full compare either way."""
     monkeypatch.setattr(
         "tidb_large_table_compare_spark.operators.compare._MAX_INLIST", 2
     )
@@ -121,15 +122,15 @@ def test_incremental_wide_drift_takes_broadcast_path(spark, tmp_path, monkeypatc
     path = str(tmp_path / "digests")
     # enough buckets that the drift stays clearly under the restriction-skip
     # fraction (at OPTS's 64 the perturbation lands near the 50% boundary,
-    # where the scope is deliberately dropped instead of broadcast)
+    # where the scope is deliberately dropped)
     opts = CompareOptions(n_buckets=256)
     write_digests(spark, orders, ["o_orderkey"], path, opts)
     inc = incremental_compare(
         spark, orders, perturbed_orders(orders), ["o_orderkey"], path, opts, "t"
     )
-    # the scoped side must carry the broadcast semi-join, not an IN-list
+    # the scoped side is one bitset filter over the scan, with no join
     plan = inc.left._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
+    assert "getbit(" in plan and "Join" not in plan
     assert "__bucket IN (" not in plan
 
     full = compare_tables(
@@ -151,8 +152,8 @@ def test_incremental_wide_drift_takes_broadcast_path(spark, tmp_path, monkeypatc
 def test_incremental_close_releases_changed_bucket_frame(
     spark, tmp_path, monkeypatch
 ):
-    """A changed-bucket set over the IN-list cap becomes a broadcast local
-    relation the scoped sides semi-join; nothing of the scope is
+    """A changed-bucket set over the pk-IN pushdown cap is a bitset
+    literal the scoped sides filter on; nothing of the scope is
     persisted. The returned compare's close() releases its own persisted
     keyed diff, leaving no RDD behind for the rest of the session."""
     monkeypatch.setattr(
@@ -176,7 +177,7 @@ def test_incremental_close_releases_changed_bucket_frame(
 def test_incremental_heavy_drift_skips_scope(spark, tmp_path):
     """When most buckets changed since the snapshot, scoping would keep most
     rows while every job re-pays the predicate — the compare must fall back
-    to the plain full form (no bucket join, no IN) with identical results."""
+    to the plain full form (no bucket filter) with identical results."""
     orders = _orders(spark)
     path = str(tmp_path / "digests")
     # few buckets → the perturbation drifts well over half of them
@@ -186,7 +187,7 @@ def test_incremental_heavy_drift_skips_scope(spark, tmp_path):
         spark, orders, perturbed_orders(orders), ["o_orderkey"], path, opts, "t"
     )
     plan = inc.left._jdf.queryExecution().executedPlan().toString()
-    assert "__bucket" not in plan  # neither IN-list nor semi-join scope
+    assert "__bucket" not in plan and "getbit(" not in plan  # no bitset scope
     full = compare_tables(
         spark, orders, perturbed_orders(orders), ["o_orderkey"], opts, "t"
     )
@@ -310,6 +311,37 @@ def test_digest_artifact_stamps_bucketing_version(spark, tmp_path):
     path = str(tmp_path / "digests")
     write_digests(spark, orders, ["o_orderkey"], path, OPTS)
     assert _read_pin(spark, path) == (64, BUCKETING_VERSION)
+
+
+def test_read_pin_propagates_a_failed_read(spark, tmp_path, monkeypatch):
+    """A sidecar read that fails partway raises: the rest of a
+    half-consumed stream is never parsed as a pin (here it would read as
+    n_buckets 4)."""
+    from types import SimpleNamespace
+
+    import pytest
+
+    from tidb_large_table_compare_spark.functions import fsutil
+    from tidb_large_table_compare_spark.operators.incremental import _read_pin
+
+    orders = load_table(spark, "/root/testdata/sf0.001", "orders")
+    path = str(tmp_path / "digests")
+    write_digests(spark, orders, ["o_orderkey"], path, OPTS)
+
+    def to_byte_array(stream):
+        stream.read()  # one byte in, the read fails
+        raise RuntimeError("sidecar read failed partway")
+
+    real = spark._jvm
+    commons_io = SimpleNamespace(
+        IOUtils=SimpleNamespace(toByteArray=to_byte_array)
+    )
+    fake = SimpleNamespace(org=SimpleNamespace(apache=SimpleNamespace(
+        hadoop=real.org.apache.hadoop, commons=SimpleNamespace(io=commons_io)
+    )))
+    monkeypatch.setattr(fsutil, "classic_jvm", lambda _spark: fake)
+    with pytest.raises(RuntimeError, match="partway"):
+        _read_pin(spark, path)
 
 
 def test_read_digests_refuses_mismatched_bucketing_version(spark, tmp_path):

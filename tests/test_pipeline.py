@@ -117,7 +117,8 @@ def test_run_jobs_parallel_over_shared_handles_matches_serial(spark, monkeypatch
     """Eight compares over the same ``load_table`` handles, four at a time,
     give the serial run's summaries, and closing every compare leaves no
     persistent RDD behind. The jobs reach every scope kind and the
-    multiset path. The check is on RDD ids, not the count: Spark keeps one
+    multiset path (a bitset scope past the patched pk-IN pushdown cap
+    among them). The check is on RDD ids, not the count: Spark keeps one
     cache entry per plan, so a close() also releases an equal plan another
     test left cached, and the context cleaner may drop leftovers meanwhile."""
     from tidb_large_table_compare_spark.perturb import perturbed_orders
@@ -136,7 +137,7 @@ def test_run_jobs_parallel_over_shared_handles_matches_serial(spark, monkeypatch
         return [
             CompareJob("db.same", orders, orders, pk),
             CompareJob("db.one_gone", orders, one_gone, pk),
-            CompareJob("db.frame", orders, slave, pk, CompareOptions(n_buckets=4096)),
+            CompareJob("db.wide", orders, slave, pk, CompareOptions(n_buckets=4096)),
             CompareJob("db.skip", orders, slave, pk, CompareOptions(n_buckets=4)),
             CompareJob("db.multiset", orders, slave, None),
             CompareJob("db.range", orders, slave, pk,
@@ -164,7 +165,7 @@ def test_run_jobs_parallel_over_shared_handles_matches_serial(spark, monkeypatch
         for cmp in run.compares.values():
             cmp.close()
         assert persisted() - before == set()
-        assert kinds == {"empty", "ids", "frame", "skip"}
+        assert kinds == {"empty", "bitset", "skip"}
     assert got[4] == got[1] and len(got[1]) == 8
 
 

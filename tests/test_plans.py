@@ -96,8 +96,8 @@ def test_column_drift_pushes_pk_inlist_to_both_scans(spark):
 def test_verify_repair_filters_before_row_hash(spark):
     """The scoped re-verify must discard clean-bucket rows BEFORE the
     full-width canonicalize+hash: in its digest plan, EVERY parquet scan
-    carries the bad-bucket membership predicate (pmod of the pk hash) as
-    a data filter, so the saved work — hashing every payload column of
+    carries the bad-bucket membership predicate (the bitset's getbit
+    over the pk hash) as a data filter, so the saved work — hashing every payload column of
     the clean ~1-p of the table — is structural, not incidental.
 
     (Asserted on the scoped digest plan, the shape verify_repair builds
@@ -115,8 +115,8 @@ def test_verify_repair_filters_before_row_hash(spark):
         options=CompareOptions(n_buckets=4096), table_name="t",
     )
     scope = tc.scope()
-    n_buckets, bad_ids = scope.n_buckets, scope.ids
-    assert bad_ids is not None and len(bad_ids) < 0.25 * n_buckets
+    n_buckets = scope.n_buckets
+    assert scope.kind == "bitset" and scope.n_bad < 0.25 * n_buckets
     repaired = apply_fixes(orders, slave, ["o_orderkey"], tc.diff_rows())
     scoped = compare_tables(
         spark,
@@ -130,7 +130,11 @@ def test_verify_repair_filters_before_row_hash(spark):
     scans = [l for l in plan.splitlines() if "FileScan parquet" in l]
     assert len(scans) >= 2  # left + the repaired union's branches
     for line in scans:
-        assert "pmod" in line, f"unfiltered scan in scoped verify: {line[:160]}"
+        # the scan abbreviates DataFilters to 100 characters, and the
+        # bitset's words come before the pk hash
+        assert "getbit(element_at([" in line, (
+            f"unfiltered scan in scoped verify: {line[:160]}"
+        )
 
 
 def test_compare_narrow_shuffle_columns(spark):

@@ -128,9 +128,9 @@ def _reference_diff(master, slave):
     nb=st.sampled_from([None, 8, 4096]),
     cap=st.sampled_from([None, 2]),
 )
-# one pinned draw per scope kind — frame (more bad buckets than a cap of
-# 2, under half of 4096), IN-list, skip (30 drifted keys in 8 buckets),
-# empty
+# one pinned draw per scope kind — bitset with the pk-IN pushdown off
+# (more bad buckets than a cap of 2, under half of 4096), bitset with it
+# on, skip (30 drifted keys in 8 buckets), empty
 @example(plan=(60, [1, 2, 3], [4, 5], 2), nb=4096, cap=2)
 @example(plan=(60, [1, 2, 3], [4, 5], 2), nb=4096, cap=None)
 @example(plan=(60, list(range(1, 11)), list(range(11, 21)), 10), nb=8, cap=None)
@@ -138,8 +138,8 @@ def _reference_diff(master, slave):
 def test_compare_counts_match_construction(spark, plan, nb, cap):
     # nb × cap spans every bucket-scope kind: 8 buckets pushes most
     # perturbations over the restriction-skip fraction (skip), 4096 keeps
-    # them in the bounded IN-list form, or past a cap of 2 in the
-    # broadcast frame; None exercises the chunk-size sizing path
+    # them in the bitset, with the pk-IN pushdown on or (past a cap of 2)
+    # off; None exercises the chunk-size sizing path
     import pytest
 
     from tidb_large_table_compare_spark.functions.hashing import bucket_id
@@ -197,10 +197,8 @@ def test_compare_counts_match_construction(spark, plan, nb, cap):
         want = "empty"
     elif n_bad > scope.n_buckets / 2:
         want = "skip"
-    elif n_bad <= (cap or compare_mod._MAX_INLIST):
-        want = "ids"
     else:
-        want = "frame"
+        want = "bitset"
     assert scope.kind == want
 
 

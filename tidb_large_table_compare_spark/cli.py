@@ -332,8 +332,8 @@ def _run(args) -> int:
     try:
         return _report_and_drill(args, spark, jobs, run, read_failures)
     finally:
-        # every consumer has run: release each table's persisted diff and
-        # bad-bucket state, so the session holds none of it after the run
+        # every consumer has run: release each table's persisted keyed
+        # diff, so the session holds none of it after the run
         for cmp in run.compares.values():
             cmp.close()
 

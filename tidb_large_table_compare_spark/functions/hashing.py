@@ -55,8 +55,8 @@ def in_list(col_name: str, ids: list, dtype: T.DataType | None = None) -> Column
     """Membership predicate for a possibly-huge id list.
 
     ``Column.isin`` converts every element to a literal through its own
-    py4j round trip — ~30 s of DRIVER time at the 50k bad-bucket cap,
-    ~7 s at 10k (measured, PERFORMANCE.md round-8), superlinear enough to
+    py4j round trip — ~30 s of DRIVER time at 50k ids (the pk-IN
+    pushdown cap), ~7 s at 10k (measured, PERFORMANCE.md round-8), superlinear enough to
     dwarf the jobs it guards. For integer and Decimal ids the same
     predicate rendered as one ``IN (...)`` SQL string crosses py4j once
     and parses JVM-side (~1.5 s at 50k); Catalyst folds the literal list

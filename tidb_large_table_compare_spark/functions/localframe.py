@@ -29,18 +29,15 @@ __all__ = ["local_frame"]
 def local_frame(
     spark: SparkSession, rows: Iterable[Sequence], schema: T.StructType | str
 ) -> DataFrame:
-    """``rows`` (tuples in ``schema`` field order, or a ``pyarrow.Table``
-    already in columns, e.g. a ``DataFrame.toArrow()`` result) as a
-    DataFrame whose plan holds no Python RDD. ``schema`` is a StructType
-    or a DDL string; the result's schema equals it, nullability included."""
+    """``rows`` (tuples in ``schema`` field order) as a DataFrame whose
+    plan holds no Python RDD. ``schema`` is a StructType or a DDL string;
+    the result's schema equals it, nullability included."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     if isinstance(schema, str):
         schema = T.DataType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema)
-    if isinstance(rows, pa.Table):
-        return spark.createDataFrame(rows.cast(arrow_schema), schema)
     rows = list(rows)
     columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
     table = pa.Table.from_arrays(

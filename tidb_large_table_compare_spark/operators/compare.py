@@ -36,6 +36,7 @@ from __future__ import annotations
 from dataclasses import dataclass, replace
 from functools import reduce, wraps
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -72,10 +73,9 @@ DEFAULT_CHUNK_SIZE = 5000  # reference chunk-size (config.toml:21)
 # clamp on the estimated bucket count (CompareOptions.n_buckets overrides)
 _MIN_BUCKETS = 32
 _MAX_BUCKETS = 1 << 20
-_MAX_INLIST = 50_000  # bad-bucket count above which we broadcast instead
-# bad-bucket FRACTION above which restriction is skipped outright — the
-# filter would discard under half the rows while every downstream job
-# re-pays the big-IN/semi-join plan cost (see bucket_scope)
+_MAX_INLIST = 50_000  # pk-IN pushdown cap: keys collected and rendered
+# bad-bucket FRACTION above which restriction is skipped outright: the
+# filter would discard under half the rows (see bucket_scope)
 _RESTRICT_SKIP_FRACTION = 0.5
 
 
@@ -230,26 +230,23 @@ def signed_rows(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame
 class BucketScope:
     """Which buckets a drill-down reads: the one restriction decision.
 
-    ``n_bad`` mismatched buckets out of ``n_buckets``. At most one of
-    ``ids``/``frame`` is set, which gives four kinds (:attr:`kind`):
-    ``empty`` (``ids == []``), ``ids`` (an IN-list of bucket ids),
-    ``frame`` (a one-column ``__bucket`` local relation of the ids,
-    broadcast semi-joined) and ``skip`` (neither: drift too wide to
+    ``n_bad`` mismatched buckets out of ``n_buckets``, held as ``words``:
+    the bucket bitset (bit ``b % 64`` of word ``b // 64`` is bucket ``b``)
+    rendered as a JSON array of longs, one word per 64 buckets, so 16,384
+    at the 2^20 cap. Three kinds (:attr:`kind`): ``empty`` (no bad
+    bucket), ``bitset`` and ``skip`` (``words`` is None: drift too wide to
     restrict). No kind holds executor state, so a scope needs no release.
     """
 
     n_buckets: int
     n_bad: int
-    ids: list | None = None
-    frame: DataFrame | None = None
+    words: str | None = None
 
     @property
     def kind(self) -> str:
-        if self.frame is not None:
-            return "frame"
-        if self.ids is None:
+        if self.words is None:
             return "skip"
-        return "ids" if self.ids else "empty"
+        return "bitset" if self.n_bad else "empty"
 
     def restrict(self, df: DataFrame, pk: list[str] | None = None) -> DataFrame:
         """``df`` filtered to rows in a mismatched bucket — the scan-level
@@ -262,13 +259,17 @@ class BucketScope:
         withb = df if pk is None else df.withColumn(
             "__bucket", bucket_id(pk, self.n_buckets, df)
         )
-        if self.frame is not None:
-            out = withb.join(F.broadcast(self.frame), "__bucket", "left_semi")
-        else:
-            # in_list, not Column.isin: the py4j per-element literal cost
-            # of isin is ~30 s of driver time at the 50k cap
-            # (hashing.in_list); an empty list is a constant false
-            out = withb.filter(in_list("__bucket", self.ids))
+        # Catalyst folds the from_json of a string literal into one array
+        # literal: the plan carries one token whatever the set's size, and
+        # a row costs one element_at. The words span every bucket, so the
+        # 1-based index is always in range (ANSI raises on 0, and a
+        # negative index reads from the end). An empty scope stays a
+        # constant false, which plans no scan.
+        member = F.lit(False) if self.kind == "empty" else F.expr(
+            f"getbit(element_at(from_json('{self.words}', 'array<bigint>'), "
+            "cast(__bucket div 64 as int) + 1), cast(__bucket % 64 as int)) = 1"
+        )
+        out = withb.filter(member)
         return out if pk is None else out.drop("__bucket")
 
 
@@ -283,32 +284,27 @@ def bucket_scope(bad: DataFrame, n_buckets: int) -> BucketScope:
     at the 2^20 cap), never ∝ diff rows, so ``n_bad`` is exact in every
     kind. It comes back as Arrow: 2^20 ids took 0.13-0.25 s warm through
     ``toArrow()`` against 4.5-4.9 s through ``collect()`` (4 cores,
-    PERFORMANCE.md "One bucket scope"). Small sets
-    become an IN-list evaluated at the scan (no join at all); sets over
-    ``_MAX_INLIST`` become one local relation of the ids, built here once
-    and broadcast semi-joined by every consumer, so their ids stay
-    JVM-side and nothing is persisted. Either way the row pairing sees
-    only bad-bucket rows — bytes ∝ diff size, not table size.
+    PERFORMANCE.md "One bucket scope"). numpy packs it into the bitset
+    words: one literal whose size follows ``n_buckets``, not the set
+    (PERFORMANCE.md "One restriction kind"), so the row pairing sees only
+    bad-bucket rows — bytes ∝ diff size, not table size — and no plan
+    grows with the set.
 
-    When the bad set covers MOST buckets (heavy drift), restriction would
-    discard almost nothing while embedding a thousands-element IN
-    predicate that every downstream job re-pays in analysis and optimizer
-    time (INSET conversion is per-action; measured ~0.2-0.4 s per job at
-    2-10k elements, PERFORMANCE.md round-8) — so above
-    ``_RESTRICT_SKIP_FRACTION`` the scope is ``skip`` and the drill-down
-    compares everything: sound because clean-bucket rows hash-equal and
-    cancel in the row pairing, and cheaper because the pairing reads at
-    most 1/fraction more rows than the restricted plan would.
+    When the bad set covers MOST buckets (heavy drift), the filter would
+    discard less than half the rows, so above ``_RESTRICT_SKIP_FRACTION``
+    the scope is ``skip`` and the drill-down compares everything: sound
+    because clean-bucket rows hash-equal and cancel in the row pairing,
+    and cheaper because the pairing reads at most 1/fraction more rows
+    than the restricted plan would, with no per-row membership test.
     """
-    ids = bad.toArrow()
-    n_bad = ids.num_rows
+    ids = bad.toArrow().column("__bucket").to_numpy()
+    n_bad = len(ids)
     if n_bad > _RESTRICT_SKIP_FRACTION * n_buckets:
         return BucketScope(n_buckets, n_bad)
-    if n_bad <= _MAX_INLIST:
-        return BucketScope(n_buckets, n_bad, ids=ids.column("__bucket").to_pylist())
-    return BucketScope(
-        n_buckets, n_bad, frame=local_frame(bad.sparkSession, ids, bad.schema)
-    )
+    bits = np.zeros(-(-n_buckets // 64) * 64, dtype=bool)
+    bits[ids] = True
+    words = np.packbits(bits, bitorder="little").view("<i8")
+    return BucketScope(n_buckets, n_bad, f"[{','.join(map(str, words.tolist()))}]")
 
 
 def _memoized(method):
@@ -405,7 +401,8 @@ class TableCompare:
 
     def _bounded_pushdown_keys(self, frame: DataFrame, col: str) -> list | None:
         """``col``'s values from ``frame`` when they qualify for the pk-IN
-        scan pushdown: at most ``_MAX_INLIST`` of them and every one in
+        scan pushdown: at most ``_MAX_INLIST`` of them (the cap on a
+        rendered key IN-list) and every one in
         ``hashing.render_sql_id``'s safe-rendering domain (ints, Decimals
         — the TiDB unsigned-BIGINT mapping — identifier-charset strings
         like UUID keys, dates, binary, and — dtype-declared — both
@@ -419,8 +416,8 @@ class TableCompare:
             # a timestamp rendering is flavor-specific (instant vs wall
             # clock): when the two sides disagree on the flavor the one
             # predicate cannot be sound against both scans — keep the
-            # semi-join/bucket shape, which pairs rows through the join's
-            # own coercion instead of a literal's
+            # bucket restriction, whose rows pair through the join's own
+            # coercion instead of a literal's
             sides = {
                 s.schema[col].dataType
                 for s in (self.left, self.right)
@@ -441,11 +438,12 @@ class TableCompare:
     def pk_pushdown(self, keys: DataFrame) -> Column | None:
         """``pk IN (keys' pk values)`` for pushing into a side's scan, or
         None when the pushdown does not apply: a composite key, a scope
-        other than the bounded IN-list form (there the diff is
-        drift-sized, so collecting its keys is a small cache read; the
-        heavy-drift forms keep the semi-join shape), or keys that fail
-        :meth:`_bounded_pushdown_keys`."""
-        if len(self.pk) != 1 or self.scope().kind != "ids":
+        other than a bitset of at most ``_MAX_INLIST`` bad buckets (there
+        the diff is drift-sized, so collecting its keys is a small cache
+        read; wider drift keeps the bucket restriction), or keys that
+        fail :meth:`_bounded_pushdown_keys`."""
+        scope = self.scope()
+        if len(self.pk) != 1 or scope.kind != "bitset" or scope.n_bad > _MAX_INLIST:
             return None
         col = self.pk[0]
         ids = self._bounded_pushdown_keys(keys, col)
@@ -560,10 +558,10 @@ class TableCompare:
         exactly the modified rows rather than the chunk_size-amplified
         bad-bucket rows (a hash bucket drags in ~chunk_size rows per
         drifted one). Otherwise both sides fall back to the mismatched-
-        bucket restriction (the same bounded bad-bucket set the row
-        drill-down uses — never a broadcast ∝ diff rows), then inner-join
-        on PK. Agreeing pairs contribute 0 to every count and unpaired
-        rows (missing/extra) drop out of the inner join, so neither form
+        bucket restriction (the same bitset literal the row drill-down
+        uses — never a broadcast ∝ diff rows), then inner-join on PK.
+        Agreeing pairs contribute 0 to every count and unpaired rows
+        (missing/extra) drop out of the inner join, so neither form
         changes the counts: the restriction is purely a cost bound.
         Shuffled bytes ∝ drift, never table size.
         """
@@ -581,8 +579,8 @@ class TableCompare:
                 self.spark, [], "column_name string, mismatch_rows bigint"
             )
         fr = self.options.float_round
-        # pk-IN retrieval only when (a) pk_pushdown applies — its IN-list
-        # scope gate means the persisted diff is drift-sized, so collecting
+        # pk-IN retrieval only when (a) pk_pushdown applies — its bounded
+        # bitset gate means the persisted diff is drift-sized, so collecting
         # the modified keys is a small cache read — AND (b) some consumer
         # already built the diff (the CLI's composed flow runs the summary
         # first; sharing its persisted frame makes this retrieval strictly

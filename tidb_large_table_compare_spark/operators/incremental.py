@@ -178,19 +178,11 @@ def _read_pin(spark: SparkSession, path: str) -> tuple[int | None, int | None]:
         return None, None
     stream = fs.open(jpath)
     try:
-        try:
-            # one py4j round trip (commons-io ships with Hadoop) — the
-            # per-byte read() loop was ~15 round trips per pin read,
-            # measurable on the CDC fold path (bench r9)
-            raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-        except Exception:
-            buf = []
-            data = stream.read()
-            while data != -1:
-                buf.append(data)
-                data = stream.read()
-            raw = bytes(buf)
-        return _parse_pin(raw)
+        # one py4j round trip (commons-io ships with Spark's jars); a
+        # failure propagates, as a half-read stream is no pin
+        return _parse_pin(
+            bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+        )
     finally:
         stream.close()
 
@@ -313,9 +305,8 @@ def incremental_compare(
         signed_table_rows(right, pk, n_buckets, options),
     )
     # the changed-bucket set takes the drill-down's own scope, collected
-    # once (small → IN-list at the scan, wide → broadcast semi-join against
-    # a local relation of the ids, most buckets → no scope at all: the
-    # plain full compare); no kind persists anything
+    # once (a bitset literal filtered at the scan, or for most buckets no
+    # scope at all: the plain full compare); no kind persists anything
     scope = bucket_scope(changed, n_buckets)
     return scoped_compare(spark, left, right, pk, scope, options, table_name)
 

@@ -80,9 +80,8 @@ def verify_repair(tc, repaired: DataFrame) -> DataFrame:
     buckets bad — the scope engages when drift is below ~1/chunk_size
     (tens of drifted rows in millions: the steady-state regime of a sync
     pipeline that repairs every cycle; at lake-scale bucket counts the
-    bad set may exceed the IN-list cap and restrict via the broadcast
-    local relation of its ids instead — still in-regime if the fraction
-    is small).
+    bad set may hold tens of thousands of ids and still restrict through
+    the one bitset literal — in-regime if the fraction is small).
     Above the fraction gate (heavy drift) the scope discards nothing
     and the plain full re-compare is used — the sf0.1 bench perturbation
     drifts every one of its 31 buckets and measured 2.9 s scoped vs
@@ -108,9 +107,8 @@ def verify_repair(tc, repaired: DataFrame) -> DataFrame:
         scoped_compare,
     )
 
-    # a skip scope (most buckets bad) is never in-regime; a frame scope
-    # (bad set past the IN-list cap) still can be, at lake-scale bucket
-    # counts (e.g. 60k of 2^20)
+    # a skip scope (most buckets bad) is never in-regime; a wide bitset
+    # still can be, at lake-scale bucket counts (e.g. 60k of 2^20)
     scope = tc.scope()
     if scope.n_bad > _SCOPE_FRACTION * scope.n_buckets:
         cmp = compare_tables(

@@ -354,8 +354,8 @@ def _cmp_column_drift_ts_pk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.col("o_totalprice")),
     ).drop("o_orderkey")
     # n_buckets pinned HIGH relative to the ~1/97 drift so the bad-bucket
-    # state stays in its bounded IN-list form at every sf — that is the
-    # gate the pk-IN retrieval sits behind (with the default coarse
+    # scope stays a bounded bitset at every sf — that is the gate the
+    # pk-IN retrieval sits behind (with the default coarse
     # sizing the drift covers most buckets, restriction is skipped, and
     # this canary would silently stop exercising the rendered literals)
     cmp = compare_tables(
