@@ -1169,3 +1169,105 @@ def test_sql_fragment_hash_identity(spark):
     got = by_id(df, [H.bucket_id(k.split("+"), 4096, df) for k in keys])
     assert dict(zip(keys, got)) == {k: G.BUCKET[k] for k in keys}
     assert by_id(sdf, [H.bucket_id(G.SCALAR_PK, 4096, sdf)]) == [G.BUCKET["scalar"]]
+
+
+@pytest.mark.parametrize("n_buckets", [4096, 4], ids=["bitset", "skip"])
+def test_concurrent_consumers_share_one_compare(spark, tmp_path, monkeypatch, n_buckets):
+    """After ``summary()``, column drift, fix-SQL and repair + verify run on
+    three threads over one TableCompare, as a table's consumers do on the
+    CLI's run pool. They get the serial run's outputs, read the summary's
+    scope and persisted diff (one digest pass, the memo unchanged), and
+    the compare holds exactly one persisted RDD until ``close()``."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from tidb_large_table_compare_spark.operators.reconcile import (
+        apply_fixes,
+        verify_repair,
+    )
+    from tidb_large_table_compare_spark.perturb import perturbed_orders
+
+    orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
+    slave = perturbed_orders(orders)
+    pk = ["o_orderkey"]
+    opts = CompareOptions(n_buckets=n_buckets)
+
+    def consumers(cmp, out):
+        def repair():
+            apply_fixes(orders, slave, pk, cmp.diff_rows()).write.parquet(out)
+            v = verify_repair(cmp, spark.read.parquet(out)).collect()[0]
+            rows = spark.read.parquet(out).orderBy(*pk).collect()
+            return (v.equivalent, v.upcount, v.downcount), rows
+
+        return {
+            "drift": lambda: sorted(cmp.column_drift().collect()),
+            "fix": lambda: sorted(fix_sql(cmp).collect()),
+            "repair": repair,
+        }
+
+    serial = compare_tables(spark, orders, slave, pk, opts, "db.orders")
+    want_summary = serial.summary().collect()
+    want = {k: fn() for k, fn in consumers(serial, str(tmp_path / "s")).items()}
+    serial.close()
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    digests: list[TableCompare] = []
+    mismatched_buckets = TableCompare.mismatched_buckets
+
+    def counting(self):
+        digests.append(self)
+        return mismatched_buckets(self)
+
+    monkeypatch.setattr(TableCompare, "mismatched_buckets", counting)
+    before = persisted()
+    cmp = compare_tables(spark, orders, slave, pk, opts, "db.orders")
+    assert cmp.summary().collect() == want_summary
+    memo = dict(cmp._memo)
+    assert cmp.scope().kind == ("bitset" if n_buckets > 4 else "skip")
+    with ThreadPoolExecutor(3) as pool:
+        futs = {
+            k: pool.submit(fn)
+            for k, fn in consumers(cmp, str(tmp_path / "c")).items()
+        }
+        got = {k: f.result() for k, f in futs.items()}
+    assert got == want
+    assert want["repair"][0] == (True, 0, 0)
+    assert sum(d is cmp for d in digests) == 1
+    assert cmp._memo.keys() == memo.keys()
+    assert all(cmp._memo[k] is v for k, v in memo.items())
+    assert len(persisted() - before) == 1
+    cmp.close()
+    assert persisted() - before == set()
+
+
+def test_concurrent_first_consumers_compute_the_scope_once(spark, monkeypatch):
+    """Consumers that reach a compare before any summary (the CLI's
+    drill-down flags under --check-struct-only, whose summary builds no
+    diff) race for the same memo entries: the scope action runs once and
+    every thread gets the one persisted diff."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from tidb_large_table_compare_spark.perturb import perturbed_orders
+
+    orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
+    digests: list[TableCompare] = []
+    mismatched_buckets = TableCompare.mismatched_buckets
+
+    def counting(self):
+        digests.append(self)
+        return mismatched_buckets(self)
+
+    monkeypatch.setattr(TableCompare, "mismatched_buckets", counting)
+    cmp = compare_tables(
+        spark, orders, perturbed_orders(orders), ["o_orderkey"],
+        CompareOptions(n_buckets=4096, check_struct_only=True), "db.orders",
+    )
+    assert cmp.summary().collect()[0].upcount == 0  # struct-only: no diff
+    with ThreadPoolExecutor(4) as pool:
+        diffs = list(pool.map(lambda _: cmp.diff_rows(), range(4)))
+    try:
+        assert len(digests) == 1
+        assert all(d is diffs[0] for d in diffs)
+    finally:
+        cmp.close()

@@ -776,7 +776,7 @@ def test_cli_drilldowns_reuse_the_summary_compare(
 def test_cli_releases_persisted_compare_state(spark, tmp_path):
     """A drill-down run leaves no persisted RDD behind: each table's
     persisted keyed diff is released after its last consumer. The fleet spans two scope kinds: a few drifted orders
-    (IN-list scope) and a lineitem with every bucket drifted (skip scope).
+    (bitset scope) and a lineitem with every bucket drifted (skip scope).
     The test data's lineitem repeats some (l_orderkey, l_linenumber)
     pairs, which a keyed compare refuses once they drift, so both sides
     keep one row per key."""
@@ -1098,3 +1098,125 @@ def test_cli_run_with_every_table_unreadable_prints_zero_totals(tmp_path, capsys
         in cap.out
     )
     assert "None" not in cap.out
+
+
+def _keyed_fleet(spark, root, names, n_rows=300):
+    """One drifted keyed pair per name under ``root``/master and
+    ``root``/slave: distinct values per table (so no two diffs plan alike
+    and share a cache entry), 2 deleted, 3 modified and 1 inserted key."""
+    master, slave = root / "master", root / "slave"
+    for i, t in enumerate(names):
+        left = spark.range(n_rows).selectExpr(
+            "id", f"id * {i + 2} AS v", f"'{t}' AS tag"
+        )
+        left.write.parquet(str(master / f"{t}.parquet"))
+        left.filter("id NOT IN (5, 6)").selectExpr(
+            "id", "CASE WHEN id IN (10, 20, 30) THEN v + 1 ELSE v END AS v", "tag"
+        ).unionByName(
+            spark.range(n_rows, n_rows + 1).selectExpr("id", "0 AS v", f"'{t}' AS tag")
+        ).write.parquet(str(slave / f"{t}.parquet"))
+    return master, slave
+
+
+def test_cli_many_tables_hold_bounded_storage(spark, tmp_path):
+    """A 12-table run at --parallelism 2 never holds more than 2 persisted
+    diffs: each table's compare is closed after its last consumer, before
+    the next table is admitted. A background thread samples the session's
+    persistent RDDs while the run goes; the count returns to the baseline
+    at the end. (--verify-repaired would add one transient diff per
+    verifying table: verify_repair's inner compare, closed inside it.)"""
+    import threading
+
+    from tidb_large_table_compare_spark.cli import main
+
+    names = [f"t{i:02d}" for i in range(12)]
+    master, slave = _keyed_fleet(spark, tmp_path, names)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    baseline = persisted().size()
+    samples: list[int] = []
+    stop = threading.Event()
+
+    def sample():
+        while not stop.is_set():
+            samples.append(persisted().size())
+            stop.wait(0.01)
+
+    sampler = threading.Thread(target=sample)
+    sampler.start()
+    try:
+        code = main(
+            [
+                "--left-dir", str(master),
+                "--right-dir", str(slave),
+                "--tables", ",".join(names),
+                *[a for t in names for a in ("--pk", f"{t}=id")],
+                "--parallelism", "2",
+                "--column-drift",
+                "--fix-sql-out", str(tmp_path / "fix"),
+                "--lock-file", str(tmp_path / "run.lock"),
+            ]
+        )
+    finally:
+        stop.set()
+        sampler.join()
+    assert code == 0
+    assert len(samples) > 10
+    assert max(samples) <= baseline + 2, max(samples)
+    assert max(samples) > baseline  # the sampler saw diffs held
+    assert persisted().size() == baseline
+    assert len(list((tmp_path / "fix").glob("main_t*_fix"))) == 12
+
+
+def test_cli_consumer_failure_fails_only_its_table(spark, tmp_path, capsys):
+    """A drill-down consumer that raises fails its own table, not the run:
+    a dangling symlink at one table's fix-SQL output path makes that write
+    fail. The other tables' drift lines, fix-SQL files and repaired tables
+    are intact, stderr names the failed table with its exception class,
+    and the run exits 1."""
+    from tidb_large_table_compare_spark.cli import main
+
+    names = ["ta", "tb", "tc"]
+    master, slave = _keyed_fleet(spark, tmp_path, names)
+    fix = tmp_path / "fix"
+    fix.mkdir()
+    (fix / "main_tb_fix").symlink_to(tmp_path / "nowhere" / "x")
+    code = main(
+        [
+            "--left-dir", str(master),
+            "--right-dir", str(slave),
+            "--tables", ",".join(names),
+            *[a for t in names for a in ("--pk", f"{t}=id")],
+            "--column-drift",
+            "--fix-sql-out", str(fix),
+            "--reconcile-out", str(tmp_path / "repaired"),
+            "--verify-repaired",
+            "--lock-file", str(tmp_path / "run.lock"),
+        ]
+    )
+    cap = capsys.readouterr()
+    assert code == 1
+    failed = [l for l in cap.err.splitlines() if l.startswith("compare failed for")]
+    assert len(failed) == 1 and failed[0].startswith(
+        "compare failed for main.tb: Py4JJavaError: "
+    ), failed
+    assert "FAILED tables: main.tb" in cap.err
+    drift = [l for l in cap.out.splitlines() if l.startswith("drift ")]
+    assert drift == [f"drift main.{t} v 3" for t in names]
+    verified = [l for l in cap.out.splitlines() if l.startswith("repair-verify ")]
+    assert verified == [
+        f"repair-verify main.{t}: equivalent=True upcount=0 downcount=0"
+        for t in names
+    ]
+    for t in ("ta", "tc"):
+        statements = [
+            line
+            for f in (fix / f"main_{t}_fix").glob("part-*")
+            for line in f.read_text().splitlines()
+            if line.strip()
+        ]
+        # 3 modified + 2 missing REPLACEs, 1 extra DELETE
+        assert len(statements) == 6
+    for t in names:
+        repaired = spark.read.parquet(str(tmp_path / "repaired" / f"main_{t}_repaired"))
+        want = spark.read.parquet(str(master / f"{t}.parquet"))
+        assert sorted(repaired.collect()) == sorted(want.collect())

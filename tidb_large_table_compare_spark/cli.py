@@ -24,6 +24,7 @@ Operational shell (reference parity):
 from __future__ import annotations
 
 import argparse
+import functools
 import hashlib
 import os
 import subprocess
@@ -31,6 +32,8 @@ import sys
 import tempfile
 import time
 from pathlib import Path
+
+from pyspark.sql import DataFrame
 
 from tidb_large_table_compare_spark.operators.compare import CompareOptions
 from tidb_large_table_compare_spark.operators.fixsql import fix_sql
@@ -63,7 +66,10 @@ def _parse_args(argv: list[str] | None):
                    help="stop after the structure compare (template check-struct-only)")
     p.add_argument("--multiset", action="store_true",
                    help="force the keyless multiset diff for all tables")
-    p.add_argument("--parallelism", type=int, default=4)
+    p.add_argument("--parallelism", type=int, default=4,
+                   help="tables in flight at once, and threads running "
+                        "their Spark actions (reads, summaries and "
+                        "drill-downs share this one pool)")
     p.add_argument("--fix-sql-out", default=None, help="dir for fix-SQL text output")
     p.add_argument("--column-drift", action="store_true",
                    help="after the report, print per-column mismatch counts "
@@ -272,26 +278,33 @@ def _run(args) -> int:
 
     spark = get_spark("table-compare-cli")
 
-    # per-table read isolation, mirroring run_jobs: one missing/corrupt
-    # parquet must fail THAT table, not abort the whole run before any
-    # comparison happens. The left side is read before discovery, so the
-    # catalog below only reads footers Spark could open.
+    # per-table read isolation: one missing/corrupt parquet fails THAT
+    # table, not the whole run. A left side whose footers cannot be read
+    # stays out of the catalog; every Spark read runs in its table's task.
     read_failures: list[str] = []
+    frames: dict[tuple[str, str], DataFrame] = {}  # (schema.table, side)
 
-    def read(t: str, side_dir: str):
-        try:
-            return spark.read.parquet(f"{side_dir}/{t}.parquet")
-        except Exception as exc:  # noqa: BLE001 — reported, run continues
-            name = f"{args.schema}.{t}"
-            print(f"read failed for {name}: {exc}", file=sys.stderr)
-            read_failures.append(name)
-            return None
+    def unreadable(t: str, exc: Exception) -> None:
+        name = f"{args.schema}.{t}"
+        print(f"read failed for {name}: {exc}", file=sys.stderr)
+        read_failures.append(name)
 
-    lefts = {t: df for t in tables if (df := read(t, args.left_dir)) is not None}
+    def loader(t: str, side: str, side_dir: str):
+        def load():
+            try:
+                df = spark.read.parquet(f"{side_dir}/{t}.parquet")
+            except Exception as exc:  # noqa: BLE001 — reported, table fails
+                unreadable(t, exc)
+                raise
+            frames[f"{args.schema}.{t}", side] = df
+            return df
+
+        return load
 
     # discover: catalog from the master side, reference predicate shape (A1-A6)
     catalog = parquet_catalog(
-        spark, args.left_dir, list(lefts), schema_name=args.schema
+        spark, args.left_dir, tables, schema_name=args.schema,
+        on_unreadable=unreadable,
     )
     worklist = _worklist(catalog, args.row_threshold)
     if not worklist and not read_failures:
@@ -309,41 +322,36 @@ def _run(args) -> int:
     # information_schema read, step1_query_tables.sh:115-117) sizes each
     # job's digest buckets with zero extra Spark jobs (row_count_hint)
     catalog_rows = {r.table_name: r.table_rows for r in catalog.collect()}
-    jobs: list[CompareJob] = []
-    for t in worklist:
-        right = read(t, args.right_dir)
-        if right is None:
-            continue
-        jobs.append(
-            CompareJob(
-                table=f"{args.schema}.{t}",
-                left=lefts[t],
-                right=right,
-                pk=pk_map.get(t),
-                options=CompareOptions(**opts, row_count_hint=catalog_rows.get(t)),
-            )
+    jobs = [
+        CompareJob(
+            table=f"{args.schema}.{t}",
+            left=loader(t, "left", args.left_dir),
+            right=loader(t, "right", args.right_dir),
+            pk=pk_map.get(t),
+            options=CompareOptions(**opts, row_count_hint=catalog_rows.get(t)),
         )
+        for t in worklist
+    ]
+    # each table is read, summarized, drilled and closed as one pipeline
+    # on the --parallelism pool; the drill-down output is buffered on
+    # run.outputs and printed after the report
     run = run_jobs(
         spark,
         jobs,
         parallelism=args.parallelism,
         progress=lambda line: print(line, file=sys.stderr),
+        consumers=_consumers(args, spark),
     )
-    try:
-        return _report_and_drill(args, spark, jobs, run, read_failures)
-    finally:
-        # every consumer has run: release each table's persisted keyed
-        # diff, so the session holds none of it after the run
-        for cmp in run.compares.values():
-            cmp.close()
+    return _print_run(args, spark, jobs, run, read_failures, frames)
 
 
-def _report_and_drill(args, spark, jobs, run, read_failures) -> int:
+def _print_run(args, spark, jobs, run, read_failures, frames) -> int:
     """Everything that reads ``run``: failure lines, the final report, the
-    per-table consumers (profile, column drift, FK audit, fix-SQL, repair
-    + verify) and the run's exit code."""
+    profiles, the buffered drill-down output in table order, the FK audit
+    and the run's exit code."""
     for name, cause in sorted(run.failures.items()):
-        print(f"compare failed for {name}: {cause}", file=sys.stderr)
+        if name not in read_failures:  # a failed read is already reported
+            print(f"compare failed for {name}: {cause}", file=sys.stderr)
 
     # report (A16-A25): the reference's complete final-report block
     # (step3_run_syncdiff.sh:175-244), then a machine-readable line.
@@ -381,9 +389,13 @@ def _report_and_drill(args, spark, jobs, run, read_failures) -> int:
             if wanted
         ]
         for job in jobs:
-            for side, frame in (("left", job.left), ("right", job.right)):
+            if (job.table, "left") not in frames or (job.table, "right") not in frames:
+                continue  # a table with an unreadable side has no profile
+            for side in ("left", "right"):
                 for tag, approx in passes:
-                    for r in profile_table(frame, approx=approx).collect():
+                    for r in profile_table(
+                        frames[job.table, side], approx=approx
+                    ).collect():
                         print(
                             f"{tag} {job.table} {side} {r.column_name} "
                             f"rows={r.n_rows} nulls={r.n_nulls} "
@@ -391,25 +403,17 @@ def _report_and_drill(args, spark, jobs, run, read_failures) -> int:
                             f"min={r.min_value} max={r.max_value}"
                         )
 
-    # The drill-down flags below reuse run_jobs' TableCompare per keyed
-    # table: its digest pass and persisted diff already ran for the summary,
-    # so --column-drift / --fix-sql-out / --reconcile-out add no second
-    # compare. A table without one failed in run_jobs and is skipped.
-    drill = [
-        (job, run.compares[job.table])
-        for job in jobs
-        if job.pk and job.table in run.compares
-    ]
+    def outputs(consumer: str) -> list[tuple[str, object]]:
+        """``(table, output)`` of one consumer, in table order."""
+        return [
+            (job.table, out[consumer])
+            for job in jobs
+            if consumer in (out := run.outputs.get(job.table, {}))
+        ]
 
-    # per-column drift histogram (B8 refinement): which columns drive the
-    # drift, per keyed table — the diagnosis step between "rows differ" and
-    # "export fix SQL". Skipped under --multiset: duplicated PKs cannot
-    # pair rows (column_drift would refuse).
-    if args.column_drift and not args.multiset:
-        for job, cmp in drill:
-            for r in cmp.column_drift().collect():
-                if r.mismatch_rows:
-                    print(f"drift {job.table} {r.column_name} {r.mismatch_rows}")
+    for _, lines in outputs("drift"):
+        for line in lines:
+            print(line)
 
     # cross-table referential-integrity audit of the slave side: a replica
     # that lost parent rows has orphaned children — damage invisible to any
@@ -458,36 +462,16 @@ def _report_and_drill(args, spark, jobs, run, read_failures) -> int:
             print(f"fk {r.relationship} child_rows={r.child_rows} "
                   f"null_fk={r.null_fk_rows} orphans={r.orphan_rows}")
 
-    # fix-SQL export (B10) for tables with diffs and a PK
-    if args.fix_sql_out:
-        for job, cmp in drill:
-            out = f"{args.fix_sql_out}/{job.table.replace('.', '_')}_fix"
-            fix_sql(cmp).coalesce(1).write.mode("overwrite").text(out)
-
-    # native repair application (closing the fix-SQL loop): write the right
-    # side patched to match the left, per keyed table with diffs
     unrepaired: list[str] = []
-    if args.reconcile_out:
-        from tidb_large_table_compare_spark.operators.reconcile import (
-            apply_fixes,
-            verify_repair,
+    for table, verdict in outputs("repair"):
+        if verdict is None:  # written, not verified
+            continue
+        print(
+            f"repair-verify {table}: equivalent={verdict.equivalent} "
+            f"upcount={verdict.upcount} downcount={verdict.downcount}"
         )
-
-        for job, cmp in drill:
-            repaired = apply_fixes(job.left, job.right, job.pk, cmp.diff_rows())
-            out = f"{args.reconcile_out}/{job.table.replace('.', '_')}_repaired"
-            repaired.write.mode("overwrite").parquet(out)
-            if args.verify_repaired:
-                # verify the WRITTEN bytes, not the in-memory frame: read
-                # back and re-check against the master at drift-sized cost
-                verdict = verify_repair(cmp, spark.read.parquet(out)).collect()[0]
-                print(
-                    f"repair-verify {job.table}: equivalent="
-                    f"{verdict.equivalent} upcount={verdict.upcount} "
-                    f"downcount={verdict.downcount}"
-                )
-                if not verdict.equivalent:
-                    unrepaired.append(job.table)
+        if not verdict.equivalent:
+            unrepaired.append(table)
 
     all_failed = sorted({*run.failures, *read_failures})
     if all_failed:
@@ -496,6 +480,63 @@ def _report_and_drill(args, spark, jobs, run, read_failures) -> int:
         print(f"UNREPAIRED tables: {', '.join(unrepaired)}", file=sys.stderr)
         return 1
     return 1 if all_failed else run.exit_code
+
+
+def _consumers(args, spark):
+    """The drill-down consumers the flags ask for, per keyed table, for
+    ``run_jobs``: each reads the TableCompare its table's summary built
+    (the digest pass and persisted diff already ran, so no flag compares
+    the table again) and returns what is printed after the report."""
+
+    def out_dir(root: str, job: CompareJob, suffix: str) -> str:
+        return f"{root}/{job.table.replace('.', '_')}_{suffix}"
+
+    # per-column drift histogram (B8 refinement): which columns drive the
+    # drift, per keyed table — the diagnosis step between "rows differ" and
+    # "export fix SQL". Skipped under --multiset: duplicated PKs cannot
+    # pair rows (column_drift would refuse).
+    def drift(job, cmp):
+        return [
+            f"drift {job.table} {r.column_name} {r.mismatch_rows}"
+            for r in cmp.column_drift().collect()
+            if r.mismatch_rows
+        ]
+
+    # fix-SQL export (B10) for tables with diffs and a PK
+    def fix(job, cmp):
+        fix_sql(cmp).coalesce(1).write.mode("overwrite").text(
+            out_dir(args.fix_sql_out, job, "fix")
+        )
+
+    # native repair application (closing the fix-SQL loop): write the right
+    # side patched to match the left
+    def repair(job, cmp):
+        from tidb_large_table_compare_spark.operators.reconcile import (
+            apply_fixes,
+            verify_repair,
+        )
+
+        out = out_dir(args.reconcile_out, job, "repaired")
+        repaired = apply_fixes(job.left, job.right, job.pk, cmp.diff_rows())
+        repaired.write.mode("overwrite").parquet(out)
+        if args.verify_repaired:
+            # verify the WRITTEN bytes, not the in-memory frame: read
+            # back and re-check against the master at drift-sized cost
+            return verify_repair(cmp, spark.read.parquet(out)).collect()[0]
+        return None
+
+    wanted = [
+        (name, fn)
+        for name, fn, on in (
+            ("drift", drift, args.column_drift and not args.multiset),
+            ("fix", fix, args.fix_sql_out),
+            ("repair", repair, args.reconcile_out),
+        )
+        if on
+    ]
+    return lambda job: {
+        name: functools.partial(fn, job) for name, fn in wanted if job.pk
+    }
 
 
 if __name__ == "__main__":

@@ -33,6 +33,7 @@ the keyed drill-down raises, and the multiset path (``pk=None`` or
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass, replace
 from functools import reduce, wraps
 
@@ -309,14 +310,18 @@ def bucket_scope(bad: DataFrame, n_buckets: int) -> BucketScope:
 
 def _memoized(method):
     """Compute a zero-argument :class:`TableCompare` method once, into
-    the instance's one ``_memo`` dict that :meth:`TableCompare.close` frees."""
+    the instance's one ``_memo`` dict that :meth:`TableCompare.close` frees.
+    The instance's re-entrant lock makes it once across threads too: a
+    table's drill-down consumers run concurrently, and two of them reaching
+    an unfilled ``scope``/``diff_rows`` would each run the scope action."""
     name = method.__name__
 
     @wraps(method)
     def cached(self):
-        if name not in self._memo:
-            self._memo[name] = method(self)
-        return self._memo[name]
+        with self._memo_lock:
+            if name not in self._memo:
+                self._memo[name] = method(self)
+            return self._memo[name]
 
     return cached
 
@@ -348,6 +353,7 @@ class TableCompare:
         # reports the rest (sync-diff compares data only when structure allows).
         self.compare_cols = sorted(set(left.columns) & set(right.columns))
         self._memo: dict[str, object] = {}
+        self._memo_lock = threading.RLock()
 
     # -- structure (B1) ----------------------------------------------------
     def schema_diff(self) -> DataFrame:

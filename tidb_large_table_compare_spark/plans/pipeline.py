@@ -6,10 +6,14 @@ driver program:
 - plan: one :class:`CompareJob` per discovered table — the in-memory analog
   of the generated per-table TOML (``step2_generate_configs.sh:96-133``);
   no file intermediary, no template substitution.
-- execute: per-table comparisons, optionally overlapped with a thread pool
-  (the reference runs tables strictly serially, ``step3:106-123``; Spark's
-  scheduler interleaves jobs submitted from threads, so table-level
-  concurrency is free).
+- execute: one pipeline per table on a pool of ``parallelism`` threads
+  (the reference runs tables strictly serially, ``step3:106-123``). A
+  table's first task reads both sides and runs its summary; each
+  drill-down consumer then runs as a pool task of its own, and the
+  table's compare is closed after its last consumer. At most
+  ``parallelism`` tables are in flight, so a run holds at most that many
+  persisted diffs, and Spark's scheduler interleaves the jobs the
+  threads submit.
 - tally: success/failure counts, failed-table list, nonzero-exit semantics
   (A13, ``step3:100-122, 247-249``).
 - report: union of per-table summaries → :mod:`.report` totals/rendering.
@@ -19,8 +23,8 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor, as_completed
-from dataclasses import dataclass, field
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -41,8 +45,10 @@ class CompareJob:
     per-table TOML from a template (A9/A10, SURVEY.md §1.1)."""
 
     table: str  # '{schema}.{table}' display name
-    left: DataFrame
-    right: DataFrame
+    # a side is a DataFrame, or a zero-argument loader that run_jobs calls
+    # on the run pool, so the read is part of the table's task
+    left: DataFrame | Callable[[], DataFrame]
+    right: DataFrame | Callable[[], DataFrame]
     pk: list[str] | None
     options: CompareOptions = field(default_factory=CompareOptions)
 
@@ -55,14 +61,18 @@ class CompareRun:
     summaries: DataFrame  # (run_ts, table, structure_ok, upcount, downcount)
     # the TableCompare behind each successful summary — drill-down consumers
     # (column drift, fix-SQL, repair) reuse its digest pass and persisted
-    # diff instead of comparing the table again
+    # diff instead of comparing the table again. Given ``consumers``,
+    # run_jobs has already closed each one after its last consumer.
     compares: dict[str, TableCompare]
-    # "ExceptionClass: first message line" per failed table
+    # "ExceptionClass: first message line" per failed table: its read,
+    # its summary or (first in declared order) one of its consumers
     failures: dict[str, str]
+    # table -> consumer name -> what that consumer returned
+    outputs: dict[str, dict[str, object]] = field(default_factory=dict)
 
     @property
     def ok_count(self) -> int:
-        return len(self.compares)
+        return len(self.compares.keys() - self.failures.keys())
 
     @property
     def fail_count(self) -> int:
@@ -108,6 +118,8 @@ def run_jobs(
     parallelism: int = 4,
     run_ts: str | None = None,
     progress: Callable[[str], None] | None = None,
+    consumers: Callable[[CompareJob], dict[str, Callable[[TableCompare], object]]]
+    | None = None,
 ) -> CompareRun:
     """Execute comparison jobs and aggregate their summaries.
 
@@ -115,17 +127,36 @@ def run_jobs(
     lifting stays distributed) so per-table failures are isolated exactly the
     way the reference isolates per-config tool failures (``step3:111-122``).
 
+    ``consumers(job)``, when given, names the drill-down consumers of one
+    table, ``{name: fn(cmp)}``, and is called with the job as read once its
+    summary has run. Each consumer is a pool task of its own; what it
+    returns lands in ``CompareRun.outputs[table][name]``, an exception
+    fails the table (the other tables go on), and the compare is closed
+    after the table's last consumer. Without ``consumers`` every successful
+    compare stays open on ``CompareRun.compares`` for the caller to consume
+    and close.
+
+    ``parallelism`` bounds both the threads running tasks (so the Spark
+    actions in flight) and the tables admitted at once: the next table's
+    read starts when an admitted table has closed. At 1, tables run one
+    after another in job order, each consumer in declared order.
+
     ``progress`` receives one reference-style line per *completed* table
-    (N of M, per-table wall-clock) as jobs finish.
+    (N of M, per-table wall-clock) as summaries finish.
     """
     run_ts = run_ts or time.strftime("%Y%m%d_%H%M%S")
     total = len(jobs)
     done = 0
+    results: list[tuple[str, object, float]] = []
+    compares: dict[str, TableCompare] = {}
+    failures: dict[str, str] = {}
+    outputs: dict[str, dict[str, object]] = {}
 
-    def one(job: CompareJob):
-        t0 = time.monotonic()
+    def summarize(job: CompareJob):
         cmp = None
         try:
+            job = replace(job, left=_read(job.left), right=_read(job.right))
+            t0 = time.monotonic()
             cmp = compare_tables(
                 spark, job.left, job.right, job.pk, job.options, job.table
             )
@@ -133,33 +164,76 @@ def run_jobs(
         except Exception as exc:  # isolated per table (step3:111-122)
             if cmp is not None:
                 cmp.close()  # a failed table leaves no persisted state
-            return job.table, None, None, None, _failure_cause(exc)
+            return job, None, None, None, _failure_cause(exc)
         # per-table wall-clock, the reference's duration accounting
         # (step3_run_syncdiff.sh:125-134)
-        return job.table, cmp, row, round(time.monotonic() - t0, 3), None
+        return job, cmp, row, round(time.monotonic() - t0, 3), None
 
-    results: list[tuple[str, object, float]] = []
-    compares: dict[str, TableCompare] = {}
-    failures: dict[str, str] = {}
+    def consume(fn, cmp):
+        try:
+            return fn(cmp), None
+        except Exception as exc:  # isolated per table, like a summary
+            return None, _failure_cause(exc)
 
-    def record(table, cmp, row, secs, cause) -> None:
+    pending = iter(jobs)
+    tasks: dict[Future, Callable] = {}  # running task -> its completion step
+    pool = ThreadPoolExecutor(max(parallelism, 1))
+
+    def admit() -> None:
+        job = next(pending, None)
+        if job is not None:
+            tasks[pool.submit(summarize, job)] = summarized
+
+    def summarized(result) -> None:
         nonlocal done
-        if cause is not None:
-            failures[table] = cause
-        else:
-            compares[table] = cmp
-            results.append((table, row, secs))
+        job, cmp, row, secs, cause = result
         done += 1
         if progress is not None:
-            progress(format_progress(done, total, table, secs))
+            progress(format_progress(done, total, job.table, secs))
+        if cause is not None:
+            failures[job.table] = cause
+            return admit()
+        compares[job.table] = cmp
+        results.append((job.table, row, secs))
+        todo = consumers(job) if consumers is not None else {}
+        if not todo:
+            if consumers is not None:
+                cmp.close()
+            return admit()
+        causes: dict[str, str] = {}
+        remaining = set(todo)
 
-    if parallelism > 1 and len(jobs) > 1:
-        with ThreadPoolExecutor(max_workers=parallelism) as pool:
-            for fut in as_completed([pool.submit(one, j) for j in jobs]):
-                record(*fut.result())
-    else:
-        for j in jobs:
-            record(*one(j))
+        def consumed(name, result) -> None:
+            value, cause = result
+            if cause is None:
+                outputs.setdefault(job.table, {})[name] = value
+            else:
+                causes[name] = cause
+            remaining.discard(name)
+            if not remaining:
+                cmp.close()
+                if causes:
+                    failures[job.table] = next(causes[n] for n in todo if n in causes)
+                admit()
+
+        for name, fn in todo.items():
+            tasks[pool.submit(consume, fn, cmp)] = (
+                lambda result, name=name: consumed(name, result)
+            )
+
+    try:
+        for _ in range(max(parallelism, 1)):
+            admit()
+        while tasks:
+            finished, _ = wait(tasks, return_when=FIRST_COMPLETED)
+            for fut in finished:
+                tasks.pop(fut)(fut.result())
+    finally:
+        pool.shutdown(cancel_futures=True)
+        if consumers is not None:
+            # a run cut short leaves no persisted diff behind either
+            for cmp in compares.values():
+                cmp.close()
 
     rows = [
         (run_ts, table, row.structure_ok, row.upcount, row.downcount, secs)
@@ -172,5 +246,13 @@ def run_jobs(
         "upcount bigint, downcount bigint, duration_s double",
     )
     return CompareRun(
-        run_ts=run_ts, summaries=summaries, compares=compares, failures=failures
+        run_ts=run_ts,
+        summaries=summaries,
+        compares=compares,
+        failures=failures,
+        outputs=outputs,
     )
+
+
+def _read(side: DataFrame | Callable[[], DataFrame]) -> DataFrame:
+    return side if isinstance(side, DataFrame) else side()

@@ -12,6 +12,8 @@ catalog DataFrame of ``(table_schema, table_name, table_rows, pk_type)``:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -38,6 +40,7 @@ def parquet_catalog(
     tables: list[str],
     schema_name: str = "main",
     row_scale: int = 1,
+    on_unreadable: Callable[[str, Exception], None] | None = None,
 ) -> DataFrame:
     """Catalog DataFrame from parquet footer row counts (metadata-only).
 
@@ -46,10 +49,20 @@ def parquet_catalog(
 
     ``row_scale`` lets tests emulate the reference's billion-row regime on
     small files (the discovery predicate compares against 1e9).
+
+    ``on_unreadable(name, exc)``, when given, receives each table whose
+    footers cannot be read, and the catalog leaves that table out;
+    without it the read error propagates.
     """
     rows = []
     for name in tables:
-        n = _footer_row_count(f"{sf_dir}/{name}.parquet")
+        try:
+            n = _footer_row_count(f"{sf_dir}/{name}.parquet")
+        except Exception as exc:
+            if on_unreadable is None:
+                raise
+            on_unreadable(name, exc)
+            continue
         pk_type = "NONCLUSTERED" if name in NONCLUSTERED_TABLES else "CLUSTERED"
         rows.append((schema_name, name, n * row_scale, pk_type))
     return local_frame(spark, rows, CATALOG_SCHEMA)
