@@ -858,23 +858,36 @@ def test_cli_fk_audit_reports_slave_orphans(spark, tmp_path, capsys):
 
 
 def test_cli_fk_audit_rejects_bad_spec(spark, tmp_path, capsys):
+    """A bad --fk spec is refused before any table is compared: the run
+    exits 2 and writes no fix-SQL file and no repaired table."""
     from tidb_large_table_compare_spark.cli import main
 
     slave_dir = tmp_path / "slave"
     slave_dir.mkdir()
     orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
-    orders.write.parquet(str(slave_dir / "orders.parquet"))
-    code = main(
-        [
-            "--left-dir", SF_SMALL,
-            "--right-dir", str(slave_dir),
-            "--tables", "orders",
-            "--pk", "orders=o_orderkey",
-            "--fk", "not-a-spec",
-        ]
+    orders.filter(F.col("o_orderkey") % 50 != 7).write.parquet(
+        str(slave_dir / "orders.parquet")
     )
-    assert code == 2
-    assert "bad --fk spec" in capsys.readouterr().err
+    fix = tmp_path / "fix"
+    fix.mkdir()
+    for spec in ("not-a-spec", "lineitem.l_orderkey=orders.o_orderkey"):
+        code = main(
+            [
+                "--left-dir", SF_SMALL,
+                "--right-dir", str(slave_dir),
+                "--tables", "orders",
+                "--pk", "orders=o_orderkey",
+                "--fix-sql-out", str(fix),
+                "--reconcile-out", str(tmp_path / "repaired"),
+                "--fk", spec,
+            ]
+        )
+        cap = capsys.readouterr()
+        assert code == 2
+        assert f"--fk spec {spec!r}" in cap.err
+        assert cap.out == ""
+        assert list(fix.iterdir()) == []
+        assert not (tmp_path / "repaired").exists()
 
 
 def test_cli_profile_prints_both_sides(spark, tmp_path, capsys):
@@ -1022,7 +1035,7 @@ def test_cli_rejects_malformed_pk_spec(tmp_path):
 
 def test_cli_isolates_unreadable_table(spark, tmp_path, capsys):
     """One missing parquet on the right side fails THAT table and the run's
-    exit code — the other tables still compare and report."""
+    exit code — the other tables still compare, report and profile."""
     import shutil
 
     from tidb_large_table_compare_spark.cli import main
@@ -1038,6 +1051,7 @@ def test_cli_isolates_unreadable_table(spark, tmp_path, capsys):
             "--right-dir", str(right),
             "--tables", "orders,nation",
             "--pk", "orders=o_orderkey",
+            "--profile",
         ]
     )
     cap = capsys.readouterr()
@@ -1045,6 +1059,12 @@ def test_cli_isolates_unreadable_table(spark, tmp_path, capsys):
     assert "read failed for main.nation" in cap.err
     assert "FAILED tables: main.nation" in cap.err
     assert "main.orders" in cap.out  # the healthy table still reported
+    profiled = {
+        tuple(line.split()[1:3])
+        for line in cap.out.splitlines()
+        if line.startswith("profile ")
+    }
+    assert profiled == {("main.orders", "left"), ("main.orders", "right")}
 
 
 @pytest.mark.parametrize("threshold", ["0", "1"])

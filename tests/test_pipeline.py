@@ -115,12 +115,13 @@ def test_run_jobs_failure_isolated(spark):
 
 def test_run_jobs_parallel_over_shared_handles_matches_serial(spark, monkeypatch):
     """Eight compares over the same ``load_table`` handles, four at a time,
-    give the serial run's summaries, and closing every compare leaves no
-    persistent RDD behind. The jobs reach every scope kind and the
-    multiset path (a bitset scope past the patched pk-IN pushdown cap
-    among them). The check is on RDD ids, not the count: Spark keeps one
-    cache entry per plan, so a close() also releases an equal plan another
-    test left cached, and the context cleaner may drop leftovers meanwhile."""
+    give the serial run's summaries and leave no persistent RDD behind:
+    without consumers, run_jobs closes each compare after its summary. The
+    jobs reach every scope kind and the multiset path (a bitset scope past
+    the patched pk-IN pushdown cap among them). The check is on RDD ids,
+    not the count: Spark keeps one cache entry per plan, so a close() also
+    releases an equal plan another test left cached, and the context
+    cleaner may drop leftovers meanwhile."""
     from tidb_large_table_compare_spark.perturb import perturbed_orders
     from tidb_large_table_compare_spark.sources.tables import load_table
 
@@ -162,8 +163,6 @@ def test_run_jobs_parallel_over_shared_handles_matches_serial(spark, monkeypatch
             (r.table, r.structure_ok, r.upcount, r.downcount)
             for r in run.summaries.collect()
         )
-        for cmp in run.compares.values():
-            cmp.close()
         assert persisted() - before == set()
         assert kinds == {"empty", "bitset", "skip"}
     assert got[4] == got[1] and len(got[1]) == 8

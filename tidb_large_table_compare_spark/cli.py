@@ -33,8 +33,6 @@ import tempfile
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame
-
 from tidb_large_table_compare_spark.operators.compare import CompareOptions
 from tidb_large_table_compare_spark.operators.fixsql import fix_sql
 from tidb_large_table_compare_spark.plans.discover import discover
@@ -278,26 +276,28 @@ def _run(args) -> int:
 
     spark = get_spark("table-compare-cli")
 
+    # a bad --fk spec is refused before any table is compared or written
+    fk_checks = _fk_checks(args, spark)
+    if fk_checks is None:
+        return 2
+
     # per-table read isolation: one missing/corrupt parquet fails THAT
     # table, not the whole run. A left side whose footers cannot be read
     # stays out of the catalog; every Spark read runs in its table's task.
     read_failures: list[str] = []
-    frames: dict[tuple[str, str], DataFrame] = {}  # (schema.table, side)
 
     def unreadable(t: str, exc: Exception) -> None:
         name = f"{args.schema}.{t}"
         print(f"read failed for {name}: {exc}", file=sys.stderr)
         read_failures.append(name)
 
-    def loader(t: str, side: str, side_dir: str):
+    def loader(t: str, side_dir: str):
         def load():
             try:
-                df = spark.read.parquet(f"{side_dir}/{t}.parquet")
+                return spark.read.parquet(f"{side_dir}/{t}.parquet")
             except Exception as exc:  # noqa: BLE001 — reported, table fails
                 unreadable(t, exc)
                 raise
-            frames[f"{args.schema}.{t}", side] = df
-            return df
 
         return load
 
@@ -325,8 +325,8 @@ def _run(args) -> int:
     jobs = [
         CompareJob(
             table=f"{args.schema}.{t}",
-            left=loader(t, "left", args.left_dir),
-            right=loader(t, "right", args.right_dir),
+            left=loader(t, args.left_dir),
+            right=loader(t, args.right_dir),
             pk=pk_map.get(t),
             options=CompareOptions(**opts, row_count_hint=catalog_rows.get(t)),
         )
@@ -342,10 +342,48 @@ def _run(args) -> int:
         progress=lambda line: print(line, file=sys.stderr),
         consumers=_consumers(args, spark),
     )
-    return _print_run(args, spark, jobs, run, read_failures, frames)
+    return _print_run(args, run, read_failures, fk_checks)
 
 
-def _print_run(args, spark, jobs, run, read_failures, frames) -> int:
+def _fk_checks(args, spark) -> list | None:
+    """The ``--fk`` specs as ``integrity_audit`` checks over the slave
+    side, or None, with the error printed, when one is malformed or names
+    a missing table or column."""
+    checks = []
+    for spec in args.fk:
+        try:
+            child_part, parent_part = spec.split("=", 1)
+            child_tbl, child_cols = child_part.split(".", 1)
+            parent_tbl, parent_cols = parent_part.split(".", 1)
+        except ValueError:
+            print(f"ERROR: bad --fk spec {spec!r} "
+                  "(want child.fk=parent.pk)", file=sys.stderr)
+            return None
+        fk_cols = [c for c in child_cols.split(",") if c]
+        pk_cols = [c for c in parent_cols.split(",") if c]
+        if not fk_cols or not pk_cols or len(fk_cols) != len(pk_cols):
+            print(f"ERROR: bad --fk spec {spec!r} "
+                  "(column lists empty or of different arity)",
+                  file=sys.stderr)
+            return None
+        try:
+            child = spark.read.parquet(f"{args.right_dir}/{child_tbl}.parquet")
+            parent = spark.read.parquet(f"{args.right_dir}/{parent_tbl}.parquet")
+        except Exception as exc:  # AnalysisException: missing table file
+            print(f"ERROR: --fk spec {spec!r}: {exc}", file=sys.stderr)
+            return None
+        missing_cols = [c for c in fk_cols if c not in child.columns] + [
+            c for c in pk_cols if c not in parent.columns
+        ]
+        if missing_cols:
+            print(f"ERROR: --fk spec {spec!r}: columns not found: "
+                  f"{missing_cols}", file=sys.stderr)
+            return None
+        checks.append((child, fk_cols, parent, pk_cols, spec))
+    return checks
+
+
+def _print_run(args, run, read_failures, fk_checks) -> int:
     """Everything that reads ``run``: failure lines, the final report, the
     profiles, the buffered drill-down output in table order, the FK audit
     and the run's exit code."""
@@ -388,14 +426,10 @@ def _print_run(args, spark, jobs, run, read_failures, frames) -> int:
             )
             if wanted
         ]
-        for job in jobs:
-            if (job.table, "left") not in frames or (job.table, "right") not in frames:
-                continue  # a table with an unreadable side has no profile
-            for side in ("left", "right"):
+        for job in run.jobs:  # a table with an unreadable side has no profile
+            for side, frame in (("left", job.left), ("right", job.right)):
                 for tag, approx in passes:
-                    for r in profile_table(
-                        frames[job.table, side], approx=approx
-                    ).collect():
+                    for r in profile_table(frame, approx=approx).collect():
                         print(
                             f"{tag} {job.table} {side} {r.column_name} "
                             f"rows={r.n_rows} nulls={r.n_nulls} "
@@ -407,7 +441,7 @@ def _print_run(args, spark, jobs, run, read_failures, frames) -> int:
         """``(table, output)`` of one consumer, in table order."""
         return [
             (job.table, out[consumer])
-            for job in jobs
+            for job in run.jobs
             if consumer in (out := run.outputs.get(job.table, {}))
         ]
 
@@ -418,47 +452,12 @@ def _print_run(args, spark, jobs, run, read_failures, frames) -> int:
     # cross-table referential-integrity audit of the slave side: a replica
     # that lost parent rows has orphaned children — damage invisible to any
     # per-table diff above
-    if args.fk:
+    if fk_checks:
         from tidb_large_table_compare_spark.operators.integrity import (
             integrity_audit,
         )
 
-        checks = []
-        for spec in args.fk:
-            try:
-                child_part, parent_part = spec.split("=", 1)
-                child_tbl, child_cols = child_part.split(".", 1)
-                parent_tbl, parent_cols = parent_part.split(".", 1)
-            except ValueError:
-                print(f"ERROR: bad --fk spec {spec!r} "
-                      "(want child.fk=parent.pk)", file=sys.stderr)
-                return 2
-            fk_cols = [c for c in child_cols.split(",") if c]
-            pk_cols = [c for c in parent_cols.split(",") if c]
-            if not fk_cols or not pk_cols or len(fk_cols) != len(pk_cols):
-                print(f"ERROR: bad --fk spec {spec!r} "
-                      "(column lists empty or of different arity)",
-                      file=sys.stderr)
-                return 2
-            try:
-                child = spark.read.parquet(
-                    f"{args.right_dir}/{child_tbl}.parquet"
-                )
-                parent = spark.read.parquet(
-                    f"{args.right_dir}/{parent_tbl}.parquet"
-                )
-            except Exception as exc:  # AnalysisException: missing table file
-                print(f"ERROR: --fk spec {spec!r}: {exc}", file=sys.stderr)
-                return 2
-            missing_cols = [c for c in fk_cols if c not in child.columns] + [
-                c for c in pk_cols if c not in parent.columns
-            ]
-            if missing_cols:
-                print(f"ERROR: --fk spec {spec!r}: columns not found: "
-                      f"{missing_cols}", file=sys.stderr)
-                return 2
-            checks.append((child, fk_cols, parent, pk_cols, spec))
-        for r in integrity_audit(checks).collect():
+        for r in integrity_audit(fk_checks).collect():
             print(f"fk {r.relationship} child_rows={r.child_rows} "
                   f"null_fk={r.null_fk_rows} orphans={r.orphan_rows}")
 

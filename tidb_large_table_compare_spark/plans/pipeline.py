@@ -59,10 +59,12 @@ class CompareRun:
 
     run_ts: str
     summaries: DataFrame  # (run_ts, table, structure_ok, upcount, downcount)
-    # the TableCompare behind each successful summary — drill-down consumers
-    # (column drift, fix-SQL, repair) reuse its digest pass and persisted
-    # diff instead of comparing the table again. Given ``consumers``,
-    # run_jobs has already closed each one after its last consumer.
+    # the jobs whose two sides were read, with the sides as DataFrames,
+    # in job order
+    jobs: list[CompareJob]
+    # the TableCompare behind each successful summary, already closed:
+    # its drill-down consumers (column drift, fix-SQL, repair) reused its
+    # digest pass and persisted diff instead of comparing the table again
     compares: dict[str, TableCompare]
     # "ExceptionClass: first message line" per failed table: its read,
     # its summary or (first in declared order) one of its consumers
@@ -130,11 +132,9 @@ def run_jobs(
     ``consumers(job)``, when given, names the drill-down consumers of one
     table, ``{name: fn(cmp)}``, and is called with the job as read once its
     summary has run. Each consumer is a pool task of its own; what it
-    returns lands in ``CompareRun.outputs[table][name]``, an exception
-    fails the table (the other tables go on), and the compare is closed
-    after the table's last consumer. Without ``consumers`` every successful
-    compare stays open on ``CompareRun.compares`` for the caller to consume
-    and close.
+    returns lands in ``CompareRun.outputs[table][name]``, and an exception
+    fails the table (the other tables go on). A table's compare is closed
+    after its last consumer, or right after its summary when it has none.
 
     ``parallelism`` bounds both the threads running tasks (so the Spark
     actions in flight) and the tables admitted at once: the next table's
@@ -148,6 +148,7 @@ def run_jobs(
     total = len(jobs)
     done = 0
     results: list[tuple[str, object, float]] = []
+    read: dict[str, CompareJob] = {}
     compares: dict[str, TableCompare] = {}
     failures: dict[str, str] = {}
     outputs: dict[str, dict[str, object]] = {}
@@ -156,6 +157,7 @@ def run_jobs(
         cmp = None
         try:
             job = replace(job, left=_read(job.left), right=_read(job.right))
+            read[job.table] = job
             t0 = time.monotonic()
             cmp = compare_tables(
                 spark, job.left, job.right, job.pk, job.options, job.table
@@ -195,10 +197,9 @@ def run_jobs(
             return admit()
         compares[job.table] = cmp
         results.append((job.table, row, secs))
-        todo = consumers(job) if consumers is not None else {}
+        todo = consumers(job) if consumers else {}
         if not todo:
-            if consumers is not None:
-                cmp.close()
+            cmp.close()
             return admit()
         causes: dict[str, str] = {}
         remaining = set(todo)
@@ -230,10 +231,9 @@ def run_jobs(
                 tasks.pop(fut)(fut.result())
     finally:
         pool.shutdown(cancel_futures=True)
-        if consumers is not None:
-            # a run cut short leaves no persisted diff behind either
-            for cmp in compares.values():
-                cmp.close()
+        # a run cut short leaves no persisted diff behind either
+        for cmp in compares.values():
+            cmp.close()
 
     rows = [
         (run_ts, table, row.structure_ok, row.upcount, row.downcount, secs)
@@ -248,6 +248,7 @@ def run_jobs(
     return CompareRun(
         run_ts=run_ts,
         summaries=summaries,
+        jobs=[read[job.table] for job in jobs if job.table in read],
         compares=compares,
         failures=failures,
         outputs=outputs,
