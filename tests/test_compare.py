@@ -27,10 +27,6 @@ from tests.fixtures import (
     cmp_slave_schema_drift,
 )
 
-# the pk-IN pushdown cap, patched down to pin a bitset scope with the
-# pushdown off
-_INLIST_CAP = "tidb_large_table_compare_spark.operators.compare._MAX_INLIST"
-
 
 @pytest.fixture(scope="module")
 def master(spark):
@@ -225,7 +221,7 @@ def test_column_drift_requires_pk(spark, master, slave):
 
 
 @pytest.mark.parametrize(
-    "kind, n_buckets, cap, n_drift",
+    "kind, n_buckets, partitions, n_drift",
     [
         ("bitset", 4096, None, 6),
         ("bitset", 4096, 2, 6),
@@ -234,17 +230,16 @@ def test_column_drift_requires_pk(spark, master, slave):
     ],
 )
 def test_column_drift_counts_match_construction_in_every_scope(
-    spark, monkeypatch, kind, n_buckets, cap, n_drift
+    spark, kind, n_buckets, partitions, n_drift
 ):
     """column_drift's per-column counts equal the counts known by
-    construction in every scope kind, both standalone (bucket restriction)
-    and after the summary filled the diff (pk-IN retrieval in a bitset
-    scope under the pushdown cap, bucket restriction above it). Every slave
-    row rewrites 0.0 to -0.0 (top level and inside a reordered map): no
-    drift. Keys 1..n_drift drift s (pk % 3 == 0), d and m (pk % 3 == 1),
-    or s and the dotted column x.y (pk % 3 == 2); k never drifts."""
-    if cap is not None:
-        monkeypatch.setattr(_INLIST_CAP, cap)
+    construction in every scope kind, both standalone and after the
+    summary filled the diff (the bucket restriction either way), and
+    whether or not the inputs were first hash-repartitioned on the pk
+    into ``partitions`` partitions. Every slave row rewrites 0.0 to -0.0
+    (top level and inside a reordered map): no drift. Keys 1..n_drift
+    drift s (pk % 3 == 0), d and m (pk % 3 == 1), or s and the dotted
+    column x.y (pk % 3 == 2); k never drifts."""
     schema = (
         "pk bigint, s string, d double, m map<string, double>, `x.y` int, "
         "k string"
@@ -268,6 +263,9 @@ def test_column_drift_counts_match_construction_in_every_scope(
         slave_rows.append((pk, s, d, m, xy, k))
     left = spark.createDataFrame(master_rows, schema)
     right = spark.createDataFrame(slave_rows, schema)
+    if partitions is not None:
+        left = left.repartition(partitions, "pk")
+        right = right.repartition(partitions, "pk")
     drifted = range(1, n_drift + 1)
     by_rem = [sum(1 for pk in drifted if pk % 3 == r) for r in range(3)]
     want = {
@@ -488,7 +486,7 @@ def test_verify_repair_scoped_catches_broken_repair(spark):
 
 
 def test_verify_repair_releases_its_inner_compare(spark):
-    """A non-equivalent repair leaves the scoped re-verify's IN-list diff
+    """A non-equivalent repair leaves the scoped re-verify's bitset diff
     persisted; verify_repair must release it, since no caller can reach
     the compare it builds internally."""
     from tidb_large_table_compare_spark.operators.reconcile import (
@@ -516,16 +514,16 @@ def test_verify_repair_releases_its_inner_compare(spark):
 
 
 def test_bucket_scope_decision_lives_in_compare():
-    """The restriction regime is chosen in one place: the pk-IN pushdown
-    cap, the skip fraction and BucketScope construction appear in no other
-    package module, so no consumer re-derives the decision."""
+    """The restriction regime is chosen in one place: the skip fraction
+    and BucketScope construction appear in no other package module, so no
+    consumer re-derives the decision. The drill-down reads rows through
+    that scope alone: no package module holds a pk-IN pushdown."""
     from pathlib import Path
 
     import tidb_large_table_compare_spark as pkg
 
     root = Path(pkg.__file__).resolve().parent
     names = (
-        "_MAX_INLIST",
         "_RESTRICT_SKIP_FRACTION",
         "BucketScope(",
         "_bad_bucket_state",
@@ -539,6 +537,15 @@ def test_bucket_scope_decision_lives_in_compare():
         if name in line
     ]
     assert hits and all(h.startswith("operators/compare.py:") for h in hits), hits
+    gone = ("pk_pushdown", "_bounded_pushdown_keys", "_MAX_INLIST")
+    stale = [
+        f"{path.relative_to(root)}:{n}: {name}"
+        for path in sorted(root.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        for name in gone
+        if name in line
+    ]
+    assert not stale, stale
 
 
 def test_digest_aggregation_lives_in_compare():
@@ -637,9 +644,7 @@ def _regime_right(base):
     ] + [(k, 7) for k in _REGIME_EXTRA]
 
 
-def _regime_verdict(spark, monkeypatch, left_rows, right_rows, nb, cap, table="t"):
-    if cap is not None:
-        monkeypatch.setattr(_INLIST_CAP, cap)
+def _regime_verdict(spark, left_rows, right_rows, nb, table="t"):
     cmp = compare_tables(
         spark,
         spark.createDataFrame(left_rows, _REGIME_SCHEMA),
@@ -657,14 +662,13 @@ def _regime_verdict(spark, monkeypatch, left_rows, right_rows, nb, cap, table="t
         return kind, (s.upcount, s.downcount, s.equivalent), rows
     finally:
         cmp.close()
-        monkeypatch.undo()
 
 
-def test_null_and_duplicate_key_verdict_is_scope_independent(spark, monkeypatch):
+def test_null_and_duplicate_key_verdict_is_scope_independent(spark):
     """Identical NULL-key and duplicate-key rows cancel before any pairing,
-    so whether their bucket is drilled (skip scope) or not (bitset, with
-    the pk-IN pushdown on or off) cannot change the verdict: every scope
-    kind reports exactly the seeded drift."""
+    so whether their bucket is drilled (skip scope) or not (bitset) cannot
+    change the verdict: every scope kind reports exactly the seeded
+    drift."""
     truth_rows = sorted(
         [(str(k), "missing_in_right") for k in _REGIME_MISSING]
         + [(str(k), "modified") for k in _REGIME_MODIFIED]
@@ -676,16 +680,15 @@ def test_null_and_duplicate_key_verdict_is_scope_independent(spark, monkeypatch)
         truth_rows,
     )
     right = _regime_right(_REGIME_BASE)
-    cases = ((4096, None, "bitset"), (4096, 2, "bitset"), (8, None, "skip"))
-    for nb, cap, kind in cases:
-        got = _regime_verdict(spark, monkeypatch, _REGIME_BASE, right, nb, cap)
-        assert got == (kind, *truth), (nb, cap, got)
-    got = _regime_verdict(spark, monkeypatch, _REGIME_BASE, list(_REGIME_BASE), 8, None)
+    for nb, kind in ((4096, "bitset"), (8, "skip")):
+        got = _regime_verdict(spark, _REGIME_BASE, right, nb)
+        assert got == (kind, *truth), (nb, got)
+    got = _regime_verdict(spark, _REGIME_BASE, list(_REGIME_BASE), 8)
     assert got == ("empty", (0, 0, True), [])
 
 
-def test_keyed_diff_is_persisted_once_per_drilled_scope(spark, monkeypatch):
-    """In the bitset (pk-IN pushdown on or off) and skip scopes the keyed
+def test_keyed_diff_is_persisted_once_per_drilled_scope(spark):
+    """In the bitset and skip scopes the keyed
     diff is one persisted frame that every consumer shares; an empty
     scope's diff stays lazy.
     All derived state lives in the compare's one memo, and close() leaves
@@ -698,11 +701,9 @@ def test_keyed_diff_is_persisted_once_per_drilled_scope(spark, monkeypatch):
         return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
     right = _regime_right(_REGIME_BASE)
-    cases = ((4096, None, right, "bitset"), (4096, 2, right, "bitset"),
-             (8, None, right, "skip"), (8, None, list(_REGIME_BASE), "empty"))
-    for nb, cap, right_rows, kind in cases:
-        if cap is not None:
-            monkeypatch.setattr(_INLIST_CAP, cap)
+    cases = ((4096, right, "bitset"), (8, right, "skip"),
+             (8, list(_REGIME_BASE), "empty"))
+    for nb, right_rows, kind in cases:
         before = persisted()
         ldf = spark.createDataFrame(_REGIME_BASE, _REGIME_SCHEMA)
         rdf = spark.createDataFrame(right_rows, _REGIME_SCHEMA)
@@ -720,20 +721,17 @@ def test_keyed_diff_is_persisted_once_per_drilled_scope(spark, monkeypatch):
         assert set(vars(cmp)) == fields
         cmp.close()
         assert persisted() - before == set(), kind
-        monkeypatch.undo()
 
 
-def test_bucket_scope_is_one_action_in_every_kind(spark, monkeypatch):
+def test_bucket_scope_is_one_action_in_every_kind(spark):
     """bucket_scope collects the mismatched-bucket set once and picks the
     kind from it: in the empty, bitset and skip kinds the scope runs the
     jobs of one action over the digest, with no second pass to count or
     persist the set. A bitset restriction is one Filter, with no join."""
     right = _regime_right(_REGIME_BASE)
-    cases = ((4096, None, right, "bitset"), (4096, 2, right, "bitset"),
-             (8, None, right, "skip"), (8, None, list(_REGIME_BASE), "empty"))
-    for nb, cap, right_rows, kind in cases:
-        if cap is not None:
-            monkeypatch.setattr(_INLIST_CAP, cap)
+    cases = ((4096, right, "bitset"), (8, right, "skip"),
+             (8, list(_REGIME_BASE), "empty"))
+    for nb, right_rows, kind in cases:
 
         def build():
             return compare_tables(
@@ -754,7 +752,6 @@ def test_bucket_scope_is_one_action_in_every_kind(spark, monkeypatch):
             plan = scope.restrict(cmp.left, cmp.pk)._jdf
             plan = plan.queryExecution().optimizedPlan().toString()
             assert plan.count("Filter ") == 1 and "LeftSemi" not in plan, plan
-        monkeypatch.undo()
 
 
 @pytest.mark.parametrize("n_buckets", [32, 100, 4096, 1 << 20])
@@ -811,27 +808,21 @@ def test_bucket_scope_is_one_literal_filter():
         assert "local_frame" not in inspect.getsource(part), part.__name__
 
 
-def test_fix_sql_repair_round_trip_in_every_kind(spark, monkeypatch):
-    """In every scope kind (empty, bitset with the pk-IN pushdown on and
-    off, skip) fix-SQL names every differing key once, and the right side
+def test_fix_sql_repair_round_trip_in_every_kind(spark):
+    """In every scope kind (empty, bitset, skip) fix-SQL names every
+    differing key once, and the right side
     repaired with the compare's diff compares equivalent to the left on a
     full, unscoped compare."""
     from tidb_large_table_compare_spark.operators.reconcile import apply_fixes
 
     base = _REGIME_BASE[:200]
     right = _regime_right(base)
-    cases = ((8, None, list(base), "empty", False),
-             (4096, None, right, "bitset", True),
-             (4096, 2, right, "bitset", False),
-             (8, None, right, "skip", False))
-    for nb, cap, right_rows, kind, pushdown in cases:
-        if cap is not None:
-            monkeypatch.setattr(_INLIST_CAP, cap)
+    cases = ((8, list(base), "empty"), (4096, right, "bitset"), (8, right, "skip"))
+    for nb, right_rows, kind in cases:
         ldf = spark.createDataFrame(base, _REGIME_SCHEMA)
         rdf = spark.createDataFrame(right_rows, _REGIME_SCHEMA)
         cmp = compare_tables(spark, ldf, rdf, ["pk"], CompareOptions(n_buckets=nb), "t")
         assert cmp.scope().kind == kind
-        assert (cmp.pk_pushdown(cmp.diff_rows()) is not None) == pushdown, kind
         stmts = [r.fix_sql for r in fix_sql(cmp).collect()]
         n_replace = sum(s.startswith("REPLACE INTO t ") for s in stmts)
         n_delete = sum(s.startswith("DELETE FROM t ") for s in stmts)
@@ -844,7 +835,6 @@ def test_fix_sql_repair_round_trip_in_every_kind(spark, monkeypatch):
         assert (row.upcount, row.downcount, row.equivalent) == (0, 0, True), kind
         full.close()
         cmp.close()
-        monkeypatch.undo()
 
 
 def test_compare_persists_only_the_keyed_diff():
@@ -861,7 +851,7 @@ def test_compare_persists_only_the_keyed_diff():
     assert ".held" not in text
 
 
-def test_drifted_duplicate_key_raises_naming_the_table(spark, monkeypatch):
+def test_drifted_duplicate_key_raises_naming_the_table(spark):
     """A duplicate key whose rows drifted cannot be paired by key: in every
     drilled scope the keyed compare raises an error that names the table
     and points to multiset mode, and run_jobs records it as that table's
@@ -871,9 +861,9 @@ def test_drifted_duplicate_key_raises_naming_the_table(spark, monkeypatch):
     left = _REGIME_BASE + [(600, 1), (600, 2)]
     right = _regime_right(_REGIME_BASE) + [(600, 3), (600, 4)]
     refusal = r"db\.dupkeys: duplicate primary key \(600\)"
-    for nb, cap in ((4096, None), (4096, 2), (8, None)):
+    for nb in (4096, 8):
         with pytest.raises(Exception, match=refusal):
-            _regime_verdict(spark, monkeypatch, left, right, nb, cap, "db.dupkeys")
+            _regime_verdict(spark, left, right, nb, "db.dupkeys")
 
     ldf = spark.createDataFrame(left, _REGIME_SCHEMA)
     rdf = spark.createDataFrame(right, _REGIME_SCHEMA)
@@ -931,27 +921,24 @@ def test_fk_orphans_null_and_composite_semantics(spark):
         fk_orphans(child, ["k1"], parent, ["p1", "p2"], "bad")
 
 
-def test_column_drift_wide_drift_broadcast_path(spark, master, slave, monkeypatch):
-    """When more buckets drift than the pk-IN pushdown cap, column_drift
-    and diff_rows share one bitset scope (collected once via
-    TableCompare.scope) and results match the uncapped run."""
-    # n_buckets pinned well above the ~100 drifted keys: the bad set must
-    # overflow the (monkeypatched) pushdown cap yet stay under the
-    # restriction-skip fraction
-    baseline_cmp = compare_tables(
-        spark, master, slave, pk=["pk"],
-        options=CompareOptions(n_buckets=512), table_name="t",
-    )
-    baseline = {r.column_name: r.mismatch_rows
-                for r in baseline_cmp.column_drift().collect()}
+def test_column_drift_wide_drift_broadcast_path(spark, master, slave):
+    """When many buckets drift, column_drift and diff_rows share one
+    bitset scope (collected once via TableCompare.scope) and the counts
+    match an unrestricted (skip-scope) run."""
 
-    monkeypatch.setattr(_INLIST_CAP, 2)
-    cmp = compare_tables(
-        spark, master, slave, pk=["pk"],
-        options=CompareOptions(n_buckets=512), table_name="t",
-    )
-    wide = {r.column_name: r.mismatch_rows for r in cmp.column_drift().collect()}
-    assert wide == baseline
+    def drift(n_buckets):
+        cmp = compare_tables(
+            spark, master, slave, pk=["pk"],
+            options=CompareOptions(n_buckets=n_buckets), table_name="t",
+        )
+        return cmp, {r.column_name: r.mismatch_rows for r in cmp.column_drift().collect()}
+
+    skip_cmp, unrestricted = drift(8)
+    assert skip_cmp.scope().kind == "skip"
+    # n_buckets pinned well above the ~100 drifted keys: the bad set is
+    # wide yet stays under the restriction-skip fraction
+    cmp, wide = drift(512)
+    assert wide == unrestricted
     # both consumers reuse the same materialized state object
     state = cmp.scope()
     assert state.kind == "bitset" and state.n_bad > 2
@@ -959,11 +946,11 @@ def test_column_drift_wide_drift_broadcast_path(spark, master, slave, monkeypatc
     assert cmp.scope() is state
 
 
-def test_verify_repair_scoped_via_broadcast_frame(spark, monkeypatch):
-    """Past the pk-IN pushdown cap the bad-bucket set still restricts
-    through its bitset; a small FRACTION must still take the scoped path
-    and produce the full-table verdict (lake-scale bucket counts can
-    exceed the cap while drift stays in-regime)."""
+def test_verify_repair_scoped_via_broadcast_frame(spark):
+    """A bad-bucket set of many buckets restricts through its bitset; a
+    small FRACTION must still take the scoped path and produce the
+    full-table verdict (lake-scale bucket counts can be large while drift
+    stays in-regime)."""
     from tidb_large_table_compare_spark.operators.reconcile import (
         apply_fixes,
         verify_repair,
@@ -973,7 +960,6 @@ def test_verify_repair_scoped_via_broadcast_frame(spark, monkeypatch):
 
     orders = load_table(spark, "/root/testdata/sf0.001", "orders")
     slave = perturbed_orders(orders)
-    monkeypatch.setattr(_INLIST_CAP, 2)
     tc = compare_tables(
         spark, orders, slave, ["o_orderkey"],
         CompareOptions(n_buckets=4096), table_name="o",

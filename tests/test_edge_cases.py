@@ -307,48 +307,13 @@ def test_render_sql_id_edge_of_range_instants_refuse_not_crash():
     )
 
 
-def test_pushdown_gate_refuses_mixed_timestamp_flavors(spark):
-    """A timestamp rendering is flavor-specific (instant vs wall clock):
-    when the compare's two sides disagree on TIMESTAMP vs TIMESTAMP_NTZ
-    for the pk, one literal cannot be sound against both scans — the
-    pushdown gate must refuse and keep the join shape."""
-    from tidb_large_table_compare_spark.operators.compare import (
-        CompareOptions,
-        compare_tables,
-    )
-
-    left = spark.sql(
-        "select timestampadd(SECOND, cast(id as int),"
-        " timestamp'2024-01-01 00:00:00+00:00') as pk, id as v from range(50)"
-    )
-    right_ntz = spark.sql(
-        "select timestampadd(SECOND, cast(id as int),"
-        " timestamp_ntz'2024-01-01 00:00:00') as pk,"
-        " id + case when id = 5 then 100 else 0 end as v from range(50)"
-    )
-    cmp = compare_tables(
-        spark, left, right_ntz, pk=["pk"],
-        options=CompareOptions(n_buckets=64), table_name="t",
-    )
-    mod = left.select("pk").limit(3)
-    assert cmp._bounded_pushdown_keys(mod, "pk") is None
-    # same flavor on both sides: the gate opens
-    cmp2 = compare_tables(
-        spark, left, left, pk=["pk"],
-        options=CompareOptions(n_buckets=64), table_name="t",
-    )
-    assert cmp2._bounded_pushdown_keys(mod, "pk") is not None
-
-
 def test_fix_sql_timestamp_pk_and_values(spark):
     """REPLACE/DELETE export over a TIMESTAMP pk + timestamp value column:
-    the master retrieval renders the pk keys as TIMESTAMP literals (the
-    r10 fast path) and sql_literal renders timestamp VALUES zone-less in
-    the session tz with a 6-digit fraction — the conventional fix.sql
-    contract (the target applies them under its own matching tz; this
-    session pins UTC, so the strings equal the +00:00 instants)."""
-    import datetime
-
+    the master retrieval semi-joins the diff's timestamp keys, and
+    sql_literal renders timestamp VALUES zone-less in the session tz with
+    a 6-digit fraction — the conventional fix.sql contract (the target
+    applies them under its own matching tz; this session pins UTC, so the
+    strings equal the +00:00 instants)."""
     from pyspark.sql import functions as F
 
     from tidb_large_table_compare_spark.operators.compare import (
@@ -388,12 +353,6 @@ def test_fix_sql_timestamp_pk_and_values(spark):
     assert "'2024-06-01 05:00:00.000000'" in k5[0], k5[0]
     # the missing k=9 row re-inserts from the master
     assert any("2024-01-01 00:00:09.123456" in s for s in stmts)
-    # and the retrieval really used the rendered-IN fast path: the keys
-    # qualify under the declared TimestampType dtype
-    mod = cmp.diff_rows().select("pk")
-    ids = cmp._bounded_pushdown_keys(mod, "pk")
-    assert ids is not None and len(ids) == 3
-    assert all(isinstance(i, datetime.datetime) for i in ids)
 
 
 _TZ_MEMBERSHIP_SCRIPT = r'''

@@ -108,16 +108,11 @@ def test_incremental_respects_range_predicate(spark, tmp_path):
     assert odd == 0  # scoped rows stay within the configured range
 
 
-def test_incremental_wide_drift_takes_bitset_path(spark, tmp_path, monkeypatch):
-    """When more buckets drift than the pk-IN pushdown cap, the scoped
-    sides still filter on the one bitset literal: no join and no
-    ``__bucket`` IN-list — the wide-drift analog of
-    ``test_compare_drilldown_scans_bounded``. The cap is shrunk so the
-    perturbation's drift exceeds it without needing 50k real buckets;
-    results must equal the full compare either way."""
-    monkeypatch.setattr(
-        "tidb_large_table_compare_spark.operators.compare._MAX_INLIST", 2
-    )
+def test_incremental_wide_drift_takes_bitset_path(spark, tmp_path):
+    """When many buckets drift, the scoped sides still filter on the one
+    bitset literal: no join and no ``__bucket`` IN-list — the wide-drift
+    analog of ``test_compare_drilldown_scans_bounded``. Results must equal
+    the full compare."""
     orders = _orders(spark)
     path = str(tmp_path / "digests")
     # enough buckets that the drift stays clearly under the restriction-skip
@@ -149,16 +144,11 @@ def test_incremental_wide_drift_takes_bitset_path(spark, tmp_path, monkeypatch):
     full.close()
 
 
-def test_incremental_close_releases_changed_bucket_frame(
-    spark, tmp_path, monkeypatch
-):
-    """A changed-bucket set over the pk-IN pushdown cap is a bitset
-    literal the scoped sides filter on; nothing of the scope is
-    persisted. The returned compare's close() releases its own persisted
-    keyed diff, leaving no RDD behind for the rest of the session."""
-    monkeypatch.setattr(
-        "tidb_large_table_compare_spark.operators.compare._MAX_INLIST", 2
-    )
+def test_incremental_close_releases_changed_bucket_frame(spark, tmp_path):
+    """A changed-bucket set is a bitset literal the scoped sides filter
+    on; nothing of the scope is persisted. The returned compare's close()
+    releases its own persisted keyed diff, leaving no RDD behind for the
+    rest of the session."""
     orders = _orders(spark)
     path = str(tmp_path / "digests")
     opts = CompareOptions(n_buckets=256)

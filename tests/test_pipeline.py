@@ -113,21 +113,17 @@ def test_run_jobs_failure_isolated(spark):
     assert run.failures["main.bad"].startswith("AnalysisException: ")
 
 
-def test_run_jobs_parallel_over_shared_handles_matches_serial(spark, monkeypatch):
+def test_run_jobs_parallel_over_shared_handles_matches_serial(spark):
     """Eight compares over the same ``load_table`` handles, four at a time,
     give the serial run's summaries and leave no persistent RDD behind:
     without consumers, run_jobs closes each compare after its summary. The
-    jobs reach every scope kind and the multiset path (a bitset scope past
-    the patched pk-IN pushdown cap among them). The check is on RDD ids,
-    not the count: Spark keeps one cache entry per plan, so a close() also
-    releases an equal plan another test left cached, and the context
+    jobs reach every scope kind and the multiset path. The check is on RDD
+    ids, not the count: Spark keeps one cache entry per plan, so a close()
+    also releases an equal plan another test left cached, and the context
     cleaner may drop leftovers meanwhile."""
     from tidb_large_table_compare_spark.perturb import perturbed_orders
     from tidb_large_table_compare_spark.sources.tables import load_table
 
-    monkeypatch.setattr(
-        "tidb_large_table_compare_spark.operators.compare._MAX_INLIST", 8
-    )
     orders = load_table(spark, SF_SMALL, "orders")
     nation = load_table(spark, SF_SMALL, "nation")
     one_gone = orders.filter(F.col("o_orderkey") != 7)

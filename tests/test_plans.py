@@ -51,46 +51,38 @@ def test_compare_drilldown_scans_bounded(spark):
     assert plan.count("FileScan parquet") <= 3
 
 
-def test_fix_sql_pushes_pk_inlist_to_master_scan(spark):
-    """With a single integer PK and a bounded diff, the REPLACE retrieval
-    must push ``pk IN (...)`` into the master's parquet scan (row-group
-    pruning on pk-clustered files) instead of semi-joining a full scan —
-    the admission index's verify-scan trick applied to repair export.
-    (n_buckets pinned high so the bounded IN-list form holds — the
-    pushdown deliberately stays off in heavy-drift/skip forms.)"""
+def test_drilldowns_read_through_the_bucket_scope_alone(spark):
+    """Column drift and fix-SQL read rows one way whichever consumer ran
+    first. After the summary's diff is computed, column_drift still
+    restricts both scans through the bucket bitset, with no pk-IN
+    predicate, and plans exactly as it did standalone; fix-SQL retrieves
+    the master's rows by a semi-join against the diff keys. (n_buckets
+    pinned high so the scope is a bitset, not skip.)"""
+    import re
+
     from tidb_large_table_compare_spark.operators.compare import CompareOptions
     from tidb_large_table_compare_spark.operators.fixsql import fix_sql
+
+    def shape(df):  # expression ids differ between two builds of a plan
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"(#|_common_expr_)\d+L?", r"\1", plan)
 
     orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
     cmp = compare_tables(
         spark, orders, perturbed_orders(orders), pk=["o_orderkey"],
         options=CompareOptions(n_buckets=4096), table_name="main.orders",
     )
-    plan = _plan(fix_sql(cmp))
-    assert "In(o_orderkey, [" in plan  # reached PushedFilters
-
-
-def test_column_drift_pushes_pk_inlist_to_both_scans(spark):
-    """Single integer PK + bounded diff: column_drift retrieves both sides
-    by ``pk IN (modified pks)`` pushed to the parquet scans — join input is
-    exactly the modified rows, not chunk_size-amplified bucket rows.
-    (n_buckets pinned high so the bounded IN-list form holds, and the row
-    diff computed first — the pushdown engages only when a prior consumer
-    already owns the diff, as in the CLI's composed drill-down flow; a
-    standalone column_drift keeps the bucket restriction, which measured
-    faster than materializing the diff solely for the keys.)"""
-    from tidb_large_table_compare_spark.operators.compare import CompareOptions
-
-    orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
-    cmp = compare_tables(
-        spark, orders, perturbed_orders(orders), pk=["o_orderkey"],
-        options=CompareOptions(n_buckets=4096), table_name="t",
-    )
-    standalone = _plan(cmp.column_drift())
-    assert "In(o_orderkey, [" not in standalone  # fallback without a diff
-    cmp.diff_rows()  # a prior consumer computes the diff (CLI flow)
+    assert cmp.scope().kind == "bitset"
+    standalone = shape(cmp.column_drift())
+    cmp.diff_rows().count()  # the summary's diff, persisted and filled
+    assert shape(cmp.column_drift()) == standalone
     plan = _plan(cmp.column_drift())
-    assert plan.count("In(o_orderkey, [") >= 2  # both sides' PushedFilters
+    scans = [l for l in plan.splitlines() if "FileScan parquet" in l]
+    assert len(scans) >= 2 and all("getbit(" in l for l in scans), scans
+    assert "In(o_orderkey" not in plan, plan
+    fix = _plan(fix_sql(cmp))
+    assert "LeftSemi" in fix and "In(" not in fix, fix
+    cmp.close()
 
 
 def test_verify_repair_filters_before_row_hash(spark):
@@ -156,13 +148,14 @@ def test_ann_broadcasts_queries(spark):
 
 
 def test_digest_map_side_combine(spark):
-    """The digest aggregation must partially aggregate before the shuffle —
-    bytes shuffled ∝ n_buckets, not rows (the core 100 TB property, B6)."""
+    """The compare's digest aggregation (left +1, right -1, one groupBy)
+    must partially aggregate before the shuffle — bytes shuffled ∝
+    n_buckets, not rows (the core 100 TB property, B6)."""
     orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
     cmp = compare_tables(
         spark, orders, perturbed_orders(orders), pk=["o_orderkey"], table_name="t"
     )
-    plan = _plan(cmp.bucket_digests("left"))
+    plan = _plan(cmp.mismatched_buckets())
     pre_shuffle = plan.split("Exchange hashpartitioning(__bucket")[-1]
     assert "partial_sum" in pre_shuffle and "partial_bit_xor" in pre_shuffle
 
@@ -244,10 +237,10 @@ def test_aqe_skew_join_splits_hot_key(spark):
 
 
 def test_in_list_pushdown_for_decimal_and_string_pks(spark, tmp_path):
-    """The pk-IN scan pushdown's domain now includes Decimal (the TiDB
-    unsigned-BIGINT mapping) and identifier-charset string pks — the
+    """``hashing.in_list``'s rendered domain includes Decimal (the TiDB
+    unsigned-BIGINT mapping) and identifier-charset string keys — the
     rendered IN must reach the parquet scan's PushedFilters for both, or
-    the retrieval degrades to an unpruned full scan."""
+    a filtered read degrades to an unpruned full scan."""
     from decimal import Decimal
 
     from tidb_large_table_compare_spark.functions.hashing import in_list
@@ -814,12 +807,12 @@ def test_row_pairing_plans_have_no_join(spark):
     assert "Join" not in multiset, multiset
     assert multiset.count("Exchange") == 1, multiset
     assert "Exchange hashpartitioning(__row_hash" in multiset, multiset
-    for nb in (8, 4096):  # skip scope, IN-list scope
+    for nb in (8, 4096):  # skip scope, bitset scope
         cmp = compare_tables(
             spark, orders, right, ["o_orderkey"], CompareOptions(n_buckets=nb), "t"
         )
         keyed = cmp.diff_rows()
-        keyed.unpersist()  # the IN-list diff's cache would hide its plan
+        keyed.unpersist()  # the bitset diff's cache would hide its plan
         plan = _plan(keyed)
         assert "Join" not in plan, plan
         assert plan.count("Exchange hashpartitioning(o_orderkey") == 1, plan

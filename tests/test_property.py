@@ -126,24 +126,17 @@ def _reference_diff(master, slave):
 @given(
     plan=perturbation_plan(),
     nb=st.sampled_from([None, 8, 4096]),
-    cap=st.sampled_from([None, 2]),
 )
-# one pinned draw per scope kind — bitset with the pk-IN pushdown off
-# (more bad buckets than a cap of 2, under half of 4096), bitset with it
-# on, skip (30 drifted keys in 8 buckets), empty
-@example(plan=(60, [1, 2, 3], [4, 5], 2), nb=4096, cap=2)
-@example(plan=(60, [1, 2, 3], [4, 5], 2), nb=4096, cap=None)
-@example(plan=(60, list(range(1, 11)), list(range(11, 21)), 10), nb=8, cap=None)
-@example(plan=(60, [], [], 0), nb=8, cap=None)
-def test_compare_counts_match_construction(spark, plan, nb, cap):
-    # nb × cap spans every bucket-scope kind: 8 buckets pushes most
+# one pinned draw per scope kind — bitset (under half of 4096), skip (30
+# drifted keys in 8 buckets), empty
+@example(plan=(60, [1, 2, 3], [4, 5], 2), nb=4096)
+@example(plan=(60, list(range(1, 11)), list(range(11, 21)), 10), nb=8)
+@example(plan=(60, [], [], 0), nb=8)
+def test_compare_counts_match_construction(spark, plan, nb):
+    # nb spans every bucket-scope kind: 8 buckets pushes most
     # perturbations over the restriction-skip fraction (skip), 4096 keeps
-    # them in the bitset, with the pk-IN pushdown on or (past a cap of 2)
-    # off; None exercises the chunk-size sizing path
-    import pytest
-
+    # them in the bitset; None exercises the chunk-size sizing path
     from tidb_large_table_compare_spark.functions.hashing import bucket_id
-    from tidb_large_table_compare_spark.operators import compare as compare_mod
 
     n, missing, modified, n_extra = plan
     # every 11th d and every third map value is 0.0 on the master and
@@ -176,14 +169,11 @@ def test_compare_counts_match_construction(spark, plan, nb, cap):
     opts = (
         CompareOptions(chunk_size=16) if nb is None else CompareOptions(n_buckets=nb)
     )
-    with pytest.MonkeyPatch.context() as mp:
-        if cap is not None:
-            mp.setattr(compare_mod, "_MAX_INLIST", cap)
-        cmp = compare_tables(spark, master, slave, ["pk"], opts, "prop")
-        row = cmp.summary().collect()[0]
-        got = {(r.pk, r.diff_type) for r in cmp.diff_rows().collect()}
-        scope = cmp.scope()
-        cmp.close()
+    cmp = compare_tables(spark, master, slave, ["pk"], opts, "prop")
+    row = cmp.summary().collect()[0]
+    got = {(r.pk, r.diff_type) for r in cmp.diff_rows().collect()}
+    scope = cmp.scope()
+    cmp.close()
     assert row.upcount == len(missing) + len(modified)
     assert row.downcount == n_extra + len(modified)
     assert row.equivalent == (not missing and not modified and n_extra == 0)

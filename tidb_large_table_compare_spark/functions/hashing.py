@@ -55,8 +55,8 @@ def in_list(col_name: str, ids: list, dtype: T.DataType | None = None) -> Column
     """Membership predicate for a possibly-huge id list.
 
     ``Column.isin`` converts every element to a literal through its own
-    py4j round trip — ~30 s of DRIVER time at 50k ids (the pk-IN
-    pushdown cap), ~7 s at 10k (measured, PERFORMANCE.md round-8), superlinear enough to
+    py4j round trip — ~30 s of DRIVER time at 50k ids, ~7 s at 10k
+    (measured, PERFORMANCE.md round-8), superlinear enough to
     dwarf the jobs it guards. For integer and Decimal ids the same
     predicate rendered as one ``IN (...)`` SQL string crosses py4j once
     and parses JVM-side (~1.5 s at 50k); Catalyst folds the literal list
@@ -90,9 +90,7 @@ def in_list(col_name: str, ids: list, dtype: T.DataType | None = None) -> Column
 def render_sql_id(i, dtype: T.DataType | None = None) -> str | None:
     """Pinned, charset-gated SQL-literal rendering of one id — or ``None``
     if the value cannot be rendered safely. This single predicate defines
-    the domain of BOTH :func:`in_list`'s one-string fast path and the
-    compare family's pk-IN scan pushdown (``_bounded_pushdown_keys``), so
-    the two gates cannot drift apart.
+    the domain of :func:`in_list`'s one-string fast path.
 
     ``dtype`` is the filtered COLUMN's Spark type; it is consulted only
     for datetimes, which are otherwise unrenderable (the round-9 tz

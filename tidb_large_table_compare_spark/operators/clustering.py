@@ -26,10 +26,10 @@ from tidb_large_table_compare_spark.functions.materialize import (
 __all__ = ["connected_components"]
 
 # Edge-count bound under which components resolve on the driver: 100k pairs
-# is ~1.6 MB of longs — the same bounded-driver-state budget as the compare
-# drill-down's pk-IN pushdown cap. Candidate graphs from banded LSH are capped per
-# bucket upstream, so real corpora stay far below this until genuinely
-# massive dup populations, where the distributed path takes over.
+# is ~1.6 MB of longs of bounded driver state. Candidate graphs from banded
+# LSH are capped per bucket upstream, so real corpora stay far below this
+# until genuinely massive dup populations, where the distributed path takes
+# over.
 DRIVER_EDGE_THRESHOLD = 100_000
 
 

@@ -40,13 +40,10 @@ from functools import reduce, wraps
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from tidb_large_table_compare_spark.functions.hashing import (
     bucket_id,
     canonical_value,
-    in_list,
-    render_sql_id,
     row_hash,
     sql_string,
 )
@@ -74,7 +71,6 @@ DEFAULT_CHUNK_SIZE = 5000  # reference chunk-size (config.toml:21)
 # clamp on the estimated bucket count (CompareOptions.n_buckets overrides)
 _MIN_BUCKETS = 32
 _MAX_BUCKETS = 1 << 20
-_MAX_INLIST = 50_000  # pk-IN pushdown cap: keys collected and rendered
 # bad-bucket FRACTION above which restriction is skipped outright: the
 # filter would discard under half the rows (see bucket_scope)
 _RESTRICT_SKIP_FRACTION = 0.5
@@ -386,9 +382,6 @@ class TableCompare:
             "right": _narrow(self.right, self.pk, self.compare_cols, n, fr),
         }
 
-    def bucket_digests(self, side: str = "left") -> DataFrame:
-        return digest_sum(signed_digest(self._narrows()[side]))
-
     def mismatched_buckets(self) -> DataFrame:
         # left at +1, right at -1: a bucket absent from one side keeps the
         # other side's nonzero triple and is flagged; buckets absent from
@@ -404,58 +397,6 @@ class TableCompare:
         """The mismatched-bucket scope (:func:`bucket_scope`), built once
         per compare and shared by every drill-down consumer."""
         return bucket_scope(self.mismatched_buckets(), self._n_buckets())
-
-    def _bounded_pushdown_keys(self, frame: DataFrame, col: str) -> list | None:
-        """``col``'s values from ``frame`` when they qualify for the pk-IN
-        scan pushdown: at most ``_MAX_INLIST`` of them (the cap on a
-        rendered key IN-list) and every one in
-        ``hashing.render_sql_id``'s safe-rendering domain (ints, Decimals
-        — the TiDB unsigned-BIGINT mapping — identifier-charset strings
-        like UUID keys, dates, binary, and — dtype-declared — both
-        timestamp flavors). Returns None when oversized or unrenderable —
-        the one eligibility rule behind :meth:`pk_pushdown`, defined by
-        the same predicate as in_list's fast path, so the cap and the type
-        gate cannot drift apart. The ``in_list`` that consumes the
-        returned ids must get ``frame``'s own dtype for ``col``."""
-        dtype = frame.schema[col].dataType
-        if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-            # a timestamp rendering is flavor-specific (instant vs wall
-            # clock): when the two sides disagree on the flavor the one
-            # predicate cannot be sound against both scans — keep the
-            # bucket restriction, whose rows pair through the join's own
-            # coercion instead of a literal's
-            sides = {
-                s.schema[col].dataType
-                for s in (self.left, self.right)
-                if col in s.columns
-            }
-            if sides != {dtype}:
-                return None
-        ids = [
-            r[0]
-            for r in frame.select(col).limit(_MAX_INLIST + 1).collect()
-        ]
-        if len(ids) <= _MAX_INLIST and all(
-            render_sql_id(i, dtype) is not None for i in ids
-        ):
-            return ids
-        return None
-
-    def pk_pushdown(self, keys: DataFrame) -> Column | None:
-        """``pk IN (keys' pk values)`` for pushing into a side's scan, or
-        None when the pushdown does not apply: a composite key, a scope
-        other than a bitset of at most ``_MAX_INLIST`` bad buckets (there
-        the diff is drift-sized, so collecting its keys is a small cache
-        read; wider drift keeps the bucket restriction), or keys that
-        fail :meth:`_bounded_pushdown_keys`."""
-        scope = self.scope()
-        if len(self.pk) != 1 or scope.kind != "bitset" or scope.n_bad > _MAX_INLIST:
-            return None
-        col = self.pk[0]
-        ids = self._bounded_pushdown_keys(keys, col)
-        if ids is None:
-            return None
-        return in_list(col, ids, keys.schema[col].dataType)
 
     @_memoized
     def diff_rows(self) -> DataFrame:
@@ -474,9 +415,9 @@ class TableCompare:
         else is a drifted duplicate key, and the action raises.
 
         A drilled scope's keyed diff is persisted until :meth:`close`:
-        the summary fills the cache, and fix-SQL, ``apply_fixes``,
-        ``column_drift`` and the pk-IN key collect read it (a summary-only
-        run holds it too: no larger than the drill-down's own shuffle).
+        the summary fills the cache, and fix-SQL and ``apply_fixes`` read
+        it (a summary-only run holds it too: no larger than the
+        drill-down's own shuffle).
         The multiset diff stays lazy: :meth:`summary` is its one consumer.
         """
         if self.options.force_multiset or not self.pk:
@@ -558,18 +499,13 @@ class TableCompare:
         reconcile with the row-level verdicts: every 'modified' row has ≥1
         mismatching column here, and no unmodified row is counted.
 
-        Scale: with a single integer PK and a bounded diff, both sides are
-        retrieved by ``pk IN (modified pks)`` pushed into the parquet scan
-        — row-group pruning on pk-clustered files, and the join input is
-        exactly the modified rows rather than the chunk_size-amplified
-        bad-bucket rows (a hash bucket drags in ~chunk_size rows per
-        drifted one). Otherwise both sides fall back to the mismatched-
-        bucket restriction (the same bitset literal the row drill-down
-        uses — never a broadcast ∝ diff rows), then inner-join on PK.
-        Agreeing pairs contribute 0 to every count and unpaired rows
-        (missing/extra) drop out of the inner join, so neither form
-        changes the counts: the restriction is purely a cost bound.
-        Shuffled bytes ∝ drift, never table size.
+        Scale: both sides are read through the mismatched-bucket
+        restriction (:meth:`BucketScope.restrict`, the same bitset literal
+        the row drill-down uses — never a broadcast ∝ diff rows), then
+        inner-join on PK. Agreeing pairs contribute 0 to every count and
+        unpaired rows (missing/extra) drop out of the inner join, so the
+        restriction is purely a cost bound. The plan is the same whichever
+        consumer ran first, and shuffled bytes ∝ drift, never table size.
         """
         if not self.pk or self.options.force_multiset:
             # a duplicated PK would cross-product in the pairing join and
@@ -584,32 +520,11 @@ class TableCompare:
             return local_frame(
                 self.spark, [], "column_name string, mismatch_rows bigint"
             )
-        fr = self.options.float_round
-        # pk-IN retrieval only when (a) pk_pushdown applies — its bounded
-        # bitset gate means the persisted diff is drift-sized, so collecting
-        # the modified keys is a small cache read — AND (b) some consumer
-        # already built the diff (the CLI's composed flow runs the summary
-        # first; sharing its persisted frame makes this retrieval strictly
-        # cheaper than the bucket join). A standalone column_drift keeps
-        # the bucket-restriction shape: materializing the drill-down
-        # solely to learn the keys measured SLOWER than the restriction it
-        # would replace (sf1 in-regime: 1.45 s vs 1.22 s, PERFORMANCE.md
-        # round-8).
-        pred = None
-        if "diff_rows" in self._memo:
-            pred = self.pk_pushdown(
-                self.diff_rows().filter(F.col("diff_type") == "modified")
-            )
-        if pred is not None:
-            lsrc, rsrc = self.left.filter(pred), self.right.filter(pred)
-        else:
-            scope = self.scope()
-            lsrc = scope.restrict(self.left, self.pk)
-            rsrc = scope.restrict(self.right, self.pk)
+        fr, scope = self.options.float_round, self.scope()
         # positional aliases: a user column name never reaches a parsed
         # column reference, only the stack's string literal
         lrows, rrows = (
-            src.select(
+            scope.restrict(df, self.pk).select(
                 *self.pk,
                 *[
                     canonical_value(c, df.schema[c].dataType, fr)
@@ -617,7 +532,7 @@ class TableCompare:
                     for i, c in enumerate(cols)
                 ],
             )
-            for src, df, side in ((lsrc, self.left, "l"), (rsrc, self.right, "r"))
+            for df, side in ((self.left, "l"), (self.right, "r"))
         )
         counts = lrows.join(rrows, self.pk).agg(
             *[

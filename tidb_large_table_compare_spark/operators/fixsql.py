@@ -9,10 +9,8 @@ target get ``DELETE``.
 
 Everything is built with JVM-side string expressions (``format_string`` /
 ``concat_ws`` / ``regexp_replace``) — no Python UDFs — and the master's
-repair rows are retrieved either by a ``pk IN (...)`` predicate pushed into
-the parquet scan (single integer PK, bounded diff — row-group pruning on
-pk-clustered files) or by a broadcast semi-join against the small diff set;
-either way producing fix SQL never shuffles the large table.
+repair rows are retrieved by a semi-join against the small diff set, which
+AQE broadcasts, so producing fix SQL never shuffles the large table.
 """
 
 from __future__ import annotations
@@ -64,22 +62,9 @@ def fix_sql(cmp) -> DataFrame:
     cols = list(left.columns)
 
     to_replace = diff.filter(F.col("diff_type") != "extra_in_right").select(pk)
-    # Retrieval of the master's repair rows, cheapest applicable form: a
-    # single renderable PK (int, Decimal, identifier-charset string —
-    # hashing.render_sql_id's domain) with a bounded diff collects the
-    # keys and pushes ``pk IN (...)`` into the parquet scan (row-group
-    # pruning on pk-clustered files — the same adaptive trick as the
-    # admission index's verify-scan pushdown, dedup_index.py; the key set
-    # is the drill-down's own bounded output and in_list renders it in
-    # one py4j call). Composite/unrenderable PKs, an oversized diff or a
-    # heavy-drift scope keep the semi-join (TableCompare.pk_pushdown) —
-    # AQE broadcasts the small diff side, so the master scan still never
-    # shuffles (it just cannot prune).
-    keys_in = cmp.pk_pushdown(to_replace)
-    if keys_in is not None:
-        master_rows = left.filter(keys_in)
-    else:
-        master_rows = left.join(to_replace, pk, "left_semi")
+    # the master's repair rows: AQE broadcasts the small diff side of the
+    # semi-join, so the master scan never shuffles
+    master_rows = left.join(to_replace, pk, "left_semi")
     values = F.concat_ws(", ", *[sql_literal(F.col(c), fields[c]) for c in cols])
     replaces = master_rows.select(
         F.format_string(

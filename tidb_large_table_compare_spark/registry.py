@@ -312,24 +312,21 @@ SELECT 'o_totalprice',
        CAST(COALESCE(SUM(CASE WHEN lp IS DISTINCT FROM rp THEN 1 ELSE 0 END), 0) AS BIGINT) FROM j
 """
 
-# The inner-join oracle needs no modified-rows restriction: rows whose every
-# column agrees contribute 0 to every count, so restricting to modified rows
+# The inner-join oracle needs no bucket restriction: rows whose every column
+# agrees contribute 0 to every count, so restricting to mismatched buckets
 # (what the engine does, for scale) cannot change any sum.
 _register("cmp_column_drift_orders", _cmp_column_drift, _CMP_COLUMN_DRIFT_SQL)
 
 
 def _cmp_column_drift_ts_pk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-10 change canary: drill-down over a TIMESTAMP primary key.
+    """Change canary: column drift over a TIMESTAMP primary key.
 
-    Round 9 excluded datetimes from the rendered-IN fast path (a zone-less
-    TIMESTAMP literal parses in the session tz while collect() converts
-    through the OS tz); round 10 restored them soundly — ids render
-    through UTC with an explicit ``+00:00`` offset when the caller
-    declares the column dtype (functions/hashing.py render_sql_id). This
-    entry drives that path end-to-end: a unique event-time pk synthesized
-    from o_orderkey, bounded value drift, and a column_drift whose pk-IN
-    retrieval renders ~1/97 of the pks as TIMESTAMP literals — a wrong
-    instant selection drops modified pairs and fails the oracle hash.
+    This entry drives ``column_drift`` end-to-end through the bitset
+    restriction over a timestamp pk: a unique event-time pk synthesized
+    from o_orderkey, bounded value drift on ~1/97 of the rows, and both
+    sides read through the mismatched-bucket bitset, whose bucket ids
+    hash the timestamp pk on each side — a wrong bucket assignment drops
+    modified pairs and fails the oracle hash.
     """
     orders = load_table(spark, sf_dir, "orders")
     base = orders.select(
@@ -354,16 +351,13 @@ def _cmp_column_drift_ts_pk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.col("o_totalprice")),
     ).drop("o_orderkey")
     # n_buckets pinned HIGH relative to the ~1/97 drift so the bad-bucket
-    # scope stays a bounded bitset at every sf — that is the gate the
-    # pk-IN retrieval sits behind (with the default coarse
-    # sizing the drift covers most buckets, restriction is skipped, and
-    # this canary would silently stop exercising the rendered literals)
-    cmp = compare_tables(
+    # scope stays a bitset at every sf (with the default coarse sizing the
+    # drift covers most buckets, restriction is skipped, and this canary
+    # would silently stop exercising the bitset over a timestamp pk)
+    return compare_tables(
         spark, left, right, pk=["ts_pk"],
         options=CompareOptions(n_buckets=512), table_name="main.ts_orders",
-    )
-    cmp.diff_rows()  # computed diff → column_drift takes the pk-IN retrieval
-    return cmp.column_drift()
+    ).column_drift()
 
 
 _register(
