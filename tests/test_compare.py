@@ -921,7 +921,7 @@ def test_fk_orphans_null_and_composite_semantics(spark):
         fk_orphans(child, ["k1"], parent, ["p1", "p2"], "bad")
 
 
-def test_column_drift_wide_drift_broadcast_path(spark, master, slave):
+def test_column_drift_wide_drift_bitset_scope(spark, master, slave):
     """When many buckets drift, column_drift and diff_rows share one
     bitset scope (collected once via TableCompare.scope) and the counts
     match an unrestricted (skip-scope) run."""
@@ -946,7 +946,7 @@ def test_column_drift_wide_drift_broadcast_path(spark, master, slave):
     assert cmp.scope() is state
 
 
-def test_verify_repair_scoped_via_broadcast_frame(spark):
+def test_verify_repair_scoped_via_bitset(spark):
     """A bad-bucket set of many buckets restricts through its bitset; a
     small FRACTION must still take the scoped path and produce the
     full-table verdict (lake-scale bucket counts can be large while drift

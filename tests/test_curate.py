@@ -60,12 +60,35 @@ def test_curate_corpus_end_to_end(spark, tmp_path):
     assert on_disk["stages"] == st
 
 
+def test_curate_manifest_split_counts_match_written_corpus(spark, tmp_path):
+    """The manifest's per-split n_docs and n_tokens ride an observe() on the
+    corpus write; they must equal a groupBy of what was written."""
+    manifest = curate_corpus(
+        spark, _corpus_with_dups(spark), str(tmp_path / "curated"), val_permille=300
+    )
+    written = {
+        r["split"]: {"n_docs": r["n_docs"], "n_tokens": r["n_tokens"]}
+        for r in spark.read.parquet(manifest["corpus_path"])
+        .groupBy("split")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_toks").alias("n_tokens"),
+        )
+        .collect()
+    }
+    assert set(written) == {"train", "val"}
+    assert manifest["splits"] == written
+
+
 def test_curate_pipeline_job_count_bounded(spark, tmp_path):
     """Stage counts ride df.observe() on jobs the pipeline runs anyway; the
-    eager input/exact-dedup/decontamination count() jobs are gone. Measured
-    at this fixture (AQE splits actions into per-exchange jobs): 33 jobs vs
-    38 for the eager-count formulation. The cap fails if dedicated stage
-    counts creep back in."""
+    eager input/exact-dedup/decontamination count() jobs, the candidate-pair
+    count, connected_components' separate size probe and the post-write
+    read-back of the per-split counts are gone. Measured at this fixture
+    (AQE splits actions into per-exchange jobs): 17 jobs, 18 when it is
+    the session's first curation, against 23-24 with the pair count, the
+    probe and the read-back. The cap fails if a dedicated count or a
+    second signature pass creeps back in."""
     docs = _corpus_with_dups(spark)
     sc = spark.sparkContext
     sc.setJobGroup("curate-jobcount", "curate job-count bound")
@@ -74,7 +97,7 @@ def test_curate_pipeline_job_count_bounded(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup("curate-jobcount"))
-    assert 0 < n_jobs <= 35, f"curation pipeline ran {n_jobs} jobs (cap 35)"
+    assert 0 < n_jobs <= 18, f"curation pipeline ran {n_jobs} jobs (cap 18)"
 
 
 def test_curate_corpus_is_deterministic(spark, tmp_path):

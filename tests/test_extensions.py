@@ -1397,3 +1397,156 @@ def test_hashed_ngrams_expr_matches_column_form(spark):
             out = docs.select("doc_id", hashed_word_ngrams(name, n).alias("s"))
             assert out.schema["s"].dataType == T.ArrayType(T.LongType())
             assert {r.doc_id: r.s for r in out.collect()} == golden[n]
+
+
+def _long_doc(n_tokens: int, seed: int = 7) -> str:
+    """A document of ``n_tokens`` words from a 40-word vocabulary (so
+    windows repeat and distinctness matters), with a few doubled spaces and
+    space padding at both ends (empty tokens under a single-space split)."""
+    import random
+
+    rng = random.Random(seed)
+    words = [f"w{rng.randrange(40)}" for _ in range(n_tokens)]
+    for i in range(5, n_tokens, 997):
+        words[i] = " " + words[i]
+    return "  " + " ".join(words) + " "
+
+
+# (doc_id, text): a 3000-token document, text shorter than n, empty, NULL
+_WINDOW_DOCS = [(1, _long_doc(3000)), (2, "a b"), (3, ""), (4, None)]
+
+
+def _windows(toks: list[str], n: int) -> list[str]:
+    if len(toks) < n:
+        return []
+    return [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+
+
+def test_sliding_window_forms_match_python_reference(spark):
+    """Every sliding-window expression (word_ngrams, hashed_word_ngrams,
+    position_ngrams, chunk_tokens) equals a pure-Python reference on a
+    3000-token document, on text shorter than n, on empty text and on NULL
+    text. The hashed form is checked against xxhash64 of the reference
+    windows, order included."""
+    import hashlib
+    import re
+
+    from tidb_large_table_compare_spark.operators.spans import (
+        chunk_tokens,
+        position_ngrams,
+    )
+
+    docs = spark.createDataFrame(_WINDOW_DOCS, "doc_id long, text string")
+    n = 5
+
+    def space_split(text):  # split(text, ' '); NULL has no shingles
+        return [] if text is None else text.split(" ")
+
+    def span_tokens(text):  # split(trim(text), ' +'); NULL chunks as empty
+        return re.split(" +", (text or "").strip(" "))
+
+    want_word = {
+        i: list(dict.fromkeys(_windows(space_split(t), n))) for i, t in _WINDOW_DOCS
+    }
+    want_pos = {
+        i: [] if t is None else _windows(span_tokens(t), n) for i, t in _WINDOW_DOCS
+    }
+    assert len(want_word[1]) > 100 and len(want_pos[1]) == 3000 - n + 1
+
+    got = {
+        r.doc_id: r
+        for r in docs.select(
+            "doc_id",
+            word_ngrams(F.col("text"), n).alias("w"),
+            hashed_word_ngrams("text", n).alias("h"),
+            position_ngrams(F.col("text"), n).alias("p"),
+        ).collect()
+    }
+    ref = spark.createDataFrame(
+        [(i, g) for i, g in want_word.items()], "doc_id long, g array<string>"
+    ).select("doc_id", F.transform("g", lambda x: F.xxhash64(x)).alias("h"))
+    want_hash = {r.doc_id: r.h for r in ref.collect()}
+    for i, _ in _WINDOW_DOCS:
+        assert got[i].w == want_word[i], i
+        assert got[i].h == want_hash[i], i
+        assert got[i].p == want_pos[i], i
+
+    size, stride = 64, 48
+    want_chunks = set()
+    for i, t in _WINDOW_DOCS:
+        toks = span_tokens(t)
+        n_chunks = 1 + -(-max(0, len(toks) - size) // stride)
+        for k in range(n_chunks):
+            part = toks[k * stride:k * stride + size]
+            txt = " ".join(part)
+            want_chunks.add(
+                (i, k, k * stride + 1, len(part), hashlib.md5(txt.encode()).hexdigest())
+            )
+    got_chunks = {
+        tuple(r) for r in chunk_tokens(docs, "doc_id", "text", size, stride).collect()
+    }
+    assert got_chunks == want_chunks
+
+
+def test_sliding_window_forms_split_the_text_once(spark):
+    """Each sliding-window expression tokenizes its text once per row: the
+    token array is a lambda variable the per-window lambda slices. A
+    ``split(`` inside the per-window lambda re-splits the whole text for
+    every window — O(tokens²) per document."""
+    from tidb_large_table_compare_spark.operators.spans import (
+        chunk_tokens,
+        position_ngrams,
+    )
+
+    for col in (
+        word_ngrams(F.col("text"), 5),
+        hashed_word_ngrams("text", 5),
+        position_ngrams(F.col("text"), 8),
+    ):
+        assert str(col).count("split(") == 1, str(col)
+    docs = spark.createDataFrame(_WINDOW_DOCS, "doc_id long, text string")
+    plan = (
+        chunk_tokens(docs, "doc_id", "text")._jdf.queryExecution().analyzed().toString()
+    )
+    assert plan.count("split(") == 1, plan
+
+
+def test_lsh_candidates_run_the_signature_pass_once(spark, tmp_path):
+    """The hot-bucket cap reads the band table twice (its size aggregation
+    and its anti-join); the band table is materialized before the cap, so
+    the signature frame is evaluated once per partition, and the returned
+    plan reads the materialized table, not the Python signature pass."""
+    import os
+    import uuid
+
+    calls = str(tmp_path / "calls")
+    os.mkdir(calls)
+
+    def counted(batches):
+        open(os.path.join(calls, uuid.uuid4().hex), "w").close()
+        yield from batches
+
+    # 12 docs share one signature (a hot bucket in every band, over the
+    # cap of 10); the other 28 fall into 4 groups of 7 by id
+    base = spark.range(0, 40, numPartitions=2).select(
+        F.col("id").alias("doc_id"),
+        F.when(F.col("id") < 12, F.lit(0)).otherwise(F.col("id") % 4 + 1).alias("g"),
+    )
+    sigs = base.select(
+        "doc_id",
+        F.transform(
+            F.sequence(F.lit(0), F.lit(127)), lambda i: F.col("g") * 1000 + i
+        ).cast("array<long>").alias("sig"),
+    ).mapInPandas(counted, "doc_id long, sig array<long>")
+    pairs = lsh_candidate_pairs_from_array(sigs, "doc_id", max_bucket_size=10)
+    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+    got = {(r.id_a, r.id_b) for r in pairs.collect()}
+    want = {
+        (a, b)
+        for a in range(12, 40)
+        for b in range(a + 1, 40)
+        if a % 4 == b % 4
+    }
+    assert got == want
+    assert "MapInPandas" not in plan, plan
+    assert len(os.listdir(calls)) == 2, sorted(os.listdir(calls))

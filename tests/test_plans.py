@@ -85,6 +85,43 @@ def test_drilldowns_read_through_the_bucket_scope_alone(spark):
     cmp.close()
 
 
+def test_fix_sql_export_gathers_statements_not_the_scan(spark, tmp_path):
+    """The CLI writes each table's fix SQL as one file. The single-task
+    gather is an exchange above the statements, not a Coalesce folded into
+    the master scan's stage: coalesce(1) ran the whole scan and semi-join
+    in one task (a single-core full-table scan at scale)."""
+    from unittest.mock import patch
+
+    from tidb_large_table_compare_spark.cli import main
+
+    orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
+    slave = tmp_path / "slave"
+    perturbed_orders(orders).write.parquet(str(slave / "orders.parquet"))
+    real_write = type(orders).write
+    written = []
+
+    def capture(df):
+        written.append(df)
+        return real_write.fget(df)
+
+    # patch the CONCRETE class — pyspark.sql.DataFrame is abstract in Spark 4
+    with patch.object(type(orders), "write", property(capture)):
+        main(
+            [
+                "--left-dir", SF_SMALL,
+                "--right-dir", str(slave),
+                "--tables", "orders",
+                "--pk", "orders=o_orderkey",
+                "--fix-sql-out", str(tmp_path / "fix"),
+            ]
+        )
+    (fix,) = [df for df in written if df.columns == ["fix_sql"]]
+    plan = _plan(fix)
+    assert "Coalesce" not in plan, plan
+    assert "Exchange SinglePartition" in plan.splitlines()[1], plan
+    assert list((tmp_path / "fix" / "main_orders_fix").glob("part-*"))
+
+
 def test_verify_repair_filters_before_row_hash(spark):
     """The scoped re-verify must discard clean-bucket rows BEFORE the
     full-width canonicalize+hash: in its digest plan, EVERY parquet scan

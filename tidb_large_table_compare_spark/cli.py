@@ -501,9 +501,12 @@ def _consumers(args, spark):
             if r.mismatch_rows
         ]
 
-    # fix-SQL export (B10) for tables with diffs and a PK
+    # fix-SQL export (B10) for tables with diffs and a PK: one file per
+    # table. repartition(1), not coalesce(1): a coalesce folds the whole
+    # master scan and semi-join into the single writing task, while the
+    # shuffle lets the scan run on every core and gathers only statements
     def fix(job, cmp):
-        fix_sql(cmp).coalesce(1).write.mode("overwrite").text(
+        fix_sql(cmp).repartition(1).write.mode("overwrite").text(
             out_dir(args.fix_sql_out, job, "fix")
         )
 

@@ -33,9 +33,9 @@ __all__ = ["connected_components"]
 DRIVER_EDGE_THRESHOLD = 100_000
 
 
-def _driver_components(pairs: DataFrame) -> DataFrame:
-    """Union-find over a collected (small) edge list; min-id roots match the
-    label-propagation fixpoint exactly."""
+def _driver_components(spark, edges) -> DataFrame:
+    """Union-find over a collected (small) Arrow edge list; min-id roots
+    match the label-propagation fixpoint exactly."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -44,8 +44,7 @@ def _driver_components(pairs: DataFrame) -> DataFrame:
             x = parent[x]
         return x
 
-    for row in pairs.select("id_a", "id_b").collect():
-        a, b = int(row[0]), int(row[1])
+    for a, b in zip(edges.column("id_a").to_pylist(), edges.column("id_b").to_pylist()):
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -54,39 +53,34 @@ def _driver_components(pairs: DataFrame) -> DataFrame:
     out = [(n, find(n)) for n in sorted(parent)]
     # Arrow, not per-row py4j: at the 100k-edge bound the assignment list is
     # ~2e5 rows, ~6 s of row-by-row marshaling otherwise
-    return local_frame(
-        pairs.sparkSession, out, "node bigint, cluster_id bigint"
-    )
+    return local_frame(spark, out, "node bigint, cluster_id bigint")
 
 
-def connected_components(
-    pairs: DataFrame, max_iterations: int = 20, *, edge_count: int | None = None
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     """(node, cluster_id) where cluster_id = min node id in the component.
 
     ``pairs`` must have columns (id_a, id_b). Isolated endpoints appear with
     themselves as cluster id; nodes absent from ``pairs`` are not emitted
     (callers union in singletons if they need total coverage).
 
-    Small candidate graphs (≤ ``DRIVER_EDGE_THRESHOLD`` edges — one cheap
-    bounded count decides) resolve via driver-side union-find: dozens of
-    Spark jobs' worth of per-round scheduling collapses to one collect.
-    Larger graphs run the distributed min-label propagation below — each
-    round shuffles only (node, label) pairs, rounds ∝ graph diameter.
+    Small candidate graphs (≤ ``DRIVER_EDGE_THRESHOLD`` edges) resolve via
+    driver-side union-find: dozens of Spark jobs' worth of per-round
+    scheduling collapses to one collect. That collect is also the size
+    probe — one bounded Arrow collect of at most ``DRIVER_EDGE_THRESHOLD
+    + 1`` edges — so a small graph costs one action, not a count and then
+    a collect. Larger graphs run the distributed min-label propagation
+    below — each round shuffles only (node, label) pairs, rounds ∝ graph
+    diameter.
 
-    ``edge_count``: callers that already know |pairs| (e.g. the curation
-    pipeline counts the persisted candidate frame to materialize it and fire
-    its stage observations) pass it here, skipping the bounded limit-probe
-    job. The probe's early-stop is also why observe() metrics attached below
-    ``pairs`` must not rely on it: a LIMIT may read only some partitions.
+    The probe is a LIMIT, which may stop before reading every partition,
+    so an ``observe()`` metric attached below ``pairs`` must latch on an
+    earlier full-scan action, not on this probe (the curation pipeline
+    latches its input and exact-dedup counts on the eager exact-dedup
+    materialization).
     """
-    known = (
-        edge_count
-        if edge_count is not None
-        else pairs.limit(DRIVER_EDGE_THRESHOLD + 1).count()
-    )
-    if known <= DRIVER_EDGE_THRESHOLD:
-        return _driver_components(pairs)
+    head = pairs.select("id_a", "id_b").limit(DRIVER_EDGE_THRESHOLD + 1).toArrow()
+    if head.num_rows <= DRIVER_EDGE_THRESHOLD:
+        return _driver_components(pairs.sparkSession, head)
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(

@@ -81,16 +81,20 @@ def word_ngrams(text: Column, n: int) -> Column:
 
     Guarded for short texts: Spark's ``sequence(1, 0)`` counts *down* to
     ``[1, 0]`` rather than yielding an empty array, so texts with fewer than
-    ``n`` tokens are mapped to an explicit empty shingle set.
+    ``n`` tokens are mapped to an explicit empty shingle set. The text is
+    split once per row (see :func:`hashed_word_ngrams`).
     """
-    toks = F.split(text, " ")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - n + 1),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-    return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
+
+    def grams(toks: Column) -> Column:
+        windows = F.transform(
+            F.sequence(F.lit(1), F.size(toks) - n + 1),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+        )
+        return F.when(F.size(toks) >= n, F.array_distinct(windows)).otherwise(
+            F.array().cast("array<string>")
+        )
+
+    return F.transform(F.array(F.split(text, " ")), grams)[0]
 
 
 def hashed_word_ngrams(text: str, n: int) -> Column:
@@ -106,15 +110,23 @@ def hashed_word_ngrams(text: str, n: int) -> Column:
     Built as one ``F.expr``, ~2× cheaper to construct than the same tree
     through the Column API (as for ``signature_band_buckets``); hashes
     pinned by ``test_hashed_ngrams_expr_matches_column_form``.
+
+    The token array is bound ONCE per row, as the lambda variable of a
+    one-element ``transform``: Catalyst does not share a repeated
+    ``split`` across the per-window lambda, so writing ``split(text)``
+    inside it re-split the whole text for every window — O(tokens²) per
+    document. On 4 cores, over 2000 documents of 560 tokens on average,
+    that form took 53.5 s warm and this one takes 1.5 s (PERFORMANCE.md
+    "Linear shingling").
     """
-    # the lambda variable shadows a column of the same name inside the
-    # lambda body, so it takes a name no text column is expected to have
-    t = f"split({quote_name(text)}, ' ')"
+    # the lambda variables shadow columns of the same names inside the
+    # lambda bodies, so they take names no text column is expected to have
     return F.expr(
-        f"CASE WHEN size({t}) >= {n} THEN array_distinct(transform("
-        f"sequence(1, size({t}) - {n} + 1), "
-        f"__i -> xxhash64(concat_ws(' ', slice({t}, __i, {n}))))) "
-        f"ELSE CAST(array() AS array<bigint>) END"
+        f"transform(array(split({quote_name(text)}, ' ')), __t -> "
+        f"CASE WHEN size(__t) >= {n} THEN array_distinct(transform("
+        f"sequence(1, size(__t) - {n} + 1), "
+        f"__i -> xxhash64(concat_ws(' ', slice(__t, __i, {n}))))) "
+        f"ELSE CAST(array() AS array<bigint>) END)[0]"
     )
 
 
@@ -382,19 +394,24 @@ def lsh_candidate_pairs_from_array(
     buckets that big are boilerplate clusters, not near-dup families.
     Default ``None`` preserves exact parity with the all-candidates oracle.
     """
-    exploded = signature_band_buckets(signatures, id_col, n_hashes, n_bands)
+    # materialize ONCE, before the cap and the self-join: the cap's size
+    # aggregation and its anti-join, and then both join sides, each read
+    # the band table — left lazy, every read re-derives it and, when the
+    # caller hands an unpersisted signature frame (the common shape), the
+    # full Python OPH signature pass from source. Measured at the sf10
+    # replica: 29.2 s → ~12 s for the candidate stage when the self-join
+    # sides stopped re-deriving it; checkpointing before the cap rather
+    # than after it then left one OPH (MapInPandas) stage per curation run
+    # instead of two (PERFORMANCE.md "Linear shingling"). Default is
+    # localCheckpoint, not persist: no unpersist hook exists after the
+    # return (same discipline as dedup_index's batch shingles), and the
+    # table is narrow — (id, band, bucket), three longs per row.
+    # Preemptible clusters flip the seam's session conf to persist
+    # (functions/materialize.py).
+    exploded = materialize(
+        signature_band_buckets(signatures, id_col, n_hashes, n_bands)
+    )
     exploded = cap_hot_buckets(exploded, max_bucket_size)
-    # materialize ONCE before the self-join: both join sides otherwise
-    # re-derive the band table — and, when the caller hands an unpersisted
-    # signature frame (the common shape), the full OPH signature pass —
-    # from source. Measured at the sf10 replica: 29.2 s → ~12 s for the
-    # candidate stage (the duplicated explode+signature work was over half
-    # the entry's cost). Default is localCheckpoint, not persist: no
-    # unpersist hook exists after the return (same discipline as
-    # dedup_index's batch shingles), and the table is narrow — (id, band,
-    # bucket), three longs per row. Preemptible clusters flip the seam's
-    # session conf to persist (functions/materialize.py).
-    exploded = materialize(exploded)
     a = exploded.withColumnRenamed(id_col, "id_a")
     b = exploded.withColumnRenamed(id_col, "id_b")
     return (

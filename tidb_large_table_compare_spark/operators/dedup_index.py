@@ -96,9 +96,13 @@ def build_neardup_index(
     spark = corpus.sparkSession
     stored = spark.read.parquet(f"{path}/docs")  # reuse the written shingles
     sigs = minhash_signature_oph_np(stored, id_col, n_hashes=n_hashes)
-    bands = signature_band_buckets(sigs, id_col, n_hashes, n_bands)
-    bands = cap_hot_buckets(bands, max_bucket_size)
-    bands.write.mode("overwrite").parquet(f"{path}/bands")
+    # materialized before the cap: its size aggregation and its anti-join
+    # both read the band table, and left lazy each read re-ran the Python
+    # OPH signature pass
+    bands = materialize(signature_band_buckets(sigs, id_col, n_hashes, n_bands))
+    cap_hot_buckets(bands, max_bucket_size).write.mode("overwrite").parquet(
+        f"{path}/bands"
+    )
 
 
 def append_to_neardup_index(
@@ -118,7 +122,9 @@ def append_to_neardup_index(
     past the cap between compactions); run ``compact_neardup_index``
     periodically to re-apply it and merge the accumulated append files.
     """
-    shingles = _shingle_sets(corpus_batch, id_col, text_col, shingle_n)
+    # materialized: the docs write and the signatures both read the
+    # batch's shingles, which would otherwise be derived from text twice
+    shingles = materialize(_shingle_sets(corpus_batch, id_col, text_col, shingle_n))
     # appended files keep the same id clustering the build wrote — the
     # range repartition matters for the same reason as the build's: a
     # hash-distributed multi-split batch would otherwise append files

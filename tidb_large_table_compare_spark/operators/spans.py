@@ -42,16 +42,21 @@ def position_ngrams(text: Column, n: int) -> Column:
 
     Spans are joined with single spaces; texts shorter than ``n`` tokens map
     to an explicit empty array (`sequence(1, 0)` would count *down*, the same
-    guard as `dedup.word_ngrams`).
+    guard as `dedup.word_ngrams`). The text is tokenized once per row: the
+    token array is the lambda variable of a one-element ``transform``, so the
+    per-window lambda slices it instead of re-splitting the text.
     """
-    toks = _tokens(text)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - n + 1),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-    return F.when(F.size(toks) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
+
+    def grams(toks: Column) -> Column:
+        windows = F.transform(
+            F.sequence(F.lit(1), F.size(toks) - n + 1),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+        )
+        return F.when(F.size(toks) >= n, windows).otherwise(
+            F.array().cast("array<string>")
+        )
+
+    return F.transform(F.array(_tokens(text)), grams)[0]
 
 
 def duplicated_spans(
@@ -68,8 +73,9 @@ def duplicated_spans(
     the span, a deterministic representative. The per-doc `array_distinct`
     happens map-side, so the shuffle carries each (doc, span) pair once
     regardless of how often the span repeats inside one document; the
-    aggregation is a plain hash-groupBy on the span key. Nothing quadratic:
-    cost is O(total spans), shuffle bytes O(distinct doc-span pairs).
+    aggregation is a plain hash-groupBy on the span key. Each document is
+    tokenized once (`position_ngrams`), so span construction is O(tokens × n)
+    per document; shuffle bytes are O(distinct doc-span pairs).
 
     ``hashed=True`` replaces the span string with its xxhash64 — the 100 TB
     configuration (8-byte shuffle keys); collision odds 2^-64.
@@ -102,31 +108,42 @@ def chunk_tokens(
     Chunk k starts at token ``1 + k*stride`` (1-based); chunks run to
     ``ceil((n_tokens - size) / stride)`` so the tail is always covered (the
     final chunk may be shorter than ``size`` but never empty). Emits
-    (doc_id, chunk_idx, start_tok, n_chunk_toks, chunk_md5). Entirely
-    per-row array arithmetic — a map-only pass at any scale; the downstream
-    writer decides partitioning (cf. `plans/curate.py` packing).
+    (doc_id, chunk_idx, start_tok, n_chunk_toks, chunk_md5). Per-row array
+    arithmetic over a token array bound once per row (the lambda variable of
+    a one-element ``transform``), so each document costs O(chunks × size),
+    and no shuffle; the downstream writer decides partitioning (cf.
+    `plans/curate.py` packing).
     """
     if stride <= 0 or size <= 0:
         raise ValueError("size and stride must be positive")
-    toks = _tokens(F.col(text_col))
-    n = F.size(toks)
-    # number of chunks: 1 + ceil(max(0, n - size) / stride), integer-exact
-    n_chunks = F.lit(1) + F.floor(
-        (F.greatest(n - size, F.lit(0)) + stride - 1) / stride
-    ).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda k: F.struct(
-            k.cast("bigint").alias("chunk_idx"),
-            (k * stride + 1).cast("bigint").alias("start_tok"),
-            F.concat_ws(" ", F.slice(toks, k * stride + 1, size)).alias("__txt"),
-        ),
-    )
-    out = docs.select(F.col(id_col), F.explode(chunks).alias("c")).select(
+
+    def chunks(toks: Column) -> Column:
+        n = F.size(toks)
+        # number of chunks: 1 + ceil(max(0, n - size) / stride), integer-exact
+        n_chunks = F.lit(1) + F.floor(
+            (F.greatest(n - size, F.lit(0)) + stride - 1) / stride
+        ).cast("int")
+        return F.transform(
+            F.sequence(F.lit(0), n_chunks - 1),
+            lambda k: F.struct(
+                k.cast("bigint").alias("chunk_idx"),
+                (k * stride + 1).cast("bigint").alias("start_tok"),
+                # tokens hold no space, so this equals the token count of
+                # the chunk text split on single spaces
+                F.size(F.slice(toks, k * stride + 1, size))
+                .cast("bigint")
+                .alias("n_chunk_toks"),
+                F.concat_ws(" ", F.slice(toks, k * stride + 1, size)).alias("__txt"),
+            ),
+        )
+
+    # a NULL text chunks like an empty one: one empty chunk of one token
+    toks = F.coalesce(_tokens(F.col(text_col)), F.array(F.lit("")))
+    per_doc = F.transform(F.array(toks), chunks)[0]
+    return docs.select(F.col(id_col), F.explode(per_doc).alias("c")).select(
         F.col(id_col),
         F.col("c.chunk_idx").alias("chunk_idx"),
         F.col("c.start_tok").alias("start_tok"),
-        F.size(F.split(F.col("c.__txt"), " ")).cast("bigint").alias("n_chunk_toks"),
+        F.col("c.n_chunk_toks").alias("n_chunk_toks"),
         F.md5(F.col("c.__txt").cast("binary")).alias("chunk_md5"),
     )
-    return out

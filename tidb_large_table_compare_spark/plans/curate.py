@@ -14,9 +14,10 @@ and split expressions, one running-sum window for packing. The pipeline
 adds no new shuffle shapes — it only sequences verified ones.
 
 The attrition manifest is one-pass: stage counts are ``df.observe()``
-metrics collected by the jobs the pipeline must run anyway (candidate-pair
-materialization, junction count, corpus write, post-write read-back) —
-no dedicated count() jobs, and the job total is regression-capped in
+metrics collected by the jobs the pipeline must run anyway (the exact-dedup
+materialization and the corpus write, which also carries the per-split
+counts) — no dedicated count() jobs and no read-back of the written
+corpus, and the job total is regression-capped in
 ``tests/test_curate.py::test_curate_pipeline_job_count_bounded``.
 """
 
@@ -85,7 +86,7 @@ def curate_corpus(
     the curated corpus lands in ``out_dir/corpus`` partitioned by ``split``.
     """
     # Stage counts ride df.observe() metrics on the jobs the pipeline runs
-    # anyway (the candidate-pair materialization and the corpus write) —
+    # anyway (the exact-dedup materialization and the corpus write) —
     # no dedicated count() jobs for input / exact-dedup / decontamination.
     obs_input = Observation()
     obs_exact = Observation()
@@ -145,17 +146,16 @@ def curate_corpus(
     cands = lsh_candidate_pairs_from_array(
         sigs, "doc_id", max_bucket_size=lsh_max_bucket_size
     )
+    # persisted: above DRIVER_EDGE_THRESHOLD, connected_components reads
+    # the pairs twice (its bounded probe, then its edge table)
     pairs = jaccard_verified_pairs(
         cands, shingle_sets, "doc_id", jaccard_threshold
     ).select("id_a", "id_b").persist()
-    # One full count of the persisted candidate frame: materializes the
-    # shingle/pair caches, executes the observed input/exact nodes end-to-end
-    # in a single full-scan action (a LIMIT probe could stop early and latch
-    # partial metrics), and doubles as connected_components' size probe.
-    n_pairs = pairs.count()
+    # the eager materialize(exact) above was the first full-scan action
+    # over the observed input/exact nodes, so both metrics have latched
     n_input = observed_count(obs_input, "n", docs.count)
     n_exact = observed_count(obs_exact, "n", exact.count)
-    clusters = connected_components(pairs, edge_count=n_pairs)
+    clusters = connected_components(pairs)
     drop = clusters.filter(F.col("node") != F.col("cluster_id")).select(
         F.col("node").alias("doc_id")
     )
@@ -208,8 +208,11 @@ def curate_corpus(
         .cast("long"),
         F.lit(1000),
     )
+    splits = ("train", "val")
     split_col = (
-        F.when(bucket < 1000 - val_permille, F.lit("train")).otherwise(F.lit("val"))
+        F.when(bucket < 1000 - val_permille, F.lit(splits[0])).otherwise(
+            F.lit(splits[1])
+        )
     )
     tagged = quality.withColumn("split", split_col)
 
@@ -242,22 +245,33 @@ def curate_corpus(
         "start_tok", F.sum("n_toks").over(w_pack) - F.col("n_toks")
     ).withColumn("first_chunk", chunk_id).drop("__shard")
 
-    corpus_path = str(Path(out_dir) / "corpus")
-    packed.write.mode("overwrite").partitionBy("split").parquet(corpus_path)
-
-    out = spark.read.parquet(corpus_path)
-    split_counts = {
-        r["split"]: {"n_docs": r["n_docs"], "n_tokens": r["n_tokens"]}
-        for r in out.groupBy("split")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_toks").cast("long").alias("n_tokens"),
+    # per-split manifest counts ride the corpus write too: the split column
+    # takes the two literal values in ``splits``, so one conditional count
+    # and sum per split replaces a read-back of the written corpus (schema
+    # inference plus a two-job groupBy)
+    split_metrics = [
+        m
+        for s in splits
+        for m in (
+            F.count(F.when(F.col("split") == s, 1)).alias(f"{s}_docs"),
+            F.sum(F.when(F.col("split") == s, F.col("n_toks"))).alias(f"{s}_tokens"),
         )
-        .collect()
+    ]
+    obs_split = Observation()
+    corpus_path = str(Path(out_dir) / "corpus")
+    packed.observe(obs_split, *split_metrics).write.mode("overwrite").partitionBy(
+        "split"
+    ).parquet(corpus_path)
+
+    # the write above is the first action over the observed frames: the
+    # packed corpus, the survivors and the near-dup junction they hang off
+    per_split = obs_split.get
+    split_counts = {
+        s: {"n_docs": per_split[f"{s}_docs"], "n_tokens": per_split[f"{s}_tokens"]}
+        for s in splits
+        if per_split[f"{s}_docs"] > 0
     }
     n_quality = sum(s["n_docs"] for s in split_counts.values())
-    # the write above is the first action over the observed survivors frame
-    # (and over the near-dup junction it hangs off)
     n_neardup = observed_count(obs_neardup, "n", neardup_cached.count)
     n_decontaminated = observed_count(obs_decon, "n", survivors.count)
     # dedicated handle: unpersisted regardless of the decontamination branch
