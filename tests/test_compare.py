@@ -450,10 +450,10 @@ def test_verify_repair_scoped_catches_broken_repair(spark):
 
     orders = load_table(spark, "/root/testdata/sf0.001", "orders")
     slave = perturbed_orders(orders)
-    # pin a bucket count far above the drift so the SCOPED branch engages
-    # (at the default 32 buckets this perturbation drifts most of them and
-    # verify_repair falls back to the full re-compare — also a valid path,
-    # but not the one under test here)
+    # pin a bucket count far above the drift so the scope is a bitset
+    # (at the default 32 buckets this perturbation drifts most of them,
+    # the scope is skip and verify_repair re-compares in full — also a
+    # valid path, but not the one under test here)
     tc = compare_tables(
         spark, orders, slave, ["o_orderkey"],
         CompareOptions(n_buckets=4096), table_name="o",
@@ -516,8 +516,9 @@ def test_verify_repair_releases_its_inner_compare(spark):
 def test_bucket_scope_decision_lives_in_compare():
     """The restriction regime is chosen in one place: the skip fraction
     and BucketScope construction appear in no other package module, so no
-    consumer re-derives the decision. The drill-down reads rows through
-    that scope alone: no package module holds a pk-IN pushdown."""
+    consumer re-derives the decision (verify_repair holds no fraction gate
+    of its own). The drill-down reads rows through that scope alone: no
+    package module holds a pk-IN pushdown."""
     from pathlib import Path
 
     import tidb_large_table_compare_spark as pkg
@@ -537,7 +538,7 @@ def test_bucket_scope_decision_lives_in_compare():
         if name in line
     ]
     assert hits and all(h.startswith("operators/compare.py:") for h in hits), hits
-    gone = ("pk_pushdown", "_bounded_pushdown_keys", "_MAX_INLIST")
+    gone = ("pk_pushdown", "_bounded_pushdown_keys", "_MAX_INLIST", "_SCOPE_FRACTION")
     stale = [
         f"{path.relative_to(root)}:{n}: {name}"
         for path in sorted(root.rglob("*.py"))

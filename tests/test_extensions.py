@@ -928,11 +928,12 @@ def test_neardup_index_build_range_clusters_docs(spark, tmp_path):
         assert hi < lo, f"overlapping id ranges across files: {ranges}"
 
 
-def test_neardup_index_probe_broadcast_is_conditional(spark, tmp_path):
+def test_neardup_index_probe_broadcast_is_conditional(spark, tmp_path, monkeypatch):
     """An oversized admission batch must NOT be force-broadcast: with the
     band-row budget shrunk below the batch size the probe resolves to the
     shuffle join, the plan carries no broadcast of the batch side, and the
     admitted pairs are identical to the broadcast path's."""
+    from tidb_large_table_compare_spark.operators import dedup_index
     from tidb_large_table_compare_spark.operators.dedup_index import (
         build_neardup_index,
         query_neardup_index,
@@ -955,21 +956,18 @@ def test_neardup_index_probe_broadcast_is_conditional(spark, tmp_path):
     ).write.parquet(str(tmp_path / "arrivals"))
     arrivals = spark.read.parquet(str(tmp_path / "arrivals"))
 
-    # verify_pushdown_max_ids=0 keeps candidate generation IN the plan so
-    # the broadcast-vs-shuffle resolution is visible in the analyzed tree
-    small = query_neardup_index(
-        spark, path, arrivals, threshold=0.5, verify_pushdown_max_ids=0
-    )
-    big = query_neardup_index(
-        spark, path, arrivals, threshold=0.5, broadcast_max_batch_bytes=1,
-        verify_pushdown_max_ids=0,
-    )
+    # no verify pushdown keeps candidate generation IN the plan so the
+    # broadcast-vs-shuffle resolution is visible in the analyzed tree
+    monkeypatch.setattr(dedup_index, "VERIFY_PUSHDOWN_MIN_STORE_BYTES", 1 << 62)
+    small = query_neardup_index(spark, path, arrivals, threshold=0.5)
+    with monkeypatch.context() as m:
+        m.setattr(dedup_index, "BROADCAST_MAX_BATCH_BYTES", 1)
+        big = query_neardup_index(spark, path, arrivals, threshold=0.5)
     unknown = query_neardup_index(
         spark,
         path,
         spark.createDataFrame([(103, "x")], "doc_id bigint, text string"),
         threshold=0.5,
-        verify_pushdown_max_ids=0,
     )
     # auto-resolution: tiny file-backed batch broadcasts; over-budget and
     # unknown-size batches do not
@@ -1150,7 +1148,7 @@ def test_profile_table_stats_and_nulls(spark):
 
     # hostile column names: quotes/backticks/backslashes land in the
     # rendered stack() fragment as a literal AND inside identifiers —
-    # both must be escaped (same bug class as in_list's backtick fix)
+    # both must be escaped (same bug class as quote_name's backtick fix)
     hostile = df.withColumnsRenamed({"s": "it's", "d": "a`b\\c"})
     hprof = {r.column_name: r for r in profile_table(hostile).collect()}
     assert set(hprof) == {"id", "it's", "a`b\\c"}

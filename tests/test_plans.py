@@ -273,83 +273,6 @@ def test_aqe_skew_join_splits_hot_key(spark):
                 spark.conf.set(k, v)
 
 
-def test_in_list_pushdown_for_decimal_and_string_pks(spark, tmp_path):
-    """``hashing.in_list``'s rendered domain includes Decimal (the TiDB
-    unsigned-BIGINT mapping) and identifier-charset string keys — the
-    rendered IN must reach the parquet scan's PushedFilters for both, or
-    a filtered read degrades to an unpruned full scan."""
-    from decimal import Decimal
-
-    from tidb_large_table_compare_spark.functions.hashing import in_list
-
-    p = str(tmp_path / "dec")
-    spark.range(1000).selectExpr(
-        "cast(id as decimal(20,0)) pk", "id v"
-    ).write.parquet(p)
-    df = spark.read.parquet(p)
-    plan = (
-        df.filter(in_list("pk", [Decimal(5), Decimal(7)]))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "In(pk, [5,7" in plan.split("PushedFilters")[1][:80], plan
-
-    p2 = str(tmp_path / "str")
-    spark.range(1000).selectExpr("concat('k-', id) pk", "id v").write.parquet(p2)
-    df2 = spark.read.parquet(p2)
-    plan2 = (
-        df2.filter(in_list("pk", ["k-5", "k-7"]))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "In(pk, [k-5,k-7" in plan2.split("PushedFilters")[1][:80], plan2
-
-    # timestamp pks (both flavors) joined the domain in round 10: the
-    # dtype-declared rendering must reach PushedFilters as In — these are
-    # the event-time keys of CDC feeds, where the isin fallback's driver
-    # cost was the standing 22-30 s penalty
-    import datetime
-
-    p3 = str(tmp_path / "ts")
-    spark.range(1000).selectExpr(
-        "timestampadd(SECOND, cast(id as int), timestamp'2024-01-01 00:00:00+00:00') pk",
-        "id v",
-    ).write.parquet(p3)
-    df3 = spark.read.parquet(p3)
-    tids = [r.pk for r in df3.filter("v in (5, 7)").select("pk").collect()]
-    assert all(isinstance(t, datetime.datetime) for t in tids)
-    plan3 = (
-        df3.filter(in_list("pk", tids, df3.schema["pk"].dataType))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "In(pk, [2024-01-01" in plan3.split("PushedFilters")[1][:120], plan3
-    got3 = sorted(
-        r.v
-        for r in df3.filter(
-            in_list("pk", tids, df3.schema["pk"].dataType)
-        ).collect()
-    )
-    assert got3 == [5, 7]
-
-    p4 = str(tmp_path / "ntz")
-    spark.range(1000).selectExpr(
-        "timestampadd(SECOND, cast(id as int), timestamp_ntz'2024-01-01 00:00:00') pk",
-        "id v",
-    ).write.parquet(p4)
-    df4 = spark.read.parquet(p4)
-    nids = [r.pk for r in df4.filter("v in (5, 7)").select("pk").collect()]
-    plan4 = (
-        df4.filter(in_list("pk", nids, df4.schema["pk"].dataType))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "In(pk, [2024-01-01" in plan4.split("PushedFilters")[1][:120], plan4
-    got4 = sorted(
-        r.v
-        for r in df4.filter(
-            in_list("pk", nids, df4.schema["pk"].dataType)
-        ).collect()
-    )
-    assert got4 == [5, 7]
-
-
 def test_compare_drilldown_shuffle_bounded_under_hot_bucket(spark):
     """Inject a hot bucket at sf0.1: every row of ONE of 10 buckets differs
     (~10% of the table). The drill-down must shuffle only that bucket's rows
@@ -719,11 +642,9 @@ def test_admission_probe_degrades_without_size_probe(spark, tmp_path, monkeypatc
     monkeypatch.setattr(
         dedup_index, "optimized_plan_size_bytes", lambda df: None
     )
-    got = dedup_index.query_neardup_index(
-        spark, path, batch, threshold=0.5,
-        # pushdown explicitly invited: the None store size must decline it
-        verify_pushdown_min_store_bytes=0,
-    )
+    # pushdown explicitly invited: the None store size must decline it
+    monkeypatch.setattr(dedup_index, "VERIFY_PUSHDOWN_MIN_STORE_BYTES", 0)
+    got = dedup_index.query_neardup_index(spark, path, batch, threshold=0.5)
     assert {(r.id_a, r.id_b) for r in got.collect()} == expected
     # and the plan stayed lazy: no pushed candidate-id IN filter
     plan = _plan(got)
@@ -734,12 +655,13 @@ def test_admission_probe_degrades_without_size_probe(spark, tmp_path, monkeypatc
     assert shingle_scans and all("In(doc_id" not in l for l in shingle_scans)
 
 
-def test_admission_probe_scans_bands_not_corpus_text(spark, tmp_path):
+def test_admission_probe_scans_bands_not_corpus_text(spark, tmp_path, monkeypatch):
     """The probe's scale contract: candidate generation reads ONLY the
     persisted band table (32 longs/doc, ~1/400th of corpus bytes); the
     stored shingle sets appear once, in the verification join; corpus TEXT
     is never read at all. Plan-asserted so a refactor can't silently turn
     a probe back into a corpus scan."""
+    from tidb_large_table_compare_spark.operators import dedup_index
     from tidb_large_table_compare_spark.operators.dedup_index import (
         build_neardup_index,
         query_neardup_index,
@@ -768,14 +690,11 @@ def test_admission_probe_scans_bands_not_corpus_text(spark, tmp_path):
     # candidate-id IN filter, so parquet row-group stats bound verify IO
     # by the candidate set, not the corpus (docs/ is written id-clustered
     # for exactly this)
-    pushed = scan_lines(
-        _plan(
-            query_neardup_index(
-                spark, path, batch, threshold=0.5,
-                verify_pushdown_min_store_bytes=0,
-            )
+    with monkeypatch.context() as m:
+        m.setattr(dedup_index, "VERIFY_PUSHDOWN_MIN_STORE_BYTES", 0)
+        pushed = scan_lines(
+            _plan(query_neardup_index(spark, path, batch, threshold=0.5))
         )
-    )
     docs = [l for l in pushed if "shingles#" in l]
     assert 1 <= len(docs) <= 2
     for l in docs:
@@ -795,6 +714,69 @@ def test_admission_probe_scans_bands_not_corpus_text(spark, tmp_path):
     assert len([l for l in lazy if "band#" in l and "bucket#" in l]) == 1
     # batch text reads live in the shingle checkpoint, not this plan
     assert len([l for l in lazy if "text#" in l]) == 0
+
+
+def test_admission_probe_pushdown_renders_long_doc_ids(spark, tmp_path, monkeypatch):
+    """Doc ids are ``long`` (the signature pass fixes the type), and the
+    forced verify-scan pushdown renders them inline as one SQL IN string:
+    ids near 2^62 must survive the rendering exactly, reach BOTH
+    stored-shingle scans as ``In(doc_id``, and admit the same pairs as
+    the lazy plan."""
+    from tidb_large_table_compare_spark.operators import dedup_index
+
+    base = 1 << 62
+    corpus = spark.createDataFrame(
+        [(base + i, f"doc number {i} with some shared words " * 3)
+         for i in range(20)],
+        "doc_id bigint, text string",
+    )
+    path = str(tmp_path / "bigidx")
+    dedup_index.build_neardup_index(corpus, path)
+    batch = spark.createDataFrame(
+        [(base + 101, "doc number 7 with some shared words " * 3)],
+        "doc_id bigint, text string",
+    )
+    want = {(base + 7, base + 101)}
+    lazy = dedup_index.query_neardup_index(spark, path, batch, threshold=0.5)
+    assert {(r.id_a, r.id_b) for r in lazy.collect()} == want
+
+    monkeypatch.setattr(dedup_index, "VERIFY_PUSHDOWN_MIN_STORE_BYTES", 0)
+    pushed = dedup_index.query_neardup_index(spark, path, batch, threshold=0.5)
+    # planned before the collect: the final adaptive plan reuses one scan
+    docs = [
+        l for l in _plan(pushed).splitlines()
+        if "FileScan parquet" in l and "shingles#" in l
+    ]
+    assert len(docs) == 2, docs
+    for l in docs:
+        # the plan string truncates the list; every candidate id starts so
+        assert f"In(doc_id, [{str(base)[:-2]}" in l, l
+    assert {(r.id_a, r.id_b) for r in pushed.collect()} == want
+
+
+def test_admission_probe_pushdown_with_no_candidates(spark, tmp_path, monkeypatch):
+    """A forced pushdown whose batch collides with no indexed bucket has
+    no id to render (``IN ()`` does not parse): the probe returns zero
+    pairs, and the stored-shingle scan is planned away."""
+    from tidb_large_table_compare_spark.operators import dedup_index
+
+    corpus = spark.createDataFrame(
+        [(i, f"doc number {i} with some shared words " * 3) for i in range(20)],
+        "doc_id bigint, text string",
+    )
+    path = str(tmp_path / "nocandidx")
+    dedup_index.build_neardup_index(corpus, path)
+    batch = spark.createDataFrame(
+        [(101, "an unrelated arrival about quantum gardening " * 3)],
+        "doc_id bigint, text string",
+    )
+    monkeypatch.setattr(dedup_index, "VERIFY_PUSHDOWN_MIN_STORE_BYTES", 0)
+    pairs = dedup_index.query_neardup_index(spark, path, batch, threshold=0.5)
+    assert pairs.count() == 0
+    assert not [
+        l for l in _plan(pairs).splitlines()
+        if "FileScan parquet" in l and "shingles#" in l
+    ]
 
 
 def test_approx_distinct_keeps_hll_out_of_distinct_rewrite(spark):

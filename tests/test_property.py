@@ -719,50 +719,3 @@ def test_compaction_replan_converges_generally(spark, sizes, target):
         assert under2 < under1
     else:
         assert under2 <= under1
-
-
-@given(
-    st.datetimes(
-        min_value=__import__("datetime").datetime(1902, 1, 1),
-        max_value=__import__("datetime").datetime(2037, 12, 31),
-    ),
-    st.booleans(),
-)
-@settings(max_examples=300, deadline=None)
-def test_render_sql_id_timestamp_literal_preserves_the_instant(dt, fold):
-    """Driver-side pin of the r10 rendering math, no Spark needed: for an
-    arbitrary naive datetime (either fold), the rendered TIMESTAMP
-    literal's body re-parses to the SAME instant that datetime denotes
-    under the OS-local interpretation collect() uses — i.e. rendering is
-    exactly astimezone-inverse, fraction always 6 digits, charset pinned.
-    The range stays inside the TZ database's well-defined era (the
-    container is UTC, but the property must hold under any TZ)."""
-    import datetime as _dt
-    import re
-
-    from pyspark.sql import types as T
-
-    from tidb_large_table_compare_spark.functions.hashing import render_sql_id
-
-    naive = dt.replace(fold=fold)
-    lit = render_sql_id(naive, T.TimestampType())
-    assert lit is not None
-    m = re.fullmatch(
-        r"TIMESTAMP '(\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}\.\d{6})\+00:00'", lit
-    )
-    assert m, lit
-    reparsed = _dt.datetime.strptime(m.group(1), "%Y-%m-%d %H:%M:%S.%f").replace(
-        tzinfo=_dt.timezone.utc
-    )
-    assert reparsed == naive.astimezone(_dt.timezone.utc)
-
-    # NTZ is verbatim: the body equals the wall clock itself
-    ntz = render_sql_id(naive, T.TimestampNTZType())
-    m2 = re.fullmatch(
-        r"TIMESTAMP_NTZ '(\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}\.\d{6})'", ntz
-    )
-    assert m2, ntz
-    assert _dt.datetime.strptime(m2.group(1), "%Y-%m-%d %H:%M:%S.%f") == naive.replace(fold=0)
-
-    # dtype-less datetimes must keep refusing (the r9 posture)
-    assert render_sql_id(naive) is None

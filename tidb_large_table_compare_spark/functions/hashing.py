@@ -28,8 +28,6 @@ Hard parts handled here (SURVEY.md §7):
 
 from __future__ import annotations
 
-import datetime
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -40,164 +38,7 @@ __all__ = [
     "row_hash",
     "sql_string",
     "bucket_id",
-    "in_list",
 ]
-
-
-_SAFE_DT_CHARS = frozenset("0123456789-:. ")
-_SAFE_TS_CHARS = frozenset("0123456789-:. +")
-_SAFE_STR_ID_CHARS = frozenset(
-    "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789-_.:/@"
-)
-
-
-def in_list(col_name: str, ids: list, dtype: T.DataType | None = None) -> Column:
-    """Membership predicate for a possibly-huge id list.
-
-    ``Column.isin`` converts every element to a literal through its own
-    py4j round trip — ~30 s of DRIVER time at 50k ids, ~7 s at 10k
-    (measured, PERFORMANCE.md round-8), superlinear enough to
-    dwarf the jobs it guards. For integer and Decimal ids the same
-    predicate rendered as one ``IN (...)`` SQL string crosses py4j once
-    and parses JVM-side (~1.5 s at 50k); Catalyst folds the literal list
-    to the identical INSET hash set, so the executed plan is unchanged.
-    Renderings are pinned and charset-checked so the SQL fragment can
-    never carry anything unexpected: ``int()`` for ints, ``:f``
-    fixed-point for Decimals (digits/./- only), strings restricted to a
-    conservative identifier charset (letters, digits, ``-_.:/@``) quoted
-    verbatim — UUID/ULID-style keys, the common big-table string pk, all
-    qualify — dates as ``DATE ''`` literals (tz-free on both sides) and
-    binary as ``X''`` hex. Anything that could interact with SQL quoting
-    (quotes, backslashes, control chars, hostile subclass renderings)
-    falls back to ``isin`` unchanged, as do other id types.
-
-    Datetimes render ONLY when the caller declares the filtered column's
-    ``dtype`` (a naive Python datetime alone cannot say whether it came
-    from a TimestampType collect() — an OS-local instant — or a
-    TIMESTAMP_NTZ wall clock, and the two render differently; see
-    render_sql_id). Without ``dtype`` they fall back to ``isin``
-    unchanged, which is always membership-correct, just driver-slow.
-    """
-    ids = list(ids)
-    if not ids:
-        return F.lit(False)
-    rendered = [render_sql_id(i, dtype) for i in ids]
-    if all(r is not None for r in rendered):
-        return F.expr(f"{quote_name(col_name)} IN ({','.join(rendered)})")
-    return F.col(col_name).isin(ids)
-
-
-def render_sql_id(i, dtype: T.DataType | None = None) -> str | None:
-    """Pinned, charset-gated SQL-literal rendering of one id — or ``None``
-    if the value cannot be rendered safely. This single predicate defines
-    the domain of :func:`in_list`'s one-string fast path.
-
-    ``dtype`` is the filtered COLUMN's Spark type; it is consulted only
-    for datetimes, which are otherwise unrenderable (the round-9 tz
-    finding): the Python value alone cannot distinguish a TimestampType
-    id (collect() yields the instant as a fold-aware naive datetime in
-    the driver OS tz) from a TIMESTAMP_NTZ wall clock, and a zone-less
-    ``TIMESTAMP '...'`` literal would additionally parse in the SESSION
-    tz rather than the OS tz. With the dtype declared, both render
-    soundly and tz-independently — see the datetime branch."""
-    from decimal import Decimal
-
-    if isinstance(i, bool):
-        return None
-    if isinstance(i, int):
-        # int(i), not i: an int SUBCLASS passes the isinstance gate but
-        # may override __str__ (IntEnum renders 'E.A'; a hostile one
-        # renders an arbitrary predicate) — int() pins the rendering.
-        return str(int(i))
-    if isinstance(i, Decimal):
-        # DECIMAL pks are the TiDB unsigned-BIGINT mapping — without a
-        # fast path they fell back to isin's per-element py4j cost.
-        # :f pins fixed-point rendering (plain str uses scientific
-        # notation for some exponents); NaN/Inf render non-numeric and
-        # are rejected by the charset check below.
-        s = f"{i:f}"
-        return s if set(s) <= set("0123456789.-") else None
-    if isinstance(i, str):
-        # str.__str__ bypasses a hostile subclass's __str__/__format__
-        # and yields the exact underlying data, which is then charset-
-        # gated — no quote, backslash, or control char can reach the
-        # rendered literal, so the quoting cannot be escaped.
-        s = str.__str__(i)
-        return f"'{s}'" if s and set(s) <= _SAFE_STR_ID_CHARS else None
-    if isinstance(i, datetime.datetime):
-        # datetime.datetime is checked before its date base class so it
-        # can't leak into the DATE branch. Rendering requires the
-        # DECLARED column dtype: a zone-less TIMESTAMP '...' literal
-        # parses in the SESSION tz while collect() converts TimestampType
-        # through the driver OS's tz (the round-9 finding, reproduced
-        # under TZ=America/New_York), so the sound rendering never emits
-        # a zone-less instant literal. Instead:
-        #
-        # - TimestampType: the id is an instant; a naive value is
-        #   OS-local BY COLLECT()'S CONTRACT (fromtimestamp, fold-aware —
-        #   the DST fall-back hour yields fold=0/1 for the two instants,
-        #   and astimezone() inverts it exactly; probed on Spark 4 under
-        #   TZ=America/New_York, tests/test_edge_cases.py). Convert to
-        #   UTC and render with an EXPLICIT offset —
-        #   ``TIMESTAMP '... +00:00'`` — which Spark parses
-        #   independently of spark.sql.session.timeZone, so no session
-        #   handle is needed and no session-tz DST ambiguity exists.
-        # - TimestampNTZType: the id is a wall clock; render the naive
-        #   value verbatim as ``TIMESTAMP_NTZ '...'`` (tz-free on both
-        #   sides, like DATE). Aware values don't pair with a wall-clock
-        #   column — fall back.
-        #
-        # The value is first copied into a GENUINE datetime (preserving
-        # fold) so no subclass override of astimezone/__format__ can
-        # shape the rendering; the charset gate stays as belt-and-braces.
-        if not isinstance(
-            dtype, (T.TimestampType, T.TimestampNTZType)
-        ):
-            return None
-        pinned = datetime.datetime(
-            i.year, i.month, i.day, i.hour, i.minute, i.second,
-            i.microsecond, i.tzinfo, fold=i.fold,
-        )
-        if isinstance(dtype, T.TimestampNTZType):
-            if pinned.tzinfo is not None:
-                return None
-            s = _ts_body(pinned)
-            return f"TIMESTAMP_NTZ '{s}'" if set(s) <= _SAFE_TS_CHARS else None
-        try:
-            utc = pinned.astimezone(datetime.timezone.utc)
-        except (OverflowError, OSError, ValueError):
-            # the UTC image of an edge-of-range value (year 1 / 9999 at
-            # an offset pointing past the boundary) does not exist as a
-            # Python datetime — refuse to the isin fallback, never crash
-            # the predicate build
-            return None
-        s = _ts_body(utc) + "+00:00"
-        return f"TIMESTAMP '{s}'" if set(s) <= _SAFE_TS_CHARS else None
-    if isinstance(i, datetime.date):
-        # DateType is timezone-free on both sides (collect() yields a
-        # plain date; DATE '...' parses without tz), so dates keep the
-        # fast path. The unbound isoformat bypasses subclass overrides.
-        s = datetime.date.isoformat(i)
-        return f"DATE '{s}'" if set(s) <= _SAFE_DT_CHARS else None
-    if isinstance(i, (bytes, bytearray)):
-        # bytes(i) copies the underlying data (pinning subclass
-        # overrides), .hex() on a real bytes object is hex-only by
-        # construction; the charset gate is belt-and-braces. X'..' is
-        # Spark's binary literal, and binary In pushes to the scan.
-        s = bytes(i).hex()
-        return f"X'{s}'" if set(s) <= set("0123456789abcdef") else None
-    return None
-
-
-def _ts_body(dt: datetime.datetime) -> str:
-    """``yyyy-MM-dd HH:mm:ss.SSSSSS`` from components — strftime's %Y
-    does not zero-pad pre-1000 years on every platform, and Spark's
-    literal parser wants the 4-digit form."""
-    return (
-        f"{dt.year:04d}-{dt.month:02d}-{dt.day:02d} "
-        f"{dt.hour:02d}:{dt.minute:02d}:{dt.second:02d}."
-        f"{dt.microsecond:06d}"
-    )
 
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)

@@ -10,7 +10,9 @@ designed for the 100 TB regime the north-star mandates:
   never the quadratic pair space;
 - SimHash: 64-bit signed-projection fingerprint, bit-arithmetic built-ins.
 
-All JVM-side built-ins (split/transform/aggregate/xxhash64); no Python UDFs.
+JVM-side built-ins (split/transform/aggregate/xxhash64) throughout, except
+the one-permutation MinHash signature, which is a numpy ``mapInPandas``
+(``minhash_signature_oph_np``).
 """
 
 from __future__ import annotations

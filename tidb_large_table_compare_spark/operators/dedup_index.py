@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tidb_large_table_compare_spark.functions.hashing import in_list
+from tidb_large_table_compare_spark.functions.hashing import quote_name
 from tidb_large_table_compare_spark.functions.materialize import materialize
 from tidb_large_table_compare_spark.functions.partitioning import (
     optimized_plan_size_bytes,
@@ -139,6 +139,16 @@ def append_to_neardup_index(
     bands.write.mode("append").parquet(f"{path}/bands")
 
 
+# Admission-probe tuning, fixed for every caller.
+# Batch plans estimated at or under this many bytes get a static broadcast.
+BROADCAST_MAX_BATCH_BYTES = 64 << 20
+# At most this many distinct candidate corpus ids are pushed into the
+# stored-shingle scan; above it the verify join stays lazy.
+VERIFY_PUSHDOWN_MAX_IDS = 50_000
+# Stored-shingle tables below this footer-estimated size keep the lazy join.
+VERIFY_PUSHDOWN_MIN_STORE_BYTES = 256 << 20
+
+
 def query_neardup_index(
     spark: SparkSession,
     path: str,
@@ -149,10 +159,6 @@ def query_neardup_index(
     n_hashes: int = 128,
     n_bands: int = 32,
     threshold: float = 0.8,
-    broadcast_batch: bool | None = None,
-    broadcast_max_batch_bytes: int = 64 << 20,
-    verify_pushdown_max_ids: int = 50_000,
-    verify_pushdown_min_store_bytes: int = 256 << 20,
 ) -> DataFrame:
     """Near-dups between an arriving batch and the indexed corpus:
     (id_a = corpus doc, id_b = new doc, jaccard ≥ threshold).
@@ -162,13 +168,12 @@ def query_neardup_index(
     against the stored shingle sets, and never touches corpus text. A new
     doc with no colliding bucket costs one join probe, nothing more.
 
-    The batch side is broadcast only when it is actually small: with
-    ``broadcast_batch=None`` the decision first reads Catalyst's
-    estimated size of the batch plan (footer-derived for file sources —
-    zero jobs) and, only when that estimate is under
-    ``broadcast_max_batch_bytes``, confirms with a bounded
-    ``limit(k+1).count()`` row probe — byte size alone is not enough,
-    because a 64 MB batch of very short documents explodes into
+    The batch side is broadcast only when it is actually small: the
+    decision first reads Catalyst's estimated size of the batch plan
+    (footer-derived for file sources — zero jobs) and, only when that
+    estimate is under ``BROADCAST_MAX_BATCH_BYTES``, confirms with a
+    bounded ``limit(k+1).count()`` row probe — byte size alone is not
+    enough, because a 64 MB batch of very short documents explodes into
     ``rows × n_bands`` band rows that can dwarf its on-disk bytes; the
     row probe restores that cap, and it only ever runs over a batch
     already known to be small. A large or unknown estimate (filtered
@@ -176,33 +181,34 @@ def query_neardup_index(
     the shuffle join, where AQE still upgrades to a broadcast at runtime
     from the ACTUAL post-shuffle size — so the conservative static choice
     costs at most one shuffle of a small batch, never a lost broadcast.
-    Pass ``True`` / ``False`` to pin the strategy.
 
     **Verify-scan pushdown** (the probe's dominant IO term): the exact-
     Jaccard verification joins the stored shingle table on BOTH pair
     sides, and that store is roughly corpus-token-sized — left as plain
     joins, a probe would scan it twice end to end no matter how small the
-    batch. Same problem, same cure as the compare drill-down
-    (``operators/compare.py``): the bounded candidate set is materialized
-    once (an eager ``localCheckpoint`` of O(batch × collisions) id
-    pairs — this is the one part of the probe that executes at build
-    time), and when it holds ≤ ``verify_pushdown_max_ids`` distinct
-    corpus ids, the stored-shingle scan gets a ``doc_id IN (...)``
-    predicate that parquet row-group stats can prune — the build and
-    compaction paths write ``docs/`` range-clustered by id exactly so
-    those stats are tight. Verify IO then scales with the candidate set,
-    not the corpus.
+    batch. So the bounded candidate set is materialized once (an eager
+    ``localCheckpoint`` of O(batch × collisions) id pairs — this is the
+    one part of the probe that executes at build time), and when it holds
+    ≤ ``VERIFY_PUSHDOWN_MAX_IDS`` distinct corpus ids, the stored-shingle
+    scan gets a ``doc_id IN (...)`` predicate that parquet row-group stats
+    can prune — the build and compaction paths write ``docs/``
+    range-clustered by id exactly so those stats are tight. Verify IO then
+    scales with the candidate set, not the corpus. The ids are ``long``
+    (the signature pass fixes the id type), so the predicate is one
+    rendered SQL string of integers: it crosses py4j once, where
+    ``Column.isin`` pays a py4j round trip per element (~30 s of driver
+    time at 50k ids, PERFORMANCE.md round-8).
 
     The pushdown engages only when the stored-shingle table is at least
-    ``verify_pushdown_min_store_bytes`` (footer-derived estimate, free):
+    ``VERIFY_PUSHDOWN_MIN_STORE_BYTES`` (footer-derived estimate, free):
     measured at a 55k-doc store the checkpoint+collect overhead costs
     ~0.25 s while the double scan it avoids is ~40 MB — a wash — so small
     stores keep the fully-lazy plain join, and the pushdown switches on
     where its savings are real. Above the floor the savings are MEASURED,
     not extrapolated: an 800k-doc / 326 MB store probed with a 200-doc
     batch runs 0.52 s with the pushdown vs 2.63 s without (5.1×,
-    identical pairs; PERFORMANCE.md round-8). Above the id cap (or with
-    ``verify_pushdown_max_ids=0``) the probe stays lazy.
+    identical pairs; PERFORMANCE.md round-8). Above the id cap the probe
+    stays lazy.
     """
     # materialized: the batch's shingles feed BOTH candidate generation
     # (signatures → bands) and the verify union below — without it the
@@ -219,19 +225,18 @@ def query_neardup_index(
     new_sigs = minhash_signature_oph_np(new_shingles, id_col, n_hashes=n_hashes)
     new_bands = signature_band_buckets(new_sigs, id_col, n_hashes, n_bands)
 
-    if broadcast_batch is None:
-        # guarded size probe (absent under Spark Connect): unknown counts
-        # as large — no static broadcast, AQE still upgrades at runtime
-        est = optimized_plan_size_bytes(new_docs)
-        broadcast_batch = est is not None and est <= broadcast_max_batch_bytes
-        if broadcast_batch:
-            # bounded row confirmation (reads at most max_docs+1 rows of a
-            # batch already known to be byte-small): short docs can explode
-            # rows × n_bands past any byte budget
-            max_docs = max(1, 2_000_000 // n_bands)
-            broadcast_batch = (
-                new_docs.select(id_col).limit(max_docs + 1).count() <= max_docs
-            )
+    # guarded size probe (absent under Spark Connect): unknown counts
+    # as large — no static broadcast, AQE still upgrades at runtime
+    est = optimized_plan_size_bytes(new_docs)
+    broadcast_batch = est is not None and est <= BROADCAST_MAX_BATCH_BYTES
+    if broadcast_batch:
+        # bounded row confirmation (reads at most max_docs+1 rows of a
+        # batch already known to be byte-small): short docs can explode
+        # rows × n_bands past any byte budget
+        max_docs = max(1, 2_000_000 // n_bands)
+        broadcast_batch = (
+            new_docs.select(id_col).limit(max_docs + 1).count() <= max_docs
+        )
     probe = new_bands.withColumnRenamed(id_col, "id_b")
     if broadcast_batch:
         probe = F.broadcast(probe)
@@ -245,11 +250,7 @@ def query_neardup_index(
     # guarded probe: an unknown store size keeps the fully-lazy plain join
     # (the pre-pushdown plan), never an error
     store_bytes = optimized_plan_size_bytes(idx_docs)
-    if (
-        verify_pushdown_max_ids > 0
-        and store_bytes is not None
-        and store_bytes >= verify_pushdown_min_store_bytes
-    ):
+    if store_bytes is not None and store_bytes >= VERIFY_PUSHDOWN_MIN_STORE_BYTES:
         # small by construction (hot buckets are capped at build time);
         # materializing also keeps candidate generation single-execution
         cands = materialize(cands)
@@ -257,14 +258,16 @@ def query_neardup_index(
             r[0]
             for r in cands.select("id_a")
             .distinct()
-            .limit(verify_pushdown_max_ids + 1)
+            .limit(VERIFY_PUSHDOWN_MAX_IDS + 1)
             .collect()
         ]
-        if len(corpus_ids) <= verify_pushdown_max_ids:
-            # in_list, not Column.isin — per-element py4j literal cost (see
-            # hashing.in_list); integer doc ids render as one SQL IN string
+        if len(corpus_ids) <= VERIFY_PUSHDOWN_MAX_IDS:
+            # no candidates: `IN ()` does not parse, and no stored set is
+            # needed — the filter folds the scan away
+            ids = ",".join(str(int(i)) for i in corpus_ids)
             idx_docs = idx_docs.filter(
-                in_list(id_col, corpus_ids, cands.schema["id_a"].dataType)
+                F.expr(f"{quote_name(id_col)} IN ({ids})") if ids
+                else F.lit(False)
             )
     verify_sets = idx_docs.unionByName(new_shingles)
     return jaccard_verified_pairs(cands, verify_sets, id_col, threshold)

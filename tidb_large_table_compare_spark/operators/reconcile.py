@@ -43,12 +43,6 @@ def apply_fixes(
     return kept.select(left.columns).unionByName(replacement.select(left.columns))
 
 
-# Scoped re-verify engages only below this mismatched-bucket fraction;
-# above it the filter discards too little to pay for its own plan (see
-# verify_repair's docstring for the measured heavy-drift regression).
-_SCOPE_FRACTION = 0.25
-
-
 def verify_repair(tc, repaired: DataFrame) -> DataFrame:
     """Re-verify ``repaired`` against ``tc.left``, scoped to ``tc``'s
     mismatched buckets — same one-row summary schema as
@@ -73,25 +67,16 @@ def verify_repair(tc, repaired: DataFrame) -> DataFrame:
     drill-down — is ∝ drift, and the bad-bucket set is reused from
     ``tc``'s already-materialized state, so no extra digest pass runs.
 
-    Adaptive, same shape as the admission probe's verify-scan floor
-    (``dedup_index.py``): scoping only pays when mismatched buckets are a
-    small fraction of all buckets. Hash bucketing spreads random drift
-    uniformly, so per-row drift fraction p marks ~p·chunk_size of the
-    buckets bad — the scope engages when drift is below ~1/chunk_size
-    (tens of drifted rows in millions: the steady-state regime of a sync
-    pipeline that repairs every cycle; at lake-scale bucket counts the
-    bad set may hold tens of thousands of ids and still restrict through
-    the one bitset literal — in-regime if the fraction is small).
-    Above the fraction gate (heavy drift) the scope discards nothing
-    and the plain full re-compare is used — the sf0.1 bench perturbation
-    drifts every one of its 31 buckets and measured 2.9 s scoped vs
-    1.45 s full before the gate existed. In-regime at the sf1 replica
-    (1.5M rows, 40/4096 buckets bad): scoped 2.31 s vs full 2.79 s, the
-    margin being the skipped full-width canonicalize+hash of clean rows
-    (map-side filter hashes only the PK), which widens with column count
-    and table size (PERFORMANCE.md round-8). Verdicts are identical on
-    both paths (pinned for arbitrary perturbation plans by
-    tests/test_property.py).
+    The restriction decision is the compare's own (``bucket_scope``):
+    a scope over most buckets is ``skip``, where the scoped compare reads
+    both sides whole — the plain full re-compare at the same bucket
+    count — and a bitset scope of any width restricts through the one
+    bitset literal. In-regime at the sf1 replica (1.5M rows, 40/4096
+    buckets bad): scoped 2.31 s vs full 2.79 s, the margin being the
+    skipped full-width canonicalize+hash of clean rows (map-side filter
+    hashes only the PK), which widens with column count and table size
+    (PERFORMANCE.md round-8). Verdicts are identical on both paths
+    (pinned for arbitrary perturbation plans by tests/test_property.py).
 
     Keyed compares only: the bucket-scoping argument needs PK-determined
     buckets, so multiset/keyless compares must re-verify in full.
@@ -102,22 +87,11 @@ def verify_repair(tc, repaired: DataFrame) -> DataFrame:
             "PK-determined); re-verify multiset compares in full"
         )
     from tidb_large_table_compare_spark.functions.localframe import local_frame
-    from tidb_large_table_compare_spark.operators.compare import (
-        compare_tables,
-        scoped_compare,
-    )
+    from tidb_large_table_compare_spark.operators.compare import scoped_compare
 
-    # a skip scope (most buckets bad) is never in-regime; a wide bitset
-    # still can be, at lake-scale bucket counts (e.g. 60k of 2^20)
-    scope = tc.scope()
-    if scope.n_bad > _SCOPE_FRACTION * scope.n_buckets:
-        cmp = compare_tables(
-            tc.spark, tc.left, repaired, tc.pk, tc.options, tc.table_name
-        )
-    else:
-        cmp = scoped_compare(
-            tc.spark, tc.left, repaired, tc.pk, scope, tc.options, tc.table_name
-        )
+    cmp = scoped_compare(
+        tc.spark, tc.left, repaired, tc.pk, tc.scope(), tc.options, tc.table_name
+    )
     # the inner compare persists its own state (its keyed diff): collect
     # the one row and release it here, since no caller can reach this
     # compare to close it

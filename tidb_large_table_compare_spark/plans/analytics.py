@@ -257,7 +257,7 @@ def q10_top_return_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q12_priority_line_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     l = load_table(spark, sf_dir, "lineitem")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
+    high = F.expr("o_orderpriority IN ('1-URGENT', '2-HIGH')")
     # mirror SQL CASE WHEN ... NOT IN semantics on NULL priorities: NOT IN
     # over NULL is NULL, so a NULL-priority row counts in NEITHER bucket
     low = F.col("o_orderpriority").isNotNull() & ~high
@@ -399,7 +399,7 @@ def q16_part_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         p.filter(
             (F.col("p_brand") != "Brand#1")
-            & F.col("p_size").isin(1, 5, 10, 15, 20, 25, 30, 35)
+            & F.expr("p_size IN (1, 5, 10, 15, 20, 25, 30, 35)")
         )
         .join(l, p.p_partkey == l.l_partkey)
         .groupBy("p_brand", "p_size")
